@@ -15,6 +15,14 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle.partitions=32 for local[32]; on a real cluster this is set per
   *    deployment (or left to AQE's coalescing with a high initial value).
   *  - UTC session time zone so timestamp semantics match the oracle.
+  *  - `file:` pinned to the fork-free [[io.NioLocalFileSystem]] (FileSystem)
+  *    and [[io.NioLocalFs]] (FileContext). The Spark distribution ships
+  *    Hadoop without `libhadoop`, so the stock local filesystem forks a
+  *    `chmod` for every file and dir it creates and a `readlink` for every
+  *    `FileContext` rename — the offset, commit, state-changelog and
+  *    checksum files of every streaming micro-batch, and every relay, sink
+  *    and lineage-cut write. Permissions, `.crc` files and rename semantics
+  *    are unchanged; this is an engine constant, not a user option.
   */
 object GraftSession {
   /** Per-JVM-unique embedded-Derby metastore name. Embedded Derby permits
@@ -115,6 +123,9 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // in-process chmod/readlink for local files — see the header
+      .config("spark.hadoop.fs.file.impl", classOf[io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[io.NioLocalFs].getName)
       // Disk-backed streaming state by default — the analogue of the
       // reference's production RocksDB state backend (flink-statebackend-
       // rocksdb RocksDBStateBackend.java:119). The default HDFS-backed

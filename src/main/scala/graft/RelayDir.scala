@@ -4,11 +4,11 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Per-invocation streaming relay/sink directories — the parquet
-  * "topic between jobs" channels used by `MatchRecognize.runStream` and
-  * `Changelog.qCdcPipeline` (the reference's deployment shape chains jobs
+/** Per-invocation streaming relay, sink and checkpoint directories — e.g.
+  * the parquet "topic between jobs" channel `MatchRecognize.runStream`'s
+  * PREV stage relays through (the reference's deployment shape chains jobs
   * through Kafka topics; here the channel is the exactly-once streaming
-  * file sink).
+  * file sink), and the sinks [[drain]] writes.
   *
   * Each invocation needs a FRESH dir (the file sink's commit log never
   * overwrites), but callers read the channel LAZILY after the call returns —

@@ -313,9 +313,13 @@ object MatchRecognize {
     *    keyed ring of the preceding `depth` rows, the streaming analogue of
     *    the batch lag window (the reference resolves PREV against the NFA's
     *    own row buffer, MatchCodeGenerator.scala). The augmented stream is
-    *    relayed through a parquet channel into the NFA stage, because Spark
-    *    disallows chained flatMapGroupsWithState in one query — the
-    *    Kafka-topic-between-jobs deployment shape `cdc_pipeline` documents.
+    *    relayed through a parquet channel into the NFA stage (the
+    *    Kafka-topic-between-jobs deployment shape): both operators keep
+    *    event-time state, and Spark 4.1 rejects the chain in one query with
+    *    "Detected pattern of possible 'correctness' issue due to global
+    *    watermark. The query contains stateful operation which can emit rows
+    *    older than the current watermark plus allowed late record delay"
+    *    (the ring stage releases rows behind the watermark it advanced).
     *    Streaming PREV navigates the KeyedRow payload (the partition /
     *    order / event_type / value columns; the order column compares as
     *    epoch-micros); NEXT compiles onto [[Cep.orderedWithNav]] (round 9)

@@ -310,6 +310,69 @@ object Changelog {
       }
     }
 
+  /** The CDC chain as ONE dataflow: upsert-source normalize (per-key
+    * keep-last changelog) → retracting per-bucket aggregate → retractable
+    * top-`n` buckets. Three Append-mode flatMapGroupsWithState operators
+    * chain inside one Append query (none uses event-time state, so Spark's
+    * global-watermark correctness check has nothing to reject); each
+    * stage's state is checkpointed per micro-batch like a single-operator
+    * query's. `miniBatch` selects the mini-batch stage variants
+    * ([[keyedChangelogMiniBatch]], [[retractingAggMiniBatch]]). */
+  def cdcChain(rows: Dataset[KeyedRow], n: Int, miniBatch: Boolean): Dataset[RankChange] =
+    if (miniBatch) retractableTopN(retractingAggMiniBatch(keyedChangelogMiniBatch(rows)), n)
+    else retractableTopN(retractingAgg(keyedChangelog(rows)), n)
+
+  /** The highest committed rank-table snapshot `tableRoot/v<k>` with
+    * `k < before` — committed meaning its `_SUCCESS` marker exists, so a
+    * write cut short by a crash is never read. */
+  def latestSnapshot(s: SparkSession, tableRoot: String, before: Long): Option[String] = {
+    val root = new org.apache.hadoop.fs.Path(tableRoot)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val Version = "v(\\d+)".r
+    if (!fs.exists(root)) None
+    else fs.listStatus(root).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case Version(k) if k.toLong < before &&
+            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")) =>
+          Some(k.toLong -> st.getPath.toString)
+        case _ => None
+      }
+    }.maxByOption(_._1).map(_._2)
+  }
+
+  /** The upsert sink of [[qCdcPipeline]], a `foreachBatch` keyed MERGE:
+    * each micro-batch of the rank changelog is reduced to its last change
+    * per (key, rnk) slot (window on the emission `seq`) and merged into a
+    * versioned parquet snapshot `tableRoot/v<batchId>` — untouched slots
+    * carried by anti-join, +I/+U slots overwritten, -D slots dropped. Every
+    * step is executor-side and the driver holds no rows: the delta-style
+    * upsert-sink shape that scales with the slot count, not the churn.
+    *
+    * Restart-safe: the snapshot a batch merges into is found on disk
+    * ([[latestSnapshot]] before `batchId`), not kept in driver memory, so a
+    * query restarted from its checkpoint continues the same table; a
+    * replayed batch rewrites its own `v<batchId>` from the same
+    * predecessor, so replay is idempotent. */
+  def rankTableSink(tableRoot: String): (Dataset[RankChange], Long) => Unit = {
+    (batch, batchId) =>
+      val s = batch.sparkSession
+      // last change per (key, rnk) slot this batch, in emission order
+      val lastPerSlot = batch.toDF()
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy("key", "rnk").orderBy(col("seq").desc)))
+        .filter(col("rn") === 1).drop("rn")
+      val upserts = lastPerSlot.filter(col("kind").isin("+I", "+U"))
+        .select("key", "rnk", "id", "value")
+      val touched = lastPerSlot.select("key", "rnk")
+      val merged = latestSnapshot(s, tableRoot, batchId) match {
+        case Some(prev) => s.read.parquet(prev)
+          .join(touched, Seq("key", "rnk"), "left_anti").unionByName(upserts)
+        case None => upserts
+      }
+      merged.write.mode("overwrite").parquet(s"$tableRoot/v$batchId")
+  }
+
   /** CDC END-TO-END: upsert source → ChangelogNormalize → retracting
     * aggregate → retractable Top-N → upsert sink, composed as one dataflow
     * and gated on the final materialized state (the reference chain
@@ -319,35 +382,22 @@ object Changelog {
     *
     * The events table file-streams in as an upsert stream keyed by user
     * (each row = the user's new current value, quantized to micro-units at
-    * the edge). Stage boundaries are parquet changelog channels: Flink
-    * fuses the chain into one job, while Spark disallows chained
-    * flatMapGroupsWithState operators inside a single query — so each
-    * stage is its own StreamingQuery consuming the previous stage's
-    * materialized changelog, the Kafka-topic-between-jobs deployment shape
-    * with a directory standing in for the topic. The RowKind contract
-    * crossing each boundary is identical to the fused form.
-    *
-    * The upsert sink is a `foreachBatch` keyed MERGE: each micro-batch of
-    * the rank changelog is reduced to its last change per (key, rnk) slot
-    * (window on the emission `seq`) and merged into a versioned parquet
-    * snapshot — untouched slots carried by anti-join, +I/+U slots
-    * overwritten, -D slots dropped. Every step is executor-side; the
-    * driver holds only the current snapshot PATH, never rows — the
-    * delta-style upsert-sink shape that scales with the slot count, not
-    * the churn. Output: the final top-3 value-decile buckets by total of
-    * every user's LAST value — which the DuckDB oracle recomputes from
-    * first principles (keep-last → bucket sums → top 3). */
+    * the edge) through [[cdcChain]] — ONE StreamingQuery, as Flink fuses
+    * the chain into one job, checkpointed under the invocation's relay dir
+    * — into the [[rankTableSink]] upsert sink. Output: the final top-3
+    * value-decile buckets by total of every user's LAST value — which the
+    * DuckDB oracle recomputes from first principles (keep-last → bucket
+    * sums → top 3). */
   def qCdcPipeline(s: SparkSession, dir: String): DataFrame =
     qCdcPipeline(s, dir, miniBatch = false)
 
   /** `miniBatch = true` runs the same chain through the mini-batch stage
     * variants ([[keyedChangelogMiniBatch]], [[retractingAggMiniBatch]] —
     * the reference's table.exec.mini-batch.enabled configuration): each
-    * relay channel carries one change pair per touched key/group per
-    * micro-batch instead of one per input change, so the parallelism-1
-    * rank fold sees O(groups) rows rather than O(events). The final
-    * snapshot — and therefore the DuckDB oracle — is identical; the sf10
-    * probe measures the volume difference. */
+    * stage emits one change pair per touched key/group per micro-batch
+    * instead of one per input change, so the rank fold sees O(groups) rows
+    * rather than O(events). The final snapshot — and therefore the DuckDB
+    * oracle — is identical; the sf10 probe measures the volume difference. */
   def qCdcPipeline(s: SparkSession, dir: String, miniBatch: Boolean): DataFrame = {
     import s.implicits._
     val token = dir.replaceAll("[^a-zA-Z0-9]", "_") +
@@ -359,58 +409,14 @@ object Changelog {
         col("event_id").as("id"), col("event_type").as("kind"),
         round(col("value") * 1e6, 0).as("value"))
       .as[KeyedRow]
-
-    // each stage writes its changelog through the REAL streaming parquet
-    // file sink (exactly-once manifest commit, executor-side — the driver
-    // never materializes a stage, round 8; memory-sink staging was a
-    // driver-side copy of the whole changelog) and the next stage
-    // file-streams the committed channel
-    def stageToParquet(ds: Dataset[Change], stage: String): String = {
-      val path = s"$relay/$stage"
-      val q = ds.writeStream.format("parquet").option("path", path)
-        .option("checkpointLocation", s"$relay/ckpt_$stage")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      path
-    }
-    def readChanges(path: String): Dataset[Change] =
-      s.readStream.schema(org.apache.spark.sql.Encoders.product[Change].schema)
-        .parquet(path).as[Change]
-
-    // stage 1: upsert-source normalize (per-user keep-last changelog)
-    val normalize = if (miniBatch) keyedChangelogMiniBatch _ else keyedChangelog _
-    val aggregate = if (miniBatch) retractingAggMiniBatch _ else retractingAgg _
-    val changesPath = stageToParquet(normalize(rows), "changes")
-    // stage 2: retracting per-bucket aggregate over the relayed changelog
-    val aggPath = stageToParquet(aggregate(readChanges(changesPath)), "agg")
-    // stage 3: retractable top-3 buckets over the aggregate's changelog,
-    // upsert-sunk via foreachBatch merge into a versioned parquet snapshot
     val tableRoot = s"$relay/rank_table"
-    var snapshot: Option[String] = None
-    val q = retractableTopN(readChanges(aggPath), 3)
+    val q = cdcChain(rows, 3, miniBatch)
       .writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[RankChange], batchId: Long) =>
-        // last change per (key, rnk) slot this batch, in emission order
-        val lastPerSlot = batch.toDF()
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("key", "rnk").orderBy(col("seq").desc)))
-          .filter(col("rn") === 1).drop("rn")
-        val upserts = lastPerSlot.filter(col("kind").isin("+I", "+U"))
-          .select("key", "rnk", "id", "value")
-        val touched = lastPerSlot.select("key", "rnk")
-        val merged = snapshot match {
-          case Some(prev) => s.read.parquet(prev)
-            .join(touched, Seq("key", "rnk"), "left_anti").unionByName(upserts)
-          case None => upserts
-        }
-        val out = s"$tableRoot/v$batchId"
-        merged.write.mode("overwrite").parquet(out)
-        snapshot = Some(out)
-      }
+      .option("checkpointLocation", s"$relay/ckpt")
+      .foreachBatch(rankTableSink(tableRoot))
       .start()
     try q.processAllAvailable() finally q.stop()
-    snapshot.map(s.read.parquet)
+    latestSnapshot(s, tableRoot, Long.MaxValue).map(s.read.parquet)
       .getOrElse(s.createDataset(Seq.empty[RankChange]).toDF())
       .select(col("rnk"), col("id").as("bucket"), (col("value") / 1e6).as("total"))
       .orderBy("rnk")

@@ -860,50 +860,16 @@ class DifferentialFuzzSpec extends SparkSpec {
   // equal the single-batch log change for change (the seeded generalization
   // of ChangelogSpec's fixed split test).
 
-  test("family 22: CDC chain folds equal first-principles recomputation on seeded upsert streams") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx = s.sqlContext
-    import graft.streaming.{Changelog, KeyedRow}
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+  /** One seeded family-22 upsert stream and its micro-batch split. */
+  private case class F22Case(sc: Int, rows: Seq[streaming.KeyedRow],
+                             batches: Seq[Seq[streaming.KeyedRow]], topN: Int)
+
+  private def f22Cases(): Seq[F22Case] = {
+    import graft.streaming.KeyedRow
     val seed = sys.props.get("graft.fuzz.seed")
       .orElse(sys.env.get("GRAFT_FUZZ_SEED")).map(_.toLong).getOrElse(20260813L)
     val r = new scala.util.Random(seed + 22)
-
-    /** run `f` as one StreamingQuery fed batch-by-batch, returning the rows
-      * EMITTED PER BATCH (memory-sink growth diff) so the next stage can
-      * replay them on the same boundaries. */
-    def runStage[I <: Product : org.apache.spark.sql.Encoder,
-                 O <: Product : org.apache.spark.sql.Encoder](
-        name: String, inBatches: Seq[Seq[I]],
-        f: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[O]): Seq[Seq[O]] = {
-      val in = MemoryStream[I]
-      s.catalog.dropTempView(name): Unit
-      val q = f(in.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
-      try {
-        val out = scala.collection.mutable.ListBuffer.empty[Seq[O]]
-        var prev = 0
-        inBatches.foreach { b =>
-          in.addData(b: _*); q.processAllAvailable()
-          val all = s.table(name).as[O].collect().toSeq
-          out += all.drop(prev); prev = all.size
-        }
-        out.toSeq
-      } finally q.stop()
-    }
-
-    def bucketOf(vMicros: Double): Long =
-      ((math.floor(vMicros / 1e6).toLong % 10) + 10) % 10
-    def lastRows(rows: Seq[KeyedRow]): Map[Long, KeyedRow] =
-      rows.groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(x => (x.ts, x.id)) }
-    def bucketSums(lr: Map[Long, KeyedRow]): Map[Long, Long] =
-      lr.values.groupBy(x => bucketOf(x.value))
-        .map { case (b, rs) => b -> rs.map(_.value.toLong).sum }
-
-    var totalChanges = 0
-    var totalDeletes = 0
-    for (sc <- 1 to 4) {
+    (1 to 4).map { sc =>
       val nKeys = 4 + r.nextInt(21)
       val nRows = 60 + r.nextInt(181)
       val nBatches = 2 + r.nextInt(4)
@@ -920,17 +886,66 @@ class DifferentialFuzzSpec extends SparkSpec {
         case Seq(a, b) => rows.slice(a.toInt, b.toInt)
       }.toSeq.filter(_.nonEmpty)
       println(s"[fuzz] family22 #$sc keys=$nKeys rows=$nRows batches=${batches.size} n=$topN")
+      F22Case(sc, rows, batches, topN)
+    }
+  }
 
-      val stage1 = runStage[KeyedRow, Changelog.Change](
+  /** run `f` as one StreamingQuery fed batch-by-batch, returning the rows
+    * EMITTED PER BATCH (memory-sink growth diff) so the next stage can
+    * replay them on the same boundaries. */
+  private def f22RunStage[I <: Product : org.apache.spark.sql.Encoder,
+                          O <: Product : org.apache.spark.sql.Encoder](
+      name: String, inBatches: Seq[Seq[I]],
+      f: org.apache.spark.sql.Dataset[I] => org.apache.spark.sql.Dataset[O]): Seq[Seq[O]] = {
+    val s = spark
+    implicit val ctx = s.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[I]
+    s.catalog.dropTempView(name): Unit
+    val q = f(in.toDS()).writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      val out = scala.collection.mutable.ListBuffer.empty[Seq[O]]
+      var prev = 0
+      inBatches.foreach { b =>
+        in.addData(b: _*); q.processAllAvailable()
+        val all = s.table(name).as[O].collect().toSeq
+        out += all.drop(prev); prev = all.size
+      }
+      out.toSeq
+    } finally q.stop()
+  }
+
+  private def f22BucketOf(vMicros: Double): Long =
+    ((math.floor(vMicros / 1e6).toLong % 10) + 10) % 10
+  private def f22LastRows(rows: Seq[streaming.KeyedRow]): Map[Long, streaming.KeyedRow] =
+    rows.groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(x => (x.ts, x.id)) }
+  private def f22BucketSums(lr: Map[Long, streaming.KeyedRow]): Map[Long, Long] =
+    lr.values.groupBy(x => f22BucketOf(x.value))
+      .map { case (b, rs) => b -> rs.map(_.value.toLong).sum }
+  /** First-principles rank table: top-N buckets by sum (DESC, bucket ASC). */
+  private def f22TopN(rows: Seq[streaming.KeyedRow], topN: Int): Map[(Long, Int), (Long, Double)] =
+    f22BucketSums(f22LastRows(rows)).toSeq
+      .sortBy { case (b, v) => (-v, b) }.take(topN).zipWithIndex
+      .map { case ((b, v), i) => (0L, i + 1) -> ((b, v.toDouble)) }.toMap
+
+  test("family 22: CDC chain folds equal first-principles recomputation on seeded upsert streams") {
+    val s = spark
+    import s.implicits._
+    import graft.streaming.{Changelog, KeyedRow}
+
+    var totalChanges = 0
+    var totalDeletes = 0
+    for (F22Case(sc, rows, batches, topN) <- f22Cases()) {
+      val stage1 = f22RunStage[KeyedRow, Changelog.Change](
         s"f22_s${sc}_upsert", batches, Changelog.keyedChangelog)
-      val stage2 = runStage[Changelog.Change, Changelog.Change](
+      val stage2 = f22RunStage[Changelog.Change, Changelog.Change](
         s"f22_s${sc}_agg", stage1, Changelog.retractingAgg)
       // the mini-batch variants (one change pair per key/group per batch)
       // must fold to the SAME state at every boundary while emitting no
       // more rows than the granular forms
-      val stage1mb = runStage[KeyedRow, Changelog.Change](
+      val stage1mb = f22RunStage[KeyedRow, Changelog.Change](
         s"f22_s${sc}_upsert_mb", batches, Changelog.keyedChangelogMiniBatch)
-      val stage2mb = runStage[Changelog.Change, Changelog.Change](
+      val stage2mb = f22RunStage[Changelog.Change, Changelog.Change](
         s"f22_s${sc}_agg_mb", stage1mb, Changelog.retractingAggMiniBatch)
       // retractingAgg's emission seq (carried in `ts`) is PER BUCKET, so
       // stage 3's (ts, id) batch sort interleaves buckets differently for
@@ -944,7 +959,7 @@ class DifferentialFuzzSpec extends SparkSpec {
       val stage2Ordered = stage2.map { b =>
         b.sortBy(c => (c.id, c.ts)).map { c => gts += 1; c.copy(ts = gts) }
       }
-      val stage3 = runStage[Changelog.Change, Changelog.RankChange](
+      val stage3 = f22RunStage[Changelog.Change, Changelog.RankChange](
         s"f22_s${sc}_rank", stage2Ordered, Changelog.retractableTopN(_, topN))
 
       // fold-vs-brute at EVERY batch boundary, granular and mini-batch
@@ -965,7 +980,7 @@ class DifferentialFuzzSpec extends SparkSpec {
         seen ++= batches(bi)
         Changelog.applyToStore(store, stage1(bi))
         Changelog.applyToStore(storeMb, stage1mb(bi))
-        val expect1 = lastRows(seen)
+        val expect1 = f22LastRows(seen)
           .view.mapValues(x => (x.id, x.ts, x.value)).toMap
         assert(store.view.mapValues(c => (c.id, c.ts, c.value)).toMap == expect1,
           s"family22 #$sc stage1 fold != brute last rows at batch $bi")
@@ -975,7 +990,7 @@ class DifferentialFuzzSpec extends SparkSpec {
           s"family22 #$sc mini-batch stage1 emitted MORE than granular at batch $bi")
         foldAgg(aggTbl, stage2(bi))
         foldAgg(aggTblMb, stage2mb(bi))
-        val expect2 = bucketSums(lastRows(seen))
+        val expect2 = f22BucketSums(f22LastRows(seen))
         assert(aggTbl.view.mapValues(_.toLong).toMap == expect2,
           s"family22 #$sc stage2 fold != brute bucket sums at batch $bi\n" +
             s"  fold: ${aggTbl.toSeq.sortBy(_._1)}\n  brute: ${expect2.toSeq.sortBy(_._1)}")
@@ -985,15 +1000,13 @@ class DifferentialFuzzSpec extends SparkSpec {
           s"family22 #$sc mini-batch stage2 emitted MORE than granular at batch $bi")
       }
       val rankTbl = Changelog.applyRankChanges(stage3.flatten)
-      val expect3 = bucketSums(lastRows(rows)).toSeq
-        .sortBy { case (b, v) => (-v, b) }.take(topN).zipWithIndex
-        .map { case ((b, v), i) => (0L, i + 1) -> ((b, v.toDouble)) }.toMap
+      val expect3 = f22TopN(rows, topN)
       assert(rankTbl == expect3,
         s"family22 #$sc stage3 fold != brute top-$topN buckets\n" +
           s"  fold: ${rankTbl.toSeq.sortBy(_._1)}\n  brute: ${expect3.toSeq.sortBy(_._1)}")
 
       // split-invariance: the multi-batch rank emission log == single-batch log
-      val whole = runStage[Changelog.Change, Changelog.RankChange](
+      val whole = f22RunStage[Changelog.Change, Changelog.RankChange](
         s"f22_s${sc}_rank_whole", Seq(stage2Ordered.flatten), Changelog.retractableTopN(_, topN))
       assert(stage3.flatten.sortBy(_.seq) == whole.flatten.sortBy(_.seq),
         s"family22 #$sc rank emission log is not micro-batch-split-invariant")
@@ -1003,6 +1016,31 @@ class DifferentialFuzzSpec extends SparkSpec {
     println(s"[fuzz] family22 total changelog rows compared: $totalChanges, -D seen: $totalDeletes")
     assert(totalChanges > 400, "vacuity guard: the seeded streams should churn the changelog")
     assert(totalDeletes > 0, "vacuity guard: some update must empty a bucket (-D path)")
+  }
+
+  test("family 22: the fused CDC chain (one query) folds to the first-principles top-N") {
+    // qCdcPipeline's shape: normalize → aggregate → top-N as THREE chained
+    // flatMapGroupsWithState operators in ONE StreamingQuery, fed the same
+    // seeded batch splits. Every micro-batch runs all three stages, so the
+    // rank log folded up to any batch boundary is the top-N of the prefix.
+    val s = spark
+    import s.implicits._
+    import graft.streaming.{Changelog, KeyedRow}
+    var totalChanges = 0
+    for (F22Case(sc, rows, batches, topN) <- f22Cases(); miniBatch <- Seq(false, true)) {
+      val tag = s"family22 #$sc fused${if (miniBatch) " mini-batch" else ""}"
+      val out = f22RunStage[KeyedRow, Changelog.RankChange](
+        s"f22_s${sc}_fused${if (miniBatch) "_mb" else ""}", batches,
+        Changelog.cdcChain(_, topN, miniBatch))
+      batches.indices.foreach { bi =>
+        val folded = Changelog.applyRankChanges(out.take(bi + 1).flatten.sortBy(_.seq))
+        val expect = f22TopN(batches.take(bi + 1).flatten, topN)
+        assert(folded == expect, s"$tag rank fold != brute top-$topN at batch $bi\n" +
+          s"  fold: ${folded.toSeq.sortBy(_._1)}\n  brute: ${expect.toSeq.sortBy(_._1)}")
+      }
+      totalChanges += out.map(_.size).sum
+    }
+    assert(totalChanges > 0, "vacuity guard: the fused chain must emit rank changes")
   }
 
   // ---- family 23: temporal join through CREATE-VIEW lineage ---------------

@@ -315,4 +315,43 @@ class CheckpointRestartSpec extends SparkSpec {
       (7L, 3) -> (4L, 20.0)), // the PRE-RESTART hidden row fills rank 3
       s"restored map must include below-the-cut rows: $folded\nlog: $log")
   }
+
+  test("the CDC upsert sink continues its table across a restart and replays idempotently") {
+    // the rank-table sink finds the snapshot to merge into ON DISK, not in
+    // a driver-side var: batch 1 runs on a FRESH sink instance (what a
+    // query restarted from its checkpoint gets) and must keep batch 0's
+    // untouched slots
+    val s = spark
+    import s.implicits._
+    import Changelog.RankChange
+    val root = java.nio.file.Files.createTempDirectory("ckpt_cdc_sink").toString
+    val table = s"$root/rank_table"
+    def read(): Set[(Long, Int, Long, Double)] =
+      s.read.parquet(Changelog.latestSnapshot(s, table, Long.MaxValue).get)
+        .as[(Long, Int, Long, Double)].collect().toSet
+
+    val batch0 = Seq(
+      RankChange("+I", 0L, 1, 7L, 50.0, 1L),
+      RankChange("+I", 0L, 2, 3L, 40.0, 2L),
+      RankChange("+I", 0L, 3, 5L, 30.0, 3L))
+    Changelog.rankTableSink(table)(batch0.toDS(), 0L)
+    assert(read() == Set((0L, 1, 7L, 50.0), (0L, 2, 3L, 40.0), (0L, 3, 5L, 30.0)))
+
+    // rank 2's occupant changes; rank 3 empties
+    val batch1 = Seq(
+      RankChange("-U", 0L, 2, 3L, 40.0, 4L),
+      RankChange("+U", 0L, 2, 9L, 45.0, 5L),
+      RankChange("-D", 0L, 3, 5L, 30.0, 6L))
+    val expected = Set((0L, 1, 7L, 50.0), (0L, 2, 9L, 45.0))
+    Changelog.rankTableSink(table)(batch1.toDS(), 1L)
+    assert(read() == expected, "batch 0's untouched rank 1 must survive the restart")
+    // a replay of batch 1 (crash after the sink, before the commit log)
+    // rewrites v1 from v0 — same table, nothing applied twice
+    Changelog.rankTableSink(table)(batch1.toDS(), 1L)
+    assert(read() == expected)
+    assert(Changelog.latestSnapshot(s, table, 1L).exists(_.endsWith("/v0")))
+    // an uncommitted (crash-truncated) snapshot is never merged into
+    new java.io.File(s"$table/v5").mkdirs()
+    assert(Changelog.latestSnapshot(s, table, 9L).exists(_.endsWith("/v1")))
+  }
 }
