@@ -542,7 +542,7 @@ object FlinkSqlQueries {
          ) ORDER BY user_id, start_ts""")),
     // streaming MEASURES + PREV in DEFINE (round 8): adjacent value-drop
     // pairs — B navigates PREV(value) against the watermark-ordered ring,
-    // measures join matched ids back per micro-batch (the batch recipe)
+    // measures join the drained matches' ids back (the batch recipe)
     "mr_stream_nav_measures" -> ((s, dir) => MatchRecognize.runStream(s, dir,
       """SELECT user_id, start_ts, end_ts, n_rows, first_val, last_val FROM events
          MATCH_RECOGNIZE (
@@ -585,7 +585,7 @@ object FlinkSqlQueries {
     // the SAME statement on a real stream — the last batch-only MR feature:
     // Cep.orderedWithNav holds each row until its successor clears the
     // watermark, so NEXT resolves against confirmed lookahead; the bounded
-    // run's tail rows backfill from the static source (no end-of-input
+    // run's tail rows are completed from the static source (no end-of-input
     // watermark exists in Spark file streams)
     "mr_stream_next_define" -> ((s, dir) => MatchRecognize.runStream(s, dir,
       """SELECT user_id, start_ts, end_ts FROM events
@@ -598,9 +598,9 @@ object FlinkSqlQueries {
            DEFINE A AS event_type = 'click' AND NEXT(A.value) > A.value,
                   B AS event_type = 'purchase' AND B.value > PREV(B.value)
          ) ORDER BY user_id, start_ts""")),
-    // the SAME ALL-ROWS statement as a real StreamingQuery (round 8):
-    // per-micro-batch join-back keeps each matched row with CLASSIFIER;
-    // MATCH_NUMBER is the sink-read projection (batch formulation)
+    // the SAME ALL-ROWS statement as a real StreamingQuery (round 8): the
+    // join-back over the drained matches keeps each matched row with
+    // CLASSIFIER; MATCH_NUMBER uses the batch formulation
     "mr_stream_all_rows" -> ((s, dir) => MatchRecognize.runStream(s, dir,
       """SELECT user_id, row_seq, event_id, classifier, match_no FROM events
          MATCH_RECOGNIZE (
@@ -668,7 +668,7 @@ object FlinkSqlQueries {
     // carries the error count so far, the whole match's total, and the
     // latest error value seen up to that row
     // the SAME running/final-measures ALL-ROWS statement as a real
-    // StreamingQuery — per-match measure windows inside the micro-batch
+    // StreamingQuery — per-match measure windows over the drained matches
     "mr_stream_running" -> ((s, dir) => MatchRecognize.runStream(s, dir,
       """SELECT user_id, row_seq, classifier, err_so_far, err_total, last_err_val FROM events
          MATCH_RECOGNIZE (

@@ -301,50 +301,51 @@ object MatchRecognize {
     * steps as [[run]] and executes on [[Cep.matchStream]]'s
     * watermark-ordered keyed state (buffer until the watermark confirms
     * order, advance the NFA, event-time-timeout flush), file-streamed from
-    * the same table and append-sunk to memory. Once the final watermark
-    * passes max(ts) the emitted match set equals the batch scan's — the
-    * driver gate asserts that against the SAME DuckDB oracle row.
+    * the same table and drained through the exactly-once file sink
+    * ([[graft.RelayDir.drain]]). Once the final watermark passes max(ts)
+    * the emitted match set equals the batch scan's — the oracle check
+    * (graft.Verify + tools/check.py) asserts that against the SAME DuckDB
+    * oracle row.
     *
-    * Streaming surface (round 8): the full statement shape — ONE ROW PER
-    * MATCH with MEASURES, ALL ROWS PER MATCH with CLASSIFIER /
-    * MATCH_NUMBER / RUNNING-FINAL measures, and PREV-k navigation in
-    * DEFINE.
-    *  - PREV compiles onto [[Cep.orderedWithPrev]] — the watermark-ordered
-    *    keyed ring of the preceding `depth` rows, the streaming analogue of
-    *    the batch lag window (the reference resolves PREV against the NFA's
-    *    own row buffer, MatchCodeGenerator.scala). The augmented stream is
-    *    relayed through a parquet channel into the NFA stage (the
-    *    Kafka-topic-between-jobs deployment shape): both operators keep
-    *    event-time state, and Spark 4.1 rejects the chain in one query with
-    *    "Detected pattern of possible 'correctness' issue due to global
-    *    watermark. The query contains stateful operation which can emit rows
-    *    older than the current watermark plus allowed late record delay"
-    *    (the ring stage releases rows behind the watermark it advanced).
-    *    Streaming PREV navigates the KeyedRow payload (the partition /
-    *    order / event_type / value columns; the order column compares as
-    *    epoch-micros); NEXT compiles onto [[Cep.orderedWithNav]] (round 9)
-    *    — a row is held until its `nextDepth` successors clear the
-    *    watermark, and the bounded run's per-key tail (which no watermark
-    *    can ever confirm complete — Spark file streams emit no final
-    *    MAX_WATERMARK) backfills from the static source, the analogue of
-    *    the reference's end-of-input watermark flush.
-    *  - MEASURES follow the batch recipe per micro-batch: each batch of
-    *    completed matches explodes its (id, label) list, hash-joins back to
-    *    the static source on (partition, event id) — touching only matched
-    *    rows — aggregates per match, and appends to the result sink.
-    *  - ALL ROWS PER MATCH does the same join-back but keeps each matched
-    *    source row (CLASSIFIER = its step label; RUNNING/FINAL measures
-    *    windowed per match inside the batch — a match completes atomically
-    *    in one emission, so its rows share a batch). MATCH_NUMBER needs
-    *    the key's global match order, so it is computed on the final sink
-    *    read with the batch node's exact formulation (dense_rank over
-    *    (start_ts, first matched seq) per key) — a sink-side projection,
-    *    not part of the incremental pipeline.
+    * Streaming surface: the full statement shape — ONE ROW PER MATCH with
+    * MEASURES, ALL ROWS PER MATCH with CLASSIFIER / MATCH_NUMBER /
+    * RUNNING-FINAL measures, and PREV-k / NEXT-k navigation in DEFINE.
+    *  - Navigation runs on ONE operator, [[Cep.orderedWithNav]]: the
+    *    watermark-ordered keyed ring of the preceding rows, with each row
+    *    held until its `nextDepth` successors clear the watermark — the
+    *    streaming analogue of the batch lag/lead windows (the reference
+    *    resolves PREV/NEXT against the NFA's own row buffer,
+    *    MatchCodeGenerator.scala). Navigation reads the KeyedRow payload
+    *    (the partition / order / event_type / value columns; the order
+    *    column compares as epoch-micros).
+    *  - The augmented stream relays through [[graft.RelayDir.sink]] into
+    *    the NFA stage (the Kafka-topic-between-jobs deployment shape). Two
+    *    queries, not one: both operators keep event-time state, and Spark
+    *    4.1 rejects the chain in one query with "Detected pattern of
+    *    possible 'correctness' issue due to global watermark. The query
+    *    contains stateful operation which can emit rows older than the
+    *    current watermark plus allowed late record delay" (the ring stage
+    *    releases rows behind the watermark it advanced).
+    *  - With NEXT, the bounded run's per-key tail (which no watermark can
+    *    ever confirm complete — Spark file streams emit no final
+    *    MAX_WATERMARK) is completed from the static source into the
+    *    relay's `.tail` sibling and unioned into the NFA stage's input, the
+    *    analogue of the reference's end-of-input watermark flush.
+    *  - MEASURES and ALL ROWS PER MATCH run the batch recipe once over the
+    *    drained matches: explode each match's (id, label) list, hash-join
+    *    back to the static source on (partition, event id) — touching only
+    *    matched rows — then aggregate per match (MEASURES) or keep each
+    *    matched row with CLASSIFIER = its step label and RUNNING/FINAL
+    *    measures windowed per match (ALL ROWS). MATCH_NUMBER uses the batch
+    *    node's exact formulation (dense_rank over (start_ts, first matched
+    *    seq) per key).
     *
-    * At scale this is one hash-partition by key with O(open-runs + depth)
+    * Every channel — relay and match sink — is exactly-once: a micro-batch
+    * replayed after a crash is skipped by the file sink's commit log. At
+    * scale this is one hash-partition by key with O(open-runs + depth)
     * state per key and watermark-bounded buffers — no per-batch sort of
     * history, no unbounded state; the join-back is proportional to the
-    * matches of the batch, not the input. */
+    * matches, not the input. */
   def runStream(spark: SparkSession, dir: String, sql: String): DataFrame = {
     val spec = parse(sql)
     require(spec.partCols.size == 1,
@@ -391,11 +392,10 @@ object MatchRecognize {
         .replaceAll("""(?i)\bevent_id\b""", "id")
     }
 
-    def rawRows = source
-      .select(col(spec.partitionBy).cast("long").as("key"),
+    def keyedRows(df: DataFrame): DataFrame =
+      df.select(col(spec.partitionBy).cast("long").as("key"),
         graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
         col("event_id").as("id"), col("event_type").as("kind"), col("value"))
-      .as[KeyedRow]
 
     val rows: org.apache.spark.sql.Dataset[KeyedRow] =
       if (prevDepth == 0 && nextDepth == 0)
@@ -404,78 +404,37 @@ object MatchRecognize {
             graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
             col("event_id").as("id"), col("__mask").as("kind"), lit(0.0).as("value"))
           .as[KeyedRow]
-      else if (nextDepth == 0) {
-        // PREV-only: the ring-augmented stream relays through the REAL
-        // streaming parquet file sink (exactly-once, executor-side — no
-        // driver materialization), and the NFA stage file-streams the
-        // channel; RelayDir bounds the channel dirs' disk across runs
-        val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val relay = graft.RelayDir.fresh("mr_relay", token)
-        val q1 = Cep.orderedWithPrev(rawRows, prevDepth)
-          .writeStream.format("parquet").option("path", relay)
-          .option("checkpointLocation", s"$relay.ckpt")
-          .outputMode("append").start()
-        try q1.processAllAvailable() finally q1.stop()
-        val navSchema = org.apache.spark.sql.Encoders.product[Cep.NavRow].schema
-        spark.readStream.schema(navSchema).parquet(relay)
-          .withColumn("__mask", maskOf(spec.rawDefines.map {
-            case (v, d) => v -> navRewrite(d) }))
-          .select(col("key"), col("ts"), col("id"),
-            col("__mask").as("kind"), col("value"))
-          .as[KeyedRow]
-      } else {
-        // NEXT (possibly with PREV): Cep.orderedWithNav holds each row
-        // until `nextDepth` successors clear the watermark, then emits it
-        // with both navigation rings — the streaming mirror of the batch
-        // lead/lag compile (the reference resolves NEXT against the NFA's
-        // row buffer the same way, MatchCodeGenerator.scala)
+      else {
         val pD = math.max(prevDepth, 1)
-        val nD = nextDepth
-        val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val relay = graft.RelayDir.fresh("mr_relay", token)
-        // foreachBatch append (not the exactly-once file sink): the sink's
-        // _spark_metadata log would make every reader trust the log alone,
-        // hiding the batch-appended end-of-input backfill below — the same
-        // tradeoff the measure/ALL-ROWS sinks already make
-        val q1 = Cep.orderedWithNav(rawRows, pD, nD)
-          .writeStream.outputMode("append")
-          .option("checkpointLocation", s"$relay.ckpt")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[Cep.NavRowN], _: Long) =>
-            b.write.mode("append").parquet(relay)
-          }.start()
-        try q1.processAllAvailable() finally q1.stop()
-        // End-of-input flush: Spark file streams emit no final
-        // MAX_WATERMARK, so the last nD rows per key — whose successor
-        // rings extend past end of input — are still HELD in the nav
-        // operator's state when the bounded run stops (on an unbounded
-        // stream they would correctly wait forever: a row's lookahead can
-        // never be confirmed absent by a watermark). Complete exactly
-        // those rows from the static source with the batch lag/lead
-        // formulation and append them to the relay — the analogue of the
-        // reference's end-of-input watermark flushing the pending buffer.
-        val stat = spark.read.parquet(s"$dir/${spec.table}.parquet")
-          .select(col(spec.partitionBy).cast("long").as("key"),
-            graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
-            col("event_id").as("id"), col("event_type").as("kind"), col("value"))
-        val w = Window.partitionBy(col("key")).orderBy(col("ts"), col("id"))
-        val wRev = Window.partitionBy(col("key")).orderBy(col("ts").desc, col("id").desc)
-        def ringOf(mk: Int => Column, depth: Int): Column =
-          filter(array((1 to depth).map(mk): _*), _.isNotNull)
-        stat
-          .withColumn("__rev", row_number().over(wRev))
-          .withColumn("prev_ts", ringOf(k => lag(col("ts"), k).over(w), pD))
-          .withColumn("prev_kind", ringOf(k => lag(col("kind"), k).over(w), pD))
-          .withColumn("prev_value", ringOf(k => lag(col("value"), k).over(w), pD))
-          .withColumn("next_ts", ringOf(k => lead(col("ts"), k).over(w), nD))
-          .withColumn("next_kind", ringOf(k => lead(col("kind"), k).over(w), nD))
-          .withColumn("next_value", ringOf(k => lead(col("value"), k).over(w), nD))
-          .filter(col("__rev") <= nD)
-          .select(col("key"), col("ts"), col("id"), col("kind"), col("value"),
-            col("prev_ts"), col("prev_kind"), col("prev_value"),
-            col("next_ts"), col("next_kind"), col("next_value"))
-          .write.mode("append").parquet(relay)
-        // the ring arrays land nullable-element from the batch writer —
-        // widen the declared element nullability so both writers' files read
+        val relay = graft.RelayDir.sink(
+          Cep.orderedWithNav(keyedRows(source).as[KeyedRow], pD, nextDepth).toDF(),
+          "mr_relay", dir)
+        if (nextDepth > 0) {
+          // End-of-input flush: the last nextDepth rows per key — whose
+          // successor rings extend past end of input — are still HELD in
+          // the nav operator's state when the bounded run stops (on an
+          // unbounded stream they would correctly wait forever: a row's
+          // lookahead can never be confirmed absent by a watermark).
+          // Complete exactly those rows from the static source with the
+          // batch lag/lead formulation.
+          val w = Window.partitionBy(col("key")).orderBy(col("ts"), col("id"))
+          val wRev = Window.partitionBy(col("key")).orderBy(col("ts").desc, col("id").desc)
+          def ringOf(mk: Int => Column, depth: Int): Column =
+            filter(array((1 to depth).map(mk): _*), _.isNotNull)
+          keyedRows(spark.read.parquet(s"$dir/${spec.table}.parquet"))
+            .withColumn("__rev", row_number().over(wRev))
+            .withColumn("prev_ts", ringOf(k => lag(col("ts"), k).over(w), pD))
+            .withColumn("prev_kind", ringOf(k => lag(col("kind"), k).over(w), pD))
+            .withColumn("prev_value", ringOf(k => lag(col("value"), k).over(w), pD))
+            .withColumn("next_ts", ringOf(k => lead(col("ts"), k).over(w), nextDepth))
+            .withColumn("next_kind", ringOf(k => lead(col("kind"), k).over(w), nextDepth))
+            .withColumn("next_value", ringOf(k => lead(col("value"), k).over(w), nextDepth))
+            .filter(col("__rev") <= nextDepth)
+            .drop("__rev")
+            .write.parquet(s"$relay.tail")
+        }
+        // the tail's ring arrays land nullable-element from the batch
+        // writer — widen the declared element nullability so both read
         val navSchema = org.apache.spark.sql.types.StructType(
           org.apache.spark.sql.Encoders.product[Cep.NavRowN].schema.map {
             case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
@@ -483,7 +442,8 @@ object MatchRecognize {
               f.copy(dataType = at.copy(containsNull = true))
             case f => f
           })
-        spark.readStream.schema(navSchema).parquet(relay)
+        def channel(path: String) = spark.readStream.schema(navSchema).parquet(path)
+        (if (nextDepth > 0) channel(relay).union(channel(s"$relay.tail")) else channel(relay))
           .withColumn("__mask", maskOf(spec.rawDefines.map {
             case (v, d) => v -> navRewrite(d) }))
           .select(col("key"), col("ts"), col("id"),
@@ -491,91 +451,62 @@ object MatchRecognize {
           .as[KeyedRow]
       }
 
-    val matched = Cep.matchStream(rows, pattern)
+    val matched = graft.RelayDir.drain(spark,
+      Cep.matchStream(rows, pattern).toDF(), "mr_stream", dir)
+    val srcStatic = spark.read.parquet(s"$dir/${spec.table}.parquet")
+      .withColumn("__pkey", col(spec.partitionBy).cast("long"))
+      .withColumn("__srcid", col("event_id").cast("long"))
     val out: DataFrame =
       if (spec.allRows) {
         // event_id tiebreak: the NFA consumes rows in (ts, event_id) order,
         // so row_seq numbering must break order-column ties the same way
         val seqW = Window.partitionBy(col(spec.partitionBy))
           .orderBy(col(spec.orderBy), col("event_id"))
-        val preparedStatic = spark.read.parquet(s"$dir/${spec.table}.parquet")
-          .withColumn("__pkey", col(spec.partitionBy).cast("long"))
-          .withColumn("__srcid", col("event_id").cast("long"))
-          .withColumn("__seq", row_number().over(seqW).cast("long"))
-        def rowsOf(bdf: DataFrame): DataFrame = {
-          val expl = bdf.withColumn("__mid", monotonically_increasing_id())
-            .select(col("__mid"), col("key"), col("start_ts"),
-              explode(arrays_zip(col("ids"), col("labels"))).as("z"))
-            .select(col("__mid"), col("key"), col("start_ts"),
-              col("z.ids").as("__eid"), col("z.labels").as("classifier"))
-          val joined = expl.join(preparedStatic,
-            expl("key") === preparedStatic("__pkey") &&
-              expl("__eid") === preparedStatic("__srcid"))
-          val runW = Window.partitionBy(col("__mid")).orderBy(col("__seq"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-          val finW = Window.partitionBy(col("__mid"))
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-          val withMeasures = spec.measures.foldLeft(joined) { (df, m) =>
-            val (agg, post) = measureAgg(m, "classifier")
-            df.withColumn(m.alias, post(agg.over(if (m.running) runW else finW)))
-          }
-          withMeasures
-            .withColumn("__first_seq", min(col("__seq")).over(finW))
-            .drop("__mid", "__eid", "__srcid", "__pkey", "key")
+        val prepared = srcStatic.withColumn("__seq", row_number().over(seqW).cast("long"))
+        val expl = matched.withColumn("__mid", monotonically_increasing_id())
+          .select(col("__mid"), col("key"), col("start_ts"),
+            explode(arrays_zip(col("ids"), col("labels"))).as("z"))
+          .select(col("__mid"), col("key"), col("start_ts"),
+            col("z.ids").as("__eid"), col("z.labels").as("classifier"))
+        val joined = expl.join(prepared,
+          expl("key") === prepared("__pkey") && expl("__eid") === prepared("__srcid"))
+        val runW = Window.partitionBy(col("__mid")).orderBy(col("__seq"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val finW = Window.partitionBy(col("__mid"))
+          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        val withMeasures = spec.measures.foldLeft(joined) { (df, m) =>
+          val (agg, post) = measureAgg(m, "classifier")
+          df.withColumn(m.alias, post(agg.over(if (m.running) runW else finW)))
         }
-        val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val sinkDir = graft.RelayDir.fresh("mr_stream", token)
-        val q = matched.writeStream.outputMode("append")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[Cep.Match], _: Long) =>
-            rowsOf(b.toDF()).write.mode("append").parquet(sinkDir)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-        val sunk = if (new java.io.File(sinkDir).exists()) spark.read.parquet(sinkDir)
-          else rowsOf(spark.createDataset(Seq.empty[Cep.Match]).toDF())
-        sunk
+        withMeasures
+          .withColumn("__first_seq", min(col("__seq")).over(finW))
+          .drop("__mid", "__eid", "__srcid", "__pkey", "key")
           .withColumn("match_no", dense_rank().over(
             Window.partitionBy(col(spec.partitionBy))
               .orderBy(col("start_ts"), col("__first_seq"))))
           .drop("start_ts", "__first_seq")
           .withColumnRenamed("__seq", "row_seq")
       }
-      else if (spec.measures.isEmpty) {
-        graft.RelayDir.drain(spark,
-          matched.toDF().select(col("key").as(spec.partitionBy),
-            col("start_ts"), col("end_ts"),
-            size(col("ids")).cast("long").as("n_rows")),
-          "mr_stream", dir)
-      } else {
-        val srcStatic = spark.read.parquet(s"$dir/${spec.table}.parquet")
-          .withColumn("__pkey", col(spec.partitionBy).cast("long"))
-          .withColumn("__srcid", col("event_id").cast("long"))
+      else if (spec.measures.isEmpty)
+        matched.select(col("key"), col("start_ts"), col("end_ts"),
+          size(col("ids")).cast("long").as("n_rows"))
+      else {
+        // explode ids/labels, join back on (partition, event id) — matched
+        // rows only — aggregate per match
         val aggs = spec.measures.map(measureCol)
-        // batch recipe per micro-batch: explode ids/labels, join back on
-        // (partition, event id) — matched rows only — aggregate per match
-        def measuresOf(bdf: DataFrame): DataFrame = {
-          val expl = bdf.withColumn("__mid", monotonically_increasing_id())
-            .select(col("__mid"), col("key"), col("start_ts"), col("end_ts"),
-              size(col("ids")).cast("long").as("n_rows"),
-              posexplode(arrays_zip(col("ids"), col("labels"))).as(Seq("__pos", "z")))
-            .select(col("__mid"), col("key"), col("start_ts"), col("end_ts"),
-              col("n_rows"), (col("__pos") + 1).cast("long").as("__seq"),
-              col("z.ids").as("__eid"), col("z.labels").as("__label"))
-          expl.join(srcStatic, expl("key") === srcStatic("__pkey") &&
-              expl("__eid") === srcStatic("__srcid"))
-            .groupBy(col("__mid"), col("key"), col("start_ts"), col("end_ts"),
-              col("n_rows"))
-            .agg(aggs.head, aggs.tail: _*)
-            .drop("__mid")
-        }
-        val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-        val sinkDir = graft.RelayDir.fresh("mr_stream", token)
-        val q = matched.writeStream.outputMode("append")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[Cep.Match], _: Long) =>
-            measuresOf(b.toDF()).write.mode("append").parquet(sinkDir)
-          }.start()
-        try q.processAllAvailable() finally q.stop()
-        if (new java.io.File(sinkDir).exists()) spark.read.parquet(sinkDir)
-        else measuresOf(spark.createDataset(Seq.empty[Cep.Match]).toDF())
+        val expl = matched.withColumn("__mid", monotonically_increasing_id())
+          .select(col("__mid"), col("key"), col("start_ts"), col("end_ts"),
+            size(col("ids")).cast("long").as("n_rows"),
+            posexplode(arrays_zip(col("ids"), col("labels"))).as(Seq("__pos", "z")))
+          .select(col("__mid"), col("key"), col("start_ts"), col("end_ts"),
+            col("n_rows"), (col("__pos") + 1).cast("long").as("__seq"),
+            col("z.ids").as("__eid"), col("z.labels").as("__label"))
+        expl.join(srcStatic, expl("key") === srcStatic("__pkey") &&
+            expl("__eid") === srcStatic("__srcid"))
+          .groupBy(col("__mid"), col("key"), col("start_ts"), col("end_ts"),
+            col("n_rows"))
+          .agg(aggs.head, aggs.tail: _*)
+          .drop("__mid")
       }
     out.withColumnRenamed("key", spec.partitionBy)
       .createOrReplaceTempView("__mr_out")

@@ -520,61 +520,12 @@ object Cep {
       }
   }
 
-  /** A row plus its PREV-k ring: `prev_*(k)` (1-based, `element_at`) is the
-    * k-th preceding row of the key's event-time order — the ordered
-    * in-state buffer MATCH_RECOGNIZE's streaming DEFINE navigation rides
-    * (the reference compiles PREV onto the NFA's row buffer,
+  /** A row plus its navigation rings: `prev_*(k)` (1-based, `element_at`)
+    * is the k-th PRECEDING row of the key's event-time order, `next_*(k)`
+    * the k-th FOLLOWING one — the ordered in-state buffer
+    * MATCH_RECOGNIZE's streaming DEFINE navigation rides (the reference
+    * resolves PREV/NEXT against the NFA's row buffer,
     * MatchCodeGenerator.scala's navigation resolution). */
-  case class NavRow(key: Long, ts: Long, id: Long, kind: String, value: Double,
-                    prev_ts: Seq[Long], prev_kind: Seq[String],
-                    prev_value: Seq[Double])
-
-  private[streaming] case class NavState(pending: List[KeyedRow],
-                                         ring: List[KeyedRow])
-
-  /** Watermark-ordered PREV-k augmentation: buffer per key until the
-    * event-time watermark confirms order (the same discipline as
-    * [[matchStream]]), then emit every row with the ring of its `depth`
-    * preceding rows (newest first). State = pending buffer + depth-bounded
-    * ring; rows before the partition start get a short ring, so
-    * `element_at` past it is NULL — exactly `lag`'s semantics. */
-  def orderedWithPrev(rows: Dataset[KeyedRow], depth: Int,
-                      delay: String = "0 seconds"): Dataset[NavRow] = {
-    import rows.sparkSession.implicits._
-    rows
-      // +2999 µs shift + wm·1000−1000 release + 3 ms delay compensation:
-      // see matchStream's ets note
-      .withColumn("ets", timestamp_micros(col("ts") + lit(2999L)))
-      .withWatermark("ets", compensatedDelay(delay))
-      .as[KeyedRowW]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[NavState, NavRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, it, state) =>
-          val st = state.getOption.getOrElse(NavState(Nil, Nil))
-          val wmMs = state.getCurrentWatermarkMs()
-          val releaseMicros = wmMs * 1000L - 1000L
-          val incoming = it.map(w => KeyedRow(w.key, w.ts, w.id, w.kind, w.value))
-          val all = (st.pending ++ incoming).sortBy(r => (r.ts, r.id))
-          val (ready, pending) = all.partition(_.ts <= releaseMicros)
-          var ring = st.ring
-          val out = ready.map { r =>
-            val o = NavRow(r.key, r.ts, r.id, r.kind, r.value,
-              ring.map(_.ts), ring.map(_.kind), ring.map(_.value))
-            ring = (r :: ring).take(depth)
-            o
-          }
-          state.update(NavState(pending, ring))
-          pending.headOption.foreach { _ =>
-            state.setTimeoutTimestamp(wmMs + 1L)
-          }
-          out.iterator
-      }
-  }
-
-  /** A row plus BOTH navigation rings: `prev_*` as in [[NavRow]], and
-    * `next_*(k)` = the k-th FOLLOWING row of the key's event-time order —
-    * the lookahead MATCH_RECOGNIZE's NEXT-in-DEFINE needs on a stream. */
   case class NavRowN(key: Long, ts: Long, id: Long, kind: String, value: Double,
                      prev_ts: Seq[Long], prev_kind: Seq[String], prev_value: Seq[Double],
                      next_ts: Seq[Long], next_kind: Seq[String], next_value: Seq[Double])
@@ -583,25 +534,29 @@ object Cep {
                                           ring: List[KeyedRow],
                                           holds: List[KeyedRow])
 
-  /** Watermark-ordered PREV-k AND NEXT-k augmentation — the mirror of
-    * [[orderedWithPrev]] for lookahead: a released row is HELD until
-    * `nextDepth` successors have also cleared the watermark, then emits
-    * with both rings (successors oldest-first: `next_*(1)` is the
-    * immediately following row — `lead`'s semantics). State per key =
-    * pending buffer + depth-bounded prev ring + at most `nextDepth` held
-    * rows: all bounded, never proportional to stream length.
+  /** Watermark-ordered PREV-k and NEXT-k augmentation: buffer per key until
+    * the event-time watermark confirms order (the same discipline as
+    * [[matchStream]]); a released row is HELD until `nextDepth` successors
+    * have also cleared the watermark, then emits with both rings
+    * (predecessors newest-first, successors oldest-first: `next_*(1)` is
+    * the immediately following row). Rings are short at the partition
+    * edges, so `element_at` past them is NULL — exactly `lag`/`lead`'s
+    * semantics. With `nextDepth = 0` nothing is held and `next_*` is empty.
+    * State per key = pending buffer + `prevDepth` ring + at most
+    * `nextDepth` held rows: all bounded, never proportional to stream
+    * length.
     *
     * End-of-input: Spark file streams emit no final MAX_WATERMARK, so on a
     * BOUNDED run the last `nextDepth` rows per key are still held when the
     * query stops — no in-order row can ever confirm their successors'
     * absence. The bounded caller completes exactly those rows from the
-    * static source (see MatchRecognize.runStream's tail backfill), the
-    * analogue of the reference's end-of-input watermark flushing the
-    * pending buffer (StreamExecMatch's WatermarkAssigner contract). */
+    * static source (see MatchRecognize.runStream's tail), the analogue of
+    * the reference's end-of-input watermark flushing the pending buffer
+    * (StreamExecMatch's WatermarkAssigner contract). */
   def orderedWithNav(rows: Dataset[KeyedRow], prevDepth: Int, nextDepth: Int,
                      delay: String = "0 seconds"): Dataset[NavRowN] = {
     import rows.sparkSession.implicits._
-    require(nextDepth > 0, "use orderedWithPrev when no lookahead is needed")
+    require(prevDepth >= 0 && nextDepth >= 0, "navigation depths are non-negative")
     rows
       // +2999 µs shift + wm·1000−1000 release + 3 ms delay compensation:
       // see matchStream's ets note

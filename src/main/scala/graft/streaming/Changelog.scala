@@ -400,9 +400,7 @@ object Changelog {
     * oracle — is identical; the sf10 probe measures the volume difference. */
   def qCdcPipeline(s: SparkSession, dir: String, miniBatch: Boolean): DataFrame = {
     import s.implicits._
-    val token = dir.replaceAll("[^a-zA-Z0-9]", "_") +
-      (if (miniBatch) "_mb" else "")
-    val relay = graft.RelayDir.fresh("cdc_relay", token)
+    val relay = graft.RelayDir.fresh("cdc_relay", dir + (if (miniBatch) "_mb" else ""))
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     val rows = graft.Tables.streamTable(s, dir, "events", schema)
       .select(col("user_id").as("key"), graft.Tables.tsAsMicrosLong(schema).as("ts"),

@@ -41,8 +41,7 @@ object Iterations {
 
   def qStreamIterateComponents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val chan = graft.RelayDir.fresh("iterate_chan", token)
+    val chan = graft.RelayDir.fresh("iterate_chan", dir)
     val ckpt = s"$chan.ckpt"
     val edges = graft.graph.Graphs.edges(s, dir) // (src, dst), both directions
     // channel-file sizing: the feedback rows are two longs (~16 bytes), so

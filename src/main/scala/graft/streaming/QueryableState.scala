@@ -50,8 +50,7 @@ object QueryableState {
 
   def qQueryableState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val ckpt = graft.RelayDir.fresh("qstate_ckpt", token)
+    val ckpt = graft.RelayDir.fresh("qstate_ckpt", dir)
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     val rows = graft.Tables.streamTable(s, dir, "events", schema)
       .select(col("user_id").as("_1"),

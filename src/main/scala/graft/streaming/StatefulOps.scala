@@ -1012,9 +1012,8 @@ object StatefulOps {
     * buffered probes all resolve before the drain stops. */
   def qStreamAsofJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val token = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val probesDir = graft.RelayDir.fresh("asof_stream_in", s"${token}_p")
-    val versDir = graft.RelayDir.fresh("asof_stream_in", s"${token}_v")
+    val probesDir = graft.RelayDir.fresh("asof_stream_in", s"${dir}_p")
+    val versDir = graft.RelayDir.fresh("asof_stream_in", s"${dir}_v")
     val ev = graft.Tables.load(s, dir, "events")
     def keyed(t: String) = ev.filter(col("event_type") === t)
       .select(col("user_id").as("key"),
@@ -1044,7 +1043,7 @@ object StatefulOps {
       .option("maxFilesPerTrigger", 1).parquet(probesDir).as[KeyedRow]
     val right = s.readStream.schema(schema).parquet(versDir).as[KeyedRow]
     val emitted = graft.RelayDir.drain(s,
-      eventTimeTemporalJoin(left, right).toDF(), "asof_stream_out", token)
+      eventTimeTemporalJoin(left, right).toDF(), "asof_stream_out", dir)
     emitted.filter(col("key") >= 0)
       .select(col("key").as("u"), col("probe_id").as("p_id"),
         col("version_id").as("asof_click_id"),

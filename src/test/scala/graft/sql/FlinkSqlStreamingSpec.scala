@@ -587,4 +587,65 @@ class FlinkSqlStreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty, "stream emitted no matches")
     assert(streamed == batch)
   }
+
+  test("streaming NEXT-in-DEFINE with MEASURES equals the batch scan, tail rows included") {
+    // A navigates its successor, so a match whose B is a partition's LAST
+    // row exists only through the end-of-input tail the NFA stage unions in
+    val mrSql =
+      """SELECT user_id, start_ts, end_ts, n_rows, click_val, buy_val FROM events
+         MATCH_RECOGNIZE (
+           PARTITION BY user_id ORDER BY ts
+           MEASURES FIRST(A.value) AS click_val, LAST(B.value) AS buy_val
+           ONE ROW PER MATCH
+           AFTER MATCH SKIP PAST LAST ROW
+           PATTERN (A B)
+           DEFINE A AS event_type = 'click' AND NEXT(A.value) > A.value,
+                  B AS event_type = 'purchase' AND B.value > PREV(B.value)
+         ) ORDER BY user_id, start_ts"""
+    graft.Tables.registerAll(spark, sf)
+    val batch = MatchRecognize.run(spark, mrSql)
+    val streamed = MatchRecognize.runStream(spark, sf, mrSql)
+    assert(streamed.columns.toSeq == batch.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    assert(rows(streamed).nonEmpty, "stream emitted no matches")
+    assert(rows(streamed) == rows(batch))
+    val lastRows = spark.sql(
+      "SELECT user_id, max(unix_micros(cast(ts as timestamp))) AS end_ts FROM events GROUP BY user_id")
+    assert(!streamed.join(lastRows, Seq("user_id", "end_ts")).isEmpty,
+      "no match ends on a partition's last row — the tail path went untested")
+  }
+
+  test("streaming MATCH_RECOGNIZE with no match returns the batch columns and no rows") {
+    // DEFINE never holds: the match sink commits no data file, in both the
+    // ALL ROWS and the MEASURES shape
+    val allRows =
+      """SELECT user_id, row_seq, event_id, classifier, match_no, n_so_far FROM events
+         MATCH_RECOGNIZE (
+           PARTITION BY user_id ORDER BY ts
+           MEASURES RUNNING COUNT(*) AS n_so_far
+           ALL ROWS PER MATCH
+           AFTER MATCH SKIP PAST LAST ROW
+           PATTERN (A B)
+           DEFINE A AS event_type = 'click',
+                  B AS event_type = 'no_such_type' AND value > PREV(value)
+         ) ORDER BY user_id, match_no, row_seq"""
+    val measures =
+      """SELECT user_id, start_ts, end_ts, n_rows, first_val FROM events
+         MATCH_RECOGNIZE (
+           PARTITION BY user_id ORDER BY ts
+           MEASURES FIRST(A.value) AS first_val
+           ONE ROW PER MATCH
+           AFTER MATCH SKIP PAST LAST ROW
+           PATTERN (A B)
+           DEFINE A AS event_type = 'no_such_type', B AS event_type = 'click'
+         ) ORDER BY user_id, start_ts"""
+    graft.Tables.registerAll(spark, sf)
+    for (mrSql <- Seq(allRows, measures)) {
+      val batch = MatchRecognize.run(spark, mrSql)
+      val streamed = MatchRecognize.runStream(spark, sf, mrSql)
+      assert(streamed.columns.toSeq == batch.columns.toSeq)
+      assert(batch.isEmpty && streamed.isEmpty)
+    }
+  }
 }

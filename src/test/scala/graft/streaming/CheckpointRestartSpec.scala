@@ -124,15 +124,18 @@ class CheckpointRestartSpec extends SparkSpec {
       s"early fire must include pre-restart state, terminal the full window: $rows")
   }
 
-  test("the streaming PREV ring (orderedWithPrev) survives a query restart") {
+  test("the streaming PREV ring survives a restart and a replay") {
+    // orderedWithNav without lookahead — MATCH_RECOGNIZE's PREV relay —
+    // through the exactly-once file sink, as runStream relays it
     val s = spark
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("ckpt_nav").toString
     val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
     new java.io.File(in).mkdirs()
     val schema = "key LONG, ts LONG, id LONG, kind STRING, value DOUBLE"
-    def startQuery() = Cep.orderedWithPrev(
-        s.readStream.schema(schema).json(s"$in/*").as[KeyedRow], depth = 2)
+    def startQuery() = Cep.orderedWithNav(
+        s.readStream.schema(schema).json(s"$in/*").as[KeyedRow],
+        prevDepth = 2, nextDepth = 0)
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -146,6 +149,17 @@ class CheckpointRestartSpec extends SparkSpec {
         """{"key":1,"ts":2000000,"id":2,"kind":"b","value":2.0}""")
       q1.processAllAvailable()
     } finally q1.stop()
+    // forced replay: drop the newest commit (a crash after the sink wrote
+    // batch n, before the commit log recorded it) so the restarted query
+    // runs batch n again
+    val commits = new java.io.File(s"$ckpt/commits")
+    val newest = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    // the replayed batch is one that wrote rows: its sink log entry lists files
+    assert(java.nio.file.Files.readAllLines(
+        java.nio.file.Paths.get(s"$out/_spark_metadata/$newest")).size > 1,
+      s"batch $newest emitted nothing — the replay would prove nothing")
+    new java.io.File(commits, newest.toString).delete()
+    new java.io.File(commits, s".$newest.crc").delete()
     // phase 2: a NEW query from the same checkpoint — the post-restart row
     // must see the PRE-restart rows as its PREV ring
     val q2 = startQuery()
@@ -155,12 +169,18 @@ class CheckpointRestartSpec extends SparkSpec {
       addFile("f3", """{"key":1,"ts":9000000,"id":9,"kind":"z","value":0.0}""")
       q2.processAllAvailable()
     } finally q2.stop()
-    val rows = s.read.parquet(out).as[Cep.NavRow].collect().toSeq
+    assert(new java.io.File(commits, newest.toString).exists(),
+      s"batch $newest must have run again")
+    val rows = s.read.parquet(out).as[Cep.NavRowN].collect().toSeq
     val r3 = rows.find(_.id == 3).getOrElse(fail(s"row 3 never emitted: $rows"))
     assert(r3.prev_kind == Seq("b", "a"),
       s"the ring must survive the restart: $rows")
     // exactly-once: pre-restart rows are not re-emitted
     assert(rows.count(_.id == 1) == 1 && rows.count(_.id == 2) == 1)
+    // no lookahead: nothing is held, every next_* ring is empty
+    assert(rows.forall(r => r.next_ts.isEmpty && r.next_kind.isEmpty && r.next_value.isEmpty))
+    // the replayed batch leaves every row exactly once in the read-back
+    assert(rows.groupBy(_.id).forall(_._2.size == 1), s"replay duplicated rows: $rows")
   }
 
   test("round 10: the CEP NFA resumes MID-PATTERN from checkpoint") {

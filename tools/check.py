@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <outDir>
-  1. (caller already ran graft.Verify <sfDir> <outDir>)
+Usage: python3 tools/check.py <sfDir> <outDir> [name,name,...]
+  1. (caller already ran graft.Verify <sfDir> <outDir> [names])
   2. registers each parquet table as a DuckDB view
   3. runs every oracle_sql.json entry
   4. compares against the Spark parquet dump: schema (sorted col names),
      row count, and exact values on rows sorted by all columns.
+  With a name list (graft.Verify's filter), only those rows are checked;
+  a named row with no Spark output still fails.
 
 Driver-side tooling only — the library itself never depends on this.
 """
@@ -31,7 +33,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
             df[c] = df[c].map(lambda v: tuple(v) if isinstance(v, (list, np.ndarray)) else v)
     return df.sort_values(by=list(df.columns), ignore_index=True)
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -40,7 +42,8 @@ def main(sf_dir, out_dir):
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
     spark_dirs = {os.path.basename(d): d for d in glob.glob(os.path.join(out_dir, "*")) if os.path.isdir(d)}
-    for name in sorted(set(oracle) | set(spark_dirs)):
+    names = set(oracle) | set(spark_dirs) if only is None else set(only)
+    for name in sorted(names):
         if name not in spark_dirs:
             results[name] = "MISSING_SPARK_OUTPUT"; continue
         files = glob.glob(os.path.join(spark_dirs[name], "*.parquet"))
@@ -77,4 +80,5 @@ def main(sf_dir, out_dir):
     return 0 if npass == len(results) else 1
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    only = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+    sys.exit(main(sys.argv[1], sys.argv[2], only))
