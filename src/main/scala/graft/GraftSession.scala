@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the engine.
@@ -192,9 +194,22 @@ object GraftSession {
     * RocksDB provider's background compaction can outlive `spark.stop()`
     * into JVM exit and crash in the JNI logger callback — the round-10
     * `hs_err` incident (BASELINE.md). RocksDbShutdownSpec forks a real
-    * JVM through this exact open-run-exit path and asserts a clean exit. */
+    * JVM through this exact open-run-exit path and asserts a clean exit.
+    * A shutdown still running after 60 s prints every thread's stack to
+    * stderr once (it stops, interrupts and times out nothing), so a hang
+    * leaves its cause in the log. */
   def shutdown(spark: SparkSession): Unit = {
-    org.apache.spark.sql.GraftSqlBridge.stopStateStores()
-    spark.stop()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val watcher = new Thread(() =>
+      if (!done.await(60L, java.util.concurrent.TimeUnit.SECONDS))
+        System.err.println(Thread.getAllStackTraces.asScala.map { case (t, frames) =>
+          s""""${t.getName}" ${t.getState}""" + frames.map(f => s"\n    at $f").mkString
+        }.mkString("GraftSession.shutdown: still running after 60 s\n", "\n\n", "")))
+    watcher.setDaemon(true)
+    watcher.start()
+    try {
+      org.apache.spark.sql.GraftSqlBridge.stopStateStores()
+      spark.stop()
+    } finally done.countDown()
   }
 }

@@ -2,20 +2,21 @@ package graft
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Per-invocation streaming relay, sink and checkpoint directories. [[sink]]
   * runs a stream through the exactly-once parquet file sink — e.g. the
   * "topic between jobs" channel `MatchRecognize.runStream`'s navigation
   * stage relays through (the reference chains jobs through Kafka topics) —
   * and [[drain]] reads the result back. A generation's siblings (its
-  * `.ckpt` checkpoint, runStream's end-of-input `.tail`) share its name.
+  * `.ckpt` checkpoint, its `.end` end-marker input) share its name.
   *
   * Each invocation needs a FRESH dir (the file sink's commit log never
   * overwrites), but callers read the channel LAZILY after the call returns —
   * so the dir cannot be deleted inside the call that created it. Instead,
   * allocating a new dir purges every sibling generation older than
-  * [[PurgeAfterMs]], `.ckpt`/`.tail` included: disk usage is bounded at
+  * [[PurgeAfterMs]], `.ckpt`/`.end` included: disk usage is bounded at
   * roughly one gate/bench run's worth per token instead of growing with
   * every run, while anything a still-unconsumed DataFrame might re-read
   * stays on disk well past any realistic consumption window.
@@ -44,35 +45,28 @@ object RelayDir {
   }
 
   /** Run an append-mode streaming DataFrame to completion through the
-    * exactly-once parquet FILE sink into a [[fresh]] dir and return it (a
-    * replayed batch is skipped by the sink's commit log). This is the
-    * deployment shape for unbounded results: the memory sink collects every
-    * output row to the driver and dies at `spark.driver.maxResultSize` the
-    * moment the emit log outgrows it (the sf10 probe's cumulate-window
-    * query produced a >1 GiB log and did exactly that). The file sink
-    * streams output to disk partition-parallel. */
-  def sink(out: DataFrame, root: String, token: String): String = {
-    val dir = fresh(root, token)
-    val q = out.writeStream.format("parquet")
+    * exactly-once parquet FILE sink into a [[fresh]] `dir` (a replayed
+    * batch is skipped by the sink's commit log), with the end marker when
+    * `end` is the `<dir>.end` its input was built on; the sentinel key is
+    * not written. This is the deployment shape for unbounded results: the
+    * memory sink collects every output row to the driver and dies at
+    * `spark.driver.maxResultSize` the moment the emit log outgrows it (the
+    * sf10 probe's cumulate-window query produced a >1 GiB log and did
+    * exactly that). The file sink streams output to disk partition-parallel. */
+  def sink(out: DataFrame, dir: String, end: Option[String] = None): Unit = {
+    val kept = if (end.isEmpty) out else out.filter(col("key") =!= streaming.Bounded.EndKey)
+    streaming.Bounded.run(kept.writeStream.format("parquet")
       .option("path", dir).option("checkpointLocation", s"$dir.ckpt")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    dir
+      .outputMode("append"), end)
   }
 
   /** [[sink]] the stream, then read the result back: a plain scan any
     * downstream consumer could run in its own job. */
-  def drain(s: SparkSession, out: DataFrame, root: String,
-            token: String): DataFrame = {
-    val dir = sink(out, root, token)
-    // No-data detection must look for committed DATA files: the file sink
-    // creates the dir (its _spark_metadata log) at query start, so a
-    // dir-exists check is always true, and a stream that committed zero
-    // files would fail schema inference on the empty metadata-log index.
-    val committedData = Option(new File(dir).listFiles())
-      .exists(_.exists(f => f.isFile && !f.getName.startsWith("_") &&
-        !f.getName.startsWith(".")))
-    if (committedData) s.read.parquet(dir)
-    else s.createDataFrame(new java.util.ArrayList[Row](), out.schema)
+  def drain(s: SparkSession, out: DataFrame, dir: String,
+            end: Option[String] = None): DataFrame = {
+    sink(out, dir, end)
+    // the stream's own schema: a sink that committed no data file leaves an
+    // empty metadata-log index, which schema inference would reject
+    s.read.schema(out.schema).parquet(dir)
   }
 }

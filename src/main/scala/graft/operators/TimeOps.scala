@@ -117,12 +117,8 @@ object TimeOps {
     * +1 h/-0 window of rows per side). INNER join, so every matched pair
     * emits when found and the result equals the batch join row-for-row —
     * the oracle is the plain pair list. */
-  /** The stream-stream interval-joined frame (before the sink) — shared
-    * with tools/StreamJoinProbe so probe measurements can never silently
-    * diverge from the declared query they claim to explain (ADVICE r16). */
-  private[graft] def streamIntervalJoined(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
+  private def streamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
+    val schema = s.read.parquet(s"$dir/events.parquet").schema
     def src() = graft.Tables.streamTable(s, dir, "events", schema)
       .withColumn("ts", graft.Tables.tsAsTimestamp(schema))
     val p = src().filter(col("event_type") === "purchase")
@@ -133,15 +129,13 @@ object TimeOps {
       .withWatermark("ts", "0 seconds")
       .select(col("user_id").as("cu"), col("event_id").as("c_id"),
         col("ts").as("c_ts"))
-    p.join(c, col("u") === col("cu")
+    val joined = p.join(c, col("u") === col("cu")
       && col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR")
       && col("c_ts") <= col("p_ts"))
       .select(col("u"), col("p_id"), col("c_id"))
-  }
-
-  private def streamIntervalJoin(s: SparkSession, dir: String): DataFrame =
-    graft.RelayDir.drain(s, streamIntervalJoined(s, dir), "tij_relay", dir)
+    graft.RelayDir.drain(s, joined, graft.RelayDir.fresh("tij_relay", dir))
       .orderBy(col("u"), col("p_id"), col("c_id"))
+  }
 
   def queries: Map[String, QFn] = Map(
     "time_tumble" -> (tumble _),

@@ -40,18 +40,16 @@ object StreamingFileSink {
   }
 
   /** Run the streaming write: file-source over events → partitioned
-    * parquet sink, one AvailableNow-style drain via processAllAvailable. */
+    * parquet sink, drained to completion by [[graft.streaming.Bounded.run]]. */
   def writeEvents(s: SparkSession, dir: String): Unit = {
     wipe(s, sinkDir(dir)); wipe(s, ckptDir(dir))
     val schema = s.read.parquet(s"$dir/events.parquet").schema
     val in = graft.Tables.streamTable(s, dir, "events", schema)
       .withColumn("ts", graft.Tables.tsAsTimestamp(schema).cast("timestamp_ntz"))
-    val q = in.writeStream.format("parquet")
+    graft.streaming.Bounded.run(in.writeStream.format("parquet")
       .partitionBy("event_type")
       .option("path", sinkDir(dir))
-      .option("checkpointLocation", ckptDir(dir))
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .option("checkpointLocation", ckptDir(dir)))
   }
 
   /** Aggregate the sink read back as a batch table; the manifest-visible

@@ -366,7 +366,7 @@ object FlinkSqlQueries {
         .select(org.apache.spark.sql.functions.col("window.start").as("w_start"),
           org.apache.spark.sql.functions.col("n"),
           org.apache.spark.sql.functions.col("total"))
-      graft.RelayDir.drain(s, out, "fsql_relay", dir)
+      graft.RelayDir.drain(s, out, graft.RelayDir.fresh("fsql_relay", dir))
         .selectExpr("CAST(w_start AS TIMESTAMP_NTZ) AS w_start", "n", "total")
         .orderBy("w_start")
     }),
@@ -584,9 +584,9 @@ object FlinkSqlQueries {
          ) ORDER BY user_id, start_ts""")),
     // the SAME statement on a real stream — the last batch-only MR feature:
     // Cep.orderedWithNav holds each row until its successor clears the
-    // watermark, so NEXT resolves against confirmed lookahead; the bounded
-    // run's tail rows are completed from the static source (no end-of-input
-    // watermark exists in Spark file streams)
+    // watermark, so NEXT resolves against confirmed lookahead; each key's
+    // last row flushes on the end marker's watermark (Bounded.withEnd —
+    // Spark file streams emit no end-of-input watermark of their own)
     "mr_stream_next_define" -> ((s, dir) => MatchRecognize.runStream(s, dir,
       """SELECT user_id, start_ts, end_ts FROM events
          MATCH_RECOGNIZE (
@@ -839,7 +839,7 @@ object FlinkSqlQueries {
                   CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
            FROM events_stream
            GROUP BY TUMBLE(ts, INTERVAL '1' HOUR), event_type""")
-      graft.RelayDir.drain(s, out, "fsql_relay", dir)
+      graft.RelayDir.drain(s, out, graft.RelayDir.fresh("fsql_relay", dir))
         .selectExpr("CAST(w_start AS TIMESTAMP_NTZ) AS w_start",
           "event_type", "n", "total")
         .orderBy("w_start", "event_type")
@@ -887,7 +887,7 @@ object FlinkSqlQueries {
                     user_id, count(*) AS n, max(value) AS mx
              FROM events_stream_hop
              GROUP BY HOP(ts, INTERVAL '1' HOUR, INTERVAL '2' HOUR), user_id""")
-        graft.RelayDir.drain(s, out, "fsql_relay", dir)
+        graft.RelayDir.drain(s, out, graft.RelayDir.fresh("fsql_relay", dir))
           .selectExpr("CAST(w_start AS TIMESTAMP_NTZ) AS w_start", "user_id", "n",
             "mx", "CAST(fire_time AS TIMESTAMP_NTZ) AS fire_time", "is_final")
           .orderBy("user_id", "w_start", "fire_time", "is_final")
@@ -915,7 +915,7 @@ object FlinkSqlQueries {
                     user_id, count(*) AS n, max(value) AS mx
              FROM events_stream_cum
              GROUP BY CUMULATE(ts, INTERVAL '1' HOUR, INTERVAL '4' HOUR), user_id""")
-        graft.RelayDir.drain(s, out, "fsql_relay", dir)
+        graft.RelayDir.drain(s, out, graft.RelayDir.fresh("fsql_relay", dir))
           .selectExpr("CAST(w_start AS TIMESTAMP_NTZ) AS w_start",
             "CAST(w_end AS TIMESTAMP_NTZ) AS w_end", "user_id", "n",
             "mx", "CAST(fire_time AS TIMESTAMP_NTZ) AS fire_time", "is_final")
@@ -944,7 +944,7 @@ object FlinkSqlQueries {
                     count(*) AS n, max(value) AS mx
              FROM events_stream_sess
              GROUP BY SESSION(ts, INTERVAL '30' MINUTE), user_id""")
-        graft.RelayDir.drain(s, out, "fsql_relay", dir)
+        graft.RelayDir.drain(s, out, graft.RelayDir.fresh("fsql_relay", dir))
           .selectExpr("CAST(w_start AS TIMESTAMP_NTZ) AS w_start", "user_id", "n",
             "mx", "CAST(fire_time AS TIMESTAMP_NTZ) AS fire_time", "is_final")
           .orderBy("user_id", "w_start", "fire_time", "is_final")

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.streaming.{Cep, KeyedRow}
+import graft.streaming.{Bounded, Cep, KeyedRow}
 import graft.Checkpoints._
 
 /** SQL MATCH_RECOGNIZE front-end over the CEP NFA
@@ -326,11 +326,11 @@ object MatchRecognize {
     *    contains stateful operation which can emit rows older than the
     *    current watermark plus allowed late record delay" (the ring stage
     *    releases rows behind the watermark it advanced).
-    *  - With NEXT, the bounded run's per-key tail (which no watermark can
-    *    ever confirm complete — Spark file streams emit no final
-    *    MAX_WATERMARK) is completed from the static source into the
-    *    relay's `.tail` sibling and unioned into the NFA stage's input, the
-    *    analogue of the reference's end-of-input watermark flush.
+    *  - With NEXT, the navigation stage runs with the end marker
+    *    ([[Bounded.withEnd]], in the relay's `.end` sibling): Spark file
+    *    streams emit no final MAX_WATERMARK, so the sentinel's watermark is
+    *    what flushes each key's last rows with short lookahead rings — the
+    *    reference's end-of-input watermark flush.
     *  - MEASURES and ALL ROWS PER MATCH run the batch recipe once over the
     *    drained matches: explode each match's (id, label) list, hash-join
     *    back to the static source on (partition, event id) — touching only
@@ -392,11 +392,6 @@ object MatchRecognize {
         .replaceAll("""(?i)\bevent_id\b""", "id")
     }
 
-    def keyedRows(df: DataFrame): DataFrame =
-      df.select(col(spec.partitionBy).cast("long").as("key"),
-        graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
-        col("event_id").as("id"), col("event_type").as("kind"), col("value"))
-
     val rows: org.apache.spark.sql.Dataset[KeyedRow] =
       if (prevDepth == 0 && nextDepth == 0)
         source.withColumn("__mask", maskOf(spec.defines))
@@ -406,44 +401,17 @@ object MatchRecognize {
           .as[KeyedRow]
       else {
         val pD = math.max(prevDepth, 1)
-        val relay = graft.RelayDir.sink(
-          Cep.orderedWithNav(keyedRows(source).as[KeyedRow], pD, nextDepth).toDF(),
-          "mr_relay", dir)
-        if (nextDepth > 0) {
-          // End-of-input flush: the last nextDepth rows per key — whose
-          // successor rings extend past end of input — are still HELD in
-          // the nav operator's state when the bounded run stops (on an
-          // unbounded stream they would correctly wait forever: a row's
-          // lookahead can never be confirmed absent by a watermark).
-          // Complete exactly those rows from the static source with the
-          // batch lag/lead formulation.
-          val w = Window.partitionBy(col("key")).orderBy(col("ts"), col("id"))
-          val wRev = Window.partitionBy(col("key")).orderBy(col("ts").desc, col("id").desc)
-          def ringOf(mk: Int => Column, depth: Int): Column =
-            filter(array((1 to depth).map(mk): _*), _.isNotNull)
-          keyedRows(spark.read.parquet(s"$dir/${spec.table}.parquet"))
-            .withColumn("__rev", row_number().over(wRev))
-            .withColumn("prev_ts", ringOf(k => lag(col("ts"), k).over(w), pD))
-            .withColumn("prev_kind", ringOf(k => lag(col("kind"), k).over(w), pD))
-            .withColumn("prev_value", ringOf(k => lag(col("value"), k).over(w), pD))
-            .withColumn("next_ts", ringOf(k => lead(col("ts"), k).over(w), nextDepth))
-            .withColumn("next_kind", ringOf(k => lead(col("kind"), k).over(w), nextDepth))
-            .withColumn("next_value", ringOf(k => lead(col("value"), k).over(w), nextDepth))
-            .filter(col("__rev") <= nextDepth)
-            .drop("__rev")
-            .write.parquet(s"$relay.tail")
-        }
-        // the tail's ring arrays land nullable-element from the batch
-        // writer — widen the declared element nullability so both read
-        val navSchema = org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.Encoders.product[Cep.NavRowN].schema.map {
-            case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-              val at = f.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-              f.copy(dataType = at.copy(containsNull = true))
-            case f => f
-          })
-        def channel(path: String) = spark.readStream.schema(navSchema).parquet(path)
-        (if (nextDepth > 0) channel(relay).union(channel(s"$relay.tail")) else channel(relay))
+        val relay = graft.RelayDir.fresh("mr_relay", dir)
+        // NEXT holds each key's last rows until the end marker's watermark
+        val end = Option.when(nextDepth > 0)(s"$relay.end")
+        val in = source.select(col(spec.partitionBy).cast("long").as("key"),
+            graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
+            col("event_id").as("id"), col("event_type").as("kind"), col("value"))
+          .as[KeyedRow]
+        graft.RelayDir.sink(Cep.orderedWithNav(end.fold(in)(Bounded.withEnd(in, _)),
+          pD, nextDepth).toDF(), relay, end)
+        spark.readStream.schema(org.apache.spark.sql.Encoders.product[Cep.NavRowN].schema)
+          .parquet(relay)
           .withColumn("__mask", maskOf(spec.rawDefines.map {
             case (v, d) => v -> navRewrite(d) }))
           .select(col("key"), col("ts"), col("id"),
@@ -452,7 +420,7 @@ object MatchRecognize {
       }
 
     val matched = graft.RelayDir.drain(spark,
-      Cep.matchStream(rows, pattern).toDF(), "mr_stream", dir)
+      Cep.matchStream(rows, pattern).toDF(), graft.RelayDir.fresh("mr_stream", dir))
     val srcStatic = spark.read.parquet(s"$dir/${spec.table}.parquet")
       .withColumn("__pkey", col(spec.partitionBy).cast("long"))
       .withColumn("__srcid", col("event_id").cast("long"))

@@ -241,10 +241,10 @@ object Cep {
     * A ZERO delay stays uncompensated, deliberately: it promises no
     * reorder tolerance (nothing to weaken), and widening it would hold the
     * final watermark 3 ms under max(ts) forever — on bounded input the
-    * stream's last rows could then never flush. For nonzero delays that
-    * bounded-input tail (the last `delay` of rows pending at end of input)
-    * is inherent to Spark's watermark model with or without the extra
-    * 3 ms, so the compensation costs nothing there. */
+    * stream's last rows could then never flush. With a nonzero delay the
+    * last `delay` of rows per key stays pending until the bounded caller's
+    * end marker ([[Bounded.withEnd]]) drives the watermark past them, with
+    * or without the extra 3 ms, so the compensation costs nothing there. */
   private def compensatedDelay(delay: String): String =
     if (delay.trim.matches("""(?i)0+\s+\w+""")) delay else s"$delay 3 milliseconds"
 
@@ -546,13 +546,13 @@ object Cep {
     * `nextDepth` held rows: all bounded, never proportional to stream
     * length.
     *
-    * End-of-input: Spark file streams emit no final MAX_WATERMARK, so on a
-    * BOUNDED run the last `nextDepth` rows per key are still held when the
-    * query stops — no in-order row can ever confirm their successors'
-    * absence. The bounded caller completes exactly those rows from the
-    * static source (see MatchRecognize.runStream's tail), the analogue of
-    * the reference's end-of-input watermark flushing the pending buffer
-    * (StreamExecMatch's WatermarkAssigner contract). */
+    * End-of-input: no in-order row can confirm that a key's last
+    * `nextDepth` rows have no more successors, so on unbounded input they
+    * stay held. Held rows wait on an event-time timer at
+    * [[Bounded.EndTickMs]], which only the end marker's watermark reaches
+    * ([[Bounded.withEnd]]); they then emit with short `next_*` rings (NULL
+    * past the edge, `lead`'s semantics) — the reference's end-of-input
+    * watermark flush (StreamExecMatch's WatermarkAssigner contract). */
   def orderedWithNav(rows: Dataset[KeyedRow], prevDepth: Int, nextDepth: Int,
                      delay: String = "0 seconds"): Dataset[NavRowN] = {
     import rows.sparkSession.implicits._
@@ -577,7 +577,8 @@ object Cep {
           // rows extend the ordered run (the sort re-asserts order under
           // the documented ms-granularity contract)
           val buffer = (st.holds ++ ready).sortBy(r => (r.ts, r.id)).toIndexedSeq
-          val emitN = math.max(0, buffer.size - nextDepth)
+          val ended = wmMs >= Bounded.EndTickMs
+          val emitN = if (ended) buffer.size else math.max(0, buffer.size - nextDepth)
           var ring = st.ring
           val out = (0 until emitN).map { i =>
             val r = buffer(i)
@@ -588,10 +589,10 @@ object Cep {
             ring = (r :: ring).take(prevDepth)
             o
           }
-          state.update(NavNState(pending, ring, buffer.drop(emitN).toList))
-          pending.headOption.foreach { _ =>
-            state.setTimeoutTimestamp(wmMs + 1L)
-          }
+          val held = buffer.drop(emitN).toList
+          state.update(NavNState(pending, ring, held))
+          if (pending.nonEmpty) state.setTimeoutTimestamp(wmMs + 1L)
+          else if (held.nonEmpty) state.setTimeoutTimestamp(Bounded.EndTickMs)
           out.iterator
       }
   }
@@ -680,7 +681,7 @@ object Cep {
   /** The errorBurst pattern driven through a REAL StreamingQuery: file-
     * stream the events table, run the NFA as the keyed stateful operator
     * ([[matchStream]] — watermark-ordered replay, event-time-timeout flush),
-    * append-sink to memory. The final watermark reaches max(ts), so every
+    * drained by [[graft.RelayDir.drain]]. The final watermark reaches max(ts), so every
     * row becomes ready and the emitted match set equals the batch NFA's —
     * which is exactly what the shared DuckDB oracle asserts. This is the
     * reference's deployment shape: CEP as a streaming operator
@@ -695,7 +696,7 @@ object Cep {
         col("event_id").as("id"), col("event_type").as("kind"), col("value"))
       .as[KeyedRow]
     graft.RelayDir.drain(s, matchStream(rows, errorBurst).toDF(),
-        "cep_relay", dir)
+        graft.RelayDir.fresh("cep_relay", dir))
       .groupBy($"key".as("user_id")).agg(count(lit(1)).as("n_matches"))
       .orderBy($"user_id")
   }

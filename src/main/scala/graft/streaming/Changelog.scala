@@ -408,12 +408,10 @@ object Changelog {
         round(col("value") * 1e6, 0).as("value"))
       .as[KeyedRow]
     val tableRoot = s"$relay/rank_table"
-    val q = cdcChain(rows, 3, miniBatch)
+    Bounded.run(cdcChain(rows, 3, miniBatch)
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$relay/ckpt")
-      .foreachBatch(rankTableSink(tableRoot))
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .foreachBatch(rankTableSink(tableRoot)))
     latestSnapshot(s, tableRoot, Long.MaxValue).map(s.read.parquet)
       .getOrElse(s.createDataset(Seq.empty[RankChange]).toDF())
       .select(col("rnk"), col("id").as("bucket"), (col("value") / 1e6).as("total"))

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * holds each vertex's current minimum label and emits only strict
   * IMPROVEMENTS; the batch handler expands improvements to the vertex's
   * neighbors and appends them back into the channel — `closeWith`. A
-  * single `processAllAvailable()` then drives the loop to the fixpoint:
-  * feedback files count as "available data", so the call returns exactly
+  * single drain ([[Bounded.run]]) then drives the loop to the fixpoint:
+  * feedback files count as "available data", so the drain returns exactly
   * when a round produces no feedback (the reference's maxWaitTime
   * termination, made exact). Labels strictly decrease and are bounded
   * below, so termination is guaranteed; rounds ≈ graph diameter, the same
@@ -72,12 +72,12 @@ object Iterations {
           if (m < cur) { st.update(MinLabel(m)); Iterator(Label(node, m)) }
           else Iterator.empty
       }
-    val q = improved.writeStream.outputMode("append")
+    Bounded.run(improved.writeStream.outputMode("append")
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: Dataset[Label], _: Long) =>
         // closeWith: improvements propagate to neighbors and re-enter the
         // head through the channel; an empty round writes nothing, which
-        // terminates processAllAvailable. The min-combiner collapses the
+        // terminates the drain. The min-combiner collapses the
         // edge-expanded messages to ONE proposal per destination before
         // they hit the channel — the written feedback is O(vertices), not
         // O(edges), per round (the batch Pregel's pre-aggregation)
@@ -97,9 +97,7 @@ object Iterations {
           val n = fb.count()
           if (n > 0) fb.coalesce(channelFiles(n)).write.mode("append").parquet(chan)
         } finally fb.unpersist(blocking = false)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
 
     // converged result = the iteration's keyed state, read externally
     s.read.format("statestore").option("path", ckpt).load()

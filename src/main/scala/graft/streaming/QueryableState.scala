@@ -60,7 +60,7 @@ object QueryableState {
     // descriptor; here the checkpoint IS the registration) — emissions go
     // to a noop sink, the STATE is the product
     withSnapshotCommits(s) {
-      val q = rows.groupByKey(_._1)
+      Bounded.run(rows.groupByKey(_._1)
         .mapGroupsWithState[UserAgg, Long](GroupStateTimeout.NoTimeout()) {
           case (key, it, st) =>
             var cur = st.getOption.getOrElse(UserAgg(0L, 0L))
@@ -69,8 +69,7 @@ object QueryableState {
             key
         }
         .writeStream.outputMode("update").format("noop")
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
+        .option("checkpointLocation", ckpt))
     }
     // the external reader: a DIFFERENT job scans the keyed state
     // (QueryableStateClient.getKvState, but set-oriented)

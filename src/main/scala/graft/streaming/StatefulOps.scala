@@ -1005,46 +1005,25 @@ object StatefulOps {
   }
 
   /** Oracle row: [[eventTimeTemporalJoin]] driven as a REAL StreamingQuery
-    * over parquet channels — purchases probe the clicks version history,
-    * inner keyword semantics, drained through the exactly-once file sink.
-    * A far-future sentinel (filtered from the result) arrives in its own
-    * trigger and advances the shared watermark past every real row, so the
-    * buffered probes all resolve before the drain stops. */
+    * over the file-streamed events table — purchases probe the clicks
+    * version history, inner keyword semantics, drained through the
+    * exactly-once file sink. Every real row arrives in the first trigger
+    * (nothing is late against the initial watermark); the end marker
+    * ([[Bounded.withEnd]] on the probe side) then advances the shared
+    * watermark past every real row in a trigger of its own, so the buffered
+    * probes all resolve before the drain stops. */
   def qStreamAsofJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val probesDir = graft.RelayDir.fresh("asof_stream_in", s"${dir}_p")
-    val versDir = graft.RelayDir.fresh("asof_stream_in", s"${dir}_v")
-    val ev = graft.Tables.load(s, dir, "events")
-    def keyed(t: String) = ev.filter(col("event_type") === t)
-      .select(col("user_id").as("key"),
-        expr("unix_micros(cast(ts as timestamp))").as("ts"),
+    val relay = graft.RelayDir.fresh("asof_stream_out", dir)
+    val end = s"$relay.end"
+    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val ev = Tables.streamTable(s, dir, "events", schema)
+      .select(col("user_id").as("key"), Tables.tsAsMicrosLong(schema).as("ts"),
         col("event_id").as("id"), col("event_type").as("kind"), col("value"))
-    // one file per side: all real rows share the first trigger (nothing can
-    // be late against the initial watermark); the sentinel file is the
-    // second trigger
-    keyed("purchase").coalesce(1).write.parquet(probesDir)
-    def parquetFiles() = new java.io.File(probesDir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-    val realFiles = parquetFiles().toSet
-    val far = ev.agg(max(expr("unix_micros(cast(ts as timestamp))")))
-      .head().getLong(0) + 3600L * 1000000L
-    Seq((-1L, far, -1L, "s", 0.0), (-1L, far + 1, -2L, "s", 0.0))
-      .toDF("key", "ts", "id", "kind", "value").coalesce(1)
-      .write.mode("append").parquet(probesDir)
-    // FileStreamSource orders files by modification time; a same-millisecond
-    // tie with the real-rows file would be undefined order, and a
-    // sentinel-first trigger jumps the watermark past every real probe.
-    // Force a strictly later mtime on the sentinel file(s).
-    val realMax = realFiles.map(_.lastModified).max
-    parquetFiles().filterNot(realFiles).foreach(_.setLastModified(realMax + 2000))
-    keyed("click").coalesce(1).write.parquet(versDir)
-    val schema = org.apache.spark.sql.Encoders.product[KeyedRow].schema
-    val left = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(probesDir).as[KeyedRow]
-    val right = s.readStream.schema(schema).parquet(versDir).as[KeyedRow]
-    val emitted = graft.RelayDir.drain(s,
-      eventTimeTemporalJoin(left, right).toDF(), "asof_stream_out", dir)
-    emitted.filter(col("key") >= 0)
+      .as[KeyedRow]
+    val probes = Bounded.withEnd(ev.filter(col("kind") === "purchase"), end)
+    graft.RelayDir.drain(s, eventTimeTemporalJoin(probes,
+        ev.filter(col("kind") === "click")).toDF(), relay, Some(end))
       .select(col("key").as("u"), col("probe_id").as("p_id"),
         col("version_id").as("asof_click_id"),
         col("version_ts").as("asof_click_ts_us"))

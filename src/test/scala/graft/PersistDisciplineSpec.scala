@@ -54,27 +54,13 @@ class PersistDisciplineSpec extends AnyFunSuite {
     //   the seed frame: each persisted so count+sized-write execute the
     //   expansion exactly once, then unpersisted in the same scope — r16/r17)
     "streaming/Iterations.scala" -> 2,
-    // RELEASED x1 (LshProbe's probe-local vector cache - mirrors lshTopK's
-    //   `e`; probe JVM, freed at shutdown)
-    "tools/LshProbe.scala" -> 1,
   )
 
-  private def scalaFiles(dir: File): Seq[File] = {
-    val kids = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
-    kids.filter(_.isFile).filter(_.getName.endsWith(".scala")) ++
-      kids.filter(_.isDirectory).flatMap(scalaFiles)
-  }
-
-  private val root = new File("src/main/scala/graft")
+  import PersistDisciplineSpec.{root, siteCounts}
   private val siteRe = """\.(persist|cache)\(""".r
 
   test("every persist/cache call site in main source is classified") {
-    val found = scalaFiles(root).flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      val n = try siteRe.findAllIn(src.mkString).size finally src.close()
-      if (n == 0) None
-      else Some(f.getPath.replace("src/main/scala/graft/", "").replace('\\', '/') -> n)
-    }.toMap
+    val found = siteCounts(siteRe)
     val unlisted = found.keySet -- classified.keySet
     assert(unlisted.isEmpty,
       s"unclassified persist/cache sites in $unlisted — classify them here " +
@@ -97,4 +83,24 @@ class PersistDisciplineSpec extends AnyFunSuite {
           "between-sample drop would record warm numbers")
     }
   }
+}
+
+object PersistDisciplineSpec {
+  val root = new File("src/main/scala/graft")
+
+  private def scalaFiles(dir: File): Seq[File] = {
+    val kids = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
+    kids.filter(_.isFile).filter(_.getName.endsWith(".scala")) ++
+      kids.filter(_.isDirectory).flatMap(scalaFiles)
+  }
+
+  /** file (relative to [[root]]) -> number of `siteRe` matches, for every
+    * main source file with at least one. */
+  def siteCounts(siteRe: scala.util.matching.Regex): Map[String, Int] =
+    scalaFiles(root).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val n = try siteRe.findAllIn(src.mkString).size finally src.close()
+      if (n == 0) None
+      else Some(f.getPath.replace("src/main/scala/graft/", "").replace('\\', '/') -> n)
+    }.toMap
 }

@@ -567,8 +567,8 @@ class FlinkSqlStreamingSpec extends SparkSpec {
 
   test("streaming NEXT-in-DEFINE equals the batch scan (round 9: lookahead on streams)") {
     // B navigates its OWN successor (a row outside the 2-row match) — the
-    // orderedWithNav hold-until-successors path plus the end-of-input tail
-    // backfill must reproduce the batch lead() compile exactly
+    // orderedWithNav hold-until-successors path plus the end marker's flush
+    // of each key's last rows must reproduce the batch lead() compile exactly
     val mrSql =
       """SELECT user_id, start_ts, end_ts FROM events
          MATCH_RECOGNIZE (
@@ -590,7 +590,7 @@ class FlinkSqlStreamingSpec extends SparkSpec {
 
   test("streaming NEXT-in-DEFINE with MEASURES equals the batch scan, tail rows included") {
     // A navigates its successor, so a match whose B is a partition's LAST
-    // row exists only through the end-of-input tail the NFA stage unions in
+    // row exists only through the end marker's flush of the held rows
     val mrSql =
       """SELECT user_id, start_ts, end_ts, n_rows, click_val, buy_val FROM events
          MATCH_RECOGNIZE (
@@ -613,7 +613,7 @@ class FlinkSqlStreamingSpec extends SparkSpec {
     val lastRows = spark.sql(
       "SELECT user_id, max(unix_micros(cast(ts as timestamp))) AS end_ts FROM events GROUP BY user_id")
     assert(!streamed.join(lastRows, Seq("user_id", "end_ts")).isEmpty,
-      "no match ends on a partition's last row — the tail path went untested")
+      "no match ends on a partition's last row — the end-of-input flush went untested")
   }
 
   test("streaming MATCH_RECOGNIZE with no match returns the batch columns and no rows") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** Property-based checks of the NFA and the sorted-partition scan against
@@ -106,6 +107,70 @@ class CepPropertySpec extends SparkSpec {
       }
       sameRows && keyBlocks.distinct.size == keyBlocks.size
     })
+  }
+
+  /** One fixed corpus from [[corpusGen]], every key's last row moved to
+    * the same 2020 event time: the watermark is global, so only rows near
+    * the stream's overall end wait on the end marker. */
+  private lazy val fixedCorpus: Seq[KeyedRow] = {
+    val rows = corpusGen.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L))
+    val last = rows.groupBy(_.key).map { case (k, rs) => k -> rs.map(_.ts).max }
+    rows.map(r => r.copy(ts = r.ts - last(r.key) + 1600000000000000L))
+  }
+
+  /** `rows` as a bounded file stream with the end marker attached, through
+    * `op`, drained by the exactly-once file sink. */
+  private def drainWithEnd[T](rows: Seq[KeyedRow])(
+      op: Dataset[KeyedRow] => Dataset[T]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("cep_end").toString
+    rows.toDS().coalesce(1).write.parquet(s"$root/in")
+    val in = s.readStream.schema(Encoders.product[KeyedRow].schema)
+      .parquet(s"$root/in").as[KeyedRow]
+    val end = s"$root/out.end"
+    graft.RelayDir.drain(s, op(Bounded.withEnd(in, end)).toDF(), s"$root/out", Some(end))
+  }
+
+  test("matchStream with a 5 s delay and the end marker equals matchBatch") {
+    val s = spark
+    import s.implicits._
+    val rows = fixedCorpus
+    def shape(ms: Seq[Cep.Match]) = ms.map(m => (m.key, m.start_ts, m.end_ts, m.ids))
+    val want = Cep.matchBatch(rows.toDS(), Cep.errorBurst).collect().toSeq
+    // matches in the last 5 s (every key's last 5 s here): the delayed
+    // watermark never passes them without the end marker
+    val lastTs = rows.map(_.ts).max
+    assert(want.exists(_.end_ts > lastTs - 5000000L),
+      "the corpus must hold matches in a key's last 5 s")
+    val got = drainWithEnd(rows)(Cep.matchStream(_, Cep.errorBurst, "5 seconds"))
+      .as[Cep.Match].collect().toSeq
+    assert(!got.exists(_.key == Bounded.EndKey), s"sentinel leaked: $got")
+    assert(shape(got).sortBy(_.toString) == shape(want).sortBy(_.toString))
+  }
+
+  test("orderedWithNav with the end marker equals batch lag/lead, last rows included") {
+    val rows = fixedCorpus
+    val got = {
+      val s = spark
+      import s.implicits._
+      drainWithEnd(rows)(Cep.orderedWithNav(_, prevDepth = 2, nextDepth = 2))
+        .as[Cep.NavRowN].collect().toSeq
+    }
+    assert(!got.exists(_.key == Bounded.EndKey), s"sentinel leaked: $got")
+    // lag/lead over (ts, id) per key; NULLs past the edge drop from the ring
+    val want = rows.groupBy(_.key).values.toSeq.flatMap { rs =>
+      val o = rs.sortBy(r => (r.ts, r.id)).toIndexedSeq
+      o.indices.map { i =>
+        val prev = (1 to 2).flatMap(k => o.lift(i - k))
+        val next = (1 to 2).flatMap(k => o.lift(i + k))
+        Cep.NavRowN(o(i).key, o(i).ts, o(i).id, o(i).kind, o(i).value,
+          prev.map(_.ts), prev.map(_.kind), prev.map(_.value),
+          next.map(_.ts), next.map(_.kind), next.map(_.value))
+      }
+    }
+    assert(got.exists(_.next_ts.size < 2), "no key's last rows were flushed")
+    assert(got.sortBy(_.id) == want.sortBy(_.id))
   }
 
   test("norm_text equals the regex formulation on random printable strings") {

@@ -183,6 +183,40 @@ class CheckpointRestartSpec extends SparkSpec {
     assert(rows.groupBy(_.id).forall(_._2.size == 1), s"replay duplicated rows: $rows")
   }
 
+  test("the end-of-input flush replays exactly once after a restart") {
+    // MATCH_RECOGNIZE's NEXT relay: orderedWithNav with lookahead and the
+    // end marker, through the exactly-once file sink, as runStream relays it
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("ckpt_end").toString
+    val in = s"$root/in"; val out = s"$root/out"; val end = s"$root/out.end"
+    Seq(KeyedRow(1, 1000000, 1, "a", 1.0), KeyedRow(1, 2000000, 2, "b", 2.0),
+        KeyedRow(1, 3000000, 3, "c", 3.0), KeyedRow(2, 1500000, 4, "d", 4.0))
+      .toDS().coalesce(1).write.parquet(in)
+    def run(): Unit = graft.RelayDir.sink(Cep.orderedWithNav(Bounded.withEnd(
+        s.readStream.schema(org.apache.spark.sql.Encoders.product[KeyedRow].schema)
+          .parquet(in).as[KeyedRow], end), prevDepth = 1, nextDepth = 1).toDF(),
+      out, Some(end))
+    run()
+    // without the end marker rows 3 and 4 (each key's last) stay held; the
+    // batch after the sentinel's emits them — drop its commit (a crash
+    // after the sink wrote it, before the commit log recorded it)
+    val commits = new java.io.File(s"$out.ckpt/commits")
+    val newest = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    val flushed = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(s"$out/_spark_metadata/$newest"))
+    assert(flushed.size > 1, s"batch $newest emitted nothing — the replay would prove nothing")
+    new java.io.File(commits, newest.toString).delete()
+    new java.io.File(commits, s".$newest.crc").delete()
+    run()
+    assert(new java.io.File(commits, newest.toString).exists(),
+      s"batch $newest must have run again")
+    val rows = s.read.parquet(out).as[Cep.NavRowN].collect().toSeq
+    assert(!rows.exists(_.key == Bounded.EndKey), s"sentinel leaked: $rows")
+    assert(rows.map(_.id).sorted == Seq(1L, 2L, 3L, 4L), s"each row exactly once: $rows")
+    assert(rows.filter(r => r.id == 3 || r.id == 4).forall(_.next_ts.isEmpty))
+  }
+
   test("round 10: the CEP NFA resumes MID-PATTERN from checkpoint") {
     // two errors of an errorBurst (e1,e2,e3 strict) are consumed before the
     // stop — the partial Run (nextStep=2, matched ids, prevId bookkeeping)
