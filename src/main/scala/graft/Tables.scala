@@ -22,28 +22,37 @@ object Tables {
 
   def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
 
-  /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) — which
-    * Spark's vectorized reader surfaces as raw nano longs (legacy
-    * nanosAsLong, set in the session conf) — or plain TIMESTAMP(MICROS),
-    * depending on the testdata generation. Normalize both to µs NTZ — the
-    * documented TIMESTAMP(9)→TIMESTAMP(6) degradation from SURVEY.md §1.2
-    * in the nanos case, an identity re-tag otherwise. */
   /** (session identity, table path) → parquet schema. Schema inference runs
     * a footer-reading Spark job per `spark.read.parquet` call; every query
     * constructor calls [[load]] 1-4 times and the bench re-invokes each
     * query, so the same static fixture footer was read thousands of times
     * per run. Only the SCHEMA is memoized — the file index is rebuilt per
     * call, so a regenerated dir is still re-listed; per-session key, so a
-    * rebuilt session re-infers. */
+    * rebuilt session re-infers. Streaming sources and raw reads take their
+    * schema from it too ([[schema]]). */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
     (Int, String), org.apache.spark.sql.types.StructType]()
 
+  /** A table's schema as its parquet files store it (`events.ts` not yet
+    * normalized, see [[tsAsMicrosLong]]), from the per-session memo: the
+    * schema a streaming source or a raw read needs, without the inference
+    * job `spark.read.parquet(p).schema` runs. */
+  def schema(spark: SparkSession, sfDir: String,
+             name: String): org.apache.spark.sql.types.StructType = {
+    val p = path(sfDir, name)
+    schemaCache.computeIfAbsent((System.identityHashCode(spark), p),
+      _ => spark.read.parquet(p).schema)
+  }
+
+  /** `events.ts` has shipped as either parquet TIMESTAMP(NANOS) — which
+    * Spark's vectorized reader surfaces as raw nano longs (legacy
+    * nanosAsLong, set in the session conf) — or plain TIMESTAMP(MICROS),
+    * depending on the testdata generation. Normalize both to µs NTZ — the
+    * documented TIMESTAMP(9)→TIMESTAMP(6) degradation from SURVEY.md §1.2
+    * in the nanos case, an identity re-tag otherwise. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val p = path(sfDir, name)
-    val schema = schemaCache.computeIfAbsent(
-      (System.identityHashCode(spark), p),
-      _ => spark.read.parquet(p).schema)
-    val df = spark.read.schema(schema).parquet(p)
+    val df = spark.read.schema(schema(spark, sfDir, name)).parquet(p)
     if (name == "events")
       df.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

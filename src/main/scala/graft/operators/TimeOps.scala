@@ -118,7 +118,7 @@ object TimeOps {
     * emits when found and the result equals the batch join row-for-row —
     * the oracle is the plain pair list. */
   private def streamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schema(s, dir, "events")
     def src() = graft.Tables.streamTable(s, dir, "events", schema)
       .withColumn("ts", graft.Tables.tsAsTimestamp(schema))
     val p = src().filter(col("event_type") === "purchase")

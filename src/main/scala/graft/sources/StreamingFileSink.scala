@@ -43,7 +43,7 @@ object StreamingFileSink {
     * parquet sink, drained to completion by [[graft.streaming.Bounded.run]]. */
   def writeEvents(s: SparkSession, dir: String): Unit = {
     wipe(s, sinkDir(dir)); wipe(s, ckptDir(dir))
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "events")
     val in = graft.Tables.streamTable(s, dir, "events", schema)
       .withColumn("ts", graft.Tables.tsAsTimestamp(schema).cast("timestamp_ntz"))
     graft.streaming.Bounded.run(in.writeStream.format("parquet")

@@ -823,8 +823,7 @@ object FlinkSqlQueries {
     // reference's streaming group-window contract, so the oracle filters
     // the batch aggregate to windows with end <= max(ts).
     "fsql_stream_tumble" -> ((s, dir) => {
-      val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.schema(s, dir, "events")
       // same NANOS-timestamp handling as Tables.load: the raw nanos long →
       // a real event-time attribute the watermark can ride
       // watermarks require TimestampType (not NTZ); the session runs UTC so
@@ -873,8 +872,7 @@ object FlinkSqlQueries {
     // (max event time, 0 s delay) closed; an unclosed pane's last-row
     // pending fire stays buffered — the oracle filter mirrors both.
     "fsql_stream_hop" -> ((s, dir) => {
-      val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.schema(s, dir, "events")
       Tables.streamTable(s, dir, "events", schema)
         .withColumn("ts", graft.Tables.tsAsTimestamp(schema))
         .withWatermark("ts", "0 seconds")
@@ -900,8 +898,7 @@ object FlinkSqlQueries {
     // fsql_stream_hop — expanding panes keyed on (start, end, group), each
     // pane's terminal at its own end when the watermark passes it
     "fsql_stream_cumulate" -> ((s, dir) => {
-      val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.schema(s, dir, "events")
       Tables.streamTable(s, dir, "events", schema)
         .withColumn("ts", graft.Tables.tsAsTimestamp(schema))
         .withWatermark("ts", "0 seconds")
@@ -930,8 +927,7 @@ object FlinkSqlQueries {
     // gap), each group's last session only if the final watermark passes
     // last event + gap
     "fsql_stream_session" -> ((s, dir) => {
-      val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
+      val schema = Tables.schema(s, dir, "events")
       Tables.streamTable(s, dir, "events", schema)
         .withColumn("ts", graft.Tables.tsAsTimestamp(schema))
         .withWatermark("ts", "0 seconds")

@@ -354,7 +354,7 @@ object MatchRecognize {
     val vars = spec.pattern.map(_._1).distinct
     val varBit = vars.zipWithIndex.toMap
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/${spec.table}.parquet").schema
+    val schema = graft.Tables.schema(spark, dir, spec.table)
     val pattern = Cep.Pattern(compileSteps(spec, varBit), spec.withinMs, spec.afterMatch)
     def maskOf(defines: Map[String, String]): Column =
       concat(vars.map(v => defines.get(v)
@@ -421,7 +421,7 @@ object MatchRecognize {
 
     val matched = graft.RelayDir.drain(spark,
       Cep.matchStream(rows, pattern).toDF(), graft.RelayDir.fresh("mr_stream", dir))
-    val srcStatic = spark.read.parquet(s"$dir/${spec.table}.parquet")
+    val srcStatic = spark.read.schema(schema).parquet(graft.Tables.path(dir, spec.table))
       .withColumn("__pkey", col(spec.partitionBy).cast("long"))
       .withColumn("__srcid", col("event_id").cast("long"))
     val out: DataFrame =

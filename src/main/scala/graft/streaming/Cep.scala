@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -442,6 +442,9 @@ object Cep {
   private[streaming] case class CepState(active: List[Run], pending: List[KeyedRow],
                                          prevId: Long, holds: List[Run])
 
+  /** Built once per JVM — see [[StateEncoder]]. */
+  private implicit val cepStateEncoder: Encoder[CepState] = StateEncoder[CepState]
+
   /** KeyedRow + the materialized event-time column the watermark rides on —
     * Spark's event-time-timeout check requires the watermarked attribute to
     * be visible in the stateful operator's input. */
@@ -533,6 +536,9 @@ object Cep {
   private[streaming] case class NavNState(pending: List[KeyedRow],
                                           ring: List[KeyedRow],
                                           holds: List[KeyedRow])
+
+  /** Built once per JVM — see [[StateEncoder]]. */
+  private implicit val navNStateEncoder: Encoder[NavNState] = StateEncoder[NavNState]
 
   /** Watermark-ordered PREV-k and NEXT-k augmentation: buffer per key until
     * the event-time watermark confirms order (the same discipline as
@@ -689,7 +695,7 @@ object Cep {
     * bounded-input special case. */
   def qStreamErrorBurst(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "events")
     // raw parquet NANOS timestamp arrives as long (legacy nanosAsLong conf)
     val rows = graft.Tables.streamTable(s, dir, "events", schema)
       .select(col("user_id").as("key"), graft.Tables.tsAsMicrosLong(schema).as("ts"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
@@ -95,6 +95,9 @@ object Changelog {
     * retractableTopN) so every change applies in O(log m). */
   case class RankState(rows: Map[Long, Double], topIds: List[Long],
                        topVals: List[Double], nextSeq: Long)
+
+  /** Built once per JVM — see [[StateEncoder]]. */
+  private implicit val rankStateEncoder: Encoder[RankState] = StateEncoder[RankState]
 
   /** Retractable Top-N — Top-N over a RETRACTING changelog input (the
     * reference's RetractableTopNFunction,
@@ -401,7 +404,7 @@ object Changelog {
   def qCdcPipeline(s: SparkSession, dir: String, miniBatch: Boolean): DataFrame = {
     import s.implicits._
     val relay = graft.RelayDir.fresh("cdc_relay", dir + (if (miniBatch) "_mb" else ""))
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "events")
     val rows = graft.Tables.streamTable(s, dir, "events", schema)
       .select(col("user_id").as("key"), graft.Tables.tsAsMicrosLong(schema).as("ts"),
         col("event_id").as("id"), col("event_type").as("kind"),

@@ -51,7 +51,7 @@ object QueryableState {
   def qQueryableState(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ckpt = graft.RelayDir.fresh("qstate_ckpt", dir)
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schema(s, dir, "events")
     val rows = graft.Tables.streamTable(s, dir, "events", schema)
       .select(col("user_id").as("_1"),
         round(col("value") * 1e6, 0).cast("long").as("_2"))

@@ -1016,7 +1016,7 @@ object StatefulOps {
     import s.implicits._
     val relay = graft.RelayDir.fresh("asof_stream_out", dir)
     val end = s"$relay.end"
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schema(s, dir, "events")
     val ev = Tables.streamTable(s, dir, "events", schema)
       .select(col("user_id").as("key"), Tables.tsAsMicrosLong(schema).as("ts"),
         col("event_id").as("id"), col("event_type").as("kind"), col("value"))

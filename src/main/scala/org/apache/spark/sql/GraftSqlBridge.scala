@@ -26,4 +26,17 @@ object GraftSqlBridge {
     * incident note). Call before `spark.stop()` in every main. */
   def stopStateStores(): Unit =
     execution.streaming.state.StateStore.stop()
+
+  /** Run [[stopStateStores]] at JVM exit through Spark's own shutdown-hook
+    * manager, which runs its hooks one at a time by priority: this one
+    * before the SparkContext stops (`SPARK_CONTEXT_SHUTDOWN_PRIORITY`) and
+    * so before Spark deletes its local dirs (`TEMP_DIR_SHUTDOWN_PRIORITY`).
+    * A plain `Runtime` hook would run concurrently with both, and RocksDB
+    * would then close stores whose working dirs are already gone. */
+  def stopStateStoresOnShutdown(): Unit = {
+    val _ = org.apache.spark.util.ShutdownHookManager.addShutdownHook(
+      org.apache.spark.util.ShutdownHookManager.SPARK_CONTEXT_SHUTDOWN_PRIORITY + 1) { () =>
+      try stopStateStores() catch { case _: Throwable => () }
+    }
+  }
 }
