@@ -78,12 +78,8 @@ object GraftSession {
     Option(tmp.listFiles()).foreach(_.foreach { f =>
       def newest(g: java.io.File): Long =
         (g.lastModified() +: Option(g.listFiles()).toSeq.flatten.map(newest)).max
-      if (f.getName.startsWith("graft-warehouse-") && newest(f) < cutoff) {
-        def rm(g: java.io.File): Unit = {
-          Option(g.listFiles()).foreach(_.foreach(rm)); g.delete(): Unit
-        }
-        rm(f)
-      }
+      if (f.getName.startsWith("graft-warehouse-") && newest(f) < cutoff)
+        graft.io.LocalFiles.delete(f)
     })
     val d = new java.io.File(tmp, s"graft-warehouse-$metastoreName")
     d.deleteOnExit()

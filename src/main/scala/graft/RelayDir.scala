@@ -34,14 +34,9 @@ object RelayDir {
     val parent = new File(s"target/$root/${token.replaceAll("[^a-zA-Z0-9]", "_")}")
     val cutoff = System.currentTimeMillis() - PurgeAfterMs
     Option(parent.listFiles()).foreach(_.foreach { f =>
-      if (f.lastModified() < cutoff) delete(f)
+      if (f.lastModified() < cutoff) graft.io.LocalFiles.delete(f)
     })
     new File(parent, java.util.UUID.randomUUID.toString).getPath
-  }
-
-  private def delete(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(delete))
-    f.delete(): Unit
   }
 
   /** Run an append-mode streaming DataFrame to completion through the

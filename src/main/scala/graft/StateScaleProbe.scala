@@ -28,15 +28,10 @@ object StateScaleProbe {
   private val Rocks =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private def rm(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rm))
-    f.delete(): Unit
-  }
-
   private def fresh(tag: String): String = {
-    val d = new java.io.File(s"target/state_probe/$tag")
-    rm(d)
-    d.getPath
+    val d = s"target/state_probe/$tag"
+    graft.io.LocalFiles.delete(d)
+    d
   }
 
   /** Run a streaming pipeline until its output is complete, counting rows

@@ -129,11 +129,7 @@ object Formats {
     * read path, fold to the surviving state. */
   private def debeziumCdc(s: SparkSession, dir: String): DataFrame = {
     val path = cacheDir("dbz_cdc", dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
+    graft.io.LocalFiles.delete(path)
     clickChangelog(s, dir).createOrReplaceTempView("dbz_changelog")
     s.sql(s"""CREATE TABLE dbz_sink (user_id BIGINT, ev_seq BIGINT, val_cents BIGINT)
               WITH ('connector' = 'filesystem', 'path' = '$path',
@@ -150,11 +146,7 @@ object Formats {
   private def debeziumMetadata(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
     val path = cacheDir("dbz_meta", dir)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
+    graft.io.LocalFiles.delete(path)
     val rowSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("user_id", LongType),
       StructField("val_cents", LongType)))

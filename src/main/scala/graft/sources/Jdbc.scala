@@ -54,12 +54,8 @@ object Jdbc {
     Option(root.listFiles()).foreach(_.foreach { f =>
       val lck = new java.io.File(f, "db.lck")
       if (!f.getName.endsWith(s"_$jvmTag") && f.lastModified() < cutoff &&
-          !lck.exists()) {
-        def rm(g: java.io.File): Unit = {
-          Option(g.listFiles()).foreach(_.foreach(rm)); g.delete(): Unit
-        }
-        rm(f)
-      }
+          !lck.exists())
+        graft.io.LocalFiles.delete(f)
     })
   }
 

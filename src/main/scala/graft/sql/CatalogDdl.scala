@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Catalog statement surface — the reference's catalog DDL and SHOW forms
   * (flink-sql-parser Parser.tdd:36-62: SqlCreateCatalog / SqlDropCatalog /
@@ -110,76 +111,49 @@ object CatalogDdl {
   private[sql] def databaseExists(spark: SparkSession, cat: String, db: String): Boolean =
     catalogs.get(key(spark, cat)).exists(_.databases.contains(db.toLowerCase))
 
-  private val createRe =
-    """(?is)^\s*CREATE\s+CATALOG\s+(\w+)\s*(?:WITH\s*\((.*)\)\s*)?;?\s*$""".r
-  private val dropRe =
-    """(?is)^\s*DROP\s+CATALOG\s+(?:(IF\s+EXISTS)\s+)?(\w+)\s*;?\s*$""".r
-  private val useRe = """(?is)^\s*USE\s+CATALOG\s+(\w+)\s*;?\s*$""".r
+  // statement shapes, located on literal/comment-BLANKED text with groups
+  // sliced from the original (FlinkSql.Blanked), so property values stay
+  // intact. Database DDL may arrive with WITH (...) already rewritten to
+  // WITH DBPROPERTIES (...) by the parser's preprocess chain.
+  private def shape(re: String) = new FlinkSql.Blanked(("(?is)" + re).r)
+  private val createRe = shape("""\s*CREATE\s+CATALOG\s+(\w+)\s*(?:WITH\s*\((.*)\)\s*)?;?\s*""")
+  private val dropRe = shape("""\s*DROP\s+CATALOG\s+(?:(IF\s+EXISTS)\s+)?(\w+)\s*;?\s*""")
+  private val useRe = shape("""\s*USE\s+CATALOG\s+(\w+)\s*;?\s*""")
   // `USE <db>` while a DDL-registered catalog is current: resolves against
   // THAT catalog's databases, not Spark's —
   // CatalogManager.setCurrentDatabase:278-296 incl. the unknown-db error
-  private val useDbRe = """(?is)^\s*USE\s+(?!CATALOG\b)(\w+)\s*;?\s*$""".r
-  private val showRe = """(?is)^\s*SHOW\s+CATALOGS\s*;?\s*$""".r
-  private val showCurrentCatRe = """(?is)^\s*SHOW\s+CURRENT\s+CATALOG\s*;?\s*$""".r
-  private val showCurrentDbRe = """(?is)^\s*SHOW\s+CURRENT\s+DATABASE\s*;?\s*$""".r
-  private val descCatRe = """(?is)^\s*DESCRIBE\s+CATALOG\s+\w+\s*;?\s*$""".r
+  private val useDbRe = shape("""\s*USE\s+(?!CATALOG\b)(\w+)\s*;?\s*""")
+  private val showRe = shape("""\s*SHOW\s+CATALOGS\s*;?\s*""")
+  private val showCurrentCatRe = shape("""\s*SHOW\s+CURRENT\s+CATALOG\s*;?\s*""")
+  private val showCurrentDbRe = shape("""\s*SHOW\s+CURRENT\s+DATABASE\s*;?\s*""")
+  private val descCatRe = shape("""\s*DESCRIBE\s+CATALOG\s+\w+\s*;?\s*""")
+  private val createDbRe = shape(
+    """\s*CREATE\s+DATABASE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)\s*(?:COMMENT\s+'[^']*'\s*)?(?:WITH\s+(?:DBPROPERTIES\s+)?\((.*)\)\s*)?;?\s*""")
+  private val dropDbRe = shape(
+    """\s*DROP\s+DATABASE\s+(IF\s+EXISTS\s+)?(\w+)\s*(RESTRICT|CASCADE)?\s*;?\s*""")
+  private val alterDbRe = shape(
+    """\s*ALTER\s+DATABASE\s+(\w+)\s+SET\s+(?:DBPROPERTIES\s+)?\((.*)\)\s*;?\s*""")
   private val propRe = """'([^']+)'\s*=\s*'([^']*)'""".r
-  // database DDL while a DDL-registered catalog is current (the preprocess
-  // chain may already have rewritten WITH (...) → WITH DBPROPERTIES (...))
-  private val createDbRe =
-    """(?is)^\s*CREATE\s+DATABASE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)\s*(?:COMMENT\s+'[^']*'\s*)?(?:WITH\s+(?:DBPROPERTIES\s+)?\((.*)\)\s*)?;?\s*$""".r
-  private val dropDbRe =
-    """(?is)^\s*DROP\s+DATABASE\s+(IF\s+EXISTS\s+)?(\w+)\s*(RESTRICT|CASCADE)?\s*;?\s*$""".r
-  private val alterDbRe =
-    """(?is)^\s*ALTER\s+DATABASE\s+(\w+)\s+SET\s+(?:DBPROPERTIES\s+)?\((.*)\)\s*;?\s*$""".r
 
-  // Blanked extractors (FlinkSql.Blanked): [[matches]] tests the BLANKED
-  // probe, so [[run]] must decide its branch on the same text — a literal
-  // hazard (COMMENT 'it''s') that blanks clean would otherwise pass matches
-  // and then miss every original-text regex, landing in the catch-all
-  // (ADVICE r15). Group contents are sliced from the ORIGINAL, so property
-  // values stay intact.
-  private val createB = new FlinkSql.Blanked(createRe)
-  private val dropB = new FlinkSql.Blanked(dropRe)
-  private val useB = new FlinkSql.Blanked(useRe)
-  private val useDbB = new FlinkSql.Blanked(useDbRe)
-  private val createDbB = new FlinkSql.Blanked(createDbRe)
-  private val dropDbB = new FlinkSql.Blanked(dropDbRe)
-  private val alterDbB = new FlinkSql.Blanked(alterDbRe)
+  private def props(body: String): Map[String, String] =
+    Option(body).map(b =>
+      propRe.findAllMatchIn(b).map(m => m.group(1).toLowerCase -> m.group(2)).toMap)
+      .getOrElse(Map.empty)
 
-  /** The statements this front-end owns. The database-DDL and bare-USE
-    * shapes are owned only while a DDL-registered catalog is current —
-    * [[run]] handles exactly this set (same predicates, so a captured
-    * statement can never fall through to the catch-all; the
-    * matches/run-mismatch class found by fuzz family 29). */
-  def matches(spark: SparkSession, probe: String): Boolean = {
-    val overridden = currentNamespace(spark).isDefined
-    createRe.findFirstIn(probe).isDefined || dropRe.findFirstIn(probe).isDefined ||
-      useRe.findFirstIn(probe).isDefined || showRe.findFirstIn(probe).isDefined ||
-      showCurrentCatRe.findFirstIn(probe).isDefined ||
-      showCurrentDbRe.findFirstIn(probe).isDefined ||
-      descCatRe.findFirstIn(probe).isDefined ||
-      (overridden && (useDbRe.findFirstIn(probe).isDefined ||
-        createDbRe.findFirstIn(probe).isDefined ||
-        dropDbRe.findFirstIn(probe).isDefined ||
-        alterDbRe.findFirstIn(probe).isDefined))
-  }
-
-  /** `native` runs a statement through the DELEGATE parser (same contract
-    * as [[DatabaseDdl.run]] — spark.sql would re-enter this dispatch). */
-  def run(spark: SparkSession, sql: String, native: String => DataFrame): DataFrame = {
-    import spark.implicits._
+  /** The catalog statements, as plans. The database-DDL and bare-USE shapes
+    * are owned only while a DDL-registered catalog is current; None → the
+    * stock parser. `native` runs a statement through the DELEGATE parser
+    * (same contract as [[DatabaseDdl.show]]). */
+  def plan(spark: SparkSession, sql: String, native: String => DataFrame): Option[LogicalPlan] = {
     val ns = currentNamespace(spark)
-    val probe = FlinkSql.blankLiteralsAndComments(sql)
+    def effect(body: => Unit) = Some(GraftCommand.effect(_ => body))
     sql match {
-      case createB(name, propsBody) =>
-        val props = Option(propsBody).map(b =>
-          propRe.findAllMatchIn(b).map(m => m.group(1).toLowerCase -> m.group(2)).toMap)
-          .getOrElse(Map.empty)
+      case createRe(name, propsBody) => effect {
+        val ps = props(propsBody)
         // the reference discovers the catalog factory from the required
         // 'type' property (CatalogFactory descriptor validation); only the
         // in-memory factory is loadable in this surface
-        val tpe = props.getOrElse("type", throw new IllegalArgumentException(
+        val tpe = ps.getOrElse("type", throw new IllegalArgumentException(
           s"CREATE CATALOG $name: the 'type' property is required to discover a catalog factory"))
         if (!tpe.equalsIgnoreCase("generic_in_memory"))
           throw new IllegalArgumentException(
@@ -187,9 +161,9 @@ object CatalogDdl {
               "(only 'generic_in_memory' is available without extra jars)")
         if (catalogs.contains(key(spark, name)))
           throw new IllegalArgumentException(s"Catalog $name already exists.")
-        catalogs.put(key(spark, name), Cat(name, props)): Unit
-        spark.emptyDataFrame
-      case dropB(ifExists, name) =>
+        catalogs.put(key(spark, name), Cat(name, ps)): Unit
+      }
+      case dropRe(ifExists, name) => effect {
         val removed = catalogs.remove(key(spark, name))
         if (removed.isEmpty && ifExists == null)
           throw new IllegalArgumentException(s"Catalog $name does not exist.")
@@ -205,8 +179,8 @@ object CatalogDdl {
           current.remove(skey(spark))
           ConnectorTables.remount(spark)
         }
-        spark.emptyDataFrame
-      case useDbB(db) if ns.isDefined =>
+      }
+      case useDbRe(db) if ns.isDefined => effect {
         val (cat, _) = ns.get
         if (!databaseExists(spark, cat, db))
           throw new IllegalArgumentException(
@@ -214,21 +188,16 @@ object CatalogDdl {
               s"[${catalogs(key(spark, cat)).name}].")
         current(skey(spark)) = (cat, db.toLowerCase)
         ConnectorTables.remount(spark)
-        spark.emptyDataFrame
-      case createDbB(ifNotExists, db, propsBody) if ns.isDefined =>
+      }
+      case createDbRe(ifNotExists, db, propsBody) if ns.isDefined => effect {
         val cat = catalogs(key(spark, ns.get._1))
         if (cat.databases.contains(db.toLowerCase)) {
           if (ifNotExists == null) // DatabaseAlreadyExistException message
             throw new IllegalArgumentException(
               s"Database $db already exists in Catalog ${cat.name}.")
-        } else {
-          val props = Option(propsBody).map(b =>
-            propRe.findAllMatchIn(b).map(m => m.group(1).toLowerCase -> m.group(2)).toMap)
-            .getOrElse(Map.empty)
-          cat.databases(db.toLowerCase) = (db, props)
-        }
-        spark.emptyDataFrame
-      case dropDbB(ifExists, db, mode) if ns.isDefined =>
+        } else cat.databases(db.toLowerCase) = (db, props(propsBody))
+      }
+      case dropDbRe(ifExists, db, mode) if ns.isDefined => effect {
         val catName = ns.get._1
         val cat = catalogs(key(spark, catName))
         if (!cat.databases.contains(db.toLowerCase)) {
@@ -246,21 +215,18 @@ object CatalogDdl {
             ConnectorTables.dropNamespaced(spark, catName, db, t))
           cat.databases.remove(db.toLowerCase): Unit
         }
-        spark.emptyDataFrame
-      case alterDbB(db, propsBody) if ns.isDefined =>
-        val catName = ns.get._1
-        val cat = catalogs(key(spark, catName))
+      }
+      case alterDbRe(db, propsBody) if ns.isDefined => effect {
+        val cat = catalogs(key(spark, ns.get._1))
         if (!cat.databases.contains(db.toLowerCase))
           throw new IllegalArgumentException(
             s"Database $db does not exist in Catalog ${cat.name}.")
-        val props = propRe.findAllMatchIn(propsBody)
-          .map(m => m.group(1).toLowerCase -> m.group(2)).toMap
         // AlterDatabaseOperation replaces matching keys on the existing
         // CatalogDatabase (GenericInMemoryCatalog.alterDatabase)
         val (spelled, old) = cat.databases(db.toLowerCase)
-        cat.databases(db.toLowerCase) = (spelled, old ++ props)
-        spark.emptyDataFrame
-      case useB(name) =>
+        cat.databases(db.toLowerCase) = (spelled, old ++ props(propsBody))
+      }
+      case useRe(name) => effect {
         if (catalogs.contains(key(spark, name))) {
           // no-op when already current — the current database is KEPT
           // (setCurrentCatalog:248 switches the db only on a real change)
@@ -269,20 +235,19 @@ object CatalogDdl {
               (name.toLowerCase, catalogs(key(spark, name)).defaultDatabase.toLowerCase)
             ConnectorTables.remount(spark)
           }
-          spark.emptyDataFrame
         } else {
           // a failed USE CATALOG leaves the current namespace unchanged
           // (setCurrentCatalog throws before mutating state)
-          val out =
-            try native(s"SET CATALOG $name")
-            catch { case _: Exception =>
-              throw new IllegalArgumentException(
-                s"A catalog with name [$name] does not exist.")
-            }
+          try native(s"SET CATALOG $name")
+          catch { case _: Exception =>
+            throw new IllegalArgumentException(
+              s"A catalog with name [$name] does not exist.")
+          }
           if (current.remove(skey(spark)).isDefined) ConnectorTables.remount(spark)
-          out
         }
-      case _ if showRe.findFirstIn(probe).isDefined =>
+      }
+      case showRe() => Some(GraftCommand.strings("catalog name") { _ =>
+        import spark.implicits._
         // native catalogs ∪ DDL-registered ones, sorted — the reference's
         // listCatalogs() (TableEnvironmentImpl.java:513-518 .sorted())
         val nativeNames = native("SHOW CATALOGS").collect().map(_.getString(0)).toSeq
@@ -291,10 +256,14 @@ object CatalogDdl {
           case (k, c) if k.startsWith(prefix) => c.name }.toSeq
         (nativeNames ++ ddlNames :+ "spark_catalog").distinct.sorted
           .toDF("catalog name")
-      case _ if showCurrentCatRe.findFirstIn(probe).isDefined =>
+      })
+      case showCurrentCatRe() => Some(GraftCommand.strings("current catalog name") { _ =>
+        import spark.implicits._
         currentOverrideName(spark).map(Seq(_).toDF("current catalog name"))
           .getOrElse(native("SELECT current_catalog() AS `current catalog name`"))
-      case _ if showCurrentDbRe.findFirstIn(probe).isDefined =>
+      })
+      case showCurrentDbRe() => Some(GraftCommand.strings("current database name") { _ =>
+        import spark.implicits._
         // a DROPped-while-current database leaves the stored name dangling
         // — report it like the reference's currentDatabaseName (no crash)
         currentNamespace(spark)
@@ -302,14 +271,12 @@ object CatalogDdl {
               .map(_._1).getOrElse(n._2))
             .toDF("current database name"))
           .getOrElse(native("SELECT current_database() AS `current database name`"))
-      case _ if descCatRe.findFirstIn(probe).isDefined =>
+      })
+      case descCatRe() =>
         // DESCRIBE CATALOG — parsed, never converted (no operation in the
         // 1.12 blink planner); ParserImpl.java:79
         throw new UnsupportedOperationException(s"Unsupported query: ${sql.trim}")
-      case _ =>
-        // unreachable while matches() and these cases stay aligned; a
-        // pointed error beats a silent native fall-through if they drift
-        throw new UnsupportedOperationException(s"Unsupported query: ${sql.trim}")
+      case _ => None
     }
   }
 

@@ -3,6 +3,7 @@ package graft.sql
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** Filesystem connector tables + INSERT INTO — the reference's connector DDL
@@ -348,39 +349,17 @@ object ConnectorTables {
     catch { case _: Exception => None }
   }
 
-  def matchesCreate(probe: String): Boolean =
-    """(?i)^\s*CREATE\s+TABLE\b""".r.findFirstIn(probe).isDefined &&
-      """(?i)\bWITH\s*\(""".r.findFirstIn(probe).isDefined &&
-      ("""(?i)\bWATERMARK\s+FOR\b""".r.findFirstIn(probe).isEmpty || matchesLike(probe))
-
-  /** CREATE TABLE ... WITH (...) LIKE base [(like options)] — detected on
-    * literal-blanked text (prop values can't contain stray parens there).
-    * LIKE statements route here even when the derived column list declares
-    * its own WATERMARK — the merge needs both sides. */
-  private[sql] def matchesLike(probe: String): Boolean =
-    """(?is)^\s*CREATE\s+TABLE\b.*\bWITH\s*\([^)]*\)\s*LIKE\s+(?:\w+\.){0,2}\w+\s*(?:\([^)]*\))?\s*;?\s*$""".r
-      .findFirstIn(probe).isDefined
-
-  def matchesInsert(probe: String): Boolean =
-    """(?i)^\s*INSERT\s+(INTO|OVERWRITE)\b""".r.findFirstIn(probe).isDefined
-
-  def matchesAlterOrDrop(probe: String): Boolean =
-    """(?i)^\s*(ALTER|DROP)\s+TABLE\b""".r.findFirstIn(probe).isDefined
-
   private val showPartsRe = new FlinkSql.Blanked(
     """(?is)^\s*SHOW\s+PARTITIONS\s+((?:\w+\.){0,2}\w+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*$""".r)
-
-  def matchesShowPartitions(probe: String): Boolean =
-    showPartsRe.matches(probe)
 
   /** SHOW PARTITIONS t [PARTITION (partial spec)] on a registered
     * partitioned connector table — the reference's result shape: one
     * `partition name` column of `k=v[/k2=v2]` strings
     * (TableEnvironmentImpl.java:1026-1041). Non-connector tables return
     * None and fall through to Spark's native statement. */
-  def tryShowPartitions(spark: SparkSession, sql: String): Option[DataFrame] = sql match {
+  def showPartitions(spark: SparkSession, sql: String): Option[LogicalPlan] = sql match {
     case showPartsRe(name, specOpt) =>
-      lookup(spark, name).map { tbl =>
+      lookup(spark, name).map(tbl => GraftCommand.strings("partition name") { _ =>
         if (tbl.partitions.isEmpty)
           // TableNotPartitionedException message shape
           throw new IllegalArgumentException(s"Table $name is not partitioned.")
@@ -396,7 +375,7 @@ object ConnectorTables {
         val kept = all.filter(p => filters.forall(f => p.split("/").contains(f)))
         import spark.implicits._
         kept.sorted.toDF("partition name")
-      }
+      })
     case _ => None
   }
 
@@ -417,14 +396,14 @@ object ConnectorTables {
     * props over the registration (the reference replaces matching keys);
     * statements naming a non-connector table return None and fall through
     * to Spark's own DDL. */
-  def tryAlterOrDrop(spark: SparkSession, sql: String): Option[DataFrame] = sql match {
+  def alterOrDrop(spark: SparkSession, sql: String): Option[LogicalPlan] = sql match {
     // ALTER TABLE ADD [CONSTRAINT name] PRIMARY KEY (...) NOT ENFORCED /
     // DROP CONSTRAINT name (SqlAlterTableAddConstraint /
     // SqlAlterTableDropConstraint; SqlToOperationConverter.java:340-371,
     // validateTableConstraint:798-809 — reference error texts preserved,
     // including the original's 'constaint' spelling)
     case alterAddConstraintRe(name, cName, kind, colsList, notEnforced) =>
-      lookup(spark, name).map { tbl =>
+      lookup(spark, name).map(tbl => GraftCommand.effect { _ =>
         if (kind.toUpperCase.startsWith("UNIQUE"))
           throw new UnsupportedOperationException(
             "UNIQUE constraint is not supported yet")
@@ -450,17 +429,15 @@ object ConnectorTables {
         // columns (TableSchema.java:455-478)
         validatePkColumns(pkName, cols, tbl)
         registerMeta(spark, name, tbl.copy(pk = Some((pkName, cols))))
-        spark.emptyDataFrame
-      }
+      })
     case alterDropConstraintRe(name, cName) =>
-      lookup(spark, name).map { tbl =>
+      lookup(spark, name).map(tbl => GraftCommand.effect { _ =>
         if (!tbl.pk.exists(_._1.equalsIgnoreCase(cName)))
           throw new IllegalArgumentException(s"CONSTRAINT [$cName] does not exist")
         registerMeta(spark, name, tbl.copy(pk = None))
-        spark.emptyDataFrame
-      }
+      })
     case alterSetRe(name, propsBody) =>
-      lookup(spark, name).map { tbl =>
+      lookup(spark, name).map(tbl => GraftCommand.effect { _ =>
         val newProps = propRe.findAllMatchIn(propsBody)
           .map(m => m.group(1).toLowerCase -> m.group(2)).toMap
         val merged = tbl.props ++ newProps
@@ -471,21 +448,20 @@ object ConnectorTables {
         register(spark, canonical(spark, name),
           tbl.copy(path = merged.getOrElse("path", tbl.path),
             format = merged.getOrElse("format", tbl.format), props = merged))
-      }
+      })
     case alterRenameRe(name, newName) =>
-      lookup(spark, name).map { tbl =>
+      lookup(spark, name).map(tbl => GraftCommand.effect { _ =>
         val cname = canonical(spark, name)
         tables.remove(key(spark, cname))
         dropViews(spark, cname)
         register(spark, canonical(spark, newName), tbl)
-      }
+      })
     case dropRe(name) =>
-      lookup(spark, name).map { _ =>
+      lookup(spark, name).map(_ => GraftCommand.effect { _ =>
         val cname = canonical(spark, name)
         tables.remove(key(spark, cname))
         dropViews(spark, cname)
-        spark.emptyDataFrame
-      }
+      })
     case _ => None
   }
 
@@ -747,10 +723,9 @@ object ConnectorTables {
     * into their flat readable-view names — the read half of database-scoped
     * connector tables. Locations are found on literal/comment-blanked text
     * (a string containing 'db.t' is untouched); the splice edits the
-    * original. Statements the connector front-ends handle themselves
-    * (CREATE / INSERT / ALTER / DROP) keep their qualified spelling — those
-    * paths resolve names via lookup(). A trailing `.col` stays correct:
-    * `db.t.col` becomes `<view>.col`. */
+    * original. The parser applies it only to statements no DDL front-end
+    * owns — those resolve names via lookup(). A trailing `.col` stays
+    * correct: `db.t.col` becomes `<view>.col`. */
   def resolveQualified(spark: SparkSession, sqlText: String): String = {
     if (!sqlText.contains(".")) return sqlText
     val prefix = s"${System.identityHashCode(spark)}:"
@@ -779,19 +754,6 @@ object ConnectorTables {
       b.result()
     }
     if (quals.isEmpty) return sqlText
-    val probe = FlinkSql.blankLiteralsAndComments(sqlText)
-    // INSERT statements are skipped only when their TARGET is a registered
-    // connector table (tryInsert owns those and re-parses the query tail,
-    // which resolves on re-entry); an INSERT into anything else falls
-    // through to Spark's parser, so qualified connector refs in its SELECT
-    // must be resolved HERE or they reach Spark unresolved
-    val insertOwned = probe match {
-      case insertRe(_, name, _, _) => lookup(spark, name).isDefined
-      case _ => false
-    }
-    if (matchesCreate(probe) || insertOwned || matchesAlterOrDrop(probe) ||
-        matchesShowPartitions(probe) || DescribeTable.matches(spark, probe))
-      return sqlText
     var text = sqlText
     // longest patterns first so `cat.db.t` wins over a same-suffix `db.t`;
     // on EQUAL-length collisions (a legacy session-global `db.t` vs the
@@ -823,7 +785,7 @@ object ConnectorTables {
     * catalog — GenericInMemoryCatalog.createTable's DatabaseNotExist check
     * (GenericInMemoryCatalog.java:154-163, message shape of
     * DatabaseNotExistException). */
-  private def register(spark: SparkSession, name: String, tbl: Tbl): DataFrame = {
+  private def register(spark: SparkSession, name: String, tbl: Tbl): Unit = {
     if (name.startsWith("@")) {
       val parts = name.drop(1).split("\\.")
       if (!CatalogDdl.databaseExists(spark, parts(0), parts(1)))
@@ -834,197 +796,210 @@ object ConnectorTables {
     // pre-existing data → the table is immediately readable too (an empty
     // directory is NOT data — self-describing formats can't infer from it)
     if (hasData(tbl)) refreshViews(spark, name, read(spark, tbl))
-    spark.emptyDataFrame
   }
 
-  def runCreate(spark: SparkSession, sql: String): DataFrame = sql match {
+  /** CREATE TABLE: the LIKE form, a WATERMARK table ([[WatermarkDdl]]), or
+    * a plain connector table; None → no WITH clause, a native Spark table. */
+  def create(sql: String): Option[LogicalPlan] = sql match {
     case likeRe(rawName, colsOpt, partColsOpt, propsBody, rawBase, likeOptsOpt) =>
-      val name = canonical(spark, rawName)
-      val baseName = canonical(spark, rawBase)
-      val base = lookup(spark, rawBase).getOrElse(throw new IllegalArgumentException(
-        s"CREATE TABLE $rawName LIKE $rawBase: base table is not a registered connector table"))
-      val st = likeStrategies(Option(likeOptsOpt).getOrElse(""))
-      val derived = propRe.findAllMatchIn(propsBody)
-        .map(m => m.group(1).toLowerCase -> m.group(2)).toMap
-      // options merge (MergeTableLikeUtil.mergeOptions:185-206). NOTE the
-      // default strategy is OVERWRITING (MergeTableLikeUtil.java:75) — a
-      // bare LIKE lets the derived WITH silently win; the duplicate error
-      // fires only under an explicit INCLUDING
-      val merged = scala.collection.mutable.LinkedHashMap[String, String]()
-      if (st("OPTIONS") != "EXCLUDING") merged ++= base.props
-      derived.foreach { case (k, v) =>
-        if (st("OPTIONS") == "INCLUDING" && merged.contains(k))
-          throw new IllegalArgumentException(
-            s"There already exists an option ['$k' -> '${merged(k)}'] in the base table. " +
-              "You might want to specify EXCLUDING OPTIONS or OVERWRITING OPTIONS.")
-        merged(k) = v
-      }
-      val props = merged.toMap
-      // schema: derived PHYSICAL columns APPEND to the base's; a duplicate
-      // physical name is the reference's unconditional error
-      // (MergeTableLikeUtil.collectPhysicalFieldsTypes:460-469)
-      val derivedSchema = Option(colsOpt).flatMap(parseSchema)
-      val schema = (base.schema, derivedSchema) match {
-        case (Some(b), Some(d)) =>
-          d.fields.find(f => b.fieldNames.contains(f.name)).foreach(f =>
-            throw new IllegalArgumentException(
-              s"A column named '${f.name}' already exists in the base table."))
-          Some(StructType(b.fields ++ d.fields))
-        case (b, d) => d.orElse(b)
-      }
-      // computed (GENERATED) columns: inherit unless EXCLUDING; a derived
-      // computed column on an inherited name needs OVERWRITING
-      // (MergeTableLikeUtil.appendDerivedColumns:395-410)
-      val computedRe = """(?is)^(\w+)\s+AS\s+(.+)$""".r
-      val items = Option(colsOpt).map(splitTop).getOrElse(Nil)
-      val derivedComputed = items.collect {
-        case c if !c.trim.toUpperCase.startsWith("WATERMARK") &&
-            computedRe.findFirstMatchIn(c.trim).isDefined =>
-          val m = computedRe.findFirstMatchIn(c.trim).get
-          (m.group(1), m.group(2).trim)
-      }
-      val baseComputed = if (st("GENERATED") == "EXCLUDING") Nil else base.computed
-      derivedComputed.foreach { case (n, _) =>
-        if (baseComputed.exists(_._1.equalsIgnoreCase(n)) && st("GENERATED") != "OVERWRITING")
-          throw new IllegalArgumentException(
-            s"A generated column named '$n' already exists in the base table. " +
-              "You might want to specify EXCLUDING GENERATED or OVERWRITING GENERATED.")
-      }
-      val computed = baseComputed.filterNot(bc =>
-        derivedComputed.exists(_._1.equalsIgnoreCase(bc._1))) ++ derivedComputed
-      // METADATA columns: inherit unless EXCLUDING; a derived metadata
-      // column on an inherited name needs OVERWRITING
-      // (MergeTableLikeUtil.appendDerivedColumns:429-443)
-      val derivedMeta = Option(colsOpt).map(parseMetaCols).getOrElse(Nil)
-      val baseMeta = if (st("METADATA") == "EXCLUDING") Nil else base.metaCols
-      derivedMeta.foreach { mc =>
-        if (baseMeta.exists(_.name.equalsIgnoreCase(mc.name)) && st("METADATA") != "OVERWRITING")
-          throw new IllegalArgumentException(
-            s"A metadata column named '${mc.name}' already exists in the base table. You " +
-              "might want to specify EXCLUDING METADATA or OVERWRITING METADATA.")
-      }
-      val metaMerged = baseMeta.filterNot(bm =>
-        derivedMeta.exists(_.name.equalsIgnoreCase(bm.name))) ++ derivedMeta
-      // partitions (MergeTableLikeUtil.mergePartitions:164-180 — the 1.12
-      // shape, preserved exactly: EXCLUDING legalizes a derived override,
-      // but an EMPTY derived list inherits the base's partitions under
-      // every strategy, EXCLUDING included)
-      val derivedParts = Option(partColsOpt)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      if (derivedParts.nonEmpty && base.partitions.nonEmpty && st("PARTITIONS") != "EXCLUDING")
-        throw new IllegalArgumentException(
-          "The base table already has partitions defined. You might want to " +
-            "specify EXCLUDING PARTITIONS.")
-      val parts = if (derivedParts.nonEmpty) derivedParts else base.partitions
-      // watermarks (populateWatermarksFromSourceTable:258-266 +
-      // verifyRowtimeAttribute:336-349): inherit unless EXCLUDING; a
-      // derived spec on the same rowtime column needs OVERWRITING
-      val baseWm = if (st("WATERMARKS") == "EXCLUDING") None
-                   else SystemTimeJoin.watermarkOf(baseName)
-      val derivedWm = Option(colsOpt).flatMap(WatermarkDdl.parseWm)
-      derivedWm.foreach { w =>
-        if (baseWm.exists(_._1.equalsIgnoreCase(w.col)) && st("WATERMARKS") != "OVERWRITING")
-          throw new IllegalArgumentException(
-            s"There already exists a watermark spec for column '${w.col}' in the " +
-              "base table. You might want to specify EXCLUDING WATERMARKS or " +
-              "OVERWRITING WATERMARKS.")
-      }
-      val wm = derivedWm.map(w => (w.col, WatermarkDdl.delayOf(spark, w)))
-        .orElse(baseWm)
-      // primary key (CONSTRAINTS): copied only under INCLUDING
-      // (populatePrimaryKeyFromSourceTable:268-275); base + derived PK
-      // together is the reference's error (appendDerivedPrimaryKey:277-281)
-      val basePk = if (st("CONSTRAINTS") == "INCLUDING") base.pk else None
-      val derivedPk = Option(colsOpt).flatMap(parsePk)
-      if (derivedPk.isDefined && basePk.isDefined)
-        throw new IllegalArgumentException(
-          "The base table already has a primary key. You might want to " +
-            "specify EXCLUDING CONSTRAINTS.")
-      val path = props.getOrElse("path", throw new IllegalArgumentException(
-        s"CREATE TABLE $name LIKE $baseName: no 'path' after option merge"))
-      // declaration-order column list for DESCRIBE: the base's (minus
-      // excluded/overridden computed+metadata items) with the derived list
-      // appended — the merged TableSchema's column order in the reference
-      val derivedDecl = Option(colsOpt).map(parseDecl).getOrElse(Nil)
-      val mergedDecl = base.decl.filter {
-        case _: PhysCol => true
-        case c: CompCol => st("GENERATED") != "EXCLUDING" &&
-          !derivedComputed.exists(_._1.equalsIgnoreCase(c.name))
-        case m: MetaCol => st("METADATA") != "EXCLUDING" &&
-          !derivedMeta.exists(_.name.equalsIgnoreCase(m.name))
-      } ++ derivedDecl
-      val mergedPk = derivedPk.orElse(basePk)
-      mergedPk.foreach { case (pn, pc) =>
-        if (mergedDecl.nonEmpty)
-          pc.find(c => !mergedDecl.exists(_.name.equalsIgnoreCase(c))).foreach(c =>
-            throw new IllegalArgumentException(
-              s"Could not create a PRIMARY KEY '$pn'. Column '$c' does not exist."))
-        validatePkColumns(pn, pc, Tbl(path, "", props, schema, parts, computed,
-          None, metaMerged, mergedDecl)) }
-      val out = register(spark, name,
-        Tbl(path, props.getOrElse("format", "parquet"), props, schema, parts,
-          computed, mergedPk, metaMerged, mergedDecl))
-      wm.foreach { case (c, d) => SystemTimeJoin.declareWatermark(name, c, d) }
-      // the watermark EXPRESSION text (DESCRIBE's `watermark` column):
-      // derived spec wins, else inherited from the base's registration
-      derivedWm.map(WatermarkDdl.exprTextOf)
-        .orElse(if (st("WATERMARKS") == "EXCLUDING") None
-                else SystemTimeJoin.watermarkExprOf(baseName))
-        .foreach(e => SystemTimeJoin.declareWatermarkExpr(name, e))
-      out
+      Some(GraftCommand.effect(createLike(_, rawName, colsOpt, partColsOpt, propsBody,
+        rawBase, likeOptsOpt)))
+    case _ if FlinkSql.blankedMatch(WatermarkDdl.wmRe, sql).isDefined =>
+      Some(WatermarkDdl.createTable(sql))
     case createRe(rawName, cols, partCols, propsBody) =>
-      val name = canonical(spark, rawName)
-      val props = propRe.findAllMatchIn(propsBody)
-        .map(m => m.group(1).toLowerCase -> m.group(2)).toMap
-      require(props.get("connector").forall(_ == "filesystem"),
-        s"CREATE TABLE $name: only the filesystem connector is supported, " +
-          s"got ${props.get("connector")}")
-      val path = props.getOrElse("path",
-        throw new IllegalArgumentException(s"CREATE TABLE $name: 'path' property required"))
-      val fmt = props.getOrElse("format", "parquet")
-      // PARTITIONED BY columns must be part of the declared schema (the
-      // reference's SqlCreateTable validates the same); they become the
-      // col=value directory layout on write
-      val parts = Option(partCols).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-      // METADATA columns (FLIP-107): in 1.12 only the debezium-json format
-      // lists readable metadata (DebeziumJsonDecodingFormat.java:108-113);
-      // keys validate at DDL time with the reference's pointed error shape
-      // (DynamicSourceUtils invalid-metadata-key validation)
-      val metaCols = parseMetaCols(cols)
-      if (metaCols.nonEmpty && !fmt.equalsIgnoreCase("debezium-json"))
+      Some(GraftCommand.effect(createPlain(_, rawName, cols, partCols, propsBody)))
+    case _ => None
+  }
+
+  private def createLike(spark: SparkSession, rawName: String, colsOpt: String,
+      partColsOpt: String, propsBody: String, rawBase: String, likeOptsOpt: String): Unit = {
+    val name = canonical(spark, rawName)
+    val baseName = canonical(spark, rawBase)
+    val base = lookup(spark, rawBase).getOrElse(throw new IllegalArgumentException(
+      s"CREATE TABLE $rawName LIKE $rawBase: base table is not a registered connector table"))
+    val st = likeStrategies(Option(likeOptsOpt).getOrElse(""))
+    val derived = propRe.findAllMatchIn(propsBody)
+      .map(m => m.group(1).toLowerCase -> m.group(2)).toMap
+    // options merge (MergeTableLikeUtil.mergeOptions:185-206). NOTE the
+    // default strategy is OVERWRITING (MergeTableLikeUtil.java:75) — a
+    // bare LIKE lets the derived WITH silently win; the duplicate error
+    // fires only under an explicit INCLUDING
+    val merged = scala.collection.mutable.LinkedHashMap[String, String]()
+    if (st("OPTIONS") != "EXCLUDING") merged ++= base.props
+    derived.foreach { case (k, v) =>
+      if (st("OPTIONS") == "INCLUDING" && merged.contains(k))
         throw new IllegalArgumentException(
-          s"CREATE TABLE $name: format '$fmt' does not support reading metadata " +
-            "(only debezium-json lists readable metadata in this surface)")
-      metaCols.foreach { mc =>
-        if (!graft.sources.CdcFormats.DebeziumMetadataKeys.contains(mc.key))
+          s"There already exists an option ['$k' -> '${merged(k)}'] in the base table. " +
+            "You might want to specify EXCLUDING OPTIONS or OVERWRITING OPTIONS.")
+      merged(k) = v
+    }
+    val props = merged.toMap
+    // schema: derived PHYSICAL columns APPEND to the base's; a duplicate
+    // physical name is the reference's unconditional error
+    // (MergeTableLikeUtil.collectPhysicalFieldsTypes:460-469)
+    val derivedSchema = Option(colsOpt).flatMap(parseSchema)
+    val schema = (base.schema, derivedSchema) match {
+      case (Some(b), Some(d)) =>
+        d.fields.find(f => b.fieldNames.contains(f.name)).foreach(f =>
           throw new IllegalArgumentException(
-            s"Invalid metadata key '${mc.key}' in column '${mc.name}' of table $name. " +
-              "The debezium-json format supports the following metadata keys for " +
-              s"READING: ${graft.sources.CdcFormats.DebeziumMetadataKeys.mkString(", ")}")
-      }
-      val decl = parseDecl(cols)
-      // computed (generated) columns are independent of the WATERMARK
-      // clause (parserImpls.ftl:551) — a plain connector CREATE carries
-      // them too; read() applies them in declaration order
-      val computedCols = decl.collect { case CompCol(n, e) => (n, e) }
-      val tbl = Tbl(path, fmt, props, parseSchema(cols), parts, computedCols,
-        parsePk(cols), metaCols, decl)
-      tbl.pk.foreach { case (pn, pc) =>
-        pc.find(c => !decl.exists(_.name.equalsIgnoreCase(c))).foreach(c =>
+            s"A column named '${f.name}' already exists in the base table."))
+        Some(StructType(b.fields ++ d.fields))
+      case (b, d) => d.orElse(b)
+    }
+    // computed (GENERATED) columns: inherit unless EXCLUDING; a derived
+    // computed column on an inherited name needs OVERWRITING
+    // (MergeTableLikeUtil.appendDerivedColumns:395-410)
+    val computedRe = """(?is)^(\w+)\s+AS\s+(.+)$""".r
+    val items = Option(colsOpt).map(splitTop).getOrElse(Nil)
+    val derivedComputed = items.collect {
+      case c if !c.trim.toUpperCase.startsWith("WATERMARK") &&
+          computedRe.findFirstMatchIn(c.trim).isDefined =>
+        val m = computedRe.findFirstMatchIn(c.trim).get
+        (m.group(1), m.group(2).trim)
+    }
+    val baseComputed = if (st("GENERATED") == "EXCLUDING") Nil else base.computed
+    derivedComputed.foreach { case (n, _) =>
+      if (baseComputed.exists(_._1.equalsIgnoreCase(n)) && st("GENERATED") != "OVERWRITING")
+        throw new IllegalArgumentException(
+          s"A generated column named '$n' already exists in the base table. " +
+            "You might want to specify EXCLUDING GENERATED or OVERWRITING GENERATED.")
+    }
+    val computed = baseComputed.filterNot(bc =>
+      derivedComputed.exists(_._1.equalsIgnoreCase(bc._1))) ++ derivedComputed
+    // METADATA columns: inherit unless EXCLUDING; a derived metadata
+    // column on an inherited name needs OVERWRITING
+    // (MergeTableLikeUtil.appendDerivedColumns:429-443)
+    val derivedMeta = Option(colsOpt).map(parseMetaCols).getOrElse(Nil)
+    val baseMeta = if (st("METADATA") == "EXCLUDING") Nil else base.metaCols
+    derivedMeta.foreach { mc =>
+      if (baseMeta.exists(_.name.equalsIgnoreCase(mc.name)) && st("METADATA") != "OVERWRITING")
+        throw new IllegalArgumentException(
+          s"A metadata column named '${mc.name}' already exists in the base table. You " +
+            "might want to specify EXCLUDING METADATA or OVERWRITING METADATA.")
+    }
+    val metaMerged = baseMeta.filterNot(bm =>
+      derivedMeta.exists(_.name.equalsIgnoreCase(bm.name))) ++ derivedMeta
+    // partitions (MergeTableLikeUtil.mergePartitions:164-180 — the 1.12
+    // shape, preserved exactly: EXCLUDING legalizes a derived override,
+    // but an EMPTY derived list inherits the base's partitions under
+    // every strategy, EXCLUDING included)
+    val derivedParts = Option(partColsOpt)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+    if (derivedParts.nonEmpty && base.partitions.nonEmpty && st("PARTITIONS") != "EXCLUDING")
+      throw new IllegalArgumentException(
+        "The base table already has partitions defined. You might want to " +
+          "specify EXCLUDING PARTITIONS.")
+    val parts = if (derivedParts.nonEmpty) derivedParts else base.partitions
+    // watermarks (populateWatermarksFromSourceTable:258-266 +
+    // verifyRowtimeAttribute:336-349): inherit unless EXCLUDING; a
+    // derived spec on the same rowtime column needs OVERWRITING
+    val baseWm = if (st("WATERMARKS") == "EXCLUDING") None
+                 else SystemTimeJoin.watermarkOf(baseName)
+    val derivedWm = Option(colsOpt).flatMap(WatermarkDdl.parseWm)
+    derivedWm.foreach { w =>
+      if (baseWm.exists(_._1.equalsIgnoreCase(w.col)) && st("WATERMARKS") != "OVERWRITING")
+        throw new IllegalArgumentException(
+          s"There already exists a watermark spec for column '${w.col}' in the " +
+            "base table. You might want to specify EXCLUDING WATERMARKS or " +
+            "OVERWRITING WATERMARKS.")
+    }
+    val wm = derivedWm.map(w => (w.col, WatermarkDdl.delayOf(spark, w)))
+      .orElse(baseWm)
+    // primary key (CONSTRAINTS): copied only under INCLUDING
+    // (populatePrimaryKeyFromSourceTable:268-275); base + derived PK
+    // together is the reference's error (appendDerivedPrimaryKey:277-281)
+    val basePk = if (st("CONSTRAINTS") == "INCLUDING") base.pk else None
+    val derivedPk = Option(colsOpt).flatMap(parsePk)
+    if (derivedPk.isDefined && basePk.isDefined)
+      throw new IllegalArgumentException(
+        "The base table already has a primary key. You might want to " +
+          "specify EXCLUDING CONSTRAINTS.")
+    val path = props.getOrElse("path", throw new IllegalArgumentException(
+      s"CREATE TABLE $name LIKE $baseName: no 'path' after option merge"))
+    // declaration-order column list for DESCRIBE: the base's (minus
+    // excluded/overridden computed+metadata items) with the derived list
+    // appended — the merged TableSchema's column order in the reference
+    val derivedDecl = Option(colsOpt).map(parseDecl).getOrElse(Nil)
+    val mergedDecl = base.decl.filter {
+      case _: PhysCol => true
+      case c: CompCol => st("GENERATED") != "EXCLUDING" &&
+        !derivedComputed.exists(_._1.equalsIgnoreCase(c.name))
+      case m: MetaCol => st("METADATA") != "EXCLUDING" &&
+        !derivedMeta.exists(_.name.equalsIgnoreCase(m.name))
+    } ++ derivedDecl
+    val mergedPk = derivedPk.orElse(basePk)
+    mergedPk.foreach { case (pn, pc) =>
+      if (mergedDecl.nonEmpty)
+        pc.find(c => !mergedDecl.exists(_.name.equalsIgnoreCase(c))).foreach(c =>
           throw new IllegalArgumentException(
             s"Could not create a PRIMARY KEY '$pn'. Column '$c' does not exist."))
-        validatePkColumns(pn, pc, tbl)
-      }
-      register(spark, name, tbl)
-    case _ => throw new IllegalArgumentException("unsupported connector CREATE TABLE shape")
+      validatePkColumns(pn, pc, Tbl(path, "", props, schema, parts, computed,
+        None, metaMerged, mergedDecl)) }
+    register(spark, name,
+      Tbl(path, props.getOrElse("format", "parquet"), props, schema, parts,
+        computed, mergedPk, metaMerged, mergedDecl))
+    wm.foreach { case (c, d) => SystemTimeJoin.declareWatermark(name, c, d) }
+    // the watermark EXPRESSION text (DESCRIBE's `watermark` column):
+    // derived spec wins, else inherited from the base's registration
+    derivedWm.map(WatermarkDdl.exprTextOf)
+      .orElse(if (st("WATERMARKS") == "EXCLUDING") None
+              else SystemTimeJoin.watermarkExprOf(baseName))
+      .foreach(e => SystemTimeJoin.declareWatermarkExpr(name, e))
   }
 
-  /** Some(empty DF) if the target is a registered connector sink; None →
-    * not ours, let the stock parser plan the INSERT. */
-  def tryInsert(spark: SparkSession, sql: String): Option[DataFrame] = sql match {
+  private def createPlain(spark: SparkSession, rawName: String, cols: String,
+      partCols: String, propsBody: String): Unit = {
+    val name = canonical(spark, rawName)
+    val props = propRe.findAllMatchIn(propsBody)
+      .map(m => m.group(1).toLowerCase -> m.group(2)).toMap
+    require(props.get("connector").forall(_ == "filesystem"),
+      s"CREATE TABLE $name: only the filesystem connector is supported, " +
+        s"got ${props.get("connector")}")
+    val path = props.getOrElse("path",
+      throw new IllegalArgumentException(s"CREATE TABLE $name: 'path' property required"))
+    val fmt = props.getOrElse("format", "parquet")
+    // PARTITIONED BY columns must be part of the declared schema (the
+    // reference's SqlCreateTable validates the same); they become the
+    // col=value directory layout on write
+    val parts = Option(partCols).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+      .getOrElse(Nil)
+    // METADATA columns (FLIP-107): in 1.12 only the debezium-json format
+    // lists readable metadata (DebeziumJsonDecodingFormat.java:108-113);
+    // keys validate at DDL time with the reference's pointed error shape
+    // (DynamicSourceUtils invalid-metadata-key validation)
+    val metaCols = parseMetaCols(cols)
+    if (metaCols.nonEmpty && !fmt.equalsIgnoreCase("debezium-json"))
+      throw new IllegalArgumentException(
+        s"CREATE TABLE $name: format '$fmt' does not support reading metadata " +
+          "(only debezium-json lists readable metadata in this surface)")
+    metaCols.foreach { mc =>
+      if (!graft.sources.CdcFormats.DebeziumMetadataKeys.contains(mc.key))
+        throw new IllegalArgumentException(
+          s"Invalid metadata key '${mc.key}' in column '${mc.name}' of table $name. " +
+            "The debezium-json format supports the following metadata keys for " +
+            s"READING: ${graft.sources.CdcFormats.DebeziumMetadataKeys.mkString(", ")}")
+    }
+    val decl = parseDecl(cols)
+    // computed (generated) columns are independent of the WATERMARK
+    // clause (parserImpls.ftl:551) — a plain connector CREATE carries
+    // them too; read() applies them in declaration order
+    val computedCols = decl.collect { case CompCol(n, e) => (n, e) }
+    val tbl = Tbl(path, fmt, props, parseSchema(cols), parts, computedCols,
+      parsePk(cols), metaCols, decl)
+    tbl.pk.foreach { case (pn, pc) =>
+      pc.find(c => !decl.exists(_.name.equalsIgnoreCase(c))).foreach(c =>
+        throw new IllegalArgumentException(
+          s"Could not create a PRIMARY KEY '$pn'. Column '$c' does not exist."))
+      validatePkColumns(pn, pc, tbl)
+    }
+    register(spark, name, tbl)
+  }
+
+  /** INSERT into a registered connector sink; None → not ours, let the
+    * stock parser plan the INSERT. */
+  def insert(spark: SparkSession, sql: String): Option[LogicalPlan] = sql match {
     case insertRe(mode, name, staticPart, query) =>
-      lookup(spark, name).map { tbl =>
+      lookup(spark, name).map(tbl => GraftCommand.effect { _ =>
         var df = spark.sql(query)
         // static PARTITION (p='v' | p=5) clause: the literals — quoted or
         // unquoted, both valid in the reference's grammar — append as
@@ -1071,8 +1046,7 @@ object ConnectorTables {
         }
         // refresh the readable view over the now-written files
         refreshViews(spark, canonical(spark, name), read(spark, tbl))
-        spark.emptyDataFrame
-      }
+      })
     case _ => None
   }
 }

@@ -1,6 +1,7 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions.col
 
 /** Database DDL — the reference's catalog-database statement surface
@@ -31,10 +32,10 @@ object DatabaseDdl {
     """(?is)^(\s*CREATE\s+DATABASE\s+(?:IF\s+NOT\s+EXISTS\s+)?\w+\s*(?:COMMENT\s+'[^']*'\s*)?)WITH\s*\((.*)\)\s*;?\s*$""".r
   private val alterRe =
     """(?is)^(\s*ALTER\s+DATABASE\s+\w+\s+SET\s*)\((.*)\)\s*;?\s*$""".r
-  private val showRe = """(?is)^\s*SHOW\s+DATABASES\s*;?\s*$""".r
-  private val showTablesRe = """(?is)^\s*SHOW\s+TABLES\s*;?\s*$""".r
-  private val showViewsRe = """(?is)^\s*SHOW\s+VIEWS\s*;?\s*$""".r
-  private val showFunctionsRe = """(?is)^\s*SHOW\s+FUNCTIONS\s*;?\s*$""".r
+  private val showRe = new FlinkSql.Blanked("""(?is)\s*SHOW\s+DATABASES\s*;?\s*""".r)
+  private val showTablesRe = new FlinkSql.Blanked("""(?is)\s*SHOW\s+TABLES\s*;?\s*""".r)
+  private val showViewsRe = new FlinkSql.Blanked("""(?is)\s*SHOW\s+VIEWS\s*;?\s*""".r)
+  private val showFunctionsRe = new FlinkSql.Blanked("""(?is)\s*SHOW\s+FUNCTIONS\s*;?\s*""".r)
 
   /** Text rewrite of the Flink property-clause spellings into Spark's —
     * `WITH (...)` → `WITH DBPROPERTIES (...)`, `SET (...)` →
@@ -48,49 +49,44 @@ object DatabaseDdl {
     case _ => sqlText
   }
 
-  /** Dispatch test for the SHOW forms that need a BUILT result (the
-    * reference's one-column result headers — buildShowResult,
-    * TableEnvironmentImpl.java:1012-1024). Only the bare spellings are
-    * intercepted; `SHOW TABLES IN db` / `LIKE 'pat'` variants pass through
-    * to Spark natively. Caller passes literal/comment-blanked text. */
-  def matches(probe: String): Boolean =
-    showRe.findFirstIn(probe).isDefined ||
-      showTablesRe.findFirstIn(probe).isDefined ||
-      showViewsRe.findFirstIn(probe).isDefined ||
-      showFunctionsRe.findFirstIn(probe).isDefined
-
-  /** Build the SHOW result with the reference's column name. `native` runs
-    * a statement through the DELEGATE parser (not spark.sql — that would
+  /** The bare SHOW forms, built with the reference's one-column result
+    * headers (buildShowResult, TableEnvironmentImpl.java:1012-1024);
+    * `SHOW TABLES IN db` / `LIKE 'pat'` variants return None and stay native.
+    * `native` runs a statement through the DELEGATE parser (spark.sql would
     * re-enter this dispatch). Tables/views are sorted like the reference
     * (TableEnvironmentImpl.listTables/listViews .sorted());
     * listFunctions/listDatabases carry the provider's order. */
-  def run(spark: SparkSession, sql: String, native: String => DataFrame): DataFrame =
-    sql match {
-      case showTablesRe() =>
-        // with a DDL-registered catalog current, list ONLY that
-        // catalog.database's registered tables — the reference's
-        // CatalogManager.listTables(currentCatalog, currentDatabase)
-        // (CatalogManager.java:430-454). Spark temp views stay
-        // session-global and out of the namespaced listing (documented
-        // divergence in CatalogDdl's scaladoc).
-        CatalogDdl.currentNamespace(spark).map { case (cat, db) =>
-          import spark.implicits._
-          ConnectorTables.listNamespace(spark, cat, db).sorted.toDF("table name")
-        }.getOrElse(
-          native("SHOW TABLES").select(col("tableName").as("table name"))
-            .sort("table name"))
-      case showViewsRe() =>
-        native("SHOW VIEWS").select(col("viewName").as("view name"))
-          .sort("view name")
-      case showFunctionsRe() =>
-        native("SHOW FUNCTIONS").select(col("function").as("function name"))
-      case _ =>
-        // with a DDL-registered catalog current, list ITS databases in
-        // creation order (GenericInMemoryCatalog.listDatabases)
-        CatalogDdl.listDatabases(spark).map { dbs =>
-          import spark.implicits._
-          dbs.toDF("database name")
-        }.getOrElse(
-          spark.catalog.listDatabases().select(col("name").as("database name")))
-    }
+  def show(sql: String, native: String => DataFrame): Option[LogicalPlan] = sql match {
+    case showTablesRe() => Some(GraftCommand.strings("table name") { spark =>
+      // with a DDL-registered catalog current, list ONLY that
+      // catalog.database's registered tables — the reference's
+      // CatalogManager.listTables(currentCatalog, currentDatabase)
+      // (CatalogManager.java:430-454). Spark temp views stay
+      // session-global and out of the namespaced listing (documented
+      // divergence in CatalogDdl's scaladoc).
+      CatalogDdl.currentNamespace(spark).map { case (cat, db) =>
+        import spark.implicits._
+        ConnectorTables.listNamespace(spark, cat, db).sorted.toDF("table name")
+      }.getOrElse(
+        native("SHOW TABLES").select(col("tableName").as("table name"))
+          .sort("table name"))
+    })
+    case showViewsRe() => Some(GraftCommand.strings("view name") { _ =>
+      native("SHOW VIEWS").select(col("viewName").as("view name"))
+        .sort("view name")
+    })
+    case showFunctionsRe() => Some(GraftCommand.strings("function name") { _ =>
+      native("SHOW FUNCTIONS").select(col("function").as("function name"))
+    })
+    case showRe() => Some(GraftCommand.strings("database name") { spark =>
+      // with a DDL-registered catalog current, list ITS databases in
+      // creation order (GenericInMemoryCatalog.listDatabases)
+      CatalogDdl.listDatabases(spark).map { dbs =>
+        import spark.implicits._
+        dbs.toDF("database name")
+      }.getOrElse(
+        spark.catalog.listDatabases().select(col("name").as("database name")))
+    })
+    case _ => None
+  }
 }

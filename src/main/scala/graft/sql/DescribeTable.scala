@@ -1,6 +1,8 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types._
 
 /** `DESCRIBE <table>` with the reference's six-column result
@@ -40,16 +42,17 @@ object DescribeTable {
   // DESCRIBE [EXTENDED] [[cat.]db.]t — SqlRichDescribeTable's grammar
   // (parserImpls.ftl:93-108); 1.12's buildDescribeResult ignores the
   // EXTENDED flag, so both spellings yield the same six-column result
-  private val re = """(?is)^\s*DESC(?:RIBE)?\s+(?:EXTENDED\s+)?((?:\w+\.){0,2}\w+)\s*;?\s*$""".r
+  private val re = new FlinkSql.Blanked(
+    """(?is)\s*DESC(?:RIBE)?\s+(?:EXTENDED\s+)?((?:\w+\.){0,2}\w+)\s*;?\s*""".r)
 
-  /** Dispatch test — DESCRIBE over a registered connector table or any
-    * relation Spark can resolve. Unresolvable names fall through to the
-    * native statement (its not-found error). */
-  def matches(spark: SparkSession, probe: String): Boolean = probe match {
-    case re(name) =>
-      ConnectorTables.lookup(spark, name).isDefined ||
-        (try spark.catalog.tableExists(name) catch { case _: Exception => false })
-    case _ => false
+  /** DESCRIBE over a registered connector table or any relation Spark can
+    * resolve. None → unresolvable names and other DESCRIBE spellings stay
+    * native (its not-found error). */
+  def describe(spark: SparkSession, sql: String): Option[LogicalPlan] = sql match {
+    case re(name) if ConnectorTables.lookup(spark, name).isDefined ||
+        (try spark.catalog.tableExists(name) catch { case _: Exception => false }) =>
+      Some(GraftCommand(DataTypeUtils.toAttributes(outSchema))(rows(_, name)))
+    case _ => None
   }
 
   /** Spark type → the reference's LogicalType summary rendering
@@ -84,13 +87,7 @@ object DescribeTable {
     StructField("extras", StringType),
     StructField("watermark", StringType)))
 
-  private def toDf(spark: SparkSession, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-      outSchema)
-
-  def run(spark: SparkSession, sql: String): DataFrame = {
-    val name = sql match { case re(n) => n }
+  private def rows(spark: SparkSession, name: String): Seq[Row] =
     ConnectorTables.lookup(spark, name) match {
       case Some(tbl) => describeConnector(spark, name, tbl)
       case None =>
@@ -98,14 +95,12 @@ object DescribeTable {
         // the same six columns — no PK / extras / watermark metadata to
         // project (TableEnvironmentImpl.java:1055-1062 runs
         // buildDescribeResult for every table and view)
-        val rows = spark.table(name).schema.fields.toSeq.map(f =>
+        spark.table(name).schema.fields.toSeq.map(f =>
           Row(f.name, flinkTypeText(f.dataType), f.nullable, null, null, null))
-        toDf(spark, rows)
     }
-  }
 
   private def describeConnector(spark: SparkSession, name: String,
-      tbl: ConnectorTables.Tbl): DataFrame = {
+      tbl: ConnectorTables.Tbl): Seq[Row] = {
     val cname = ConnectorTables.canonical(spark, name)
 
     // declaration-order column list; reconstructed from the readable view
@@ -187,7 +182,7 @@ object DescribeTable {
         wmText.getOrElse(s"`${wmCol.get}`")
       else null
 
-    val rows = decl.map {
+    decl.map {
       case ConnectorTables.PhysCol(n, t, nullable) =>
         Row(n, t, nullable, keyFor(n), null, wmFor(n))
       case ConnectorTables.CompCol(n, e) =>
@@ -198,6 +193,5 @@ object DescribeTable {
           (if (m.virtual) " VIRTUAL" else "")
         Row(m.name, m.typeText, derivedNullable(m.name), keyFor(m.name), extras, wmFor(m.name))
     }
-    toDf(spark, rows)
   }
 }

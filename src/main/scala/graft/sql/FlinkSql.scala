@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.parser.{ParserInterface, ParameterContext}
@@ -31,6 +31,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Note HOP's argument order flips: Flink is (time, slide, size), Spark's
   * window() is (time, size, slide).
+  *
+  * Parsing runs no DDL statement ([[Parser]]). The query front-ends
+  * (MATCH_RECOGNIZE, FOR SYSTEM_TIME AS OF, temporal table functions, emit
+  * and cumulate windows) and the OPTIONS hint still build their plans while
+  * parsing, which registers temp views for the fragments they evaluate.
+  * Their result is a query the caller keeps composing (`spark.sql(q)
+  * .orderBy(...)`, a streaming sink); as a command it would become an action
+  * that collects every row to the driver inside `spark.sql`.
   */
 object FlinkSql {
 
@@ -189,7 +197,6 @@ object FlinkSql {
     * original. FULL-match semantics, exactly like Scala's own
     * Regex.unapplySeq. */
   private[sql] class Blanked(re: scala.util.matching.Regex) {
-    def matches(sql: String): Boolean = unapplySeq(sql).isDefined
     def unapplySeq(sql: String): Option[List[String]] = {
       val m = re.pattern.matcher(blankLiteralsAndComments(sql))
       if (!m.matches()) None
@@ -198,131 +205,133 @@ object FlinkSql {
     }
   }
 
-  /** Parser delegate: MATCH_RECOGNIZE routes to the CEP front-end;
-    * everything else is dialect-rewritten and handed to Spark's parser. */
+  /** What a statement is, read from the leading keywords of its
+    * literal/comment-blanked text: the verb and the object word after any
+    * modifiers (`CREATE OR REPLACE TEMPORARY VIEW` is a [[Kind.CreateView]]).
+    * Each DDL kind has exactly one owning front-end; [[Kind.Query]] is every
+    * other statement. A keyword elsewhere in the text — a column named
+    * `function`, a literal spelling `WATERMARK FOR` — never decides it. */
+  private[sql] sealed abstract class Kind
+  private[sql] object Kind {
+    case object CreateTable extends Kind
+    case object CreateFunction extends Kind
+    case object CreateView extends Kind
+    case object AlterOrDropTable extends Kind
+    case object AlterFunction extends Kind
+    case object DropFunction extends Kind
+    case object Insert extends Kind
+    case object ShowPartitions extends Kind
+    case object ShowObjects extends Kind
+    case object Describe extends Kind
+    case object Catalog extends Kind
+    case object Query extends Kind
+
+    private val token = """\w+|\S""".r
+    private val modifiers = Set("OR", "REPLACE", "TEMPORARY", "TEMP", "SYSTEM", "GLOBAL")
+
+    def of(probe: String): Kind = {
+      val words = token.findAllIn(probe).map(_.toUpperCase)
+      val verb = words.nextOption().getOrElse("")
+      (verb, words.dropWhile(modifiers).nextOption().getOrElse("")) match {
+        case ("CREATE", "TABLE") => CreateTable
+        case ("CREATE", "FUNCTION") => CreateFunction
+        case ("CREATE", "VIEW") => CreateView
+        case ("ALTER" | "DROP", "TABLE") => AlterOrDropTable
+        case ("ALTER", "FUNCTION") => AlterFunction
+        case ("DROP", "FUNCTION") => DropFunction
+        case ("INSERT", _) => Insert
+        case ("SHOW", "PARTITIONS") => ShowPartitions
+        case ("SHOW", "DATABASES" | "TABLES" | "VIEWS" | "FUNCTIONS") => ShowObjects
+        case ("CREATE" | "DROP", "CATALOG" | "DATABASE") | ("ALTER", "DATABASE") | ("USE", _) |
+             ("SHOW", "CATALOGS" | "CURRENT") | ("DESCRIBE", "CATALOG") => Catalog
+        case ("DESCRIBE" | "DESC", _) => Describe
+        case _ => Query
+      }
+    }
+  }
+
+  /** Parser delegate: parses every statement, runs none.
+    *
+    * The text is blanked once and classified ([[Kind.of]]). A DDL kind goes
+    * to the one front-end that owns it — [[ConnectorTables]] (CREATE TABLE,
+    * handing WATERMARK tables to [[WatermarkDdl]]; ALTER/DROP TABLE;
+    * INSERT; SHOW PARTITIONS), [[FunctionDdl]], [[WatermarkDdl]]'s view
+    * form, [[DatabaseDdl]], [[CatalogDdl]] or [[DescribeTable]] — which
+    * answers a [[GraftCommand]] that runs the statement when Spark executes
+    * the plan, or None. None, and every statement of no DDL kind, takes the
+    * stock path: qualified connector names resolved
+    * ([[ConnectorTables.resolveQualified]]), the group-window dialect
+    * rewritten, Spark's parser. A [[Kind.Query]] statement first passes the
+    * query front-ends. A native CREATE VIEW / DROP FUNCTION plan is wrapped
+    * in a command that updates the view-lineage / function registry after
+    * the statement ran. */
   class Parser(session: SparkSession, delegate: ParserInterface) extends ParserInterface {
-    /** front-end dispatch: MATCH_RECOGNIZE / FOR SYSTEM_TIME AS OF clauses
-      * build their plan through the custom operators; None = plain dialect.
-      * The keyword test runs on literal/comment-stripped text so e.g. a
-      * query selecting the string 'MATCH_RECOGNIZE(' parses normally. */
-    private def frontEnd(sqlText: String): Option[LogicalPlan] = {
-      val probe = blankLiteralsAndComments(sqlText)
-      // lineage registry for view-chained temporal joins: a plain CREATE
-      // VIEW still parses through the stock path below; only its
-      // view → base-table edge is recorded here
-      SystemTimeJoin.maybeRecordView(probe)
-      // DROP FUNCTION stays native but evicts the CREATE FUNCTION
-      // bookkeeping, so ALTER FUNCTION on a dropped name refuses
-      FunctionDdl.noteDrop(session, probe)
-      if (FunctionDdl.matches(probe))
-        // CREATE FUNCTION <name> AS '<GraftSqlFunction class>'; non-graft
-        // classes (Hive-style DDL) fall through to the stock parser
-        FunctionDdl.tryRun(session, sqlText)
-          .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(sqlText)))
-      // ALTER FUNCTION <name> AS '<class>' — re-registration with the
-      // reference's temporary-function refusal ladder
-      else if (FunctionDdl.matchesAlter(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          FunctionDdl.runAlter(session, sqlText)))
-      else if (WatermarkDdl.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          WatermarkDdl.run(session, sqlText)))
-      // filesystem connector sink tables (CREATE TABLE ... WITH, no
-      // watermark) + INSERT INTO them; unregistered INSERT targets fall
-      // through so Spark-native inserts keep working
-      else if (ConnectorTables.matchesCreate(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          ConnectorTables.runCreate(session, sqlText)))
-      else if (ConnectorTables.matchesInsert(probe))
-        ConnectorTables.tryInsert(session, sqlText)
-          .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(rewrite(sqlText))))
-      // ALTER TABLE SET/RENAME + DROP TABLE on registered connector tables;
-      // statements naming other tables fall through to Spark's own DDL
-      else if (ConnectorTables.matchesAlterOrDrop(probe))
-        ConnectorTables.tryAlterOrDrop(session, sqlText)
-          .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(rewrite(sqlText))))
-      // SHOW PARTITIONS on registered partitioned connector tables — the
-      // reference's `partition name` k=v/k2=v2 result; other tables fall
-      // through to Spark's native statement
-      else if (ConnectorTables.matchesShowPartitions(probe))
-        ConnectorTables.tryShowPartitions(session, sqlText)
-          .map(org.apache.spark.sql.GraftSqlBridge.logicalPlan)
-          .orElse(Some(delegate.parsePlan(rewrite(sqlText))))
-      // SHOW DATABASES/TABLES/VIEWS/FUNCTIONS with the reference's result
-      // column names, built over the DELEGATE parser so the dispatch can't
-      // loop (CREATE/ALTER DATABASE property clauses are text rewrites in
-      // preprocess; DROP DATABASE / USE are native spellings)
-      else if (DatabaseDdl.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          DatabaseDdl.run(session, sqlText, stmt =>
-            org.apache.spark.sql.GraftSqlBridge.ofRows(session, delegate.parsePlan(stmt)))))
-      // catalog statements: CREATE/DROP CATALOG, USE CATALOG, SHOW
-      // CATALOGS, SHOW CURRENT CATALOG/DATABASE (+ the reference's
-      // unsupported DESCRIBE CATALOG error) — built over the DELEGATE
-      // parser like DatabaseDdl so the dispatch can't loop
-      else if (CatalogDdl.matches(session, probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          CatalogDdl.run(session, sqlText, stmt =>
-            org.apache.spark.sql.GraftSqlBridge.ofRows(session, delegate.parsePlan(stmt)))))
-      // DESCRIBE <registered connector table> — the reference's six-column
-      // result; DESCRIBE on anything else stays native Spark
-      else if (DescribeTable.matches(session, probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          DescribeTable.run(session, sqlText)))
-      else if (MatchRecognize.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          MatchRecognize.run(session, sqlText)))
-      else if (SystemTimeJoin.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          SystemTimeJoin.run(session, sqlText)))
-      // temporal TABLE FUNCTION laterals — the pre-FOR SYSTEM_TIME idiom
-      // (LATERAL TABLE (Rates(o.rowtime))); only registered function names
-      // dispatch, so Spark's LATERAL VIEW and stock laterals fall through
-      else if (TemporalTableFunctions.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          TemporalTableFunctions.run(session, sqlText)))
-      // early-fire / late-fire emit strategies: config-gated, exactly like
-      // the reference's TABLE_EXEC_EMIT_EARLY_FIRE_ENABLED / _LATE_FIRE_
-      // ENABLED — with both confs unset, TUMBLE queries take the plain
-      // window() rewrite below
-      else if ((EmitStrategy.enabled(session).isDefined
-          || EmitStrategy.lateEnabled(session)) && EmitStrategy.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          EmitStrategy.run(session, sqlText)))
-      // plain cumulative windows (no emit confs): one row per closed pane —
-      // CUMULATE has no native window() counterpart, so it cannot take the
-      // TUMBLE/HOP string rewrite below
-      else if (CumulateSql.matches(probe))
-        Some(org.apache.spark.sql.GraftSqlBridge.logicalPlan(
-          CumulateSql.run(session, sqlText)))
-      else None
-    }
 
-    /** Text-level pre-passes that run before dispatch: utility-statement
-      * spellings (EXPLAIN PLAN FOR) and the
-      * OPTIONS dynamic-table-options hint comment (resolved to a
-      * per-query view — Spark's grammar only admits hints after SELECT, so
-      * the table-attached spelling must leave the text before parsing). */
+    /** `native` for the SHOW and catalog front-ends: a statement run through
+      * the DELEGATE parser, so it cannot re-enter this dispatch. */
+    private def native(stmt: String): DataFrame =
+      GraftSqlBridge.ofRows(session, delegate.parsePlan(stmt))
+
+    private def emitsEnabled: Boolean =
+      EmitStrategy.enabled(session).isDefined || EmitStrategy.lateEnabled(session)
+
+    /** The query front-ends, first claim on the blanked text wins. They
+      * build their plans while parsing — see the object header. */
+    private val queryFrontEnds = Seq[(String => Boolean, (SparkSession, String) => DataFrame)](
+      (MatchRecognize.matches, MatchRecognize.run),
+      (SystemTimeJoin.matches, SystemTimeJoin.run),
+      // temporal TABLE FUNCTION laterals: only registered function names
+      // claim, so Spark's LATERAL VIEW and stock laterals fall through
+      (TemporalTableFunctions.matches, TemporalTableFunctions.run),
+      // early/late-fire emit strategies are conf-gated like the reference's
+      // TABLE_EXEC_EMIT_*_ENABLED; unset, TUMBLE takes the window() rewrite
+      (p => emitsEnabled && EmitStrategy.matches(p), EmitStrategy.run),
+      // CUMULATE has no native window() counterpart to rewrite onto
+      (CumulateSql.matches, CumulateSql.run))
+
+    /** Text-level pre-passes: utility-statement spellings (EXPLAIN PLAN
+      * FOR), database property clauses, and the OPTIONS dynamic-table-options
+      * hint comment (resolved to a per-query view — Spark's grammar only
+      * admits hints after SELECT, so the table-attached spelling must leave
+      * the text before parsing). */
     private def preprocess(sqlText: String): String =
-      ConnectorTables.resolveQualified(session,
-        OptionsHint.rewrite(session,
-          DatabaseDdl.rewrite(UtilityStatements.rewrite(sqlText))))
+      OptionsHint.rewrite(session, DatabaseDdl.rewrite(UtilityStatements.rewrite(sqlText)))
 
-    override def parsePlan(sqlText: String): LogicalPlan = {
-      val t = preprocess(sqlText)
-      frontEnd(t).getOrElse(delegate.parsePlan(rewrite(t)))
+    /** `parse` is the delegate entry point of the stock path; with
+      * `queriesOnly` a DDL kind is not routed to its front-end. */
+    private def plan(sqlText: String, parse: String => LogicalPlan,
+        queriesOnly: Boolean = false): LogicalPlan = {
+      val text = preprocess(sqlText)
+      val probe = blankLiteralsAndComments(text)
+      lazy val resolved = ConnectorTables.resolveQualified(session, text)
+      def stock = parse(rewrite(resolved))
+      val routed = Kind.of(probe) match {
+        case Kind.Query =>
+          val p = if (resolved eq text) probe else blankLiteralsAndComments(resolved)
+          queryFrontEnds.collectFirst { case (claims, build) if claims(p) =>
+            GraftSqlBridge.logicalPlan(build(session, resolved)) }
+        case _ if queriesOnly => None
+        case Kind.CreateTable => ConnectorTables.create(text)
+        case Kind.CreateFunction => FunctionDdl.create(text)
+        case Kind.CreateView => Some(GraftCommand.around(
+          WatermarkDdl.createView(text).getOrElse(stock))(_ => SystemTimeJoin.maybeRecordView(probe)))
+        case Kind.AlterOrDropTable => ConnectorTables.alterOrDrop(session, text)
+        case Kind.AlterFunction => Some(FunctionDdl.alter(text))
+        case Kind.DropFunction => FunctionDdl.drop(text, stock)
+        case Kind.Insert => ConnectorTables.insert(session, text)
+        case Kind.ShowPartitions => ConnectorTables.showPartitions(session, text)
+        case Kind.ShowObjects => DatabaseDdl.show(text, native)
+        case Kind.Catalog => CatalogDdl.plan(session, text, native)
+        case Kind.Describe => DescribeTable.describe(session, text)
+      }
+      routed.getOrElse(stock)
     }
-    override def parseQuery(sqlText: String): LogicalPlan = {
-      val t = preprocess(sqlText)
-      frontEnd(t).getOrElse(delegate.parseQuery(rewrite(t)))
-    }
-    override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan = {
-      val t = preprocess(sqlText)
-      frontEnd(t).getOrElse(delegate.parsePlanWithParameters(rewrite(t), ctx))
-    }
+
+    override def parsePlan(sqlText: String): LogicalPlan = plan(sqlText, delegate.parsePlan)
+    override def parseQuery(sqlText: String): LogicalPlan =
+      plan(sqlText, delegate.parseQuery, queriesOnly = true)
+    override def parsePlanWithParameters(sqlText: String, ctx: ParameterContext): LogicalPlan =
+      plan(sqlText, delegate.parsePlanWithParameters(_, ctx))
     override def parseExpression(sqlText: String): Expression =
       delegate.parseExpression(rewrite(sqlText))
     override def parseTableIdentifier(sqlText: String): TableIdentifier =

@@ -16,6 +16,14 @@ object FlinkSqlQueries {
     s.sql(sql)
   }
 
+  /** `target/sink_cache/<dir token>/<name>`, emptied of an earlier run's
+    * files (the connector sinks append). */
+  private def freshSink(dir: String, name: String): String = {
+    val path = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
+    graft.io.LocalFiles.delete(path)
+    path
+  }
+
   def queries: Map[String, QFn] = Map(
     "fsql_tumble" -> ((s, dir) => run(s, dir,
       """SELECT TUMBLE_START(ts, INTERVAL '1' HOUR) AS w_start, event_type,
@@ -209,7 +217,7 @@ object FlinkSqlQueries {
     // table.dynamic-table-options.enabled exactly like the reference.
     "fsql_options_hint" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val path = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}/opth_ev"
+      val path = freshSink(dir, "opth_ev")
       s.sql("""SELECT event_type, user_id, event_id FROM events
                WHERE event_type IN ('click', 'purchase')""")
         .write.mode("overwrite").option("sep", "|").csv(path)
@@ -229,19 +237,14 @@ object FlinkSqlQueries {
     // only parses if the format really was inherited
     "fsql_create_table_like" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val root = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$root/liketbl_base")); rm(new java.io.File(s"$root/liketbl_drv"))
+      val (base, drv) = (freshSink(dir, "liketbl_base"), freshSink(dir, "liketbl_drv"))
       s.sql(s"""CREATE TABLE liketbl_base (flag STRING, n BIGINT)
-                WITH ('connector' = 'filesystem', 'path' = '$root/liketbl_base',
+                WITH ('connector' = 'filesystem', 'path' = '$base',
                       'format' = 'parquet')""")
       // derived column list APPENDS to the inherited schema (flag, n) — a
       // re-declared physical name would be the reference's duplicate error
       s.sql(s"""CREATE TABLE liketbl_drv (q BIGINT)
-                WITH ('path' = '$root/liketbl_drv')
+                WITH ('path' = '$drv')
                 LIKE liketbl_base (OVERWRITING OPTIONS)""")
       s.sql("""INSERT INTO liketbl_base
                SELECT l_returnflag AS flag, count(*) AS n FROM lineitem GROUP BY 1""")
@@ -258,16 +261,11 @@ object FlinkSqlQueries {
     // SqlCreateDatabase / SqlUseDatabase; TableEnvironmentImpl.java:1016)
     "fsql_database_ddl" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val root = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$root/dbddl_t"))
+      val path = freshSink(dir, "dbddl_t")
       s.sql("CREATE DATABASE IF NOT EXISTS graft_mart WITH ('team' = 'graft')")
       require(s.sql("SHOW DATABASES").collect().exists(_.getString(0) == "graft_mart"))
       s.sql(s"""CREATE TABLE graft_mart.flag_stats (flag STRING, n BIGINT, sum_qty DOUBLE)
-                WITH ('connector' = 'filesystem', 'path' = '$root/dbddl_t',
+                WITH ('connector' = 'filesystem', 'path' = '$path',
                       'format' = 'parquet')""")
       s.sql("""INSERT INTO graft_mart.flag_stats
                SELECT l_returnflag AS flag, count(*) AS n,
@@ -283,25 +281,20 @@ object FlinkSqlQueries {
     // catalogs — the round-15 namespace isolation, oracle-checked on data
     "fsql_catalog_scoping" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val root = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$root/cats_a")); rm(new java.io.File(s"$root/cats_b"))
+      val (pathA, pathB) = (freshSink(dir, "cats_a"), freshSink(dir, "cats_b"))
       s.sql("USE CATALOG spark_catalog")
       s.sql("DROP CATALOG IF EXISTS scat_a"); s.sql("DROP CATALOG IF EXISTS scat_b")
       s.sql("CREATE CATALOG scat_a WITH ('type' = 'generic_in_memory')")
       s.sql("CREATE CATALOG scat_b WITH ('type' = 'generic_in_memory')")
       s.sql("USE CATALOG scat_a")
       s.sql(s"""CREATE TABLE mart (n_regionkey BIGINT, nations BIGINT)
-                WITH ('connector' = 'filesystem', 'path' = '$root/cats_a',
+                WITH ('connector' = 'filesystem', 'path' = '$pathA',
                       'format' = 'parquet')""")
       s.sql("""INSERT INTO mart
                SELECT n_regionkey, count(*) AS nations FROM nation GROUP BY n_regionkey""")
       s.sql("USE CATALOG scat_b")
       s.sql(s"""CREATE TABLE mart (r_regionkey BIGINT, r_name STRING)
-                WITH ('connector' = 'filesystem', 'path' = '$root/cats_b',
+                WITH ('connector' = 'filesystem', 'path' = '$pathB',
                       'format' = 'parquet')""")
       s.sql("INSERT INTO mart SELECT r_regionkey, r_name FROM region")
       // bare `mart` is scat_b's (the current namespace); scat_a's reads
@@ -338,21 +331,16 @@ object FlinkSqlQueries {
     // (MergeTableLikeUtil.populateWatermarksFromSourceTable:258-266)
     "fsql_like_watermark" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val root = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$root/wmlike_base")); rm(new java.io.File(s"$root/wmlike_drv"))
+      val (base, drv) = (freshSink(dir, "wmlike_base"), freshSink(dir, "wmlike_drv"))
       // seed the base table's path (WatermarkDdl reads it at CREATE time)
       s.sql("SELECT event_id, ts, user_id, value FROM events WHERE event_type = 'purchase'")
-        .write.parquet(s"$root/wmlike_base")
+        .write.parquet(base)
       s.sql(s"""CREATE TABLE wmlike_base (
                   ts_attr AS CAST(ts AS TIMESTAMP),
                   WATERMARK FOR ts_attr AS ts_attr - INTERVAL '0' SECOND
-                ) WITH ('connector' = 'filesystem', 'path' = '$root/wmlike_base',
+                ) WITH ('connector' = 'filesystem', 'path' = '$base',
                         'format' = 'parquet')""")
-      s.sql(s"CREATE TABLE wmlike_drv WITH ('path' = '$root/wmlike_drv') LIKE wmlike_base")
+      s.sql(s"CREATE TABLE wmlike_drv WITH ('path' = '$drv') LIKE wmlike_base")
       s.sql("""INSERT INTO wmlike_drv
                SELECT event_id, ts, user_id, value FROM events
                WHERE event_type = 'purchase'""")
@@ -378,14 +366,9 @@ object FlinkSqlQueries {
     // partition. Final state composes all three write modes.
     "fsql_partitioned_sink" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val root = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$root/part_sink"))
+      val path = freshSink(dir, "part_sink")
       s.sql(s"""CREATE TABLE part_sink (n BIGINT, flag STRING) PARTITIONED BY (flag)
-                WITH ('connector' = 'filesystem', 'path' = '$root/part_sink',
+                WITH ('connector' = 'filesystem', 'path' = '$path',
                       'format' = 'parquet')""")
       s.sql("""INSERT INTO part_sink
                SELECT count(*) AS n, l_returnflag AS flag FROM lineitem GROUP BY l_returnflag""")
@@ -402,18 +385,13 @@ object FlinkSqlQueries {
     // switched both the write and read targets
     "fsql_alter_table" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val root = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(s"$root/alter_p1")); rm(new java.io.File(s"$root/alter_p2"))
+      val (p1, p2) = (freshSink(dir, "alter_p1"), freshSink(dir, "alter_p2"))
       s.sql(s"""CREATE TABLE alter_tbl (flag STRING, n BIGINT)
-                WITH ('connector' = 'filesystem', 'path' = '$root/alter_p1',
+                WITH ('connector' = 'filesystem', 'path' = '$p1',
                       'format' = 'parquet')""")
       s.sql("""INSERT INTO alter_tbl
                SELECT l_linestatus AS flag, count(*) AS n FROM lineitem GROUP BY 1""")
-      s.sql(s"ALTER TABLE alter_tbl SET ('path' = '$root/alter_p2')")
+      s.sql(s"ALTER TABLE alter_tbl SET ('path' = '$p2')")
       s.sql("""INSERT INTO alter_tbl
                SELECT l_returnflag AS flag, count(*) AS n FROM lineitem GROUP BY 1""")
       s.sql("ALTER TABLE alter_tbl RENAME TO alter_dst")
@@ -441,12 +419,7 @@ object FlinkSqlQueries {
     // files back, prove the round trip against the direct aggregation
     "fsql_insert_sink" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      val path = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}/flag_agg"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(path)) // fresh sink per run (append-mode connector)
+      val path = freshSink(dir, "flag_agg")
       s.sql(s"""CREATE TABLE flag_agg (
                   l_returnflag STRING, n BIGINT, sum_qty DOUBLE
                 ) WITH ('connector' = 'filesystem', 'path' = '$path',
@@ -461,20 +434,12 @@ object FlinkSqlQueries {
     // both writes landed consistently
     "fsql_statement_set" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      def freshSink(name: String, ddlCols: String): String = {
-        val path = s"target/sink_cache/${dir.replaceAll("[^a-zA-Z0-9]", "_")}/$name"
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(path))
+      def sinkTable(name: String, ddlCols: String): Unit =
         s.sql(s"""CREATE TABLE $name ($ddlCols)
-                  WITH ('connector' = 'filesystem', 'path' = '$path',
+                  WITH ('connector' = 'filesystem', 'path' = '${freshSink(dir, name)}',
                         'format' = 'parquet')""")
-        path
-      }
-      freshSink("ss_type", "event_type STRING, n BIGINT")
-      freshSink("ss_user", "bucket BIGINT, n BIGINT")
+      sinkTable("ss_type", "event_type STRING, n BIGINT")
+      sinkTable("ss_user", "bucket BIGINT, n BIGINT")
       StatementSet.create(s)
         .addInsertSql("""INSERT INTO ss_type
                          SELECT event_type, count(*) AS n FROM events GROUP BY event_type""")

@@ -1,6 +1,7 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** A SQL-registrable function — the analogue of the reference's
   * UserDefinedFunction subclasses that CREATE FUNCTION DDL instantiates by
@@ -33,15 +34,15 @@ trait GraftSqlFunction {
   * via CREATE TEMPORARY FUNCTION lives in the temp registry only, so a
   * non-TEMPORARY ALTER on it refuses with FunctionNotExistException
   * (Catalog.alterFunction never sees temp names), and DROP FUNCTION
-  * evicts the bookkeeping (see [[noteDrop]]). */
+  * evicts the bookkeeping (see [[drop]]). */
 object FunctionDdl {
 
-  private val re =
+  private val createRe =
     """(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?(TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?(\w+)\s+AS\s+'([\w.$]+)'\s*(?:LANGUAGE\s+\w+\s*)?""".r
   private val alterRe =
     """(?is)\s*ALTER\s+(TEMPORARY\s+SYSTEM\s+|TEMPORARY\s+)?FUNCTION\s+(?:(IF\s+EXISTS)\s+)?((?:\w+\.)*\w+)\s+AS\s+'([\w.$]+)'\s*(?:LANGUAGE\s+\w+\s*)?;?\s*""".r
-  private val dropRe =
-    """(?is)^\s*DROP\s+(TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+(?:IF\s+EXISTS\s+)?((?:\w+\.)*\w+)\s*;?\s*$""".r
+  private val dropRe = new FlinkSql.Blanked(
+    """(?is)\s*DROP\s+(TEMPORARY\s+)?(?:SYSTEM\s+)?FUNCTION\s+(?:IF\s+EXISTS\s+)?((?:\w+\.)*\w+)\s*;?\s*""".r)
 
   /** session identity + function name → (catalog-registered class,
     * temp-registered class) — TWO slots per name, because the reference
@@ -58,60 +59,55 @@ object FunctionDdl {
   private def key(s: SparkSession, name: String) =
     s"${System.identityHashCode(s)}:${name.toLowerCase}"
 
-  def matches(probe: String): Boolean =
-    """(?i)^\s*CREATE\b""".r.findFirstIn(probe).isDefined &&
-      """(?i)\bFUNCTION\b""".r.findFirstIn(probe).isDefined &&
-      """(?i)\bUSING\s+JAR\b""".r.findFirstIn(probe).isEmpty
-
-  def matchesAlter(probe: String): Boolean =
-    """(?i)^\s*ALTER\s+(TEMPORARY\s+(SYSTEM\s+)?)?FUNCTION\b""".r.findFirstIn(probe).isDefined
-
-  /** Some(empty DF) if handled; None → not a graft function class, let the
-    * stock parser have the statement. */
-  def tryRun(spark: SparkSession, sql: String): Option[DataFrame] = sql match {
-    case re(temp, name, className) =>
-      val inst =
-        try Class.forName(className).getDeclaredConstructor().newInstance()
-        catch { case _: Throwable => return None }
-      inst match {
-        case f: GraftSqlFunction =>
-          f.register(spark, name)
-          val k = key(spark, name)
-          val (cat, tmp) = registered.getOrElse(k, (None, None))
-          registered(k) =
-            if (temp != null) (cat, Some(className)) else (Some(className), tmp)
-          Some(spark.emptyDataFrame)
-        case _ => None
-      }
+  /** CREATE FUNCTION over a [[GraftSqlFunction]] class; None → not a graft
+    * class (e.g. Hive-style `USING JAR`), let the stock parser have it. */
+  def create(sql: String): Option[LogicalPlan] = sql match {
+    case createRe(temp, name, className) if isGraftFunction(className) =>
+      Some(GraftCommand.effect { spark =>
+        instance(className).register(spark, name)
+        val k = key(spark, name)
+        val (cat, tmp) = registered.getOrElse(k, (None, None))
+        registered(k) =
+          if (temp != null) (cat, Some(className)) else (Some(className), tmp)
+      })
     case _ => None
   }
 
-  /** DROP FUNCTION eviction hook — the statement itself stays native
-    * (Spark drops the UDF registration); this just forgets the CREATE
-    * bookkeeping so a later ALTER FUNCTION sees the function as gone. */
-  def noteDrop(spark: SparkSession, probe: String): Unit = probe match {
-    case dropRe(temp, name) =>
+  private def isGraftFunction(className: String): Boolean =
+    try classOf[GraftSqlFunction].isAssignableFrom(Class.forName(className))
+    catch { case _: Throwable => false }
+
+  private def instance(className: String): GraftSqlFunction =
+    Class.forName(className).getDeclaredConstructor().newInstance()
+      .asInstanceOf[GraftSqlFunction]
+
+  /** DROP FUNCTION stays native (Spark drops the UDF registration); once it
+    * has run, the CREATE bookkeeping forgets the name so a later ALTER
+    * FUNCTION sees the function as gone. */
+  def drop(sql: String, native: => LogicalPlan): Option[LogicalPlan] = sql match {
+    case dropRe(temp, name) => Some(GraftCommand.around(native) { spark =>
       val k = key(spark, name.split("\\.").last)
       registered.get(k).foreach { case (cat, tmp) =>
         // DROP TEMPORARY FUNCTION evicts the temp slot when one exists —
         // a same-named catalog function SURVIVES it (the reference's two
-        // namespaces; previously the single entry was evicted outright).
-        // When no temp slot exists the TEMPORARY spelling falls back to
-        // the catalog slot: Spark's registry is flat, so that native drop
-        // really did remove the function — bookkeeping follows it. Plain
-        // DROP FUNCTION evicts the catalog slot (Catalog.dropFunction).
+        // namespaces). When no temp slot exists the TEMPORARY spelling
+        // falls back to the catalog slot: Spark's registry is flat, so that
+        // native drop really did remove the function — bookkeeping follows
+        // it. Plain DROP FUNCTION evicts the catalog slot
+        // (Catalog.dropFunction).
         val next =
           if (temp != null) { if (tmp.isDefined) (cat, None) else (None, tmp) }
           else (None, tmp)
         if (next == ((None, None))) registered.remove(k): Unit
         else registered(k) = next
       }
-    case _ =>
+    })
+    case _ => None
   }
 
-  /** ALTER FUNCTION — always handled once the shape matches (there is no
-    * Spark-native spelling to fall through to). */
-  def runAlter(spark: SparkSession, sql: String): DataFrame = sql match {
+  /** ALTER FUNCTION — always handled (there is no Spark-native spelling to
+    * fall through to). */
+  def alter(sql: String): LogicalPlan = sql match {
     case alterRe(temp, ifExists, name, className) =>
       Option(temp).map(_.trim.toUpperCase) match {
         case Some("TEMPORARY SYSTEM") => throw new UnsupportedOperationException(
@@ -121,29 +117,29 @@ object FunctionDdl {
         case _ =>
       }
       val bare = name.split("\\.").last
-      // a non-TEMPORARY ALTER resolves in the CATALOG function namespace
-      // only — a name created via CREATE TEMPORARY FUNCTION is invisible
-      // to it (alterCatalogFunction goes to Catalog.alterFunction, which
-      // throws FunctionNotExistException for a temp-only name)
-      if (!registered.get(key(spark, bare)).exists(_._1.isDefined)) {
-        if (ifExists == null)
-          // FunctionNotExistException message shape
-          throw new IllegalArgumentException(s"Function $name does not exist.")
-        spark.emptyDataFrame
-      } else {
-        val inst =
-          try Class.forName(className).getDeclaredConstructor().newInstance()
-          catch { case e: Throwable => throw new IllegalArgumentException(
-            s"ALTER FUNCTION $name: could not instantiate '$className'", e) }
-        inst match {
-          case f: GraftSqlFunction =>
-            f.register(spark, bare) // spark.udf.register replaces in place
-            val k = key(spark, bare)
-            val tmp = registered.get(k).flatMap(_._2)
-            registered(k) = (Some(className), tmp)
-            spark.emptyDataFrame
-          case _ => throw new IllegalArgumentException(
-            s"ALTER FUNCTION $name: '$className' is not a GraftSqlFunction")
+      GraftCommand.effect { spark =>
+        // a non-TEMPORARY ALTER resolves in the CATALOG function namespace
+        // only — a name created via CREATE TEMPORARY FUNCTION is invisible
+        // to it (alterCatalogFunction goes to Catalog.alterFunction, which
+        // throws FunctionNotExistException for a temp-only name)
+        if (!registered.get(key(spark, bare)).exists(_._1.isDefined)) {
+          if (ifExists == null)
+            // FunctionNotExistException message shape
+            throw new IllegalArgumentException(s"Function $name does not exist.")
+        } else {
+          val inst =
+            try Class.forName(className).getDeclaredConstructor().newInstance()
+            catch { case e: Throwable => throw new IllegalArgumentException(
+              s"ALTER FUNCTION $name: could not instantiate '$className'", e) }
+          inst match {
+            case f: GraftSqlFunction =>
+              f.register(spark, bare) // spark.udf.register replaces in place
+              val k = key(spark, bare)
+              val tmp = registered.get(k).flatMap(_._2)
+              registered(k) = (Some(className), tmp)
+            case _ => throw new IllegalArgumentException(
+              s"ALTER FUNCTION $name: '$className' is not a GraftSqlFunction")
+          }
         }
       }
     case _ => throw new IllegalArgumentException(

@@ -33,11 +33,11 @@ final class StatementSet private (spark: SparkSession) {
     * sink would be wrong, and two INSERTs into one table share no scan.
     *
     * Parsing uses the stock Catalyst parser, NOT the session's injected
-    * parser: the graft front-end plans connector-sink INSERTs by RUNNING
-    * them (ConnectorTables.tryInsert), so probing it here would execute
-    * every statement during detection. A statement the stock parser can't
-    * parse (pure graft dialect) contributes no tables — detection degrades
-    * to "no shared scan", never to a wrong result. */
+    * parser: the stock parser exposes an INSERT's source query, while the
+    * session parser turns an INSERT into a connector sink into an opaque
+    * command. A statement the stock parser can't parse (pure graft
+    * dialect) contributes no tables — detection degrades to "no shared
+    * scan", never to a wrong result. */
   private[sql] def sharedTables: Seq[String] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
     import org.apache.spark.sql.catalyst.parser.CatalystSqlParser

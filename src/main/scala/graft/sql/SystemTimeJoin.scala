@@ -62,8 +62,8 @@ object SystemTimeJoin {
   def watermarkExprOf(table: String): Option[String] =
     wmExprTexts.get(table.toLowerCase)
 
-  /** view name → its body's base table, recorded by the injected parser
-    * whenever a plain `CREATE ... VIEW` statement passes through. The
+  /** view name → its body's base table, recorded whenever a SQL
+    * `CREATE ... VIEW` statement runs (the parser wraps its plan). The
     * reference rewrites a temporal join whose versioned side sits under a
     * view (TemporalJoinRewriteWithUniqueKeyRule.scala); the analogue here
     * is lineage: a view over a declared versioned table INHERITS the time

@@ -1,6 +1,7 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** `WATERMARK FOR <col> AS <expr>` DDL — the reference's event-time
   * declaration in CREATE TABLE (flink-sql-parser parserImpls.ftl:512-549,
@@ -46,14 +47,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * hijacks the clause (fuzz family 30 discipline).
   */
 object WatermarkDdl {
-
-  /** Dispatch test — caller passes literal/comment-blanked text. LIKE
-    * statements route to [[ConnectorTables]] even with a WATERMARK clause
-    * (the merge needs both sides' specs). */
-  def matches(probe: String): Boolean =
-    """(?i)^\s*CREATE\b""".r.findFirstIn(probe).isDefined &&
-      """(?i)\bWATERMARK\s+FOR\b""".r.findFirstIn(probe).isDefined &&
-      !ConnectorTables.matchesLike(probe)
 
   private val viewRe = new FlinkSql.Blanked(
     """(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?VIEW\s+(\w+)\s+WATERMARK\s+FOR\s+(\w+)\s+AS\s+(.+?)\s+AS\s+(SELECT\s.*)""".r)
@@ -137,15 +130,22 @@ object WatermarkDdl {
       wm.rawExpr.replaceAll(s"(?i)\\b${java.util.regex.Pattern.quote(wm.col)}\\b", s"`${wm.col}`")
   }
 
-  def run(spark: SparkSession, sql: String): DataFrame = sql.trim match {
-    case viewRe(name, wmCol, wmExpr, query) =>
+  /** The view form; None → a plain CREATE VIEW for the stock parser. */
+  def createView(sql: String): Option[LogicalPlan] = sql.trim match {
+    case viewRe(name, wmCol, wmExpr, query) => Some(GraftCommand.effect { spark =>
       // the view body parses through the stock path (no WATERMARK clause)
       spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $name AS $query")
       val wm = Wm(wmCol, wmExpr.trim)
       SystemTimeJoin.declareWatermark(name, wmCol, delayOf(spark, wm))
       SystemTimeJoin.declareWatermarkExpr(name, exprTextOf(wm))
-      spark.emptyDataFrame
-    case tableRe(rawName, schemaBody, propsBody) =>
+    })
+    case _ => None
+  }
+
+  /** The connector-table form — every CREATE TABLE with a WATERMARK clause
+    * that is not a LIKE statement. */
+  def createTable(sql: String): LogicalPlan = sql.trim match {
+    case tableRe(rawName, schemaBody, propsBody) => GraftCommand.effect { spark =>
       // namespace-resolved like every connector create (a watermark table
       // created while a DDL catalog is current lives in that namespace)
       val name = ConnectorTables.canonical(spark, rawName)
@@ -185,7 +185,7 @@ object WatermarkDdl {
           ConnectorTables.parseDecl(schemaBody)))
       SystemTimeJoin.declareWatermark(name, wm.col, delayOf(spark, wm))
       SystemTimeJoin.declareWatermarkExpr(name, exprTextOf(wm))
-      spark.emptyDataFrame
+    }
     case _ =>
       throw new IllegalArgumentException(
         "unsupported WATERMARK DDL shape — see WatermarkDdl scaladoc for the two accepted forms")

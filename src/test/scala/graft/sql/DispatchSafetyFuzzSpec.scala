@@ -4,8 +4,9 @@ import graft.SparkSpec
 
 /** Fuzz family 29: front-end DISPATCH SAFETY.
   *
-  * The SQL surface is routed by keyword probes over literal/comment-blanked
-  * text ([[FlinkSql.blankLiteralsAndComments]] + per-front-end regexes).
+  * The SQL surface is routed over literal/comment-blanked text
+  * ([[FlinkSql.blankLiteralsAndComments]]): the statement kind from its
+  * leading keywords ([[FlinkSql.Kind]]), then per-front-end shape regexes.
   * The regression class that architecture carries is OVERCAPTURE: a
   * statement that merely LOOKS like a front-end shape being swallowed,
   * rewritten, or failed instead of reaching Spark's parser untouched.
@@ -94,6 +95,41 @@ class DispatchSafetyFuzzSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS fz29_native")
     println(s"[fuzz] family29 checked=$checked")
     assert(checked >= 72)
+  }
+
+  /** Family 29, keyword-named columns: a connector CREATE TABLE whose
+    * column names are front-end keywords is still a CREATE TABLE — the
+    * statement kind comes from its leading keywords, so a column named
+    * `function` must not route it to the function DDL (nor `catalog`,
+    * `partitions`, `watermark` to theirs). Each table registers, accepts an
+    * INSERT and reads its rows back. */
+  test("family 29: front-end keywords as connector column names on 3 seeds") {
+    val baseSeed = sys.props.get("graft.fuzz.seed")
+      .orElse(sys.env.get("GRAFT_FUZZ_SEED")).map(_.toLong).getOrElse(20260813L)
+    val root = java.nio.file.Files.createTempDirectory("fz29kw")
+    var checked = 0
+    (0 until 3).foreach { si =>
+      val r = new scala.util.Random(baseSeed + 295 + si)
+      Seq("function", "catalog", "partitions", "watermark").foreach { kw =>
+        // random spelling case and column position; a random value
+        val col = kw.map(c => if (r.nextBoolean()) c.toUpper else c)
+        val n = r.nextInt(1000).toLong
+        val t = s"fz29_kw_${kw}_$si"
+        val cols = if (r.nextBoolean()) s"$col STRING, n BIGINT" else s"n BIGINT, $col STRING"
+        spark.sql(s"""CREATE TABLE $t ($cols)
+                      WITH ('connector' = 'filesystem', 'path' = '$root/$t',
+                            'format' = 'parquet')""")
+        assert(ConnectorTables.lookup(spark, t).isDefined,
+          s"family29 keyword column '$col' broke registration")
+        spark.sql(s"INSERT INTO $t SELECT ${n}L AS n, 'v$n' AS `$col`")
+        val row = spark.sql(s"SELECT n, `$col` FROM $t").collect().toSeq
+          .map(rr => (rr.getLong(0), rr.getString(1)))
+        assert(row == Seq((n, s"v$n")), s"family29 keyword column '$col' round trip: $row")
+        checked += 1
+      }
+    }
+    println(s"[fuzz] family29 keyword columns checked=$checked")
+    assert(checked == 12)
   }
 
   /** Family 30: hazard literals INSIDE genuinely-matching front-end
