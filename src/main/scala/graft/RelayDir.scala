@@ -5,15 +5,13 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** Per-invocation streaming relay, sink and checkpoint directories. [[sink]]
-  * runs a stream through the exactly-once parquet file sink — e.g. the
-  * "topic between jobs" channel `MatchRecognize.runStream`'s navigation
-  * stage relays through (the reference chains jobs through Kafka topics) —
-  * and [[drain]] reads the result back. A generation's siblings (its
-  * `.ckpt` checkpoint, its `.end` end-marker input) share its name.
+/** Per-invocation streaming sink and checkpoint directories. [[drain]]
+  * runs a stream through the exactly-once parquet file sink and reads the
+  * result back. A generation's siblings (its `.ckpt` checkpoint, its `.end`
+  * end-marker input) share its name.
   *
   * Each invocation needs a FRESH dir (the file sink's commit log never
-  * overwrites), but callers read the channel LAZILY after the call returns —
+  * overwrites), but callers read the result LAZILY after the call returns —
   * so the dir cannot be deleted inside the call that created it. Instead,
   * allocating a new dir purges every sibling generation older than
   * [[PurgeAfterMs]], `.ckpt`/`.end` included: disk usage is bounded at
@@ -42,24 +40,20 @@ object RelayDir {
   /** Run an append-mode streaming DataFrame to completion through the
     * exactly-once parquet FILE sink into a [[fresh]] `dir` (a replayed
     * batch is skipped by the sink's commit log), with the end marker when
-    * `end` is the `<dir>.end` its input was built on; the sentinel key is
-    * not written. This is the deployment shape for unbounded results: the
-    * memory sink collects every output row to the driver and dies at
-    * `spark.driver.maxResultSize` the moment the emit log outgrows it (the
-    * sf10 probe's cumulate-window query produced a >1 GiB log and did
-    * exactly that). The file sink streams output to disk partition-parallel. */
-  def sink(out: DataFrame, dir: String, end: Option[String] = None): Unit = {
+    * `end` is the `<dir>.end` its input was built on (the sentinel key is
+    * not written), then read the result back: a plain scan any downstream
+    * consumer could run in its own job. This is the deployment shape for
+    * unbounded results: the memory sink collects every output row to the
+    * driver and dies at `spark.driver.maxResultSize` the moment the emit log
+    * outgrows it (the sf10 probe's cumulate-window query produced a >1 GiB
+    * log and did exactly that). The file sink streams output to disk
+    * partition-parallel. */
+  def drain(s: SparkSession, out: DataFrame, dir: String,
+            end: Option[String] = None): DataFrame = {
     val kept = if (end.isEmpty) out else out.filter(col("key") =!= streaming.Bounded.EndKey)
     streaming.Bounded.run(kept.writeStream.format("parquet")
       .option("path", dir).option("checkpointLocation", s"$dir.ckpt")
       .outputMode("append"), end)
-  }
-
-  /** [[sink]] the stream, then read the result back: a plain scan any
-    * downstream consumer could run in its own job. */
-  def drain(s: SparkSession, out: DataFrame, dir: String,
-            end: Option[String] = None): DataFrame = {
-    sink(out, dir, end)
     // the stream's own schema: a sink that committed no data file leaves an
     // empty metadata-log index, which schema inference would reject
     s.read.schema(out.schema).parquet(dir)

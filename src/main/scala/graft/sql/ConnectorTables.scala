@@ -1021,6 +1021,10 @@ object ConnectorTables {
               declared.fold(c)(t => c.cast(t)))
           }
         }
+        // each written column with a declared type is stored as that type
+        // (a parquet table reads back what the files hold)
+        tbl.schema.foreach(sc => df = df.select(df.columns.toSeq.map(c =>
+          sc.find(_.name.equalsIgnoreCase(c)).fold(df(c))(f => df(c).cast(f.dataType).as(c))): _*))
         val overwrite = mode.equalsIgnoreCase("OVERWRITE")
         if (cdcFmts(tbl.format.toLowerCase)) {
           // changelog sink: the query yields (kind, <cols>) rows, encoded

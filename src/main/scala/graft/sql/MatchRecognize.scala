@@ -300,7 +300,7 @@ object MatchRecognize {
     * bounded special case). The pattern compiles to the identical NFA
     * steps as [[run]] and executes on [[Cep.matchStream]]'s
     * watermark-ordered keyed state (buffer until the watermark confirms
-    * order, advance the NFA, event-time-timeout flush), file-streamed from
+    * order, advance the NFA, event-time timer flush), file-streamed from
     * the same table and drained through the exactly-once file sink
     * ([[graft.RelayDir.drain]]). Once the final watermark passes max(ts)
     * the emitted match set equals the batch scan's — the oracle check
@@ -317,20 +317,17 @@ object MatchRecognize {
     *    resolves PREV/NEXT against the NFA's own row buffer,
     *    MatchCodeGenerator.scala). Navigation reads the KeyedRow payload
     *    (the partition / order / event_type / value columns; the order
-    *    column compares as epoch-micros).
-    *  - The augmented stream relays through [[graft.RelayDir.sink]] into
-    *    the NFA stage (the Kafka-topic-between-jobs deployment shape). Two
-    *    queries, not one: both operators keep event-time state, and Spark
-    *    4.1 rejects the chain in one query with "Detected pattern of
-    *    possible 'correctness' issue due to global watermark. The query
-    *    contains stateful operation which can emit rows older than the
-    *    current watermark plus allowed late record delay" (the ring stage
-    *    releases rows behind the watermark it advanced).
-    *  - With NEXT, the navigation stage runs with the end marker
-    *    ([[Bounded.withEnd]], in the relay's `.end` sibling): Spark file
-    *    streams emit no final MAX_WATERMARK, so the sentinel's watermark is
-    *    what flushes each key's last rows with short lookahead rings — the
-    *    reference's end-of-input watermark flush.
+    *    column compares as epoch-micros). It runs only when a DEFINE
+    *    navigates.
+    *  - One query: the navigation operator re-emits each row's event time
+    *    above the watermark that released it, so the DEFINE mask and the
+    *    NFA ([[Cep.matchWatermarked]]) run behind it under the same
+    *    watermark, and navigation and NFA state share one checkpoint.
+    *  - With NEXT, the source carries the end marker ([[Bounded.withEnd]],
+    *    in the sink's `.end` sibling): Spark file streams emit no final
+    *    MAX_WATERMARK, so the sentinel's watermark is what flushes each
+    *    key's last rows with short lookahead rings — the reference's
+    *    end-of-input watermark flush.
     *  - MEASURES and ALL ROWS PER MATCH run the batch recipe once over the
     *    drained matches: explode each match's (id, label) list, hash-join
     *    back to the static source on (partition, event id) — touching only
@@ -340,13 +337,18 @@ object MatchRecognize {
     *    node's exact formulation (dense_rank over (start_ts, first matched
     *    seq) per key).
     *
-    * Every channel — relay and match sink — is exactly-once: a micro-batch
-    * replayed after a crash is skipped by the file sink's commit log. At
-    * scale this is one hash-partition by key with O(open-runs + depth)
-    * state per key and watermark-bounded buffers — no per-batch sort of
-    * history, no unbounded state; the join-back is proportional to the
-    * matches, not the input. */
-  def runStream(spark: SparkSession, dir: String, sql: String): DataFrame = {
+    * The match sink is exactly-once: a micro-batch replayed after a crash
+    * is skipped by the file sink's commit log. At scale this is one
+    * hash-partition by key with O(open-runs + depth) state per key and
+    * watermark-bounded buffers — no per-batch sort of history, no unbounded
+    * state; the join-back is proportional to the matches, not the input. */
+  def runStream(spark: SparkSession, dir: String, sql: String): DataFrame =
+    runStreamInto(spark, dir, sql, graft.RelayDir.fresh("mr_stream", dir))
+
+  /** [[runStream]] with the match sink at `out` (checkpoint `<out>.ckpt`):
+    * a rerun on the same `out` resumes from its checkpoint. */
+  private[graft] def runStreamInto(spark: SparkSession, dir: String, sql: String,
+                                   out: String): DataFrame = {
     val spec = parse(sql)
     require(spec.partCols.size == 1,
       "streaming MATCH_RECOGNIZE keys state on a single PARTITION BY column — " +
@@ -368,7 +370,12 @@ object MatchRecognize {
     val prevDepth = maxDepth(prevRe)
     val nextDepth = maxDepth(nextRe)
     // raw parquet NANOS timestamp arrives as long (nanosAsLong conf)
-    def source = graft.Tables.streamTable(spark, dir, spec.table, schema)
+    def keyed(kind: Column, value: Column) =
+      graft.Tables.streamTable(spark, dir, spec.table, schema)
+        .select(col(spec.partitionBy).cast("long").as("key"),
+          graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
+          col("event_id").as("id"), kind.as("kind"), value.as("value"))
+        .as[KeyedRow]
 
     // DEFINE onto the ring columns: PREV(c, k) → try_element_at(prev_c, k),
     // NEXT(c, k) → try_element_at(next_c, k) (NULL past the partition edge —
@@ -392,39 +399,27 @@ object MatchRecognize {
         .replaceAll("""(?i)\bevent_id\b""", "id")
     }
 
-    val rows: org.apache.spark.sql.Dataset[KeyedRow] =
+    // NEXT holds each key's last rows until the end marker's watermark
+    val end = Option.when(nextDepth > 0)(s"$out.end")
+    val matches =
       if (prevDepth == 0 && nextDepth == 0)
-        source.withColumn("__mask", maskOf(spec.defines))
-          .select(col(spec.partitionBy).cast("long").as("key"),
-            graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
-            col("event_id").as("id"), col("__mask").as("kind"), lit(0.0).as("value"))
-          .as[KeyedRow]
+        Cep.matchStream(keyed(maskOf(spec.defines), lit(0.0)), pattern)
       else {
-        val pD = math.max(prevDepth, 1)
-        val relay = graft.RelayDir.fresh("mr_relay", dir)
-        // NEXT holds each key's last rows until the end marker's watermark
-        val end = Option.when(nextDepth > 0)(s"$relay.end")
-        val in = source.select(col(spec.partitionBy).cast("long").as("key"),
-            graft.Tables.tsAsMicrosLong(schema, spec.orderBy).as("ts"),
-            col("event_id").as("id"), col("event_type").as("kind"), col("value"))
-          .as[KeyedRow]
-        graft.RelayDir.sink(Cep.orderedWithNav(end.fold(in)(Bounded.withEnd(in, _)),
-          pD, nextDepth).toDF(), relay, end)
-        spark.readStream.schema(org.apache.spark.sql.Encoders.product[Cep.NavRowN].schema)
-          .parquet(relay)
+        val in = keyed(col("event_type"), col("value"))
+        val nav = Cep.orderedWithNav(end.fold(in)(Bounded.withEnd(in, _)),
+          math.max(prevDepth, 1), nextDepth)
+        Cep.matchWatermarked(nav
           .withColumn("__mask", maskOf(spec.rawDefines.map {
             case (v, d) => v -> navRewrite(d) }))
           .select(col("key"), col("ts"), col("id"),
-            col("__mask").as("kind"), col("value"))
-          .as[KeyedRow]
+            col("__mask").as("kind"), col("value"), col("ets"))
+          .as[Cep.KeyedRowW], pattern)
       }
-
-    val matched = graft.RelayDir.drain(spark,
-      Cep.matchStream(rows, pattern).toDF(), graft.RelayDir.fresh("mr_stream", dir))
+    val matched = graft.RelayDir.drain(spark, matches.toDF(), out, end)
     val srcStatic = spark.read.schema(schema).parquet(graft.Tables.path(dir, spec.table))
       .withColumn("__pkey", col(spec.partitionBy).cast("long"))
       .withColumn("__srcid", col("event_id").cast("long"))
-    val out: DataFrame =
+    val result: DataFrame =
       if (spec.allRows) {
         // event_id tiebreak: the NFA consumes rows in (ts, event_id) order,
         // so row_seq numbering must break order-column ties the same way
@@ -476,7 +471,7 @@ object MatchRecognize {
           .agg(aggs.head, aggs.tail: _*)
           .drop("__mid")
       }
-    out.withColumnRenamed("key", spec.partitionBy)
+    result.withColumnRenamed("key", spec.partitionBy)
       .createOrReplaceTempView("__mr_out")
     spark.sql(s"SELECT ${spec.selectList} FROM __mr_out ${spec.tailClause}")
   }

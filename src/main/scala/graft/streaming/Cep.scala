@@ -1,14 +1,17 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
+  TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Complex-event-processing pattern matching — the reference's flink-cep
   * library (Pattern.java:129-542 fluent builder, NFA.java:85 with
   * computeNextStates:539, SharedBuffer.java) and SQL MATCH_RECOGNIZE
   * (StreamExecMatch.scala:68), re-expressed as a small explicit NFA run
-  * per key inside flatMapGroupsWithState / a sorted batch scan.
+  * per key: a keyed `transformWithState` operator on a stream, a sorted
+  * scan on a batch.
   *
   * Supported surface (what MatchRecognizeITCase exercises): a sequence of
   * named steps, each with a predicate; strict (`next`) or relaxed
@@ -231,7 +234,7 @@ object Cep {
     Match(key, d.startTs, d.lastTs, ids, labels)
   }
 
-  /** The +2999 µs `ets` shift (see matchStream) would otherwise eat up to
+  /** The +2999 µs `ets` shift (see [[withEts]]) would otherwise eat up to
     * ~3 ms of a user-specified out-of-orderness budget — a row arriving
     * within 3 ms under the release frontier could be ordered-past even
     * though it honored `delay`. Widening the REGISTERED delay by 3 ms
@@ -413,114 +416,148 @@ object Cep {
                  prePartitionedByKey: Boolean = false): Dataset[Match] = {
     import rows.sparkSession.implicits._
     SortedScan.perKeyOrdered(rows, prePartitionedByKey) { (key, it) =>
-      var active: List[Run] = Nil
-      var holds: List[Run] = Nil // completed, awaiting trailing-absence expiry
-      var prevId = Long.MinValue
-      val main = it.flatMap { r =>
-        val fromHolds: List[Match] =
-          if (holds.isEmpty) Nil
-          else {
-            // expiry first: a hold whose window closed strictly before this
-            // row is already a confirmed match, whatever this row is
-            val (expired, live) = holds.partition(h => r.ts - h.startTs > pattern.withinMs)
-            holds = if (pattern.tailNot.exists(_(r))) Nil else live
-            expired.map(h => toMatch(key, h))
-          }
-        val (next, ms, newHolds) = advance(pattern, key, active, r, prevId)
-        active = next
-        holds ++= newHolds
-        prevId = r.id
-        fromHolds ++ ms
-      }
+      var st = CepState(Nil, Nil, Long.MinValue, Nil)
+      val main = it.flatMap { r => val (next, ms) = feed(pattern, key, st, r); st = next; ms }
       // end of bounded input: no later row can violate the absence — all
-      // remaining holds are matches (`++` is by-name, so `holds` is read
-      // only after the scan above drained)
-      main ++ holds.map(h => toMatch(key, h))
+      // remaining holds are matches (`++` is by-name, so `st` is read only
+      // after the scan above drained)
+      main ++ st.holds.map(h => toMatch(key, h))
     }
   }
 
+  /** Feed a key's next row in (ts, id) order to its NFA: holds whose window
+    * closed strictly before the row are confirmed matches, whatever the row
+    * is; a trailing-absence hit kills the rest; then the row advances the
+    * runs. Shared by the batch scan and the streaming operator. */
+  private def feed(pattern: Pattern, key: Long, st: CepState,
+                   r: KeyedRow): (CepState, List[Match]) = {
+    val (expired, live) = st.holds.partition(h => r.ts - h.startTs > pattern.withinMs)
+    val kept = if (pattern.tailNot.exists(_(r))) Nil else live
+    val (active, ms, newHolds) = advance(pattern, key, st.active, r, st.prevId)
+    (st.copy(active = active, prevId = r.id, holds = kept ++ newHolds),
+      expired.map(h => toMatch(key, h)) ++ ms)
+  }
+
+  /** A keyed event-time operator's state: its own fields plus the rows the
+    * watermark has not yet passed. */
+  private[streaming] trait Buffered { def pending: List[KeyedRow] }
+
   private[streaming] case class CepState(active: List[Run], pending: List[KeyedRow],
-                                         prevId: Long, holds: List[Run])
+                                         prevId: Long, holds: List[Run]) extends Buffered
 
   /** Built once per JVM — see [[StateEncoder]]. */
   private implicit val cepStateEncoder: Encoder[CepState] = StateEncoder[CepState]
 
   /** KeyedRow + the materialized event-time column the watermark rides on —
-    * Spark's event-time-timeout check requires the watermarked attribute to
-    * be visible in the stateful operator's input. */
-  private[streaming] case class KeyedRowW(key: Long, ts: Long, id: Long, kind: String,
-                               value: Double, ets: java.sql.Timestamp)
+    * an event-time stateful operator reads its timers' clock off it. */
+  private[graft] case class KeyedRowW(key: Long, ts: Long, id: Long, kind: String,
+                                      value: Double, ets: java.sql.Timestamp)
+
+  /** `rows` with their event time registered on `ets`, 2999 µs ABOVE the
+    * row's ts. Spark watermarks are ms-granular (floor of max event time),
+    * so registering the raw µs value caps the watermark at floor(max ts) and
+    * rows inside the stream's final millisecond could never be released or
+    * even woken (a wake-up timer must sit strictly between the current and a
+    * future watermark tick — impossible at the cap). The +2999 shift
+    * guarantees a pending row pushes the watermark ≥2 ticks above the value
+    * seen when its timer was set, so a wm+1 timer always fires, and the
+    * release threshold wm·1000−1000 always reaches max(ts). The shift's bite
+    * out of the user's reordering tolerance is paid back by registering
+    * `delay` + 3 ms ([[compensatedDelay]]), so the effective tolerance is ≥
+    * the user's contract. */
+  private def withEts(rows: Dataset[KeyedRow], delay: String): Dataset[KeyedRowW] = {
+    import rows.sparkSession.implicits._
+    rows.withColumn("ets", timestamp_micros(col("ts") + lit(2999L)))
+      .withWatermark("ets", compensatedDelay(delay))
+      .as[KeyedRowW]
+  }
+
+  /** A keyed event-time operator on `transformWithState` as ONE step over
+    * one `ValueState`. New rows and an expired timer run the same step (a
+    * timer brings no rows): the key's rows the watermark has passed are
+    * released in (ts, id) order, the rest stay pending, and the step maps
+    * (key, watermark ms, state, released rows, still-pending rows) to (new
+    * state, output, wake-up ms). Pending rows wake the key at the next
+    * watermark tick. Spark keeps a timer until it is deleted, and fires it
+    * once the watermark reaches it, so after each step exactly one wake-up
+    * is armed. `transformWithState` needs the RocksDB state store provider,
+    * which [[graft.GraftSession]] pins. */
+  private abstract class KeyedStep[S <: Buffered, O](empty: S)(implicit enc: Encoder[S])
+      extends StatefulProcessor[Long, KeyedRowW, O] {
+    @transient private var state: ValueState[S] = _
+
+    protected def step(key: Long, wmMs: Long, st: S, ready: List[KeyedRow],
+                       pending: List[KeyedRow]): (S, Iterator[O], Option[Long])
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[S]("state", enc, TTLConfig.NONE)
+
+    override def handleInputRows(key: Long, rows: Iterator[KeyedRowW],
+                                 timerValues: TimerValues): Iterator[O] =
+      run(key, rows, timerValues.getCurrentWatermarkInMs, None)
+
+    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+                                    expired: ExpiredTimerInfo): Iterator[O] =
+      run(key, Iterator.empty, timerValues.getCurrentWatermarkInMs,
+        Some(expired.getExpiryTimeInMs))
+
+    private def run(key: Long, rows: Iterator[KeyedRowW], wmMs: Long,
+                    fired: Option[Long]): Iterator[O] = {
+      // one read: `exists()` would decode the whole state a second time
+      val st = Option(state.get()).getOrElse(empty)
+      val incoming = rows.map(w => KeyedRow(w.key, w.ts, w.id, w.kind, w.value))
+      val (ready, pending) = (st.pending ++ incoming).sortBy(r => (r.ts, r.id))
+        .partition(_.ts <= wmMs * 1000L - 1000L) // covers max(ts), see withEts
+      val (next, out, wakeAt) = step(key, wmMs, st, ready, pending)
+      state.update(next)
+      // a pending row needs only the next tick: its own shifted ets already
+      // drives the watermark ≥2 ticks past wmMs
+      val wake = if (pending.nonEmpty) Some(wmMs + 1L) else wakeAt.map(math.max(_, wmMs + 1L))
+      // Spark deletes the fired timer itself
+      val h = getHandle
+      val armed = h.listTimers().filterNot(fired.contains).toList
+      armed.filterNot(wake.contains).foreach(h.deleteTimer)
+      wake.filterNot(armed.contains).foreach(h.registerTimer)
+      out
+    }
+  }
+
+  /** The NFA as a [[KeyedStep]]: advance it row by row over the released
+    * rows; a hold wakes the key when the watermark clears its absence
+    * window. */
+  private class NfaStep(pattern: Pattern)
+      extends KeyedStep[CepState, Match](CepState(Nil, Nil, Long.MinValue, Nil)) {
+    protected def step(key: Long, wmMs: Long, st: CepState, ready: List[KeyedRow],
+                       pending: List[KeyedRow]): (CepState, Iterator[Match], Option[Long]) = {
+      val safeMicros = wmMs * 1000L - 2999L // conservative event-time "now"
+      var cur = st.copy(pending = pending)
+      val out = ready.flatMap { r => val (next, ms) = feed(pattern, key, cur, r); cur = next; ms }
+      // the watermark itself confirms absence: holds whose window closed
+      // below the conservative frontier can no longer be killed by any
+      // in-order row
+      val (expired, holds) = cur.holds.partition(h => safeMicros - h.startTs > pattern.withinMs)
+      val holdWake = // guard the unbounded-within overflow
+        if (pattern.withinMs >= Long.MaxValue / 2) None
+        else holds.map(h => (h.startTs + pattern.withinMs + 2999L) / 1000L).minOption
+      (cur.copy(holds = holds), (out ++ expired.map(h => toMatch(key, h))).iterator, holdWake)
+    }
+  }
 
   /** Streaming CEP: buffer rows per key until the event-time watermark passes
     * them (the ordering guarantee Flink gets from its watermark/sorted-state
     * machinery), then feed them through the same NFA. `delay` is the bounded
     * out-of-orderness (WatermarkStrategy.forBoundedOutOfOrderness). */
   def matchStream(rows: Dataset[KeyedRow], pattern: Pattern,
-                  delay: String = "0 seconds"): Dataset[Match] = {
+                  delay: String = "0 seconds"): Dataset[Match] =
+    matchWatermarked(withEts(rows, delay), pattern)
+
+  /** [[matchStream]] over rows whose `ets` already carries the query's
+    * watermark — e.g. [[orderedWithNav]]'s output, in the same query. */
+  private[graft] def matchWatermarked(rows: Dataset[KeyedRowW],
+                                      pattern: Pattern): Dataset[Match] = {
     import rows.sparkSession.implicits._
-    rows
-      // Event time registered 2999 µs ABOVE the row's ts. Spark watermarks
-      // are ms-granular (floor of max event time), so registering the raw
-      // µs value caps the watermark at floor(max ts) and rows inside the
-      // stream's final millisecond could never be released or even woken
-      // (an event-time timeout must sit strictly between the current and a
-      // future watermark tick — impossible at the cap). The +2999 shift
-      // guarantees a pending row pushes the watermark ≥2 ticks above the
-      // value seen when its timeout was set, so a wm+1 timeout always
-      // fires, and the release threshold wm·1000−1000 always reaches
-      // max(ts). The shift's bite out of the user's reordering tolerance is
-      // paid back by registering `delay` + 3 ms ([[compensatedDelay]]), so
-      // the effective tolerance is ≥ the user's contract.
-      .withColumn("ets", timestamp_micros(col("ts") + lit(2999L)))
-      .withWatermark("ets", compensatedDelay(delay))
-      .as[KeyedRowW]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CepState, Match](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, it, state) =>
-          val st = state.getOption.getOrElse(CepState(Nil, Nil, Long.MinValue, Nil))
-          val wmMs = state.getCurrentWatermarkMs()
-          val releaseMicros = wmMs * 1000L - 1000L // covers max(ts), see ets
-          val safeMicros = wmMs * 1000L - 2999L // conservative event-time "now"
-          val incoming = it.map(w => KeyedRow(w.key, w.ts, w.id, w.kind, w.value))
-          val all = (st.pending ++ incoming).sortBy(r => (r.ts, r.id))
-          val (ready, pending) = all.partition(_.ts <= releaseMicros)
-          var prev = st.prevId
-          var active = st.active
-          var holds = st.holds
-          val out = scala.collection.mutable.ListBuffer.empty[Match]
-          ready.foreach { r =>
-            if (holds.nonEmpty) {
-              val (expired, live) = holds.partition(h => r.ts - h.startTs > pattern.withinMs)
-              out ++= expired.map(h => toMatch(key, h))
-              holds = if (pattern.tailNot.exists(_(r))) Nil else live
-            }
-            val (next, ms, newHolds) = advance(pattern, key, active, r, prev)
-            active = next; out ++= ms; holds ++= newHolds; prev = r.id
-          }
-          // the watermark itself confirms absence: holds whose window closed
-          // below the conservative frontier can no longer be killed by any
-          // in-order row
-          if (holds.nonEmpty) {
-            val (expired, live) = holds.partition(h => safeMicros - h.startTs > pattern.withinMs)
-            out ++= expired.map(h => toMatch(key, h))
-            holds = live
-          }
-          state.update(CepState(active, pending, prev, holds))
-          // flush guarantee: wake this key even if no new data arrives for
-          // it. A pending row needs only the next tick (its own shifted ets
-          // already drives the watermark ≥2 ticks past wmMs); a hold wakes
-          // when the watermark clears its absence window.
-          val holdWakes = // guard the unbounded-within overflow
-            if (pattern.withinMs >= Long.MaxValue / 2) Nil
-            else holds.map(h => (h.startTs + pattern.withinMs + 2999L) / 1000L)
-          val wakeAtMs =
-            (pending.headOption.map(_ => wmMs + 1L) ++ holdWakes).minOption
-          wakeAtMs.foreach { t =>
-            state.setTimeoutTimestamp(math.max(t, wmMs + 1L))
-          }
-          out.iterator
-      }
+    rows.groupByKey(_.key)
+      .transformWithState(new NfaStep(pattern), TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** A row plus its navigation rings: `prev_*(k)` (1-based, `element_at`)
@@ -528,17 +565,48 @@ object Cep {
     * the k-th FOLLOWING one — the ordered in-state buffer
     * MATCH_RECOGNIZE's streaming DEFINE navigation rides (the reference
     * resolves PREV/NEXT against the NFA's row buffer,
-    * MatchCodeGenerator.scala's navigation resolution). */
+    * MatchCodeGenerator.scala's navigation resolution). `ets` is the row's
+    * event time on the way out — see [[orderedWithNav]]. */
   case class NavRowN(key: Long, ts: Long, id: Long, kind: String, value: Double,
                      prev_ts: Seq[Long], prev_kind: Seq[String], prev_value: Seq[Double],
-                     next_ts: Seq[Long], next_kind: Seq[String], next_value: Seq[Double])
+                     next_ts: Seq[Long], next_kind: Seq[String], next_value: Seq[Double],
+                     ets: java.sql.Timestamp)
 
-  private[streaming] case class NavNState(pending: List[KeyedRow],
-                                          ring: List[KeyedRow],
-                                          holds: List[KeyedRow])
+  private[streaming] case class NavNState(pending: List[KeyedRow], ring: List[KeyedRow],
+                                          holds: List[KeyedRow]) extends Buffered
 
   /** Built once per JVM — see [[StateEncoder]]. */
   private implicit val navNStateEncoder: Encoder[NavNState] = StateEncoder[NavNState]
+
+  /** The navigation rings as a [[KeyedStep]] — see [[orderedWithNav]]. */
+  private class NavStep(prevDepth: Int, nextDepth: Int)
+      extends KeyedStep[NavNState, NavRowN](NavNState(Nil, Nil, Nil)) {
+    protected def step(key: Long, wmMs: Long, st: NavNState, ready: List[KeyedRow],
+                       pending: List[KeyedRow]): (NavNState, Iterator[NavRowN], Option[Long]) = {
+      // an emitted event time must lie above the watermark; +2999 µs keeps
+      // the ets a row entered with whenever that is already the case
+      val etsFloor = wmMs * 1000L + 1000L
+      // holds are earlier-released rows awaiting successors; new ready rows
+      // extend the ordered run (the sort re-asserts order under the
+      // documented ms-granularity contract)
+      val buffer = (st.holds ++ ready).sortBy(r => (r.ts, r.id)).toIndexedSeq
+      val ended = wmMs >= Bounded.EndTickMs
+      val emitN = if (ended) buffer.size else math.max(0, buffer.size - nextDepth)
+      var ring = st.ring
+      val out = (0 until emitN).map { i =>
+        val r = buffer(i)
+        val succ = buffer.slice(i + 1, i + 1 + nextDepth)
+        val o = NavRowN(r.key, r.ts, r.id, r.kind, r.value,
+          ring.map(_.ts), ring.map(_.kind), ring.map(_.value),
+          succ.map(_.ts), succ.map(_.kind), succ.map(_.value),
+          DateTimeUtils.toJavaTimestamp(math.max(r.ts + 2999L, etsFloor)))
+        ring = (r :: ring).take(prevDepth)
+        o
+      }
+      val held = buffer.drop(emitN).toList
+      (NavNState(pending, ring, held), out.iterator, Option.when(held.nonEmpty)(Bounded.EndTickMs))
+    }
+  }
 
   /** Watermark-ordered PREV-k and NEXT-k augmentation: buffer per key until
     * the event-time watermark confirms order (the same discipline as
@@ -552,6 +620,12 @@ object Cep {
     * `nextDepth` held rows: all bounded, never proportional to stream
     * length.
     *
+    * The output's event time is `ets`: a row leaves at its shifted ts, or
+    * just above the watermark that released it, whichever is later — Spark
+    * rejects an emitted event time at or below the watermark. So the
+    * output feeds a second event-time operator in the same query
+    * ([[matchWatermarked]]) under the same watermark.
+    *
     * End-of-input: no in-order row can confirm that a key's last
     * `nextDepth` rows have no more successors, so on unbounded input they
     * stay held. Held rows wait on an event-time timer at
@@ -563,44 +637,8 @@ object Cep {
                      delay: String = "0 seconds"): Dataset[NavRowN] = {
     import rows.sparkSession.implicits._
     require(prevDepth >= 0 && nextDepth >= 0, "navigation depths are non-negative")
-    rows
-      // +2999 µs shift + wm·1000−1000 release + 3 ms delay compensation:
-      // see matchStream's ets note
-      .withColumn("ets", timestamp_micros(col("ts") + lit(2999L)))
-      .withWatermark("ets", compensatedDelay(delay))
-      .as[KeyedRowW]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[NavNState, NavRowN](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, it, state) =>
-          val st = state.getOption.getOrElse(NavNState(Nil, Nil, Nil))
-          val wmMs = state.getCurrentWatermarkMs()
-          val releaseMicros = wmMs * 1000L - 1000L
-          val incoming = it.map(w => KeyedRow(w.key, w.ts, w.id, w.kind, w.value))
-          val all = (st.pending ++ incoming).sortBy(r => (r.ts, r.id))
-          val (ready, pending) = all.partition(_.ts <= releaseMicros)
-          // holds are earlier-released rows awaiting successors; new ready
-          // rows extend the ordered run (the sort re-asserts order under
-          // the documented ms-granularity contract)
-          val buffer = (st.holds ++ ready).sortBy(r => (r.ts, r.id)).toIndexedSeq
-          val ended = wmMs >= Bounded.EndTickMs
-          val emitN = if (ended) buffer.size else math.max(0, buffer.size - nextDepth)
-          var ring = st.ring
-          val out = (0 until emitN).map { i =>
-            val r = buffer(i)
-            val succ = buffer.slice(i + 1, i + 1 + nextDepth)
-            val o = NavRowN(r.key, r.ts, r.id, r.kind, r.value,
-              ring.map(_.ts), ring.map(_.kind), ring.map(_.value),
-              succ.map(_.ts), succ.map(_.kind), succ.map(_.value))
-            ring = (r :: ring).take(prevDepth)
-            o
-          }
-          val held = buffer.drop(emitN).toList
-          state.update(NavNState(pending, ring, held))
-          if (pending.nonEmpty) state.setTimeoutTimestamp(wmMs + 1L)
-          else if (held.nonEmpty) state.setTimeoutTimestamp(Bounded.EndTickMs)
-          out.iterator
-      }
+    withEts(rows, delay).groupByKey(_.key)
+      .transformWithState(new NavStep(prevDepth, nextDepth), "ets", OutputMode.Append())
   }
 
   // ---- named patterns + batch oracle surface over the events table ----
@@ -686,7 +724,7 @@ object Cep {
 
   /** The errorBurst pattern driven through a REAL StreamingQuery: file-
     * stream the events table, run the NFA as the keyed stateful operator
-    * ([[matchStream]] — watermark-ordered replay, event-time-timeout flush),
+    * ([[matchStream]] — watermark-ordered replay, event-time timer flush),
     * drained by [[graft.RelayDir.drain]]. The final watermark reaches max(ts), so every
     * row becomes ready and the emitted match set equals the batch NFA's —
     * which is exactly what the shared DuckDB oracle asserts. This is the

@@ -20,6 +20,17 @@ class ConnectorTablesSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) AS n FROM sink_t").head.getLong(0) == 5L)
   }
 
+  test("INSERT INTO a parquet connector table stores the declared column types") {
+    val dir = java.nio.file.Files.createTempDirectory("sink_types").toString
+    spark.sql(s"""CREATE TABLE sink_typed (a BIGINT, b DOUBLE)
+                  WITH ('connector' = 'filesystem', 'path' = '$dir/t',
+                        'format' = 'parquet')""")
+    // the query yields INT and DECIMAL columns, named out of declared order
+    spark.sql("INSERT INTO sink_typed SELECT 2.5 AS b, 1 AS a")
+    val row = spark.sql("SELECT a, b FROM sink_typed").head
+    assert(row.getLong(0) == 1L && row.getDouble(1) == 2.5)
+  }
+
   test("INSERT INTO a non-connector target falls through to Spark") {
     val wh = java.nio.file.Files.createTempDirectory("wh").toString
     spark.sql(s"CREATE TABLE native_t (a INT) USING parquet LOCATION '$wh/native_t'")

@@ -567,8 +567,9 @@ class FlinkSqlStreamingSpec extends SparkSpec {
 
   test("streaming NEXT-in-DEFINE equals the batch scan (round 9: lookahead on streams)") {
     // B navigates its OWN successor (a row outside the 2-row match) — the
-    // orderedWithNav hold-until-successors path plus the end marker's flush
-    // of each key's last rows must reproduce the batch lead() compile exactly
+    // navigation operator's hold-until-successors path, in the NFA's own
+    // query, plus the end marker's flush of each key's last rows must
+    // reproduce the batch lead() compile exactly
     val mrSql =
       """SELECT user_id, start_ts, end_ts FROM events
          MATCH_RECOGNIZE (

@@ -2,6 +2,8 @@ package graft.sql
 
 import graft.SparkSpec
 import java.sql.Timestamp
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 class MatchRecognizeSpec extends SparkSpec {
 
@@ -177,6 +179,23 @@ class MatchRecognizeSpec extends SparkSpec {
     val stream = MatchRecognize.runStream(spark, sf, stmt).collect()
       .map(_.toSeq).toSet
     assert(batch.nonEmpty && stream == batch)
+  }
+
+  test("each streaming MATCH_RECOGNIZE statement runs one StreamingQuery") {
+    // PREV (nav_measures) and NEXT (next_define, with the end marker): the
+    // navigation operator, the DEFINE mask and the NFA are one query
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.incrementAndGet(): Unit
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try Seq("mr_stream_nav_measures", "mr_stream_next_define").foreach { name =>
+      started.set(0)
+      assert(FlinkSqlQueries.queries(name)(spark, sf).collect().nonEmpty, s"$name emitted no rows")
+      assert(started.get == 1, s"$name started ${started.get} streaming queries")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("round 9: multi-column PARTITION BY runs one NFA per tuple") {

@@ -124,68 +124,64 @@ class CheckpointRestartSpec extends SparkSpec {
       s"early fire must include pre-restart state, terminal the full window: $rows")
   }
 
-  test("the streaming PREV ring survives a restart and a replay") {
-    // orderedWithNav without lookahead — MATCH_RECOGNIZE's PREV relay —
-    // through the exactly-once file sink, as runStream relays it
-    val s = spark
-    import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("ckpt_nav").toString
-    val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
-    new java.io.File(in).mkdirs()
-    val schema = "key LONG, ts LONG, id LONG, kind STRING, value DOUBLE"
-    def startQuery() = Cep.orderedWithNav(
-        s.readStream.schema(schema).json(s"$in/*").as[KeyedRow],
-        prevDepth = 2, nextDepth = 0)
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    def addFile(name: String, rows: String*): Unit =
-      rows.toSeq.toDF("value").coalesce(1).write.mode("append").text(s"$in/$name")
-    // phase 1: the ring accumulates ids 1,2
-    val q1 = startQuery()
-    try {
-      addFile("f1",
-        """{"key":1,"ts":1000000,"id":1,"kind":"a","value":1.0}""",
-        """{"key":1,"ts":2000000,"id":2,"kind":"b","value":2.0}""")
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // forced replay: drop the newest commit (a crash after the sink wrote
-    // batch n, before the commit log recorded it) so the restarted query
-    // runs batch n again
-    val commits = new java.io.File(s"$ckpt/commits")
+  /** Drop the newest commit of the query that drained into `out` — a crash
+    * after the sink wrote batch n, before the commit log recorded it — so
+    * the restarted query runs batch n again; returns n. The batch must be
+    * one that wrote rows (its sink log entry lists files), else the replay
+    * would prove nothing. */
+  private def uncommitNewest(out: String): Long = {
+    val commits = new java.io.File(s"$out.ckpt/commits")
     val newest = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
-    // the replayed batch is one that wrote rows: its sink log entry lists files
     assert(java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get(s"$out/_spark_metadata/$newest")).size > 1,
       s"batch $newest emitted nothing — the replay would prove nothing")
     new java.io.File(commits, newest.toString).delete()
     new java.io.File(commits, s".$newest.crc").delete()
+    newest
+  }
+
+  private def committed(out: String, batch: Long): Boolean =
+    new java.io.File(s"$out.ckpt/commits", batch.toString).exists()
+
+  test("the streaming PREV ring survives a restart and a replay") {
+    // orderedWithNav without lookahead — MATCH_RECOGNIZE's PREV stage —
+    // through the exactly-once file sink
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("ckpt_nav").toString
+    val in = s"$root/in"; val out = s"$root/out"
+    new java.io.File(in).mkdirs()
+    val schema = "key LONG, ts LONG, id LONG, kind STRING, value DOUBLE"
+    def run(): Seq[Cep.NavRowN] = graft.RelayDir.drain(s, Cep.orderedWithNav(
+        s.readStream.schema(schema).json(s"$in/*").as[KeyedRow],
+        prevDepth = 2, nextDepth = 0).toDF(), out)
+      .as[Cep.NavRowN].collect().toSeq
+    def addFile(name: String, rows: String*): Unit =
+      rows.toSeq.toDF("value").coalesce(1).write.mode("append").text(s"$in/$name")
+    // phase 1: the ring accumulates ids 1,2
+    addFile("f1",
+      """{"key":1,"ts":1000000,"id":1,"kind":"a","value":1.0}""",
+      """{"key":1,"ts":2000000,"id":2,"kind":"b","value":2.0}""")
+    run()
+    val replayed = uncommitNewest(out)
     // phase 2: a NEW query from the same checkpoint — the post-restart row
     // must see the PRE-restart rows as its PREV ring
-    val q2 = startQuery()
-    try {
-      addFile("f2", """{"key":1,"ts":3000000,"id":3,"kind":"c","value":3.0}""")
-      q2.processAllAvailable()
-      addFile("f3", """{"key":1,"ts":9000000,"id":9,"kind":"z","value":0.0}""")
-      q2.processAllAvailable()
-    } finally q2.stop()
-    assert(new java.io.File(commits, newest.toString).exists(),
-      s"batch $newest must have run again")
-    val rows = s.read.parquet(out).as[Cep.NavRowN].collect().toSeq
+    addFile("f2", """{"key":1,"ts":3000000,"id":3,"kind":"c","value":3.0}""")
+    addFile("f3", """{"key":1,"ts":9000000,"id":9,"kind":"z","value":0.0}""")
+    val rows = run()
+    assert(committed(out, replayed), s"batch $replayed must have run again")
     val r3 = rows.find(_.id == 3).getOrElse(fail(s"row 3 never emitted: $rows"))
     assert(r3.prev_kind == Seq("b", "a"),
       s"the ring must survive the restart: $rows")
-    // exactly-once: pre-restart rows are not re-emitted
-    assert(rows.count(_.id == 1) == 1 && rows.count(_.id == 2) == 1)
     // no lookahead: nothing is held, every next_* ring is empty
     assert(rows.forall(r => r.next_ts.isEmpty && r.next_kind.isEmpty && r.next_value.isEmpty))
-    // the replayed batch leaves every row exactly once in the read-back
+    // exactly-once: the replayed batch leaves every row once in the read-back
     assert(rows.groupBy(_.id).forall(_._2.size == 1), s"replay duplicated rows: $rows")
   }
 
   test("the end-of-input flush replays exactly once after a restart") {
-    // MATCH_RECOGNIZE's NEXT relay: orderedWithNav with lookahead and the
-    // end marker, through the exactly-once file sink, as runStream relays it
+    // MATCH_RECOGNIZE's NEXT stage: orderedWithNav with lookahead and the
+    // end marker, through the exactly-once file sink
     val s = spark
     import s.implicits._
     val root = java.nio.file.Files.createTempDirectory("ckpt_end").toString
@@ -193,28 +189,48 @@ class CheckpointRestartSpec extends SparkSpec {
     Seq(KeyedRow(1, 1000000, 1, "a", 1.0), KeyedRow(1, 2000000, 2, "b", 2.0),
         KeyedRow(1, 3000000, 3, "c", 3.0), KeyedRow(2, 1500000, 4, "d", 4.0))
       .toDS().coalesce(1).write.parquet(in)
-    def run(): Unit = graft.RelayDir.sink(Cep.orderedWithNav(Bounded.withEnd(
+    def run(): Seq[Cep.NavRowN] = graft.RelayDir.drain(s, Cep.orderedWithNav(Bounded.withEnd(
         s.readStream.schema(org.apache.spark.sql.Encoders.product[KeyedRow].schema)
           .parquet(in).as[KeyedRow], end), prevDepth = 1, nextDepth = 1).toDF(),
-      out, Some(end))
+      out, Some(end)).as[Cep.NavRowN].collect().toSeq
     run()
     // without the end marker rows 3 and 4 (each key's last) stay held; the
-    // batch after the sentinel's emits them — drop its commit (a crash
-    // after the sink wrote it, before the commit log recorded it)
-    val commits = new java.io.File(s"$out.ckpt/commits")
-    val newest = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
-    val flushed = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(s"$out/_spark_metadata/$newest"))
-    assert(flushed.size > 1, s"batch $newest emitted nothing — the replay would prove nothing")
-    new java.io.File(commits, newest.toString).delete()
-    new java.io.File(commits, s".$newest.crc").delete()
-    run()
-    assert(new java.io.File(commits, newest.toString).exists(),
-      s"batch $newest must have run again")
-    val rows = s.read.parquet(out).as[Cep.NavRowN].collect().toSeq
+    // batch after the sentinel's emits them, and is the one replayed
+    val replayed = uncommitNewest(out)
+    val rows = run()
+    assert(committed(out, replayed), s"batch $replayed must have run again")
     assert(!rows.exists(_.key == Bounded.EndKey), s"sentinel leaked: $rows")
     assert(rows.map(_.id).sorted == Seq(1L, 2L, 3L, 4L), s"each row exactly once: $rows")
     assert(rows.filter(r => r.id == 3 || r.id == 4).forall(_.next_ts.isEmpty))
+  }
+
+  test("a NEXT MATCH_RECOGNIZE statement replays exactly once as one query") {
+    // navigation and NFA run in ONE query, so their state shares one
+    // checkpoint: a replay of the end marker's flush must re-run both
+    // operators from the same committed state and leave each match once
+    val s = spark
+    val stmt =
+      """SELECT user_id, start_ts, end_ts FROM events
+         MATCH_RECOGNIZE (
+           PARTITION BY user_id
+           ORDER BY ts
+           ONE ROW PER MATCH
+           AFTER MATCH SKIP PAST LAST ROW
+           PATTERN (A B)
+           DEFINE A AS event_type = 'click' AND NEXT(A.value) > A.value,
+                  B AS event_type = 'purchase' AND B.value > PREV(B.value)
+         ) ORDER BY user_id, start_ts"""
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val want = rows(graft.sql.MatchRecognize.runStream(s, sf, stmt))
+    val out = java.nio.file.Files.createTempDirectory("ckpt_mr").toString + "/out"
+    graft.sql.MatchRecognize.runStreamInto(s, sf, stmt, out)
+    assert(new java.io.File(s"$out.ckpt/state").list().sorted.toSeq == Seq("0", "1"),
+      "the navigation and NFA operators must keep their state in one checkpoint")
+    val replayed = uncommitNewest(out)
+    val got = rows(graft.sql.MatchRecognize.runStreamInto(s, sf, stmt, out))
+    assert(committed(out, replayed), s"batch $replayed must have run again")
+    assert(want.nonEmpty)
+    assert(got == want, s"replayed run differs from the uninterrupted one:\n$got\n$want")
   }
 
   test("round 10: the CEP NFA resumes MID-PATTERN from checkpoint") {

@@ -15,8 +15,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * StateStore contract, so the SAME query + checkpoint discipline scales to
   * state ≫ heap. These tests pin the contract: two representative stateful
   * pipelines (a -U/+U retractable Top-N and the CUMULATE streaming SQL
-  * emitter) run bit-identically under both providers, and a provider-metric
-  * probe proves RocksDB actually served the state (no silent fallback).
+  * emitter) run bit-identically under both providers, streaming
+  * MATCH_RECOGNIZE — on `transformWithState`, which needs RocksDB — equals
+  * the batch node, and a provider-metric probe proves RocksDB actually
+  * served the state (no silent fallback).
   */
 class RocksDbStateStoreSpec extends SparkSpec {
 
@@ -51,14 +53,25 @@ class RocksDbStateStoreSpec extends SparkSpec {
   }
 
   test("streaming MATCH_RECOGNIZE with PREV + MEASURES is identical on RocksDB state") {
-    // the round-8 pipeline runs TWO stateful operators (the PREV ring and
-    // the NFA) across a relay — both must hold their state on the
-    // disk-backed provider without changing a row
-    val fn = graft.sql.FlinkSqlQueries.queries("mr_stream_nav_measures")
-    val default = withProvider(None)(rowsOf(fn))
-    val rocks = withProvider(Some(Rocks))(rowsOf(fn))
-    assert(default.nonEmpty)
-    assert(rocks == default)
+    // ONE query with TWO stateful operators (the PREV ring and the NFA),
+    // both on transformWithState — which runs on the RocksDB provider only,
+    // so the stream is compared with the batch node on the same statement
+    val stmt =
+      """SELECT user_id, start_ts, end_ts, n_rows, first_val, last_val FROM events
+         MATCH_RECOGNIZE (
+           PARTITION BY user_id
+           ORDER BY ts
+           MEASURES FIRST(A.value) AS first_val, LAST(B.value) AS last_val
+           ONE ROW PER MATCH
+           AFTER MATCH SKIP TO NEXT ROW
+           PATTERN (A B)
+           DEFINE B AS B.value < PREV(B.value)
+         ) ORDER BY user_id, start_ts"""
+    graft.Tables.registerAll(spark, sf)
+    val batch = rowsOf((s, _) => graft.sql.MatchRecognize.run(s, stmt))
+    val rocks = withProvider(Some(Rocks))(rowsOf(graft.sql.MatchRecognize.runStream(_, _, stmt)))
+    assert(batch.nonEmpty)
+    assert(rocks == batch)
   }
 
   test("the RocksDB provider actually serves the state (metrics probe)") {
