@@ -166,7 +166,9 @@ object StateScaleProbe {
   /** Streaming CEP NFA (Cep.matchStream) to `k` distinct partition keys:
     * state = per-key pending buffer + active runs on RocksDB. Exactly one
     * errorBurst match per key, so outRows == k is an exact assert; the
-    * sentinel key's forever-pending rows add exactly one state row. */
+    * sentinel key's forever-pending rows add exactly one state row. On
+    * `transformWithState` `numRowsTotal` counts the `ValueState` rows, one
+    * per key; the armed timers (the sentinel key's) are not counted. */
   private def probeCep(spark: SparkSession, k: Long): Unit = {
     val (stream, delay) = cepInput(spark, k, "cep")
     val (outRows, stateRows, sec) =
@@ -179,7 +181,8 @@ object StateScaleProbe {
   /** MATCH_RECOGNIZE navigation buffer (Cep.orderedWithNav, the PREV/NEXT
     * rings) to `k` distinct partition keys: state = per-key pending buffer
     * + prev ring + nextDepth held rows. Each key emits its 4 rows minus
-    * the nextDepth=2 held tail → outRows == 2k exact. */
+    * the nextDepth=2 held tail → outRows == 2k exact; state rows count
+    * as in [[probeCep]]: k keys + the sentinel key. */
   private def probeNav(spark: SparkSession, k: Long): Unit = {
     val (stream, delay) = cepInput(spark, k, "nav")
     val (outRows, stateRows, sec) =

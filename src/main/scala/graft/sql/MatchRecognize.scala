@@ -406,8 +406,10 @@ object MatchRecognize {
         Cep.matchStream(keyed(maskOf(spec.defines), lit(0.0)), pattern)
       else {
         val in = keyed(col("event_type"), col("value"))
+        // the end marker's row stops here: its watermark, taken at the
+        // source, still ticks the NFA, but DEFINE never evaluates it
         val nav = Cep.orderedWithNav(end.fold(in)(Bounded.withEnd(in, _)),
-          math.max(prevDepth, 1), nextDepth)
+          math.max(prevDepth, 1), nextDepth).filter(col("key") =!= Bounded.EndKey)
         Cep.matchWatermarked(nav
           .withColumn("__mask", maskOf(spec.rawDefines.map {
             case (v, d) => v -> navRewrite(d) }))

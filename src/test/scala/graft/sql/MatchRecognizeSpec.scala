@@ -181,6 +181,27 @@ class MatchRecognizeSpec extends SparkSpec {
     assert(batch.nonEmpty && stream == batch)
   }
 
+  test("the end marker's sentinel row never reaches a streaming DEFINE") {
+    // NEXT attaches the end marker (key Long.MinValue, event_type ''); a
+    // DEFINE that fails on that row but on no real row must not fail
+    val stmt =
+      """SELECT user_id, start_ts, end_ts FROM events
+         MATCH_RECOGNIZE (
+           PARTITION BY user_id
+           ORDER BY ts
+           ONE ROW PER MATCH
+           AFTER MATCH SKIP PAST LAST ROW
+           PATTERN (A B)
+           DEFINE A AS assert_true(event_type <> '') IS NULL
+                       AND event_type = 'click' AND NEXT(A.value) > A.value,
+                  B AS event_type = 'purchase'
+         ) ORDER BY user_id, start_ts"""
+    graft.Tables.registerAll(spark, sf)
+    val batch = MatchRecognize.run(spark, stmt).collect().map(_.toSeq).toSet
+    val stream = MatchRecognize.runStream(spark, sf, stmt).collect().map(_.toSeq).toSet
+    assert(batch.nonEmpty && stream == batch)
+  }
+
   test("each streaming MATCH_RECOGNIZE statement runs one StreamingQuery") {
     // PREV (nav_measures) and NEXT (next_define, with the end marker): the
     // navigation operator, the DEFINE mask and the NFA are one query
