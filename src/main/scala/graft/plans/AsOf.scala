@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -47,6 +48,33 @@ object AsOf {
       GraftSqlBridge.expression(leftTime), GraftSqlBridge.expression(rightTime),
       strict, inner))
   }
+
+  /** The temporal join of `probe` against the versions in `versioned`, on
+    * the key equalities `pairs` (probe column, versioned column) — the one
+    * kernel of FOR SYSTEM_TIME AS OF and the temporal table functions. With
+    * `probeTime`, each probe row takes the version valid at that time
+    * ([[joinMulti]]). Without, it takes its key's latest version: the
+    * bounded degeneration of the processing-time join
+    * (TemporalProcessTimeJoinOperator.java:48) — by query time every
+    * version has "arrived", so the latest is the max over `versionTime`,
+    * ties broken on the remaining columns so keep-last is reproducible.
+    * Probe rows without a version are null-padded (`outer`) or dropped. */
+  def temporalJoin(probe: DataFrame, versioned: DataFrame, pairs: Seq[(String, String)],
+                   probeTime: Option[String], versionTime: String, outer: Boolean): DataFrame =
+    probeTime match {
+      case Some(t) =>
+        joinMulti(probe, versioned, pairs.map(p => probe(p._1)), pairs.map(p => versioned(p._2)),
+          probe(t), versioned(versionTime), inner = !outer)
+      case None =>
+        val ord = (versionTime +: versioned.columns.filterNot(_ == versionTime).toSeq)
+          .map(c => col(c).desc)
+        val latest = versioned
+          .withColumn("__v", row_number().over(
+            Window.partitionBy(pairs.map(p => col(p._2)): _*).orderBy(ord: _*)))
+          .filter(col("__v") === 1).drop("__v")
+        probe.join(latest, pairs.map(p => probe(p._1) === latest(p._2)).reduce(_ && _),
+          if (outer) "left" else "inner")
+    }
 
   /** Oracle-checked query: the TimeOps as-of join re-planned through the
     * custom operator — same semantics (strictly-preceding click per

@@ -32,13 +32,17 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Note HOP's argument order flips: Flink is (time, slide, size), Spark's
   * window() is (time, size, slide).
   *
-  * Parsing runs no DDL statement ([[Parser]]). The query front-ends
-  * (MATCH_RECOGNIZE, FOR SYSTEM_TIME AS OF, temporal table functions, emit
-  * and cumulate windows) and the OPTIONS hint still build their plans while
-  * parsing, which registers temp views for the fragments they evaluate.
-  * Their result is a query the caller keeps composing (`spark.sql(q)
-  * .orderBy(...)`, a streaming sink); as a command it would become an action
-  * that collects every row to the driver inside `spark.sql`.
+  * Parsing runs no DDL statement and registers no temp view ([[Parser]]).
+  * The query front-ends (MATCH_RECOGNIZE, FOR SYSTEM_TIME AS OF, temporal
+  * table functions, emit and cumulate windows) build their plans while
+  * parsing: their result is a query the caller keeps composing
+  * (`spark.sql(q).orderBy(...)`, a streaming sink); as a command it would
+  * become an action that collects every row to the driver inside
+  * `spark.sql`. The fragments they evaluate (CTE bodies, derived tables,
+  * a flattened join) and the OPTIONS hint's hinted reads are bound by name
+  * inside the statement's own plan ([[SqlText.query]]), so no name outlives
+  * the statement. The batch MATCH_RECOGNIZE node still runs its NFA while
+  * parsing (its matches are pinned by an eager local checkpoint).
   */
 object FlinkSql {
 
@@ -275,41 +279,45 @@ object FlinkSql {
     private def emitsEnabled: Boolean =
       EmitStrategy.enabled(session).isDefined || EmitStrategy.lateEnabled(session)
 
-    /** The query front-ends, first claim on the blanked text wins. They
-      * build their plans while parsing — see the object header. */
-    private val queryFrontEnds = Seq[(String => Boolean, (SparkSession, String) => DataFrame)](
-      (MatchRecognize.matches, MatchRecognize.run),
-      (SystemTimeJoin.matches, SystemTimeJoin.run),
-      // temporal TABLE FUNCTION laterals: only registered function names
-      // claim, so Spark's LATERAL VIEW and stock laterals fall through
-      (TemporalTableFunctions.matches, TemporalTableFunctions.run),
-      // early/late-fire emit strategies are conf-gated like the reference's
-      // TABLE_EXEC_EMIT_*_ENABLED; unset, TUMBLE takes the window() rewrite
-      (p => emitsEnabled && EmitStrategy.matches(p), EmitStrategy.run),
-      // CUMULATE has no native window() counterpart to rewrite onto
-      (CumulateSql.matches, CumulateSql.run))
-
-    /** Text-level pre-passes: utility-statement spellings (EXPLAIN PLAN
-      * FOR), database property clauses, and the OPTIONS dynamic-table-options
-      * hint comment (resolved to a per-query view — Spark's grammar only
-      * admits hints after SELECT, so the table-attached spelling must leave
-      * the text before parsing). */
-    private def preprocess(sqlText: String): String =
-      OptionsHint.rewrite(session, DatabaseDdl.rewrite(UtilityStatements.rewrite(sqlText)))
+    /** The query front-ends, first claim on the blanked text wins. Each
+      * gets the OPTIONS-hint relations to bind in the plan it builds; the
+      * MATCH_RECOGNIZE and window shapes read a bare `FROM t`, which a
+      * hinted reference (always aliased) never is. */
+    private val queryFrontEnds =
+      Seq[(String => Boolean, (SparkSession, String, Map[String, DataFrame]) => DataFrame)](
+        (MatchRecognize.matches, (s, q, _) => MatchRecognize.run(s, q)),
+        (SystemTimeJoin.matches, SystemTimeJoin.run),
+        // temporal TABLE FUNCTION laterals: only registered function names
+        // claim, so Spark's LATERAL VIEW and stock laterals fall through
+        (TemporalTableFunctions.matches, TemporalTableFunctions.run),
+        // early/late-fire emit strategies are conf-gated like the reference's
+        // TABLE_EXEC_EMIT_*_ENABLED; unset, TUMBLE takes the window() rewrite
+        (p => emitsEnabled && EmitStrategy.matches(p), (s, q, _) => EmitStrategy.run(s, q)),
+        // CUMULATE has no native window() counterpart to rewrite onto
+        (CumulateSql.matches, (s, q, _) => CumulateSql.run(s, q)))
 
     /** `parse` is the delegate entry point of the stock path; with
-      * `queriesOnly` a DDL kind is not routed to its front-end. */
+      * `queriesOnly` a DDL kind is not routed to its front-end.
+      *
+      * Text-level pre-passes: utility-statement spellings (EXPLAIN PLAN
+      * FOR) and database property clauses. A query (a front-end or the
+      * stock parse) then takes the OPTIONS dynamic-table-options hints out
+      * of its text and binds the hinted reads in its plan — Spark's grammar
+      * only admits hints after SELECT, so the table-attached spelling must
+      * leave the text before parsing. A DDL front-end keeps the hints in
+      * its text: the statement it runs parses that text again. */
     private def plan(sqlText: String, parse: String => LogicalPlan,
         queriesOnly: Boolean = false): LogicalPlan = {
-      val text = preprocess(sqlText)
+      val text = DatabaseDdl.rewrite(UtilityStatements.rewrite(sqlText))
       val probe = blankLiteralsAndComments(text)
-      lazy val resolved = ConnectorTables.resolveQualified(session, text)
-      def stock = parse(rewrite(resolved))
+      lazy val (unhinted, hinted) = OptionsHint.rewrite(session, text)
+      lazy val resolved = ConnectorTables.resolveQualified(session, unhinted)
+      def stock = SqlText.bind(parse(rewrite(resolved)), hinted)
       val routed = Kind.of(probe) match {
         case Kind.Query =>
           val p = if (resolved eq text) probe else blankLiteralsAndComments(resolved)
           queryFrontEnds.collectFirst { case (claims, build) if claims(p) =>
-            GraftSqlBridge.logicalPlan(build(session, resolved)) }
+            GraftSqlBridge.logicalPlan(build(session, resolved, hinted)) }
         case _ if queriesOnly => None
         case Kind.CreateTable => ConnectorTables.create(text)
         case Kind.CreateFunction => FunctionDdl.create(text)

@@ -75,8 +75,9 @@ object FlinkSqlQueries {
     }),
     // round-9 front-end widening: the SAME temporal join nested inside a
     // CTE, with the probe side a FROM-subquery — both derived tables are
-    // evaluated recursively into views, then the core join runs and the
-    // outer aggregate executes as plain SQL over the CTE view
+    // evaluated recursively and bound by name in the statement's plan, then
+    // the core join runs and the outer aggregate executes as plain SQL over
+    // the CTE
     "fsql_system_time_cte" -> ((s, dir) => {
       Tables.registerAll(s, dir)
       s.sql("""SELECT user_id AS cu, event_id AS c_id, ts AS c_ts FROM events

@@ -473,9 +473,8 @@ object MatchRecognize {
           .agg(aggs.head, aggs.tail: _*)
           .drop("__mid")
       }
-    result.withColumnRenamed("key", spec.partitionBy)
-      .createOrReplaceTempView("__mr_out")
-    spark.sql(s"SELECT ${spec.selectList} FROM __mr_out ${spec.tailClause}")
+    SqlText.query(spark, s"SELECT ${spec.selectList} FROM __mr_out ${spec.tailClause}",
+      Map("__mr_out" -> result.withColumnRenamed("key", spec.partitionBy)))
   }
 
   def run(spark: SparkSession, sql: String): DataFrame = {
@@ -598,7 +597,7 @@ object MatchRecognize {
             Seq(col("start_ts"), col("end_ts"), col("n_rows")) ++
             spec.measures.map(mm => col(mm.alias)): _*)
       }
-    out.createOrReplaceTempView("__mr_out")
-    spark.sql(s"SELECT ${spec.selectList} FROM __mr_out ${spec.tailClause}")
+    SqlText.query(spark, s"SELECT ${spec.selectList} FROM __mr_out ${spec.tailClause}",
+      Map("__mr_out" -> out))
   }
 }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dynamic table options — the `OPTIONS('k'='v')` table hint (spelled as
   * a hint comment right after the table name; reference:
@@ -19,10 +19,11 @@ import org.apache.spark.sql.SparkSession
   * Spark-first shape: a text-level pre-pass (Spark's grammar only admits
   * hints after SELECT, so the table-attached spelling must be resolved
   * before the stock parser sees it). Each hinted reference to a registered
-  * connector table is replaced by a session-unique temp view reading the
-  * table through [[ConnectorTables.read]] with the hinted map merged in;
-  * the hint comment is removed. Everything downstream — pushdown, pruning,
-  * planning — is stock Spark over that view.
+  * connector table is replaced by a placeholder name that the statement's
+  * plan binds to the table read through [[ConnectorTables.read]] with the
+  * hinted map merged in; the hint comment is removed. Everything
+  * downstream — pushdown, pruning, planning — is stock Spark over that
+  * relation.
   */
 object OptionsHint {
 
@@ -73,12 +74,17 @@ object OptionsHint {
   def matches(sqlText: String): Boolean =
     """(?is)/\*\+\s*OPTIONS\s*\(""".r.findFirstIn(blankLiterals(sqlText)).isDefined
 
-  /** Resolve every OPTIONS hint in `sqlText`; returns the text unchanged
-    * when no hint is present. Hints are LOCATED on the literal-blanked
-    * text (offset-preserving) and the replacement splices the ORIGINAL —
-    * a string literal containing the hint spelling survives verbatim. */
-  def rewrite(spark: SparkSession, sqlText: String): String = {
-    if (!matches(sqlText)) return sqlText
+  /** Resolve every OPTIONS hint in `sqlText`: the text with each hinted
+    * reference replaced by a placeholder name, and the relation each
+    * placeholder stands for — the table read through
+    * [[ConnectorTables.read]] with the hinted options merged in. The caller
+    * binds them inside its plan ([[SqlText.bind]]); nothing is registered.
+    * No hint: the text unchanged and no relations. Hints are LOCATED on the
+    * literal-blanked text (offset-preserving) and the replacement splices
+    * the ORIGINAL — a string literal containing the hint spelling survives
+    * verbatim. */
+  def rewrite(spark: SparkSession, sqlText: String): (String, Map[String, DataFrame]) = {
+    if (!matches(sqlText)) return (sqlText, Map.empty)
     if (!spark.conf.getOption(ConfKey).exists(_.equalsIgnoreCase("true")))
       // CatalogSourceTable.java:250-257, message shape preserved
       throw new IllegalArgumentException(
@@ -86,7 +92,7 @@ object OptionsHint {
     val blanked = blankLiterals(sqlText)
     val sb = new StringBuilder
     var last = 0
-    hintRe.findAllMatchIn(blanked).foreach { m =>
+    val relations = hintRe.findAllMatchIn(blanked).zipWithIndex.map { case (m, i) =>
       val name = m.group(1)
       val tbl = ConnectorTables.lookup(spark, name).getOrElse(
         throw new IllegalArgumentException(
@@ -101,8 +107,7 @@ object OptionsHint {
       val hinted = propRe.findAllMatchIn(
         sqlText.substring(m.start(2), m.end(2)))
         .map(p => p.group(1).toLowerCase -> p.group(2)).toMap
-      val view = s"__opt_hint_${name.replace('.', '_')}_${java.util.UUID.randomUUID.toString.replace("-", "").take(12)}"
-      ConnectorTables.read(spark, tbl, hinted).createOrReplaceTempView(view)
+      val placeholder = s"__opt_hint_$i"
       // the visible name downstream: an explicit AS alias, a bare alias
       // (when the word after the hint is not a clause keyword — Calcite
       // admits `FROM t /*+ ... */ a`), or the table's own (last-segment)
@@ -113,10 +118,11 @@ object OptionsHint {
       val alias = Option(m.group(3))
         .orElse(bare.map(" AS " + _))
         .getOrElse(s" AS ${name.split('.').last}")
-      sb.append(sqlText.substring(last, m.start)).append(view + alias)
+      sb.append(sqlText.substring(last, m.start)).append(placeholder + alias)
       last = consumedEnd
-    }
+      placeholder -> ConnectorTables.read(spark, tbl, hinted)
+    }.toMap
     sb.append(sqlText.substring(last))
-    sb.toString
+    (sb.toString, relations)
   }
 }

@@ -101,21 +101,16 @@ object SystemTimeJoin {
 
   /** Resolve the versioned side's (time col, delay): a direct declaration,
     * or one inherited through recorded view lineage — valid only if the
-    * final relation still exposes the time column. */
-  private def resolveTime(spark: SparkSession, table: String): Option[(String, String)] = {
+    * final relation `rel` still exposes the time column. */
+  private def resolveTime(table: String, rel: DataFrame): Option[(String, String)] = {
     def walk(t: String, seen: Set[String]): Option[(String, String)] =
       timeAttributes.get(t).orElse {
         if (seen(t)) None
         else viewBase.get(t).flatMap(walk(_, seen + t))
       }
     walk(table.toLowerCase, Set.empty)
-      .filter { case (c, _) => spark.table(table).columns.exists(_.equalsIgnoreCase(c)) }
+      .filter { case (c, _) => rel.columns.exists(_.equalsIgnoreCase(c)) }
   }
-
-  /** JVM-unique sequence for generated view names (`__st_out_*`,
-    * `__st_sub_*`) — a fixed name could collide across concurrent
-    * sessions or interleaved front-end calls. */
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
 
   def matches(sql: String): Boolean =
     """(?i)FOR\s+SYSTEM_TIME\s+AS\s+OF""".r.findFirstIn(sql).isDefined
@@ -136,39 +131,44 @@ object SystemTimeJoin {
   /** Round-9 front-end widening: the temporal join may sit inside a CTE or
     * a FROM/JOIN derived table. CTE bodies and derived tables are evaluated
     * recursively (through the temporal machinery when they carry the
-    * FOR SYSTEM_TIME clause, plain spark.sql otherwise) into temp views,
-    * and the remaining statement re-dispatches — so
+    * FOR SYSTEM_TIME clause, a plain query otherwise) and bound by name
+    * inside the rest of the statement's plan ([[SqlText.query]]) — they
+    * shadow a table of the same name for this statement only — so
     * `WITH j AS (SELECT ... FOR SYSTEM_TIME ...) SELECT ... FROM j` and
-    * `SELECT ... FROM (SELECT ... FOR SYSTEM_TIME ...) t ...` both work. */
-  def run(spark: SparkSession, sql: String): DataFrame = {
+    * `SELECT ... FROM (SELECT ... FOR SYSTEM_TIME ...) t ...` both work.
+    * `relations` are names the caller has bound already (OPTIONS hints). */
+  def run(spark: SparkSession, sql: String,
+          relations: Map[String, DataFrame] = Map.empty): DataFrame = {
     val t = sql.trim
-    if ("""(?is)^WITH\s""".r.findFirstIn(t).isDefined) runWithCtes(spark, t)
+    if ("""(?is)^WITH\s""".r.findFirstIn(t).isDefined) runWithCtes(spark, t, relations)
     else {
-      val sub = subqueryRewrite(spark, t)
-      if (sub != t) runAny(spark, sub) else core(spark, t)
+      val (sub, rels) = derivedTables(spark, t, relations)
+      if (sub != t) runAny(spark, sub, rels) else core(spark, t, relations)
     }
   }
 
-  private def runAny(spark: SparkSession, q: String): DataFrame =
-    if (matches(q)) run(spark, q) else spark.sql(q)
+  private def runAny(spark: SparkSession, q: String, relations: Map[String, DataFrame]): DataFrame =
+    if (matches(q)) run(spark, q, relations) else SqlText.query(spark, q, relations)
 
-  /** Evaluate each `name AS ( body )` into a temp view, then run the main
-    * query with the CTE prefix stripped. */
-  private def runWithCtes(spark: SparkSession, sql: String): DataFrame = {
+  /** Evaluate each `name AS ( body )` in order — a body sees the CTEs
+    * before it — then run the main query with the CTE prefix stripped. */
+  private def runWithCtes(spark: SparkSession, sql: String,
+                          relations: Map[String, DataFrame]): DataFrame = {
     var rest = sql.trim.replaceFirst("(?is)^WITH\\s", "")
+    var rels = relations
     val nameRe = """(?is)^\s*,?\s*(\w+)\s+AS\s*\(""".r
     var main: Option[String] = None
     while (main.isEmpty) {
       nameRe.findFirstMatchIn(FlinkSql.blankLiteralsAndComments(rest)) match {
         case Some(m) =>
           val (body, after) = balanced(rest, m.end)
-          runAny(spark, body).createOrReplaceTempView(m.group(1))
+          rels += m.group(1).toLowerCase -> runAny(spark, body, rels)
           rest = after
           if (!"""(?s)^\s*,""".r.findFirstIn(rest).isDefined) main = Some(rest)
         case None => main = Some(rest)
       }
     }
-    runAny(spark, main.get.trim)
+    runAny(spark, main.get.trim, rels)
   }
 
   /** `rest(openEnd-1) == '('`: returns (contents, text after the close).
@@ -179,6 +179,9 @@ object SystemTimeJoin {
     val b = FlinkSql.blankLiteralsAndComments(rest)
     var depth = 1; var i = openEnd
     while (depth > 0) {
+      if (i == b.length) throw new IllegalArgumentException(
+        "FOR SYSTEM_TIME AS OF: no ')' closes the '(' before " +
+          s"'${rest.substring(openEnd).trim.take(40)}'")
       b.charAt(i) match {
         case '(' => depth += 1
         case ')' => depth -= 1
@@ -189,9 +192,11 @@ object SystemTimeJoin {
     (rest.substring(openEnd, i - 1), rest.substring(i))
   }
 
-  /** Replace every FROM/JOIN derived table with a temp view of its
-    * evaluated body; returns the rewritten statement (identity if none). */
-  private def subqueryRewrite(spark: SparkSession, sql: String): String = {
+  /** Bind every FROM/JOIN derived table under its alias (a generated name
+    * when it has none) and put that name in its place; returns the
+    * rewritten statement (identity if none) and the relations. */
+  private def derivedTables(spark: SparkSession, sql: String, relations: Map[String, DataFrame])
+      : (String, Map[String, DataFrame]) = {
     val fromRe = """(?is)\b(FROM|JOIN)\s*\(""".r
     fromRe.findFirstMatchIn(FlinkSql.blankLiteralsAndComments(sql)) match {
       case Some(m) =>
@@ -202,23 +207,23 @@ object SystemTimeJoin {
           case Some(a) if !Set("FOR", "ON", "WHERE", "ORDER", "GROUP", "LIMIT", "JOIN", "LEFT")
               .contains(a.group(1).toUpperCase) =>
             (a.group(1), after.substring(a.end))
-          case _ => (s"__st_sub_${viewSeq.incrementAndGet()}", after)
+          case _ => (s"__st_sub_${relations.size}", after)
         }
-        runAny(spark, body.trim).createOrReplaceTempView(alias)
-        subqueryRewrite(spark,
-          sql.substring(0, m.start) + s"${m.group(1)} $alias" + rest)
-      case None => sql
+        derivedTables(spark, sql.substring(0, m.start) + s"${m.group(1)} $alias" + rest,
+          relations + (alias.toLowerCase -> runAny(spark, body.trim, relations)))
+      case None => (sql, relations)
     }
   }
 
-  private def core(spark: SparkSession, sql: String): DataFrame = sql.trim match {
+  private def core(spark: SparkSession, sql: String,
+                   relations: Map[String, DataFrame]): DataFrame = sql.trim match {
     case stRe(select, lt, la, leftKw, rt, ra, timeExpr, onCond, tail) =>
       // reference keyword semantics in both variants: plain JOIN = inner,
       // LEFT JOIN = null-pad (TemporalJoinITCase.scala:344,500)
       val outer = leftKw != null
-      val left = spark.table(lt)
-      val right = spark.table(rt)
-      val rTimeCol = resolveTime(spark, rt).map(_._1).getOrElse(
+      val left = SqlText.table(spark, lt, relations)
+      val right = SqlText.table(spark, rt, relations)
+      val rTimeCol = resolveTime(rt, right).map(_._1).getOrElse(
         throw new IllegalArgumentException(
           s"no watermark declared for versioned table $rt — declare it in DDL " +
             s"(WATERMARK FOR <col> AS ...) or call SystemTimeJoin.declareWatermark; " +
@@ -246,41 +251,17 @@ object SystemTimeJoin {
         case other => throw new IllegalArgumentException(
           s"temporal-join ON must be a conjunction of equalities, got '$other'")
       }
-      import org.apache.spark.sql.functions.{col, row_number}
-      val joined =
-        if (timeExpr.toUpperCase.replaceAll("\\s", "") == "PROCTIME()") {
-          // Processing-time temporal join (TemporalProcessTimeJoinOperator
-          // .java:48 — probe against the build side's LATEST version, no
-          // event-time correlation). The bounded shape degenerates to
-          // keep-last-per-key + equi-join: by query time every version has
-          // "arrived", so the latest is the max over the declared version
-          // order. Tiebreak on the remaining columns keeps keep-last
-          // deterministic when version times collide — the batch analogue
-          // of "last writer wins" needs a total order to be reproducible.
-          import org.apache.spark.sql.expressions.Window
-          val ord = (rTimeCol +: right.columns.filterNot(_ == rTimeCol).toSeq)
-            .map(c => col(c).desc)
-          val latest = right
-            .withColumn("__v", row_number().over(
-              Window.partitionBy(pairs.map(p => col(p._2)): _*).orderBy(ord: _*)))
-            .filter(col("__v") === 1).drop("__v")
-          left.join(latest,
-            pairs.map(p => left(p._1) === latest(p._2)).reduce(_ && _),
-            if (outer) "left" else "inner")
-        } else
-          AsOf.joinMulti(left, right,
-            pairs.map(p => left(p._1)), pairs.map(p => right(p._2)),
-            left(bare(timeExpr)), right(rTimeCol), inner = !outer)
-      // session-unique flattened-output view: concurrent sessions in one
-      // JVM share the temp-view namespace per session, but a fixed name
-      // could still collide across interleaved front-end calls
-      val out = s"__st_out_${viewSeq.incrementAndGet()}"
-      joined.createOrReplaceTempView(out)
-      // the view flattens both sides, so strip alias qualifiers from the
+      // PROCTIME(): the build side's latest version, no event-time correlation
+      val proctime = timeExpr.toUpperCase.replaceAll("\\s", "") == "PROCTIME()"
+      val joined = AsOf.temporalJoin(left, right, pairs,
+        Option.unless(proctime)(bare(timeExpr)), rTimeCol, outer)
+      // the join flattens both sides, so strip alias qualifiers from the
       // outer projection and tail (literal-aware: a string literal
       // containing "la." survives verbatim)
       def strip(s0: String): String = SqlText.stripQualifiers(s0, lNames ++ rNames)
-      spark.sql(s"SELECT ${strip(select)} FROM $out ${strip(Option(tail).getOrElse(""))}")
+      SqlText.query(spark,
+        s"SELECT ${strip(select)} FROM __st_out ${strip(Option(tail).getOrElse(""))}",
+        relations + ("__st_out" -> joined))
     case _ =>
       throw new IllegalArgumentException("unsupported FOR SYSTEM_TIME AS OF shape")
   }

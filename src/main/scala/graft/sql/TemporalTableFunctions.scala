@@ -1,7 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.plans.AsOf
 
 /** The reference's *other* temporal-join surface: temporal TABLE FUNCTIONS
@@ -23,7 +22,9 @@ import graft.plans.AsOf
   * comma-join + LATERAL TABLE shape, splits the WHERE conjunction into
   * per-lateral key equalities (`r.currency = o.currency` — the reference
   * requires the primary-key equality in WHERE) and residual predicates,
-  * and folds each lateral left-to-right onto the accumulated probe side:
+  * and folds each lateral left-to-right onto the accumulated probe side
+  * through [[joinLateral]] — the temporal-join kernel
+  * [[graft.plans.AsOf.temporalJoin]] that FOR SYSTEM_TIME AS OF shares:
   *
   *   - `Fn(o.<rowtimeCol>)` (the argument is a real probe column) →
   *     event-time as-of join through the custom AsOfJoin operator
@@ -32,8 +33,8 @@ import graft.plans.AsOf
   *     the reference.
   *   - `Fn(o.proctime)` (the virtual processing-time attribute — not a
   *     probe column) → latest-version-per-key + equi-join, the bounded
-  *     degeneration of `TemporalProcessTimeJoinOperator.java:48`, with the
-  *     same deterministic keep-last tiebreak as SystemTimeJoin.
+  *     degeneration of `TemporalProcessTimeJoinOperator.java:48`, with a
+  *     deterministic keep-last tiebreak.
   *
   * Residual WHERE predicates apply AFTER version selection — the
   * reference's semantics too: a pre-selection filter must be baked into
@@ -48,7 +49,9 @@ import graft.plans.AsOf
   *
   * Front-end discipline (regex-shaped, like SystemTimeJoin): column names
   * across the probe and every versioned side must be distinct — the
-  * flattened output view keeps them all. Widened only as tests demand.
+  * flattened join keeps them all, and the outer SELECT reads it by a name
+  * bound inside its own plan ([[SqlText.query]]). Widened only as tests
+  * demand.
   */
 object TemporalTableFunctions {
 
@@ -88,21 +91,9 @@ object TemporalTableFunctions {
     require(keys.map(_._2).toSet == fn.keys.map(_.toLowerCase).toSet ||
       keys.map(_._2.toLowerCase).toSet == fn.keys.map(_.toLowerCase).toSet,
       s"joinLateral must equate every primary key of the function (${fn.keys})")
-    if (timeArg.equalsIgnoreCase("proctime") || timeArg.equalsIgnoreCase("proctime()")) {
-      import org.apache.spark.sql.expressions.Window
-      val versioned = fn.table
-      val ord = (fn.timeCol +:
-        versioned.columns.filterNot(_ == fn.timeCol).toSeq).map(c => col(c).desc)
-      val latest = versioned
-        .withColumn("__v", row_number().over(
-          Window.partitionBy(fn.keys.map(col): _*).orderBy(ord: _*)))
-        .filter(col("__v") === 1).drop("__v")
-      probe.join(latest,
-        keys.map { case (p, k) => probe(p) === latest(k) }.reduce(_ && _), "inner")
-    } else
-      AsOf.joinMulti(probe, fn.table,
-        keys.map { case (p, _) => probe(p) }, keys.map { case (_, k) => fn.table(k) },
-        probe(timeArg), fn.table(fn.timeCol), inner = true)
+    val proctime = timeArg.equalsIgnoreCase("proctime") || timeArg.equalsIgnoreCase("proctime()")
+    AsOf.temporalJoin(probe, fn.table, keys, Option.unless(proctime)(timeArg), fn.timeCol,
+      outer = false)
   }
 
   private val latHeadRe = """(?is)LATERAL\s+TABLE\s*\(\s*(\w+)\s*\(""".r
@@ -127,11 +118,9 @@ object TemporalTableFunctions {
   private def prefixOf(c: String): Option[String] =
     c.split("\\.") match { case Array(p, _) => Some(p.toLowerCase); case _ => None }
 
-  /** session-unique output view names — concurrent sessions in one JVM must
-    * not clobber each other's flattened-result view. */
-  private val viewSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  def run(spark: SparkSession, sql: String): DataFrame = sql.trim match {
+  /** `relations` are names the caller has bound already (OPTIONS hints). */
+  def run(spark: SparkSession, sql: String,
+          relations: Map[String, DataFrame] = Map.empty): DataFrame = sql.trim match {
     case headRe(select, probeTable, probeAlias, lateralsAndTail) =>
       // peel `LATERAL TABLE (Fn(arg)) AS a` heads until WHERE/tail
       var rest = lateralsAndTail.trim
@@ -165,7 +154,7 @@ object TemporalTableFunctions {
         case t => (Vector.empty[String], t)
       }
 
-      var acc = spark.table(probeTable)
+      var acc = SqlText.table(spark, probeTable, relations)
       var accAliases = Set(probeTable.toLowerCase) ++
         Option(probeAlias).map(_.toLowerCase)
       var remaining = conjuncts
@@ -192,39 +181,20 @@ object TemporalTableFunctions {
             s"key operand $pSide not found on the probe side")
           (k, pCol)
         }
-        val versioned = handle.table
         val argBare = bare(arg)
-        val isProctime =
+        val proctime =
           argBare.equalsIgnoreCase("proctime") || argBare.equalsIgnoreCase("proctime()")
-        acc =
-          if (isProctime) {
-            // latest version per key, deterministic keep-last tiebreak
-            // (TemporalProcessTimeJoinOperator.java:48 bounded degeneration)
-            import org.apache.spark.sql.expressions.Window
-            val ord = (handle.timeCol +:
-              versioned.columns.filterNot(_ == handle.timeCol).toSeq).map(c => col(c).desc)
-            val latest = versioned
-              .withColumn("__v", row_number().over(
-                Window.partitionBy(handle.keys.map(col): _*).orderBy(ord: _*)))
-              .filter(col("__v") === 1).drop("__v")
-            acc.join(latest,
-              keyPairs.map { case (k, p) => acc(p) === latest(k) }.reduce(_ && _), "inner")
-          } else {
-            require(acc.columns.exists(_.equalsIgnoreCase(argBare)),
-              s"temporal table function argument $arg is neither a probe column " +
-                s"(event time) nor the proctime attribute")
-            AsOf.joinMulti(acc, versioned,
-              keyPairs.map { case (_, p) => acc(p) }, keyPairs.map { case (k, _) => versioned(k) },
-              acc(argBare), versioned(handle.timeCol), inner = true)
-          }
+        require(proctime || acc.columns.exists(_.equalsIgnoreCase(argBare)),
+          s"temporal table function argument $arg is neither a probe column " +
+            s"(event time) nor the proctime attribute")
+        acc = joinLateral(acc, handle, argBare, keyPairs.map(_.swap))
         accAliases += al
       }
-      val out = s"__ttf_out_${viewSeq.incrementAndGet()}"
-      acc.createOrReplaceTempView(out)
       def strip(s0: String): String = SqlText.stripQualifiers(s0, accAliases)
       val residual =
         if (remaining.isEmpty) "" else remaining.map(strip).mkString("WHERE ", " AND ", " ")
-      spark.sql(s"SELECT ${strip(select)} FROM $out $residual${strip(tail)}")
+      SqlText.query(spark, s"SELECT ${strip(select)} FROM __ttf_out $residual${strip(tail)}",
+        relations + ("__ttf_out" -> acc))
     case _ =>
       throw new IllegalArgumentException(
         "unsupported LATERAL TABLE temporal-function shape — expected " +

@@ -154,4 +154,43 @@ class ParsePuritySpec extends SparkSpec {
       spark.sql("DROP CATALOG IF EXISTS pp_cat")
     }
   }
+
+  test("the query front-ends register no temp view, parsing or running") {
+    val s = spark
+    import s.implicits._
+    Seq((1L, new java.sql.Timestamp(1000L), "signup"), (1L, new java.sql.Timestamp(2000L), "purchase"))
+      .toDF("user_id", "ts", "event_type").createOrReplaceTempView("pp_events")
+    Seq((1L, new java.sql.Timestamp(10000L), 100L)).toDF("ok", "ots", "oid")
+      .createOrReplaceTempView("pp_orders")
+    Seq((1L, new java.sql.Timestamp(5000L), 1.0)).toDF("rk", "rts", "rate")
+      .createOrReplaceTempView("pp_rates")
+    SystemTimeJoin.declareWatermark("pp_rates", "rts")
+    TemporalTableFunctions.registerFunction("pp_Rates",
+      TemporalTableFunctions.createTemporalTableFunction(spark.table("pp_rates"), "rts", "rk"))
+    Seq(1L, 2L).toDF("a").write.mode("overwrite").parquet(s"$root/pp_hinted")
+    spark.sql(connectorDdl("pp_hinted", "a BIGINT", "pp_hinted"))
+    val statements = Seq(
+      """SELECT user_id, start_ts FROM pp_events MATCH_RECOGNIZE (
+           PARTITION BY user_id ORDER BY ts ONE ROW PER MATCH
+           AFTER MATCH SKIP PAST LAST ROW PATTERN (A B)
+           DEFINE A AS event_type = 'signup', B AS event_type = 'purchase')""",
+      """WITH j AS (
+           SELECT oid, rate FROM (SELECT ok, ots, oid FROM pp_orders) o
+           JOIN pp_rates FOR SYSTEM_TIME AS OF ots ON ok = rk)
+         SELECT oid, rate FROM j""",
+      """SELECT o.oid, r.rate FROM pp_orders AS o, LATERAL TABLE (pp_Rates(o.ots)) AS r
+         WHERE r.rk = o.ok""",
+      "SELECT a FROM pp_hinted /*+ OPTIONS('k' = 'v') */ WHERE a > 1")
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    spark.conf.set(OptionsHint.ConfKey, "true")
+    try statements.foreach { sql =>
+      val before = views
+      def changed = (views diff before) ++ (before diff views)
+      parser.parsePlan(sql)
+      parser.parsePlan(sql)
+      assert(changed.isEmpty, s"parsing changed temp views: $sql")
+      Seq.fill(2)(assert(spark.sql(sql).collect().length == 1, sql))
+      assert(changed.isEmpty, s"running changed temp views: $sql")
+    } finally spark.conf.unset(OptionsHint.ConfKey)
+  }
 }

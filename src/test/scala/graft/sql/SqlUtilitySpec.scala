@@ -124,6 +124,27 @@ class SqlUtilitySpec extends SparkSpec {
     } finally spark.conf.unset(OptionsHint.ConfKey)
   }
 
+  test("CREATE TEMPORARY VIEW and EXPLAIN over an OPTIONS-hinted table bind the hinted read, no helper view") {
+    val dir = freshDir("opthint5")
+    writePipeCsv(dir)
+    spark.conf.set(OptionsHint.ConfKey, "true")
+    try {
+      spark.sql(s"""CREATE TABLE hint_ev5 (etype STRING, eid BIGINT, v DOUBLE)
+                    WITH ('connector' = 'filesystem', 'path' = '$dir', 'format' = 'csv')""")
+      spark.sql(
+        """CREATE OR REPLACE TEMPORARY VIEW hint_v5 AS
+           SELECT etype, eid FROM hint_ev5 /*+ OPTIONS('csv.field-delimiter' = '|') */
+           WHERE eid > 1""")
+      assert(spark.sql("SELECT count(*) FROM hint_v5").head.getLong(0) == 2L)
+      val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+      assert(!views.exists(_.startsWith("__opt_hint")), views.mkString(", "))
+      val plan = spark.sql(
+        """EXPLAIN PLAN FOR SELECT count(*) FROM hint_ev5 /*+ OPTIONS('csv.field-delimiter' = '|') */""")
+        .head.getString(0)
+      assert(plan.contains("FileScan csv") && !plan.contains("Error"), plan)
+    } finally spark.conf.unset(OptionsHint.ConfKey)
+  }
+
   test("OPTIONS hint on an unregistered QUALIFIED reference is a pointed error, not broken SQL") {
     spark.conf.set(OptionsHint.ConfKey, "true")
     try {

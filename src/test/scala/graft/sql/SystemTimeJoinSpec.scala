@@ -135,7 +135,9 @@ class SystemTimeJoinSpec extends SparkSpec {
     assert(rows.toSeq == Seq((100L, 2.0), (101L, 9.0)))
   }
 
-  test("round 9: the temporal join runs inside a CTE and over a FROM-subquery") {
+  /** Orders 100/101 (key 1, at 10 s/25 s) and 102 (key 2, at 30 s); rates
+    * of key 1 at 5 s/20 s and of key 2 only at 40 s. */
+  private def stcFixture(): Unit = {
     val s = spark
     import s.implicits._
     Seq((1L, new Timestamp(10000L), 100L), (1L, new Timestamp(25000L), 101L),
@@ -145,6 +147,10 @@ class SystemTimeJoinSpec extends SparkSpec {
         (2L, new Timestamp(40000L), 9.0))
       .toDF("rk", "rts", "rate").createOrReplaceTempView("stc_rates")
     SystemTimeJoin.declareWatermark("stc_rates", "rts")
+  }
+
+  test("round 9: the temporal join runs inside a CTE and over a FROM-subquery") {
+    stcFixture()
     // CTE wrapping the temporal join, probe side itself a derived table;
     // the outer query aggregates the CTE view as plain SQL
     val rows = spark.sql(
@@ -165,6 +171,45 @@ class SystemTimeJoinSpec extends SparkSpec {
          ORDER BY oid""").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
     assert(rows2.toSeq == Seq((100L, Some(1.0)), (101L, Some(2.0)), (102L, None)))
+  }
+
+  test("a derived table aliased as an existing view shadows it for its own statement only") {
+    stcFixture()
+    val rows = spark.sql(
+      """SELECT oid, rate
+         FROM (SELECT ok, ots, oid FROM stc_orders WHERE oid < 102) stc_orders
+         JOIN stc_rates FOR SYSTEM_TIME AS OF ots ON ok = rk
+         ORDER BY oid""").collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(rows.toSeq == Seq((100L, 1.0), (101L, 2.0)))
+    assert(spark.table("stc_orders").count() == 3L)
+  }
+
+  test("a CTE referenced twice (a self-join) joins its own rows") {
+    stcFixture()
+    val rows = spark.sql(
+      """WITH j AS (
+           SELECT oid, rate FROM stc_orders
+           JOIN stc_rates FOR SYSTEM_TIME AS OF ots ON ok = rk
+         )
+         SELECT a.oid, b.oid AS later, b.rate FROM j a JOIN j b ON a.oid <= b.oid
+         ORDER BY a.oid, later""").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    // 102 has no version ≤ 30 s: the inner join drops it
+    assert(rows.toSeq == Seq((100L, 100L, 1.0), (100L, 101L, 2.0), (101L, 101L, 2.0)))
+  }
+
+  test("an unclosed parenthesis in a CTE body or a derived table is a pointed error") {
+    stcFixture()
+    Seq(
+      """WITH j AS (SELECT oid, rate FROM stc_orders
+           JOIN stc_rates FOR SYSTEM_TIME AS OF ots ON ok = rk
+         SELECT count(*) FROM j""",
+      """SELECT oid, rate FROM (SELECT ok, ots, oid FROM stc_orders o
+         JOIN stc_rates FOR SYSTEM_TIME AS OF ots ON ok = rk""").foreach { sql =>
+      val e = intercept[IllegalArgumentException](spark.sql(sql))
+      assert(e.getMessage.startsWith("FOR SYSTEM_TIME AS OF: no ')' closes the '('"),
+        e.getMessage)
+    }
   }
 
   test("round 11: plain JOIN is inner, LEFT JOIN null-pads — both time variants") {

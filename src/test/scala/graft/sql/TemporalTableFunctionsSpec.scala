@@ -179,4 +179,21 @@ class TemporalTableFunctionsSpec extends SparkSpec {
     // backslash-escaped quote does not close the literal (Spark's lexer)
     assert(SqlText.stripQualifiers("'it\\'s la.' || la.c", Seq("la")) == "'it\\'s la.' || c")
   }
+
+  test("SqlText.query binds relations in the plan: any case, shadowing, self-join, streaming") {
+    val s = spark
+    import s.implicits._
+    Seq(1L, 2L, 3L).toDF("a").createOrReplaceTempView("sq_t")
+    val bound = SqlText.query(spark, "SELECT x.a, y.a AS b FROM SQ_T x JOIN sq_t y ON x.a < y.a",
+      Map("sq_t" -> Seq(10L, 20L).toDF("a")))
+    assert(bound.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((10L, 20L)))
+    assert(spark.table("sq_t").count() == 3L) // the view itself is untouched
+    val dir = java.nio.file.Files.createTempDirectory("sq_stream").toString
+    Seq(1L, 2L, 3L).toDF("a").write.parquet(s"$dir/in")
+    val stream = SqlText.query(spark, "SELECT a * 10 AS a FROM s WHERE a > 1",
+      Map("s" -> spark.readStream.schema("a BIGINT").parquet(s"$dir/in")))
+    assert(stream.isStreaming)
+    assert(graft.RelayDir.drain(spark, stream, s"$dir/out").collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(20L, 30L))
+  }
 }
