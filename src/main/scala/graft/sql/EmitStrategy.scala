@@ -64,15 +64,15 @@ object EmitStrategy {
       """(?i)\bGROUP\s+BY""".r.findFirstIn(probe).isDefined
 
   private val shapeRe = new FlinkSql.Blanked(
-    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+TUMBLE\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
+    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?\w+)?\s+GROUP\s+BY\s+TUMBLE\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   // Flink argument order: HOP(time, slide, size)
   private val hopShapeRe = new FlinkSql.Blanked(
-    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+HOP\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
+    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?\w+)?\s+GROUP\s+BY\s+HOP\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   private val sessionShapeRe = new FlinkSql.Blanked(
-    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+SESSION\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
+    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?\w+)?\s+GROUP\s+BY\s+SESSION\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   // CUMULATE(time, step, max) — the cumulative-window TVF argument order
   private[sql] val cumShapeRe = new FlinkSql.Blanked(
-    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+GROUP\s+BY\s+CUMULATE\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
+    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?\w+)?\s+GROUP\s+BY\s+CUMULATE\s*\(\s*(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*,\s*INTERVAL\s+'([^']*)'\s+(\w+)\s*\)\s*(?:,\s*([\w\s,]+?))?\s*(ORDER\s+BY\s+.*)?""".r)
   private val tumbleStartRe =
     """(?is)^(?:TUMBLE_START|HOP_START|SESSION_START|CUMULATE_START)\s*\(.*?\)\s+AS\s+(\w+)$""".r
   private val cumEndRe =
@@ -94,21 +94,24 @@ object EmitStrategy {
   }
 
   /** Rewrite + execute. The produced SQL contains no TUMBLE/HOP, so it
-    * parses through the stock path (no re-entry into this front-end). */
-  def run(session: SparkSession, sql: String): DataFrame = sql match {
+    * parses through the stock path (no re-entry into this front-end).
+    * The table is `FROM t [[AS] alias]`; `relations` (the OPTIONS hint's
+    * reads) bind by name in the plan, before the session's tables. */
+  def run(session: SparkSession, sql: String,
+          relations: Map[String, DataFrame]): DataFrame = sql match {
     case shapeRe(select, table, tsCol, n, unit, extraGroups, tail) =>
       build(session, select, table, tsCol, n.toLong * unitMicros(unit), None,
-        extraGroups, tail)
+        extraGroups, tail, relations)
     case hopShapeRe(select, table, tsCol, slideN, slideU, sizeN, sizeU, extraGroups, tail) =>
       build(session, select, table, tsCol, sizeN.toLong * unitMicros(sizeU),
-        Some(slideN.toLong * unitMicros(slideU)), extraGroups, tail)
+        Some(slideN.toLong * unitMicros(slideU)), extraGroups, tail, relations)
     case sessionShapeRe(select, table, tsCol, n, unit, extraGroups, tail) =>
       buildSession(session, select, table, tsCol, n.toLong * unitMicros(unit),
-        extraGroups, tail)
+        extraGroups, tail, relations)
     case cumShapeRe(select, table, tsCol, stepN, stepU, maxN, maxU, extraGroups, tail) =>
       buildCumulate(session, select, table, tsCol,
         stepN.toLong * unitMicros(stepU), maxN.toLong * unitMicros(maxU),
-        extraGroups, tail)
+        extraGroups, tail, relations)
     case _ => throw new IllegalArgumentException(
       "early-fire emit supports: SELECT TUMBLE_START/HOP_START/SESSION_START(..) AS a, <group cols>, <aggs> " +
         "FROM t GROUP BY TUMBLE(ts, size) | HOP(ts, slide, size) | SESSION(ts, gap) [, group cols] [ORDER BY ...]")
@@ -145,7 +148,7 @@ object EmitStrategy {
     * window and the running aggregates share its hash partitioning. */
   private def buildSession(session: SparkSession, select: String, table: String,
                            tsCol: String, gapUs: Long, extraGroups: String,
-                           tail: String): DataFrame = {
+                           tail: String, relations: Map[String, DataFrame]): DataFrame = {
     require(!lateEnabled(session),
       "Session window doesn't support the late-fire EMIT strategy " +
         "(the reference's WindowEmitStrategy rejects EMIT on session windows)")
@@ -156,7 +159,7 @@ object EmitStrategy {
     require(aggs.nonEmpty, "early-fire SESSION needs at least one aggregate")
     val tbOpt = try session.conf.getOption(TiebreakConf) catch { case _: Throwable => None }
     // a streaming source takes the gap-merging stateful operator
-    val srcDf = session.table(table)
+    val srcDf = SqlText.table(session, table, relations)
     if (srcDf.isStreaming) {
       require(Option(tail).forall(_.trim.isEmpty),
         "streaming early-fire: ORDER BY is not supported on an unbounded result")
@@ -175,7 +178,7 @@ object EmitStrategy {
     }.mkString(", ")
     val aliases = aggs.map(_._3).mkString(", ")
     val uts = s"unix_micros(cast($tsCol as timestamp))"
-    session.sql(
+    SqlText.query(session,
       s"""SELECT $wsAlias, $gComma$aliases,
                  CASE WHEN __last THEN __send ELSE __fire0 END AS fire_time,
                  __last AS is_final
@@ -200,7 +203,7 @@ object EmitStrategy {
               )
             )
           )
-          WHERE __early OR __last ${Option(tail).getOrElse("")}""")
+          WHERE __early OR __last ${Option(tail).getOrElse("")}""", relations)
   }
 
   /** Early-fire over CUMULATE windows (expanding panes: the start aligned
@@ -214,7 +217,8 @@ object EmitStrategy {
     * per row, the same pre-shuffle narrow explode as HOP. */
   private def buildCumulate(session: SparkSession, select: String, table: String,
                             tsCol: String, stepUs: Long, maxUs: Long,
-                            extraGroups: String, tail: String): DataFrame = {
+                            extraGroups: String, tail: String,
+                            relations: Map[String, DataFrame]): DataFrame = {
     require(maxUs % stepUs == 0, "CUMULATE max size must be a multiple of step")
     require(!lateEnabled(session),
       "CUMULATE doesn't support the late-fire EMIT strategy")
@@ -224,7 +228,7 @@ object EmitStrategy {
     val (wsAlias, weAlias, aggs) = parseSelect(select, groupCols)
     require(aggs.nonEmpty, "early-fire CUMULATE needs at least one aggregate")
     val tbOpt = try session.conf.getOption(TiebreakConf) catch { case _: Throwable => None }
-    val srcDf = session.table(table)
+    val srcDf = SqlText.table(session, table, relations)
     if (srcDf.isStreaming) {
       require(Option(tail).forall(_.trim.isEmpty),
         "streaming early-fire: ORDER BY is not supported on an unbounded result")
@@ -241,7 +245,7 @@ object EmitStrategy {
     }.mkString(", ")
     val aliases = aggs.map(_._3).mkString(", ")
     val uts = s"unix_micros(cast($tsCol as timestamp))"
-    session.sql(
+    SqlText.query(session,
       s"""SELECT $wsAlias, $weAlias, $gComma$aliases,
                  CASE WHEN __last THEN $weAlias ELSE __fire0 END AS fire_time,
                  __last AS is_final
@@ -263,7 +267,7 @@ object EmitStrategy {
                     FROM $table)
             )
           )
-          WHERE __early OR __last ${Option(tail).getOrElse("")}""")
+          WHERE __early OR __last ${Option(tail).getOrElse("")}""", relations)
   }
 
   /** Shared construction: a hopping window explodes each row into its
@@ -271,8 +275,8 @@ object EmitStrategy {
     * SliceAssigners); a tumbling window is the one-window special case. */
   private def build(session: SparkSession, select: String, table: String, tsCol: String,
                     widthUs: Long, slideUs: Option[Long], extraGroups: String,
-                    tail: String): DataFrame = {
-      val srcDf = session.table(table)
+                    tail: String, relations: Map[String, DataFrame]): DataFrame = {
+      val srcDf = SqlText.table(session, table, relations)
       val late = lateEnabled(session)
       if (late && !srcDf.isStreaming) {
         // the BATCH late-fire log needs an explicit arrival order and can't
@@ -281,7 +285,7 @@ object EmitStrategy {
         require(enabled(session).isEmpty,
           s"combined early-fire + late-fire emission is not supported: unset $DelayConf or $LateConf")
         return buildLate(session, select, table, tsCol, widthUs, slideUs,
-          extraGroups, tail)
+          extraGroups, tail, relations)
       }
       // late-only streaming mode: a delay bucket that never advances means
       // no early fires — the log is terminal + late fires, the reference's
@@ -323,7 +327,7 @@ object EmitStrategy {
           s"explode(sequence(($uts div ${l}L) * ${l}L - ${widthUs}L + ${l}L, " +
             s"($uts div ${l}L) * ${l}L, ${l}L)) AS __ws"
       }
-      session.sql(
+      SqlText.query(session,
         s"""SELECT $wsAlias, $gComma$aliases,
                    CASE WHEN __last THEN __wend ELSE __fire0 END AS fire_time,
                    __last AS is_final
@@ -340,7 +344,7 @@ object EmitStrategy {
                            $uts div ${delayUs}L AS __bidx
                     FROM $table)
             )
-            WHERE __early OR __last ${Option(tail).getOrElse("")}""")
+            WHERE __early OR __last ${Option(tail).getOrElse("")}""", relations)
   }
   /** The late-fire emission log, batch-deterministic (TUMBLE + HOP).
     *
@@ -371,7 +375,8 @@ object EmitStrategy {
 
   private def buildLate(session: SparkSession, select: String, table: String,
                         tsCol: String, widthUs: Long, slideUs: Option[Long],
-                        extraGroups: String, tail: String): DataFrame = {
+                        extraGroups: String, tail: String,
+                        relations: Map[String, DataFrame]): DataFrame = {
     val latenessUs = latenessMicros(session)
     val arr = (try session.conf.getOption(ArrivalConf) catch { case _: Throwable => None })
       .getOrElse(throw new IllegalArgumentException(
@@ -380,7 +385,7 @@ object EmitStrategy {
       .getOrElse(Nil)
     val (wsAlias, _, aggs) = parseSelect(select, groupCols)
     require(aggs.nonEmpty, "late-fire needs at least one aggregate")
-    require(!session.table(table).isStreaming,
+    require(!SqlText.table(session, table, relations).isStreaming,
       "late-fire emit is the batch emission-log formulation; the streaming " +
         "late path is StatefulOps.allowedLateness (API level)")
     val gComma = if (groupCols.isEmpty) "" else groupCols.mkString(", ") + ", "
@@ -410,7 +415,7 @@ object EmitStrategy {
     // cross-bucket prefix max through a window over the ~256-row distinct
     // bucket summary (trivially small at any scale, broadcast back). The
     // big windows all hash-partition on __bk.
-    session.sql(
+    SqlText.query(session,
       s"""WITH base AS (SELECT *, $uts AS __uts, ($arr) AS __arr FROM $table),
           ext AS (SELECT CAST(min(__arr) AS DOUBLE) AS __lo,
                          CAST(max(__arr) AS DOUBLE) AS __hi FROM base),
@@ -454,7 +459,7 @@ object EmitStrategy {
           FROM (SELECT $wsAlias, $gComma$aliases, fire_time, is_final
                 FROM late WHERE __cls = 1
                 UNION ALL SELECT * FROM fin)
-          ${Option(tail).getOrElse("")}""")
+          ${Option(tail).getOrElse("")}""", relations)
   }
 }
 
@@ -473,7 +478,9 @@ object CumulateSql {
       """(?i)\bGROUP\s+BY\s+CUMULATE\s*\(""".r.findFirstIn(probe).isDefined
 
 
-  def run(session: SparkSession, sql: String): DataFrame = sql match {
+  /** The statement's shape and `relations` as in [[EmitStrategy.run]]. */
+  def run(session: SparkSession, sql: String,
+          relations: Map[String, DataFrame]): DataFrame = sql match {
     case EmitStrategy.cumShapeRe(select, table, tsCol, stepN, stepU, maxN, maxU,
         extraGroups, tail) =>
       val stepUs = stepN.toLong * EmitStrategy.unitMicros(stepU)
@@ -481,7 +488,7 @@ object CumulateSql {
       require(maxUs % stepUs == 0, "CUMULATE max size must be a multiple of step")
       val groupCols = Option(extraGroups)
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-      val srcDf = session.table(table)
+      val srcDf = SqlText.table(session, table, relations)
       if (srcDf.isStreaming) {
         // restricted dialect on a stream; watermark close = pane emission
         val (wsAlias, weAlias, aggs) = EmitStrategy.parseSelect(select, groupCols)
@@ -501,7 +508,7 @@ object CumulateSql {
         FlinkSql.rewriteCalls(select, "CUMULATE_END", _ => "timestamp_micros(__we)"),
         "CUMULATE_START", _ => "timestamp_micros(__ws)")
       val gTail = if (groupCols.isEmpty) "" else ", " + groupCols.mkString(", ")
-      session.sql(
+      SqlText.query(session,
         s"""SELECT $items
             FROM (
               SELECT *, explode(sequence(
@@ -511,7 +518,7 @@ object CumulateSql {
                            ($uts div ${maxUs}L) * ${maxUs}L AS __ws
                     FROM $table)
             )
-            GROUP BY __ws, __we$gTail ${Option(tail).getOrElse("")}""")
+            GROUP BY __ws, __we$gTail ${Option(tail).getOrElse("")}""", relations)
     case _ => throw new IllegalArgumentException(
       "CUMULATE supports: SELECT CUMULATE_START/END(..) AS a, <group cols>, <aggs> " +
         "FROM t GROUP BY CUMULATE(ts, step, max) [, group cols] [ORDER BY ...]")

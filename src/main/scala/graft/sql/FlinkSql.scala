@@ -280,21 +280,20 @@ object FlinkSql {
       EmitStrategy.enabled(session).isDefined || EmitStrategy.lateEnabled(session)
 
     /** The query front-ends, first claim on the blanked text wins. Each
-      * gets the OPTIONS-hint relations to bind in the plan it builds; the
-      * MATCH_RECOGNIZE and window shapes read a bare `FROM t`, which a
-      * hinted reference (always aliased) never is. */
+      * gets the OPTIONS-hint relations to bind in the plan it builds (a
+      * hinted reference reads `FROM <placeholder> AS <name>`). */
     private val queryFrontEnds =
       Seq[(String => Boolean, (SparkSession, String, Map[String, DataFrame]) => DataFrame)](
-        (MatchRecognize.matches, (s, q, _) => MatchRecognize.run(s, q)),
+        (MatchRecognize.matches, MatchRecognize.run),
         (SystemTimeJoin.matches, SystemTimeJoin.run),
         // temporal TABLE FUNCTION laterals: only registered function names
         // claim, so Spark's LATERAL VIEW and stock laterals fall through
         (TemporalTableFunctions.matches, TemporalTableFunctions.run),
         // early/late-fire emit strategies are conf-gated like the reference's
         // TABLE_EXEC_EMIT_*_ENABLED; unset, TUMBLE takes the window() rewrite
-        (p => emitsEnabled && EmitStrategy.matches(p), (s, q, _) => EmitStrategy.run(s, q)),
+        (p => emitsEnabled && EmitStrategy.matches(p), EmitStrategy.run),
         // CUMULATE has no native window() counterpart to rewrite onto
-        (CumulateSql.matches, (s, q, _) => CumulateSql.run(s, q)))
+        (CumulateSql.matches, CumulateSql.run))
 
     /** `parse` is the delegate entry point of the stock path; with
       * `queriesOnly` a DDL kind is not routed to its front-end.

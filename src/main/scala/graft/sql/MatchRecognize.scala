@@ -13,7 +13,7 @@ import graft.Checkpoints._
   * Supported clause shape (what MatchRecognizeITCase's core cases use):
   *
   *   SELECT <cols of: partition col, start_ts, end_ts, n_rows, measures>
-  *   FROM <table> MATCH_RECOGNIZE (
+  *   FROM <table> [[AS] <alias>] MATCH_RECOGNIZE (
   *     PARTITION BY <col>
   *     ORDER BY <col>                  -- an event-time column
   *     [MEASURES <m> AS <alias>, ...]  -- m: V.c | FIRST/LAST(V.c) |
@@ -92,7 +92,7 @@ object MatchRecognize {
   // predicate literal containing "PATTERN (" / "WITHIN INTERVAL ..." /
   // "AFTER MATCH ..." can no longer steal a clause (fuzz family 30)
   private val mrRe = new FlinkSql.Blanked(
-    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)\s+MATCH_RECOGNIZE\s*\((.*)\)\s*(ORDER\s+BY.*)?""".r)
+    """(?is)\s*SELECT\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?\w+)?\s+MATCH_RECOGNIZE\s*\((.*)\)\s*(ORDER\s+BY.*)?""".r)
   private val partRe = """(?is)PARTITION\s+BY\s+(\w+(?:\s*,\s*\w+)*)""".r
   private val ordRe = """(?is)ORDER\s+BY\s+(\w+)""".r
   private val skipRe =
@@ -477,9 +477,12 @@ object MatchRecognize {
       Map("__mr_out" -> result.withColumnRenamed("key", spec.partitionBy)))
   }
 
-  def run(spark: SparkSession, sql: String): DataFrame = {
+  /** The batch node. `relations` are names bound for this one statement
+    * (the OPTIONS hint's reads), looked up before the session's tables. */
+  def run(spark: SparkSession, sql: String,
+          relations: Map[String, DataFrame] = Map.empty): DataFrame = {
     val spec = parse(sql)
-    val src = spark.table(spec.table)
+    val src = SqlText.table(spark, spec.table, relations)
     val pCols = spec.partCols
     // compile DEFINE predicates with Spark, pack into a bitmask string —
     // one bit per distinct pattern variable

@@ -3,10 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions.col
 
-/** Bounded-memory per-key ordered scan for the BATCH path of the stateful
-  * operators — the reference's discipline in RowTimeSortOperator.java
-  * (flink-table-runtime-blink operators/sort/): never materialize a key
-  * group, only hold the open pane / run set.
+/** Bounded-memory per-key ordered scan: the sorted-input driver that runs a
+  * [[KeyedFold]] (and the CEP NFA, [[Cep.matchBatch]]) on bounded input —
+  * Flink 1.12's BATCH runtime mode feeds its keyed operators key-sorted
+  * input the same way (SortingDataInput), and RowTimeSortOperator.java
+  * (flink-table-runtime-blink operators/sort/) keeps the same discipline:
+  * never materialize a key group, only hold the open pane / run set.
   *
   * `repartition(key) + sortWithinPartitions(key, ts, id)` delegates the
   * secondary sort to Spark's UnsafeExternalRowSorter, which SPILLS TO DISK —

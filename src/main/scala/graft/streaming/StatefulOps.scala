@@ -70,13 +70,15 @@ case class CountWindowEmit(key: Long, win_id: Long, n_events: Long, max_value: D
 /** Custom stateful operators re-expressing the reference's keyed-state
   * streaming runtime on `flatMapGroupsWithState` (SURVEY.md §2.6 / §2.10).
   *
-  * Each operator runs identically on a bounded Dataset (single group
-  * invocation — how the driver's oracle gate exercises it) and on a streaming
-  * Dataset (incremental state across micro-batches — covered by the
-  * StatefulOpsSpec using MemoryStream).
+  * Each operator runs identically on a bounded Dataset (how the driver's
+  * oracle gate exercises it) and on a streaming Dataset (incremental state
+  * across micro-batches — covered by the StatefulOpsSpec using
+  * MemoryStream). The OVER, count-window and dynamic-session operators are
+  * [[KeyedFold]]s: one per-row definition, run on the spillable sorted scan
+  * for bounded input (KeyedFoldSpec pins stream ≡ batch).
   *
   * Scale notes: state is per-key and O(N) bounded (Top-N keeps N rows, dedup
-  * keeps 1, count windows keep <n pending rows), so a 1000-executor run holds
+  * keeps 1, count-sliding windows keep n rows), so a 1000-executor run holds
   * state proportional to keys × N in the state store, never to input size.
   * The only shuffle is the groupByKey hash partitioning — same as the
   * reference's keyBy.
@@ -155,36 +157,38 @@ object StatefulOps {
       }
   }
 
+  // ---- keyed folds: one definition per operator (KeyedFold) ---------------
+  //
+  // Each operator below is a per-key fold over its rows in (ts, id) order.
+  // KeyedFold.run drives it on the spillable SortedScan for a bounded
+  // Dataset and on flatMapGroupsWithState for a stream; the state is
+  // O(1)/O(frame)/O(pane) per key on both.
+
+  private def d2(v: Double) = java.math.BigDecimal.valueOf(v)
+    .setScale(2, java.math.RoundingMode.HALF_UP)
+  private val zero2 = java.math.BigDecimal.ZERO.setScale(2)
+
   /** Streaming OVER aggregate: per-key running sum in (ts, id) order —
     * semantics of RowTimeRowsUnboundedPrecedingFunction (operators/over/).
     * Money-exact: accumulates BigDecimal(2dp) so emission order can never
     * change the sum (the property that makes this safe under re-partitioning
-    * at any scale). Batch: rows arrive unordered, so sort within the group. */
+    * at any scale). State per key = the accumulator. */
   def runningSumPerKey(rows: Dataset[KeyedRow]): Dataset[RunningEmit] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_.key)
-      .flatMapGroupsWithState[(Long, java.math.BigDecimal), RunningEmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var (lastTs, acc) = state.getOption.getOrElse(
-            (Long.MinValue, java.math.BigDecimal.ZERO.setScale(2)))
-          val sorted = it.toArray.sortBy(r => (r.ts, r.id))
-          val out = sorted.iterator.map { r =>
-            acc = acc.add(java.math.BigDecimal.valueOf(r.value)
-              .setScale(2, java.math.RoundingMode.HALF_UP))
-            lastTs = r.ts
-            RunningEmit(key, r.id, acc.doubleValue)
-          }.toList
-          state.update((lastTs, acc))
-          out.iterator
+    KeyedFold.run(rows, new KeyedFold[java.math.BigDecimal, RunningEmit] {
+      def init = zero2
+      def step(key: Long, acc: java.math.BigDecimal, r: KeyedRow) = {
+        val sum = acc.add(d2(r.value))
+        (sum, List(RunningEmit(key, r.id, sum.doubleValue)))
       }
+    })
   }
 
   /** Streaming OVER with a bounded ROWS frame — the reference's
     * RowTimeRowsBoundedPrecedingFunction.java (operators/over/): per row,
     * sum(value) over `ROWS BETWEEN preceding PRECEDING AND CURRENT ROW` in
-    * per-key (ts, id) order. State per key = the last `preceding` values +
-    * the rolling accumulator — O(frame), never the stream; the aggregate
+    * per-key (ts, id) order. State per key = the last `preceding` + 1 values
+    * + the rolling accumulator — O(frame), never the stream; the aggregate
     * rolls by one exact add and one exact subtract per row (all terms
     * 2dp-scaled BigDecimal, so add/evict order can never change the sum).
     * A ROWS frame has no same-timestamp peer lookahead, so each row emits
@@ -193,149 +197,113 @@ object StatefulOps {
   def boundedRowsPrecedingPerKey(rows: Dataset[KeyedRow],
                                  preceding: Int): Dataset[RunningEmit] = {
     import rows.sparkSession.implicits._
-    def d2(v: Double) = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-    rows.groupByKey(_.key)
-      .flatMapGroupsWithState[(List[Double], java.math.BigDecimal), RunningEmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var (buf, acc) = state.getOption.getOrElse(
-            (List.empty[Double], java.math.BigDecimal.ZERO.setScale(2)))
-          val out = it.toArray.sortBy(r => (r.ts, r.id)).iterator.map { r =>
-            acc = acc.add(d2(r.value))
-            buf = buf :+ r.value // newest-last
-            if (buf.size > preceding + 1) {
-              acc = acc.subtract(d2(buf.head))
-              buf = buf.tail
-            }
-            RunningEmit(key, r.id, acc.doubleValue)
-          }.toList
-          state.update((buf, acc))
-          out.iterator
+    KeyedFold.run(rows, new KeyedFold[(Vector[Double], java.math.BigDecimal), RunningEmit] {
+      def init = (Vector.empty[Double], zero2)
+      def step(key: Long, s: (Vector[Double], java.math.BigDecimal), r: KeyedRow) = {
+        val (frame, acc) = (s._1 :+ r.value, s._2.add(d2(r.value)))
+        val (kept, sum) =
+          if (frame.size > preceding + 1) (frame.tail, acc.subtract(d2(frame.head)))
+          else (frame, acc)
+        ((kept, sum), List(RunningEmit(key, r.id, sum.doubleValue)))
       }
+    })
   }
 
   /** Retained row of a RANGE-frame buffer (ts, id, value) — ids are needed
     * because same-timestamp PEERS emit together, after the full peer group
     * is known. */
   private[streaming] case class RangeRow(ts: Long, id: Long, value: Double)
-  /** RANGE-frame state: retained rows (ascending (ts, id)) — frame rows
-    * within the newest emitted group's horizon plus every still-pending
-    * group — and the newest already-emitted timestamp. */
-  private[streaming] case class RangeOverState(buf: List[RangeRow], emittedUpTo: Long)
+  /** RANGE-frame state: the emitted rows still inside the newest emitted
+    * group's frame with their exact sum, the rows of groups not emitted yet
+    * (both ascending (ts, id)), and the newest emitted timestamp. */
+  private[streaming] case class RangeOverState(frame: Vector[RangeRow], acc: java.math.BigDecimal,
+                                               pending: Vector[RangeRow], emittedUpTo: Long)
 
   /** Streaming OVER with a bounded RANGE frame — the reference's
     * RowTimeRangeBoundedPrecedingFunction.java: per row, sum(value) over
     * `RANGE BETWEEN rangeUs PRECEDING AND CURRENT ROW` on the event time.
     * A RANGE frame includes same-timestamp PEERS, so a timestamp group can
     * only emit once no more rows can carry that timestamp — exactly the
-    * reference's per-timestamp registered timer: rows buffer in state and
+    * reference's per-timestamp registered timer: rows wait in state and
     * each group flushes when the WATERMARK passes it (event-time timeout;
     * rows at or behind the watermark drop as late, so a flushed group can
     * never gain a peer). Out-of-order arrival across micro-batches inside
     * the watermark delay is therefore handled, not just tolerated. State
-    * per key = frame rows + pending groups, both horizon-bounded. On a
-    * bounded Dataset the whole key group arrives at once and every group
-    * closes at end of group. */
+    * per key = frame rows + pending groups, both horizon-bounded; the frame
+    * sum rolls by exact adds and subtracts. */
   def boundedRangePrecedingPerKey(rows: Dataset[KeyedRow], rangeUs: Long,
                                   watermarkDelay: String = "0 seconds"): Dataset[RunningEmit] = {
     import rows.sparkSession.implicits._
-    def d2(v: Double) = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-    val streaming = rows.isStreaming
-    val withTs = rows.withColumn("ets", timestamp_micros($"ts")).as[SortRowW]
-    val marked = if (streaming) withTs.withWatermark("ets", watermarkDelay) else withTs
-    marked.groupByKey(_.key)
-      .flatMapGroupsWithState[RangeOverState, RunningEmit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, it, state) =>
-          var RangeOverState(buf, emittedUpTo) =
-            state.getOption.getOrElse(RangeOverState(Nil, Long.MinValue))
-          val out = scala.collection.mutable.ListBuffer.empty[RunningEmit]
-          // emit group `gts` (ascending flush order): evict below its
-          // horizon, one aggregate per peer — the frame is [gts-range, gts]
-          def flush(gts: Long): Unit = {
-            buf = buf.dropWhile(_.ts < gts - rangeUs)
-            val acc = buf.foldLeft(java.math.BigDecimal.ZERO.setScale(2)) {
-              (a, x) => if (x.ts <= gts) a.add(d2(x.value)) else a
-            }
-            buf.foreach(x => if (x.ts == gts) out += RunningEmit(key, x.id, acc.doubleValue))
-            emittedUpTo = gts
+    KeyedFold.run(rows, new KeyedFold[RangeOverState, RunningEmit] {
+      def init = RangeOverState(Vector.empty, zero2, Vector.empty, Long.MinValue)
+      def step(key: Long, s: RangeOverState, r: KeyedRow) =
+        if (r.ts <= s.emittedUpTo) (s, Nil) // belt-and-braces vs emitted groups
+        else {
+          val pending = s.pending :+ RangeRow(r.ts, r.id, r.value)
+          // a later micro-batch may carry an older row (inside the delay)
+          val inOrder = s.pending.lastOption.forall(x => x.ts < r.ts || (x.ts == r.ts && x.id < r.id))
+          (s.copy(pending = if (inOrder) pending else pending.sortBy(x => (x.ts, x.id))), Nil)
+        }
+      // groups the horizon has passed can no longer gain peers: emit them
+      // ascending, every peer with the aggregate of [gts - rangeUs, gts]
+      override def close(key: Long, s0: RangeOverState, horizonUs: Long) = {
+        var s = s0
+        val out = List.newBuilder[RunningEmit]
+        while (s.pending.nonEmpty && s.pending.head.ts <= horizonUs) {
+          val gts = s.pending.head.ts
+          val (peers, rest) = s.pending.span(_.ts == gts)
+          var frame = s.frame ++ peers
+          var acc = peers.foldLeft(s.acc)((a, p) => a.add(d2(p.value)))
+          while (frame.head.ts < gts - rangeUs) {
+            acc = acc.subtract(d2(frame.head.value)); frame = frame.tail
           }
-          val wmMs = if (streaming) state.getCurrentWatermarkMs else Long.MinValue
-          if (!state.hasTimedOut) {
-            val fresh = it.toArray
-              .filter(r => !streaming || r.ts / 1000 > wmMs) // late rows drop
-              .filter(_.ts > emittedUpTo) // belt-and-braces vs emitted groups
-              .map(r => RangeRow(r.ts, r.id, r.value))
-            if (fresh.nonEmpty) buf = (buf ++ fresh).sortBy(x => (x.ts, x.id))
-          }
-          // groups the watermark has passed can no longer gain peers — flush
-          // ascending (bounded input: everything is final at end of group)
-          buf.iterator.map(_.ts)
-            .filter(t => t > emittedUpTo && (!streaming || t / 1000 <= wmMs))
-            .toList.distinct.sorted.foreach(flush)
-          state.update(RangeOverState(buf, emittedUpTo))
-          if (streaming) {
-            val pending = buf.iterator.map(_.ts).filter(_ > emittedUpTo).toList
-            if (pending.nonEmpty)
-              state.setTimeoutTimestamp(math.max(pending.min / 1000 + 1, wmMs + 1))
-          }
-          out.iterator
+          val sum = acc.doubleValue
+          peers.foreach(p => out += RunningEmit(key, p.id, sum))
+          s = RangeOverState(frame, acc, rest, gts)
+        }
+        (s, out.result())
       }
+      override def due(s: RangeOverState) = s.pending.headOption.map(_.ts)
+    }, Some(watermarkDelay))
   }
 
   /** Count-tumbling windows (CountTumblingWindowAssigner,
     * operators/window/assigners/): every n rows per key — ordered by
-    * (ts, id) — close a window and emit its aggregate. Partial windows stay
-    * pending in state (streaming semantics; the oracle checks full windows). */
+    * (ts, id) — close a window and emit its aggregate. State per key = the
+    * open window's (id, count, max, last id), no row buffer; a partial
+    * window stays pending (streaming semantics; the oracle checks full
+    * windows). */
   def countTumblingWindows(rows: Dataset[KeyedRow], n: Int): Dataset[CountWindowEmit] = {
     import rows.sparkSession.implicits._
-    // state: (next window id, pending rows of the open window)
-    rows.groupByKey(_.key)
-      .flatMapGroupsWithState[(Long, List[KeyedRow]), CountWindowEmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var (winId, pending) = state.getOption.getOrElse((0L, List.empty[KeyedRow]))
-          val out = scala.collection.mutable.ListBuffer.empty[CountWindowEmit]
-          (pending ++ it.toArray.sortBy(r => (r.ts, r.id))).foldLeft(List.empty[KeyedRow]) {
-            case (buf, r) =>
-              val nb = buf :+ r
-              if (nb.size == n) {
-                out += CountWindowEmit(key, winId, n.toLong,
-                  nb.map(_.value).max, nb.last.id)
-                winId += 1
-                Nil
-              } else nb
-          } match { case rest => pending = rest }
-          state.update((winId, pending))
-          out.iterator
+    KeyedFold.run(rows, new KeyedFold[(Long, Long, Double, Long), CountWindowEmit] {
+      def init = (0L, 0L, Double.NegativeInfinity, 0L)
+      def step(key: Long, s: (Long, Long, Double, Long), r: KeyedRow) = {
+        val (win, cnt, mx) = (s._1, s._2 + 1, math.max(s._3, r.value))
+        if (cnt < n) ((win, cnt, mx, r.id), Nil)
+        else ((win + 1, 0L, Double.NegativeInfinity, 0L), List(CountWindowEmit(key, win, cnt, mx, r.id)))
       }
+    })
   }
 
   /** Count-sliding windows (CountSlidingWindowAssigner): every `slide` rows
-    * per key, emit the aggregate of the last `n` rows — requires `n` rows of
-    * retained state per key (the reference's count evictor buffer). */
+    * per key, emit the aggregate of the last `n` rows — state per key =
+    * the rows seen and the last `n` (value, id) pairs (the reference's count
+    * evictor buffer). */
   def countSlidingWindows(rows: Dataset[KeyedRow], n: Int, slide: Int): Dataset[CountWindowEmit] = {
     import rows.sparkSession.implicits._
-    // state: (rows seen, last n rows newest-last)
-    rows.groupByKey(_.key)
-      .flatMapGroupsWithState[(Long, List[KeyedRow]), CountWindowEmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var (seen, buf) = state.getOption.getOrElse((0L, List.empty[KeyedRow]))
-          val out = scala.collection.mutable.ListBuffer.empty[CountWindowEmit]
-          it.toArray.sortBy(r => (r.ts, r.id)).foreach { r =>
-            seen += 1
-            buf = (buf :+ r).takeRight(n)
-            // fire on every slide boundary once the buffer is full
-            if (seen >= n && (seen - n) % slide == 0)
-              out += CountWindowEmit(key, (seen - n) / slide,
-                buf.size.toLong, buf.map(_.value).max, buf.last.id)
-          }
-          state.update((seen, buf))
-          out.iterator
+    KeyedFold.run(rows, new KeyedFold[(Long, Vector[(Double, Long)]), CountWindowEmit] {
+      def init = (0L, Vector.empty[(Double, Long)])
+      def step(key: Long, s: (Long, Vector[(Double, Long)]), r: KeyedRow) = {
+        val seen = s._1 + 1
+        val buf = (s._2 :+ ((r.value, r.id))).takeRight(n)
+        // fire on every slide boundary once the buffer is full
+        val out =
+          if (seen >= n && (seen - n) % slide == 0)
+            List(CountWindowEmit(key, (seen - n) / slide, buf.size.toLong, buf.map(_._1).max, r.id))
+          else Nil
+        ((seen, buf), out)
       }
+    })
   }
 
   /** Open-session state for [[dynamicGapSessions]]: the aggregate plus the
@@ -359,215 +327,30 @@ object StatefulOps {
     * extend it. The watermark is attached internally (on a derived
     * timestamp column, `watermarkDelay` behind max event time); rows at or
     * behind the watermark are dropped like the reference drops late events —
-    * a closed session can never re-open. On a bounded Dataset the whole key
-    * group arrives in one invocation and the final open session closes at
-    * end of group (timeouts never fire in batch). */
+    * a closed session can never re-open. On a bounded Dataset the final open
+    * session closes at the end of the key. */
   def dynamicGapSessions(rows: Dataset[KeyedRow], gapOfMicros: KeyedRow => Long,
                          watermarkDelay: String = "0 seconds"): Dataset[CountWindowEmit] = {
     import rows.sparkSession.implicits._
-    val streaming = rows.isStreaming
-    val withTs = rows.withColumn("ets", timestamp_micros($"ts")).as[SortRowW]
-    val marked = if (streaming) withTs.withWatermark("ets", watermarkDelay) else withTs
-    marked.groupByKey(_.key)
-      .flatMapGroupsWithState[DynSessionState, CountWindowEmit](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, it, state) =>
-          def emitOf(s: DynSessionState) = CountWindowEmit(key, s.sid, s.cnt, s.mx, s.lastId)
-          def tombstone(nextSid: Long) =
-            DynSessionState(nextSid, 0L, Double.NegativeInfinity, 0L, 0L, 0L)
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.update(tombstone(s.sid + 1))
-            Iterator.single(emitOf(s))
-          } else {
-            val wmMs = if (streaming) state.getCurrentWatermarkMs else Long.MinValue
-            val out = scala.collection.mutable.ListBuffer.empty[CountWindowEmit]
-            var open = state.getOption.filter(_.cnt > 0)
-            var nextSid = state.getOption.map(s => if (s.cnt > 0) s.sid + 1 else s.sid)
-              .getOrElse(0L)
-            // an open session the watermark already closed (late data for the
-            // key arrived in the very batch the watermark crossed it,
-            // suppressing the timeout invocation) fires before the new rows
-            open.foreach { s =>
-              if (streaming && wmMs > s.lastTs / 1000 + s.lastGapUs / 1000) {
-                out += emitOf(s); open = None
-              }
-            }
-            val sorted = it.toArray.sortBy(r => (r.ts, r.id))
-              .filter(r => !streaming || r.ts / 1000 > wmMs) // drop late rows
-            sorted.foreach { r =>
-              val kr = KeyedRow(r.key, r.ts, r.id, r.kind, r.value)
-              open match {
-                case Some(s) if r.ts - s.lastTs > s.lastGapUs =>
-                  out += emitOf(s)
-                  open = Some(DynSessionState(s.sid + 1, 1L, r.value, r.id, r.ts,
-                    gapOfMicros(kr)))
-                case Some(s) =>
-                  open = Some(s.copy(cnt = s.cnt + 1, mx = math.max(s.mx, r.value),
-                    lastId = r.id, lastTs = r.ts, lastGapUs = gapOfMicros(kr)))
-                case None =>
-                  open = Some(DynSessionState(nextSid, 1L, r.value, r.id, r.ts,
-                    gapOfMicros(kr)))
-              }
-            }
-            open match {
-              case Some(s) if streaming =>
-                state.update(s)
-                state.setTimeoutTimestamp(
-                  math.max(s.lastTs / 1000 + s.lastGapUs / 1000, wmMs + 1))
-              case Some(s) => // bounded input: whole key group seen, close now
-                out += emitOf(s)
-              case None =>
-                // the pre-data close above consumed the open session (and no
-                // new one started): pin the id counter
-                if (streaming && state.getOption.exists(_.cnt > 0))
-                  state.update(tombstone(nextSid))
-            }
-            out.iterator
-          }
+    KeyedFold.run(rows, new KeyedFold[DynSessionState, CountWindowEmit] {
+      def init = DynSessionState(0L, 0L, Double.NegativeInfinity, 0L, 0L, 0L)
+      // a row more than the previous row's gap after it closes the open
+      // session first: nothing from ts - 1 back can extend that session
+      def step(key: Long, s0: DynSessionState, r: KeyedRow) = {
+        val (s, out) = close(key, s0, r.ts - 1)
+        (if (s.cnt == 0) DynSessionState(s.sid, 1L, r.value, r.id, r.ts, gapOfMicros(r))
+         else s.copy(cnt = s.cnt + 1, mx = math.max(s.mx, r.value), lastId = r.id,
+           lastTs = r.ts, lastGapUs = gapOfMicros(r)), out)
       }
-  }
-
-  // ---- bounded-memory batch variants (SortedScan) -------------------------
-  //
-  // The flatMapGroupsWithState operators above serve the STREAMING path,
-  // where each micro-batch bounds the per-invocation sort. On the batch
-  // path a whole key group arrives in one invocation, so sorting it with
-  // `toArray` would materialize the group — a skewed key OOMs an executor.
-  // These variants ride SortedScan.perKeyOrdered (spillable partition sort +
-  // boundary scan) and keep only O(1)/O(n) rolling state per key, mirroring
-  // the reference's RowTimeSortOperator buffer-per-watermark discipline.
-
-  /** Batch running sum: state per key = (BigDecimal accumulator). */
-  def runningSumBatch(rows: Dataset[KeyedRow]): Dataset[RunningEmit] = {
-    import rows.sparkSession.implicits._
-    SortedScan.perKeyOrdered(rows) { (key, it) =>
-      var acc = java.math.BigDecimal.ZERO.setScale(2)
-      it.map { r =>
-        acc = acc.add(java.math.BigDecimal.valueOf(r.value)
-          .setScale(2, java.math.RoundingMode.HALF_UP))
-        RunningEmit(key, r.id, acc.doubleValue)
-      }
-    }
-  }
-
-  /** Batch bounded-ROWS OVER (RowTimeRowsBoundedPrecedingFunction.java):
-    * rolling exact accumulator over the last `preceding`+1 rows — O(frame)
-    * state per key on the spillable scan. */
-  def boundedRowsPrecedingBatch(rows: Dataset[KeyedRow],
-                                preceding: Int): Dataset[RunningEmit] = {
-    import rows.sparkSession.implicits._
-    def d2(v: Double) = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-    SortedScan.perKeyOrdered(rows) { (key, it) =>
-      var acc = java.math.BigDecimal.ZERO.setScale(2)
-      val window = scala.collection.mutable.Queue.empty[java.math.BigDecimal]
-      it.map { r =>
-        val d = d2(r.value)
-        acc = acc.add(d)
-        window.enqueue(d)
-        if (window.size > preceding + 1) acc = acc.subtract(window.dequeue())
-        RunningEmit(key, r.id, acc.doubleValue)
-      }
-    }
-  }
-
-  /** Batch bounded-RANGE OVER (RowTimeRangeBoundedPrecedingFunction.java):
-    * the frame `[ts - rangeUs, ts]` includes same-timestamp PEERS, so each
-    * consecutive timestamp group is absorbed whole, the horizon evicted
-    * with exact subtraction, and every peer emits the group's aggregate —
-    * O(frame) state per key. */
-  def boundedRangePrecedingBatch(rows: Dataset[KeyedRow],
-                                 rangeUs: Long): Dataset[RunningEmit] = {
-    import rows.sparkSession.implicits._
-    def d2(v: Double) = java.math.BigDecimal.valueOf(v)
-      .setScale(2, java.math.RoundingMode.HALF_UP)
-    SortedScan.perKeyOrdered(rows) { (key, it0) =>
-      val it = it0.buffered
-      new Iterator[RunningEmit] {
-        private var acc = java.math.BigDecimal.ZERO.setScale(2)
-        private val frame = scala.collection.mutable.Queue.empty[(Long, java.math.BigDecimal)]
-        private var emits: List[RunningEmit] = Nil
-        override def hasNext: Boolean = emits.nonEmpty || it.hasNext
-        override def next(): RunningEmit = {
-          if (emits.isEmpty) {
-            val gts = it.head.ts
-            var group = List.empty[KeyedRow] // collected newest-first
-            while (it.hasNext && it.head.ts == gts) group ::= it.next()
-            group.foreach { r =>
-              val d = d2(r.value); acc = acc.add(d); frame.enqueue((r.ts, d))
-            }
-            while (frame.nonEmpty && frame.head._1 < gts - rangeUs)
-              acc = acc.subtract(frame.dequeue()._2)
-            val a = acc.doubleValue
-            emits = group.reverse.map(r => RunningEmit(key, r.id, a))
-          }
-          val h = emits.head; emits = emits.tail; h
-        }
-      }
-    }
-  }
-
-  /** Batch count-tumbling windows: state per key = (winId, count, max,
-    * lastId) — the open window's aggregate only, no pending row buffer. */
-  def countTumblingBatch(rows: Dataset[KeyedRow], n: Int): Dataset[CountWindowEmit] = {
-    import rows.sparkSession.implicits._
-    SortedScan.perKeyOrdered(rows) { (key, it) =>
-      var winId = 0L; var cnt = 0; var mx = Double.NegativeInfinity; var last = 0L
-      it.flatMap { r =>
-        cnt += 1; mx = math.max(mx, r.value); last = r.id
-        if (cnt == n) {
-          val e = CountWindowEmit(key, winId, n.toLong, mx, last)
-          winId += 1; cnt = 0; mx = Double.NegativeInfinity
-          Iterator.single(e)
-        } else Iterator.empty
-      }
-    }
-  }
-
-  /** Batch count-sliding windows: state per key = ring buffer of the last
-    * `n` (value, id) pairs — the reference's count-evictor buffer, O(n). */
-  def countSlidingBatch(rows: Dataset[KeyedRow], n: Int, slide: Int): Dataset[CountWindowEmit] = {
-    import rows.sparkSession.implicits._
-    SortedScan.perKeyOrdered(rows) { (key, it) =>
-      val buf = scala.collection.mutable.ArrayDeque.empty[(Double, Long)]
-      var seen = 0L
-      it.flatMap { r =>
-        seen += 1
-        buf.append((r.value, r.id))
-        if (buf.size > n) buf.removeHead()
-        if (seen >= n && (seen - n) % slide == 0)
-          Iterator.single(CountWindowEmit(key, (seen - n) / slide,
-            buf.size.toLong, buf.iterator.map(_._1).max, buf.last._2))
-        else Iterator.empty
-      }
-    }
-  }
-
-  /** Batch dynamic-gap sessions: state per key = the open session's
-    * (count, max, lastId) plus the previous row — O(1). */
-  def dynamicGapSessionsBatch(rows: Dataset[KeyedRow],
-                              gapOfMicros: KeyedRow => Long): Dataset[CountWindowEmit] = {
-    import rows.sparkSession.implicits._
-    SortedScan.perKeyOrdered(rows) { (key, it) =>
-      var sid = 0L; var cnt = 0L; var mx = Double.NegativeInfinity; var last = 0L
-      var prev: KeyedRow = null
-      // None sentinel closes the final open session at end-of-key
-      (it.map(Option(_)) ++ Iterator(None)).flatMap {
-        case Some(r) =>
-          val closed =
-            if (prev != null && r.ts - prev.ts > gapOfMicros(prev)) {
-              val e = CountWindowEmit(key, sid, cnt, mx, last)
-              sid += 1; cnt = 0; mx = Double.NegativeInfinity
-              Iterator.single(e)
-            } else Iterator.empty
-          cnt += 1; mx = math.max(mx, r.value); last = r.id; prev = r
-          closed
-        case None =>
-          if (cnt > 0) Iterator.single(CountWindowEmit(key, sid, cnt, mx, last))
-          else Iterator.empty
-      }
-    }
+      // no row after the horizon can extend the open session: emit it and
+      // keep the tombstone
+      override def close(key: Long, s: DynSessionState, horizonUs: Long) =
+        if (s.cnt > 0 && s.lastTs + s.lastGapUs <= horizonUs)
+          (init.copy(sid = s.sid + 1), List(CountWindowEmit(key, s.sid, s.cnt, s.mx, s.lastId)))
+        else (s, Nil)
+      override def due(s: DynSessionState) =
+        if (s.cnt > 0) Some(s.lastTs + s.lastGapUs) else None
+    }, Some(watermarkDelay))
   }
 
   /** Unbounded (no-watermark) stream-stream left-outer join with idle-state
@@ -793,35 +576,35 @@ object StatefulOps {
 
   def qRunningSum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    runningSumBatch(eventRows(s, dir))
+    runningSumPerKey(eventRows(s, dir))
       .select($"key".as("user_id"), $"id".as("event_id"), $"run_sum")
       .orderBy($"user_id", $"event_id")
   }
 
   def qRowsBounded(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    boundedRowsPrecedingBatch(eventRows(s, dir), 9)
+    boundedRowsPrecedingPerKey(eventRows(s, dir), 9)
       .select($"key".as("user_id"), $"id".as("event_id"), $"run_sum".as("frame_sum"))
       .orderBy($"user_id", $"event_id")
   }
 
   def qRangeBounded(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    boundedRangePrecedingBatch(eventRows(s, dir), 3600L * 1000000L) // 1 hour
+    boundedRangePrecedingPerKey(eventRows(s, dir), 3600L * 1000000L) // 1 hour
       .select($"key".as("user_id"), $"id".as("event_id"), $"run_sum".as("frame_sum"))
       .orderBy($"user_id", $"event_id")
   }
 
   def qCountWindows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    countTumblingBatch(eventRows(s, dir), 10)
+    countTumblingWindows(eventRows(s, dir), 10)
       .select($"key".as("user_id"), $"win_id", $"n_events", $"max_value", $"last_id")
       .orderBy($"user_id", $"win_id")
   }
 
   def qCountSliding(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    countSlidingBatch(eventRows(s, dir), 10, 5)
+    countSlidingWindows(eventRows(s, dir), 10, 5)
       .select($"key".as("user_id"), $"win_id", $"n_events", $"max_value", $"last_id")
       .orderBy($"user_id", $"win_id")
   }
@@ -829,7 +612,7 @@ object StatefulOps {
   /** gap = 30 min for events with value < 100, else 2 h — data-dependent. */
   def qDynamicSession(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    dynamicGapSessionsBatch(eventRows(s, dir),
+    dynamicGapSessions(eventRows(s, dir),
       r => if (r.value < 100) 1800L * 1000000L else 7200L * 1000000L)
       .select($"key".as("user_id"), $"win_id".as("session_id"),
         $"n_events", $"max_value", $"last_id")

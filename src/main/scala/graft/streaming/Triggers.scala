@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One window firing: `fire_seq` numbers the fires within (key, win_start);
   * the aggregate is over the post-eviction buffer. */
@@ -54,11 +53,11 @@ object Triggers {
   /** drop rows whose delta to the newest exceeds threshold (DeltaEvictor.java:38) */
   case class DeltaEvictor(threshold: Double, delta: (KeyedRow, KeyedRow) => Double) extends WinEvictor
 
-  private case class PaneState(winStart: Long, buf: List[KeyedRow], sinceFire: Int,
-                               fires: Long, lastFired: Option[KeyedRow],
-                               nextContinuous: Long)
+  private[streaming] case class PaneState(winStart: Long, buf: Vector[KeyedRow],
+                                          sinceFire: Int, fires: Long,
+                                          lastFired: Option[KeyedRow], nextContinuous: Long)
 
-  private def evict(buf: List[KeyedRow], evictor: WinEvictor): List[KeyedRow] = evictor match {
+  private def evict(buf: Vector[KeyedRow], evictor: WinEvictor): Vector[KeyedRow] = evictor match {
     case NoEvictor => buf
     case CountEvictor(k) => buf.takeRight(k)
     case TimeEvictor(span) =>
@@ -69,133 +68,66 @@ object Triggers {
       buf.filter(r => (r eq newest) || d(r, newest) <= th)
   }
 
-  private def emit(key: Long, st: PaneState, buf: List[KeyedRow]): TriggerEmit =
+  private def emit(key: Long, st: PaneState, buf: Vector[KeyedRow]): TriggerEmit =
     TriggerEmit(key, st.winStart, st.fires, buf.size.toLong,
       buf.map(_.value).max, buf.map(_.value).sum, buf.last.id)
 
   /** Tumbling event-time windows of `widthMicros` driven by (trigger,
-    * evictor). Batch semantics: the whole key group arrives in one
-    * invocation (ordered scan), windows terminally fire when the scan moves
-    * past them — the same path the driver's oracle exercises. Streaming:
-    * state carries the open pane across micro-batches; the terminal fire
-    * happens when a later-window row arrives for the key. */
+    * evictor), one [[KeyedFold]] per key: state = the open pane's row
+    * buffer only (inherent to evictors — the reference's
+    * EvictingWindowOperator keeps the same list state). A row of a later
+    * window closes the open pane (its terminal fire); on a bounded Dataset
+    * the last pane closes at the end of the key, on a stream it stays open
+    * in state until a later-window row arrives for the key. */
   def triggeredTumbleWindows(rows: Dataset[KeyedRow], widthMicros: Long,
                              trigger: WinTrigger, evictor: WinEvictor): Dataset[TriggerEmit] = {
     import rows.sparkSession.implicits._
-    val streaming = rows.isStreaming // captured before the closure ships
-    rows.groupByKey(_.key)
-      .flatMapGroupsWithState[PaneState, TriggerEmit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          val out = scala.collection.mutable.ListBuffer.empty[TriggerEmit]
-          var st = state.getOption.orNull
-          def fire(): Unit = {
-            // eviction is DESTRUCTIVE, as in EvictingWindowOperator: evicted
-            // rows leave the pane state and never contribute again
-            val b = evict(st.buf, evictor)
-            if (b.nonEmpty) out += emit(key, st, b)
-            st = st.copy(buf = b, sinceFire = 0, fires = st.fires + 1)
-          }
-          // event-time-driven triggers fire the pane at window close; pure
-          // count/delta triggers discard leftovers (reference semantics)
-          val terminalFires = trigger match {
-            case EventTimeTriggerOnly | ContinuousEventTimeTrigger(_) => true
-            case _ => false
-          }
-          it.toArray.sortBy(r => (r.ts, r.id)).foreach { r =>
-            val ws = (r.ts / widthMicros) * widthMicros
-            if (st == null || ws != st.winStart) {
-              if (st != null && st.buf.nonEmpty && terminalFires) fire() // close the open window
-              val firstCont = trigger match {
-                case ContinuousEventTimeTrigger(iv) => (r.ts / iv) * iv + iv
-                case _ => Long.MaxValue
-              }
-              // DeltaTrigger's reference point initializes to the pane's
-              // first element (DeltaTrigger.java onElement's first call)
-              st = PaneState(ws, Nil, 0, 0L, Some(r), firstCont)
-            }
-            st = st.copy(buf = st.buf :+ r, sinceFire = st.sinceFire + 1)
-            val fires = trigger match {
-              case CountTrigger(n) => st.sinceFire >= n
-              case DeltaTrigger(th, d) => st.lastFired.exists(lf => d(lf, r) > th)
-              case ContinuousEventTimeTrigger(_) => r.ts >= st.nextContinuous
-              case EventTimeTriggerOnly => false
-            }
-            if (fires) {
-              val nextCont = trigger match {
-                case ContinuousEventTimeTrigger(iv) => (r.ts / iv) * iv + iv
-                case _ => st.nextContinuous
-              }
-              st = st.copy(lastFired = Some(r), nextContinuous = nextCont)
-              fire()
-            }
-          }
-          // batch: the group ends → close the last window; streaming: keep
-          // it open in state for the next micro-batch (it terminally fires
-          // when a later-window row arrives for this key)
-          if (!streaming) {
-            if (st != null && st.buf.nonEmpty && terminalFires) fire()
-            state.remove()
-          }
-          else if (st != null) state.update(st)
-          out.iterator
-      }
-  }
-
-  /** Bounded-memory batch variant on [[SortedScan.perKeyOrdered]]: state per
-    * key = the open pane's row buffer only (inherent to evictors — the
-    * reference's EvictingWindowOperator keeps the same list state), never
-    * the whole key group. Same trigger/evictor semantics as the streaming
-    * operator above, terminal fire at end-of-key. */
-  def triggeredTumbleWindowsBatch(rows: Dataset[KeyedRow], widthMicros: Long,
-                                  trigger: WinTrigger, evictor: WinEvictor): Dataset[TriggerEmit] = {
-    import rows.sparkSession.implicits._
+    // event-time-driven triggers fire the pane at window close; pure
+    // count/delta triggers discard leftovers (reference semantics)
     val terminalFires = trigger match {
       case EventTimeTriggerOnly | ContinuousEventTimeTrigger(_) => true
       case _ => false
     }
-    SortedScan.perKeyOrdered(rows) { (key, it) =>
-      var st: PaneState = null
-      def fire(): Option[TriggerEmit] = {
-        val b = evict(st.buf, evictor)
-        val e = if (b.nonEmpty) Some(emit(key, st, b)) else None
-        st = st.copy(buf = b, sinceFire = 0, fires = st.fires + 1)
-        e
-      }
-      // None sentinel closes the last open window at end-of-key
-      (it.map(Option(_)) ++ Iterator(None)).flatMap {
-        case Some(r) =>
-          val out = scala.collection.mutable.ListBuffer.empty[TriggerEmit]
-          val ws = (r.ts / widthMicros) * widthMicros
-          if (st == null || ws != st.winStart) {
-            if (st != null && st.buf.nonEmpty && terminalFires) fire().foreach(out += _)
-            val firstCont = trigger match {
-              case ContinuousEventTimeTrigger(iv) => (r.ts / iv) * iv + iv
-              case _ => Long.MaxValue
-            }
-            st = PaneState(ws, Nil, 0, 0L, Some(r), firstCont)
-          }
-          st = st.copy(buf = st.buf :+ r, sinceFire = st.sinceFire + 1)
-          val fires = trigger match {
-            case CountTrigger(n) => st.sinceFire >= n
-            case DeltaTrigger(th, d) => st.lastFired.exists(lf => d(lf, r) > th)
-            case ContinuousEventTimeTrigger(_) => r.ts >= st.nextContinuous
-            case EventTimeTriggerOnly => false
-          }
-          if (fires) {
-            val nextCont = trigger match {
-              case ContinuousEventTimeTrigger(iv) => (r.ts / iv) * iv + iv
-              case _ => st.nextContinuous
-            }
-            st = st.copy(lastFired = Some(r), nextContinuous = nextCont)
-            fire().foreach(out += _)
-          }
-          out.iterator
-        case None =>
-          if (st != null && st.buf.nonEmpty && terminalFires) fire().iterator
-          else Iterator.empty
-      }
+    def boundary(r: KeyedRow, otherwise: Long): Long = trigger match {
+      case ContinuousEventTimeTrigger(iv) => (r.ts / iv) * iv + iv
+      case _ => otherwise
     }
+    KeyedFold.run(rows, new KeyedFold[PaneState, TriggerEmit] {
+      def init = PaneState(Long.MinValue, Vector.empty, 0, 0L, None, Long.MaxValue)
+      // eviction is DESTRUCTIVE, as in EvictingWindowOperator: evicted
+      // rows leave the pane state and never contribute again
+      private def fire(key: Long, st: PaneState): (PaneState, List[TriggerEmit]) = {
+        val b = evict(st.buf, evictor)
+        (st.copy(buf = b, sinceFire = 0, fires = st.fires + 1),
+          if (b.isEmpty) Nil else List(emit(key, st, b)))
+      }
+      // no row after the horizon falls in the pane's window: close it
+      override def close(key: Long, st: PaneState, horizonUs: Long) =
+        if (st.winStart > horizonUs - widthMicros + 1) (st, Nil)
+        else (init, if (terminalFires && st.buf.nonEmpty) fire(key, st)._2 else Nil)
+      def step(key: Long, st0: PaneState, r: KeyedRow) = {
+        val ws = (r.ts / widthMicros) * widthMicros
+        // DeltaTrigger's reference point initializes to the pane's first
+        // element (DeltaTrigger.java onElement's first call)
+        val (opened, closed) =
+          if (ws == st0.winStart) (st0, Nil)
+          else (PaneState(ws, Vector.empty, 0, 0L, Some(r), boundary(r, Long.MaxValue)),
+            close(key, st0, Long.MaxValue)._2)
+        val st = opened.copy(buf = opened.buf :+ r, sinceFire = opened.sinceFire + 1)
+        val fires = trigger match {
+          case CountTrigger(n) => st.sinceFire >= n
+          case DeltaTrigger(th, d) => st.lastFired.exists(lf => d(lf, r) > th)
+          case ContinuousEventTimeTrigger(_) => r.ts >= st.nextContinuous
+          case EventTimeTriggerOnly => false
+        }
+        if (!fires) (st, closed)
+        else {
+          val (after, out) =
+            fire(key, st.copy(lastFired = Some(r), nextContinuous = boundary(r, st.nextContinuous)))
+          (after, closed ++ out)
+        }
+      }
+    })
   }
 
   // ---- oracle surface: CountTrigger(5) + CountEvictor(3) on 1-day windows
@@ -211,7 +143,7 @@ object Triggers {
         expr("unix_micros(cast(ts as timestamp))").as("ts"),
         col("event_id").as("id"), col("event_type").as("kind"), col("value"))
       .as[KeyedRow]
-    triggeredTumbleWindowsBatch(rows, 86400L * 1000000L, CountTrigger(5), CountEvictor(3))
+    triggeredTumbleWindows(rows, 86400L * 1000000L, CountTrigger(5), CountEvictor(3))
       .select($"key".as("user_id"), $"win_start", $"fire_seq", $"n_buf",
         $"max_value", $"last_id")
       .orderBy($"user_id", $"win_start", $"fire_seq")

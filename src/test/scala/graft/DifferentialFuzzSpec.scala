@@ -1173,9 +1173,10 @@ class DifferentialFuzzSpec extends SparkSpec {
   // Round-11 addition (RowTime{Rows,Range}BoundedPrecedingFunction.java):
   // the two oracle rows pin ONE parameter point each; this family sweeps
   // seeded random frame sizes — ROWS n PRECEDING (n ∈ 1..24) and RANGE
-  // interval PRECEDING (5 min .. 3 h) — through the spillable batch scans
-  // against DuckDB's own window frames (RANGE on the numeric epoch key, so
-  // same-timestamp peer semantics are compared too).
+  // interval PRECEDING (5 min .. 3 h) — through the operators' bounded
+  // driver (the spillable sorted scan) against DuckDB's own window frames
+  // (RANGE on the numeric epoch key, so same-timestamp peer semantics are
+  // compared too).
 
   test("family 24: bounded ROWS/RANGE OVER frames equal DuckDB across random parameters") {
     assume(duckAvailable,
@@ -1197,7 +1198,7 @@ class DifferentialFuzzSpec extends SparkSpec {
     val cases = (0 until nCases).map { i =>
       if (i % 2 == 0) {
         val n = 1 + r.nextInt(24)
-        val spark_df = graft.streaming.StatefulOps.boundedRowsPrecedingBatch(rows, n)
+        val spark_df = graft.streaming.StatefulOps.boundedRowsPrecedingPerKey(rows, n)
           .select(col("key").as("user_id"), col("id").as("event_id"),
             col("run_sum").as("frame_sum"))
           .orderBy(col("user_id"), col("event_id"))
@@ -1211,7 +1212,7 @@ class DifferentialFuzzSpec extends SparkSpec {
       } else {
         val mins = 5 + r.nextInt(176)
         val us = mins * 60L * 1000000L
-        val spark_df = graft.streaming.StatefulOps.boundedRangePrecedingBatch(rows, us)
+        val spark_df = graft.streaming.StatefulOps.boundedRangePrecedingPerKey(rows, us)
           .select(col("key").as("user_id"), col("id").as("event_id"),
             col("run_sum").as("frame_sum"))
           .orderBy(col("user_id"), col("event_id"))

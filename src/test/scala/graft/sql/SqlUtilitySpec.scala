@@ -145,6 +145,50 @@ class SqlUtilitySpec extends SparkSpec {
     } finally spark.conf.unset(OptionsHint.ConfKey)
   }
 
+  test("OPTIONS hint on the table of a MATCH_RECOGNIZE, CUMULATE or early-fire statement") {
+    val dir = freshDir("opthint6")
+    val s = spark
+    import s.implicits._
+    def t(sec: Int) = new java.sql.Timestamp(sec * 1000L)
+    Seq((1L, t(1), "signup", 2.0), (1L, t(2), "purchase", 3.0), (1L, t(12), "signup", 5.0),
+      (1L, t(13), "purchase", 7.0), (2L, t(4), "signup", 1.0), (2L, t(5), "view", 4.0))
+      .toDF("user_id", "ts", "event_type", "value")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    spark.conf.set(OptionsHint.ConfKey, "true")
+    spark.sql(s"""CREATE TABLE hint_ev6 (user_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE)
+                  WITH ('connector' = 'filesystem', 'path' = '$dir', 'format' = 'parquet')""")
+    // each statement with FROM hint_ev6 HINT: plain, hinted, hinted + alias
+    def sameRows(stmt: String): Unit = {
+      def rows(hint: String) = spark.sql(stmt.replace("HINT", hint)).collect().map(_.toSeq).toSeq
+      val plain = rows("")
+      assert(plain.nonEmpty, stmt)
+      assert(rows("/*+ OPTIONS('k' = 'v') */") == plain, stmt)
+      assert(rows("/*+ OPTIONS('k' = 'v') */ AS e") == plain, stmt)
+    }
+    try {
+      sameRows(
+        """SELECT user_id, start_ts, end_ts, n_rows FROM hint_ev6 HINT MATCH_RECOGNIZE (
+             PARTITION BY user_id ORDER BY ts ONE ROW PER MATCH
+             AFTER MATCH SKIP PAST LAST ROW PATTERN (A B)
+             DEFINE A AS event_type = 'signup', B AS event_type = 'purchase'
+           ) ORDER BY user_id, start_ts""")
+      sameRows(
+        """SELECT CUMULATE_START(ts, INTERVAL '10' SECOND, INTERVAL '20' SECOND) AS w_start,
+                  CUMULATE_END(ts, INTERVAL '10' SECOND, INTERVAL '20' SECOND) AS w_end,
+                  user_id, count(*) AS n, sum(value) AS sv
+           FROM hint_ev6 HINT
+           GROUP BY CUMULATE(ts, INTERVAL '10' SECOND, INTERVAL '20' SECOND), user_id
+           ORDER BY w_start, w_end, user_id""")
+      spark.conf.set(EmitStrategy.DelayConf, "5 seconds")
+      try sameRows(
+        """SELECT TUMBLE_START(ts, INTERVAL '10' SECOND) AS w_start, user_id,
+                  count(*) AS n, sum(value) AS sv
+           FROM hint_ev6 HINT GROUP BY TUMBLE(ts, INTERVAL '10' SECOND), user_id
+           ORDER BY w_start, user_id, fire_time""")
+      finally spark.conf.unset(EmitStrategy.DelayConf)
+    } finally spark.conf.unset(OptionsHint.ConfKey)
+  }
+
   test("OPTIONS hint on an unregistered QUALIFIED reference is a pointed error, not broken SQL") {
     spark.conf.set(OptionsHint.ConfKey, "true")
     try {

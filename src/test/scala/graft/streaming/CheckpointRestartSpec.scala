@@ -341,6 +341,45 @@ class CheckpointRestartSpec extends SparkSpec {
       s"pending groups and frame rows must survive the restart: $rows")
   }
 
+  test("count-tumbling windows: a half-full window survives a restart, each window emits once") {
+    // the state is the open window's (id, count, max, last id), not a row
+    // buffer: the restarted query must finish key 1's second window and
+    // key 2's first from the restored counts, and replay no closed window
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("ckpt_count").toString
+    val in = s"$root/in"; val out = s"$root/out"; val ckpt = s"$root/ckpt"
+    new java.io.File(in).mkdirs()
+    val schema = org.apache.spark.sql.Encoders.product[KeyedRow].schema
+
+    def startQuery() = StatefulOps.countTumblingWindows(
+        s.readStream.schema(schema).json(s"$in/*").as[KeyedRow], 3)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    def addFile(name: String, rows: KeyedRow*): Unit =
+      rows.toDS().toJSON.coalesce(1).write.mode("append").text(s"$in/$name")
+    def emitted() = s.read.parquet(out).as[CountWindowEmit].collect().toSeq
+      .sortBy(e => (e.key, e.win_id))
+    def ev(key: Long, id: Long, value: Double) = KeyedRow(key, id * 1000L, id, "a", value)
+
+    val phase1 = Seq(ev(1, 1, 5.0), ev(1, 2, 9.0), ev(1, 3, 1.0), ev(1, 4, 7.0),
+      ev(2, 10, 3.0), ev(2, 11, 8.0))
+    val phase2 = Seq(ev(1, 5, 2.0), ev(1, 6, 4.0), ev(1, 7, 6.0), ev(2, 12, 1.0))
+    val q1 = startQuery()
+    try { addFile("f1", phase1: _*); q1.processAllAvailable() } finally q1.stop()
+    assert(emitted() == Seq(CountWindowEmit(1, 0, 3, 9.0, 3)),
+      "only key 1's first window is full before the stop")
+
+    val q2 = startQuery()
+    try { addFile("f2", phase2: _*); q2.processAllAvailable() } finally q2.stop()
+    val uninterrupted = StatefulOps.countTumblingWindows((phase1 ++ phase2).toDS(), 3)
+      .collect().toSeq.sortBy(e => (e.key, e.win_id))
+    assert(uninterrupted == Seq(CountWindowEmit(1, 0, 3, 9.0, 3),
+      CountWindowEmit(1, 1, 3, 7.0, 6), CountWindowEmit(2, 0, 3, 8.0, 12)))
+    assert(emitted() == uninterrupted, s"the restart must continue the open windows: ${emitted()}")
+  }
+
   test("round 10: retractable Top-N promotes a pre-restart HIDDEN row after restore") {
     // the ordered-index state is the key's FULL (id -> value) map, not just
     // the visible top-N: a post-restart retraction of a top occupant must

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The bounded-memory batch path: SortedScan.perKeyOrdered replaces per-key
   * `toArray.sortBy` group materialization with a spillable partition sort +
-  * boundary scan. The skew test feeds ONE key with 10⁶ rows through the CEP
-  * NFA and the rolling aggregates — under group materialization that key
-  * would buffer all 10⁶ rows on one thread; under the scan, per-key state is
-  * the active run set / rolling counters only. */
+  * boundary scan, and every keyed fold runs on it for bounded input. The
+  * skew test feeds ONE key with 10⁶ rows through the CEP NFA and the
+  * rolling aggregates — under group materialization that key would buffer
+  * all 10⁶ rows on one thread; under the scan, per-key state is the active
+  * run set / rolling counters only. */
 class SortedScanSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,6 +32,27 @@ class SortedScanSpec extends SparkSpec {
     assert(plan.toLowerCase.contains("sort"), plan)
     assert(plan.contains("MapPartitions"), plan)
     assert(!plan.contains("FlatMapGroups"), plan)
+  }
+
+  test("plan shape: each keyed fold on a bounded input plans the scan, no FlatMapGroupsWithState") {
+    val multiKey = spark.range(100).select(
+      (col("id") % 7).as("key"), col("id").as("ts"), col("id").as("id"),
+      lit("a").as("kind"), lit(0.0).as("value")).as[KeyedRow]
+    val ops: Seq[(String, org.apache.spark.sql.Dataset[_])] = Seq(
+      "runningSumPerKey" -> StatefulOps.runningSumPerKey(multiKey),
+      "boundedRowsPrecedingPerKey" -> StatefulOps.boundedRowsPrecedingPerKey(multiKey, 3),
+      "boundedRangePrecedingPerKey" -> StatefulOps.boundedRangePrecedingPerKey(multiKey, 10L),
+      "countTumblingWindows" -> StatefulOps.countTumblingWindows(multiKey, 3),
+      "countSlidingWindows" -> StatefulOps.countSlidingWindows(multiKey, 3, 2),
+      "dynamicGapSessions" -> StatefulOps.dynamicGapSessions(multiKey, _ => 5L),
+      "triggeredTumbleWindows" -> Triggers.triggeredTumbleWindows(multiKey, 10L,
+        Triggers.CountTrigger(2), Triggers.CountEvictor(1)))
+    ops.foreach { case (name, ds) =>
+      val logical = ds.queryExecution.optimizedPlan.toString
+      val physical = ds.queryExecution.executedPlan.toString
+      assert(!logical.contains("FlatMapGroupsWithState"), s"$name:\n$logical")
+      assert(physical.contains("MapPartitions") && !physical.contains("MapGroups"), s"$name:\n$physical")
+    }
   }
 
   test("group boundaries: unread tails drained, early-stop callbacks isolated") {
@@ -63,34 +85,15 @@ class SortedScanSpec extends SparkSpec {
   test("skew: 10^6 rows on one key through running sum / count windows / sessions") {
     val ds = skewed(1000000)
     // running sum: last row's accumulator = sum of all values
-    val last = StatefulOps.runningSumBatch(ds).orderBy(desc("id")).limit(1).collect()(0)
+    val last = StatefulOps.runningSumPerKey(ds).orderBy(desc("id")).limit(1).collect()(0)
     val expect = (0L until 1000000L).map(i => (i % 100).toDouble).sum
     assert(math.abs(last.run_sum - expect) < 1e-6)
     // count-tumbling(1000): exactly n/1000 full windows, max value 99
-    val wins = StatefulOps.countTumblingBatch(ds, 1000)
+    val wins = StatefulOps.countTumblingWindows(ds, 1000)
     assert(wins.count() == 1000L)
     assert(wins.agg(min("max_value"), max("n_events")).as[(Double, Long)].collect()(0) == ((99.0, 1000L)))
     // dynamic sessions with constant 1s gap and 1s spacing: a single session
-    val sess = StatefulOps.dynamicGapSessionsBatch(ds, _ => 1000000L).collect()
+    val sess = StatefulOps.dynamicGapSessions(ds, _ => 1000000L).collect()
     assert(sess.length == 1 && sess(0).n_events == 1000000L)
-  }
-
-  test("batch scan variants agree with the streaming operators on multi-key data") {
-    val rows = (for (k <- 1 to 5; i <- 1 to 40) yield
-      KeyedRow(k.toLong, (i * 7 % 13) * 1000000L + i, (k * 1000 + i).toLong,
-        if (i % 3 == 0) "error" else "view", (i * 31 % 97).toDouble)).toDS()
-    val a = StatefulOps.runningSumBatch(rows).collect().sortBy(r => (r.key, r.id)).toSeq
-    val b = StatefulOps.runningSumPerKey(rows).collect().sortBy(r => (r.key, r.id)).toSeq
-    assert(a == b)
-    val c = StatefulOps.countSlidingBatch(rows, 10, 5).collect().sortBy(r => (r.key, r.win_id)).toSeq
-    val d = StatefulOps.countSlidingWindows(rows, 10, 5).collect().sortBy(r => (r.key, r.win_id)).toSeq
-    assert(c == d)
-    val e = Triggers.triggeredTumbleWindowsBatch(rows, 3600L * 1000000L,
-      Triggers.CountTrigger(5), Triggers.CountEvictor(3)).collect()
-      .sortBy(r => (r.key, r.win_start, r.fire_seq)).toSeq
-    val f = Triggers.triggeredTumbleWindows(rows, 3600L * 1000000L,
-      Triggers.CountTrigger(5), Triggers.CountEvictor(3)).collect()
-      .sortBy(r => (r.key, r.win_start, r.fire_seq)).toSeq
-    assert(e == f)
   }
 }

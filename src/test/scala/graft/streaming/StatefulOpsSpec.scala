@@ -100,10 +100,14 @@ class StatefulOpsSpec extends SparkSpec {
       in.addData(rows.drop(7): _*); q.processAllAvailable()
       val streamed = s.sql("select * from rowsb").as[RunningEmit].collect()
         .sortBy(_.id).toSeq
-      val batch = StatefulOps.boundedRowsPrecedingBatch(rows.toDS(), 2)
-        .collect().sortBy(_.id).toSeq
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-      assert(math.abs(batch.last.run_sum - 3.3) < 1e-9) // exact decimal 1.0+1.1+1.2
+      // the frame of row i is rows i-2..i, summed as exact decimals
+      val expected = rows.indices.map { i =>
+        RunningEmit(1, rows(i).id,
+          rows.slice(math.max(0, i - 2), i + 1)
+            .map(r => BigDecimal(r.value).setScale(2, BigDecimal.RoundingMode.HALF_UP)).sum.toDouble)
+      }
+      assert(streamed == expected, s"stream $streamed != $expected")
+      assert(streamed.last.run_sum == 3.3) // exact decimal 1.0+1.1+1.2
     } finally q.stop()
   }
 
@@ -132,13 +136,11 @@ class StatefulOpsSpec extends SparkSpec {
       in.addData(row(99, 9000 * sec, 1000, value = 0.0)); q.processAllAvailable()
       val streamed = s.sql("select * from rangeb where key = 1").as[RunningEmit]
         .collect().sortBy(_.id).toSeq
-      val batch = StatefulOps.boundedRangePrecedingBatch(data.toDS(), 15 * sec)
-        .collect().sortBy(_.id).toSeq
-      assert(streamed == batch, s"stream $streamed != batch $batch")
-      // spot semantics: peers 4 & 5 share [15 s, 30 s] = 3+4+5; id 6 sees
-      // [25 s, 40 s] = 4+5+6
-      assert(batch.filter(r => r.id == 4 || r.id == 5).map(_.run_sum).toSet == Set(12.0))
-      assert(batch.last.run_sum == 15.0)
+      // frames: id 3 (20 s, arrived late) sees [5 s, 20 s] = 1+2+3; peers 4
+      // & 5 share [15 s, 30 s] = 3+4+5; id 6 sees [25 s, 40 s] = 4+5+6
+      assert(streamed == Seq(RunningEmit(1, 1, 1.0), RunningEmit(1, 2, 3.0),
+        RunningEmit(1, 3, 6.0), RunningEmit(1, 4, 12.0), RunningEmit(1, 5, 12.0),
+        RunningEmit(1, 6, 15.0)), s"stream $streamed")
     } finally q.stop()
   }
 
@@ -180,18 +182,5 @@ class StatefulOpsSpec extends SparkSpec {
       val after = s.sql("select * from dyn where key = 1").count()
       assert(after == 2, s"late row re-opened a closed session ($after rows)")
     } finally q.stop()
-  }
-
-  test("dynamicGapSessions on a bounded Dataset equals the batch variant") {
-    val s = spark
-    import s.implicits._
-    val sec = 1000000L
-    val data = Seq(
-      row(1, 1 * sec, 1, value = 5.0), row(1, 3 * sec, 2, value = 7.0),
-      row(1, 30 * sec, 3, value = 2.0), row(2, 4 * sec, 4, value = 9.0)).toDS()
-    val gap: KeyedRow => Long = r => if (r.value < 6) 5 * sec else 20 * sec
-    val a = StatefulOps.dynamicGapSessions(data, gap).collect().sortBy(e => (e.key, e.win_id)).toSeq
-    val b = StatefulOps.dynamicGapSessionsBatch(data, gap).collect().sortBy(e => (e.key, e.win_id)).toSeq
-    assert(a == b && a.nonEmpty)
   }
 }
