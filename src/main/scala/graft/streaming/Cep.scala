@@ -415,7 +415,7 @@ object Cep {
   def matchBatch(rows: Dataset[KeyedRow], pattern: Pattern,
                  prePartitionedByKey: Boolean = false): Dataset[Match] = {
     import rows.sparkSession.implicits._
-    SortedScan.perKeyOrdered(rows, prePartitionedByKey) { (key, it) =>
+    SortedScan.perKeyOrdered(rows, KeyOrder.rows, prePartitionedByKey) { (key, it) =>
       var st = CepState(Nil, Nil, Long.MinValue, Nil)
       val main = it.flatMap { r => val (next, ms) = feed(pattern, key, st, r); st = next; ms }
       // end of bounded input: no later row can violate the absence — all

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Changelog / RowKind adapter — SURVEY.md §1.1 and §4.4's hard part.
   *
@@ -20,16 +20,40 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   *    filter on the tag.
   *  - upsert sinks: `foreachBatch` + merge keyed on the primary key;
   *    demonstrated in ChangelogSpec with an in-memory "table".
+  *
+  * The changelog operators (`keyedChangelog`, `retractingAgg`,
+  * `retractableTopN` and the two mini-batch forms) are [[KeyedFold]]s over
+  * [[Change]]s or [[KeyedRow]]s: one per-row definition each, run on the
+  * sorted scan for a bounded Dataset and on `flatMapGroupsWithState` for a
+  * stream, in the order their [[KeyOrder]] declares.
   */
 object Changelog {
 
   case class Change(kind: String, key: Long, id: Long, ts: Long, value: Double)
 
+  private val retractFirst = Term[Change](when(col("kind").isin("-U", "-D"), 0L).otherwise(1L),
+    c => if (c.kind == "-U" || c.kind == "-D") 0L else 1L)
+  /** Changes by `key`, in (ts, retract before accumulate, id) order. */
+  private val byKey = KeyOrder[Change](Term(col("key"), _.key), Term(col("ts"), _.ts),
+    retractFirst, Term(col("id"), _.id))
+  /** Changes by their value's decile bucket (values in micros), ties
+    * broken by (retract before accumulate, key, id). */
+  private val byBucket = KeyOrder[Change](
+    Term(pmod(floor(col("value") / 1e6), lit(10L)), c => ((math.floor(c.value / 1e6).toLong % 10) + 10) % 10),
+    Term(col("ts"), _.ts), retractFirst, Term(col("key"), _.key), Term(col("id"), _.id))
+
   /** Update-mode keyed changelog: for every arriving row that becomes the
     * new "last row" of its key, emit (-U previous) then (+U new) — or (+I)
     * if the key is new. Late/stale rows emit nothing. */
-  def keyedChangelog(rows: Dataset[KeyedRow]): Dataset[Change] =
-    keyedChangelogImpl(rows, miniBatch = false)
+  def keyedChangelog(rows: Dataset[KeyedRow]): Dataset[Change] = {
+    import rows.sparkSession.implicits._
+    KeyedFold.run(rows, new LastRowFold {
+      def step(key: Long, cur: LastRowEmit, r: KeyedRow) = {
+        val next = latest(key, cur, r)
+        (next, changes(key, cur, next))
+      }
+    })
+  }
 
   /** Mini-batch variant (the reference's
     * operators/deduplicate/ProcTimeMiniBatchDeduplicateKeepLastRowFunction
@@ -40,41 +64,30 @@ object Changelog {
     * every batch boundary (family 22 proves it on seeded streams) while
     * shrinking the emitted changelog from O(input rows) to O(touched
     * keys) per batch — the downstream-volume lever at 100 TB. */
-  def keyedChangelogMiniBatch(rows: Dataset[KeyedRow]): Dataset[Change] =
-    keyedChangelogImpl(rows, miniBatch = true)
-
-  private def keyedChangelogImpl(rows: Dataset[KeyedRow],
-                                 miniBatch: Boolean): Dataset[Change] = {
+  def keyedChangelogMiniBatch(rows: Dataset[KeyedRow]): Dataset[Change] = {
     import rows.sparkSession.implicits._
-    rows.groupByKey(_.key)
-      .flatMapGroupsWithState[LastRowEmit, Change](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          val out = scala.collection.mutable.ListBuffer.empty[Change]
-          val entry = state.getOption.orNull
-          var cur = entry
-          it.toArray.sortBy(r => (r.ts, r.id)).foreach { r =>
-            if (cur == null) {
-              cur = LastRowEmit(key, r.id, r.ts, r.value)
-              if (!miniBatch) out += Change("+I", key, r.id, r.ts, r.value)
-            } else if (r.ts > cur.ts || (r.ts == cur.ts && r.id > cur.id)) {
-              if (!miniBatch) out += Change("-U", key, cur.id, cur.ts, cur.value)
-              cur = LastRowEmit(key, r.id, r.ts, r.value)
-              if (!miniBatch) out += Change("+U", key, r.id, r.ts, r.value)
-            } // stale row: no change
-          }
-          if (miniBatch && (cur ne entry)) {
-            if (entry == null)
-              out += Change("+I", key, cur.id, cur.ts, cur.value)
-            else {
-              out += Change("-U", key, entry.id, entry.ts, entry.value)
-              out += Change("+U", key, cur.id, cur.ts, cur.value)
-            }
-          }
-          state.update(cur)
-          out.iterator
-      }
+    KeyedFold.run(rows, new LastRowFold {
+      def step(key: Long, cur: LastRowEmit, r: KeyedRow) = (latest(key, cur, r), Nil)
+      override def finish(key: Long, entry: LastRowEmit, cur: LastRowEmit) =
+        (cur, changes(key, entry, cur))
+    })
   }
+
+  /** A key's last row by (ts, id); `noRow` before its first row. */
+  private abstract class LastRowFold extends RowFold[LastRowEmit, Change] {
+    def init = noRow
+  }
+  private val noRow = LastRowEmit(0L, Long.MinValue, Long.MinValue, 0.0)
+  private def latest(key: Long, cur: LastRowEmit, r: KeyedRow): LastRowEmit =
+    if (cur == noRow || r.ts > cur.ts || (r.ts == cur.ts && r.id > cur.id))
+      LastRowEmit(key, r.id, r.ts, r.value)
+    else cur // stale row: no change
+  /** The changes that take a key's last row from `before` to `after`. */
+  private def changes(key: Long, before: LastRowEmit, after: LastRowEmit): List[Change] =
+    if (after == before) Nil
+    else if (before == noRow) List(Change("+I", key, after.id, after.ts, after.value))
+    else List(Change("-U", key, before.id, before.ts, before.value),
+      Change("+U", key, after.id, after.ts, after.value))
 
   /** DropUpdateBefore (operators/misc/DropUpdateBeforeFunction.java):
     * retain only rows that add/overwrite (+I/+U), dropping -U retractions —
@@ -91,13 +104,46 @@ object Changelog {
   /** `topIds`/`topVals` cache the current top-N (parallel lists — the
     * reference's TopNBuffer) so emission diffs against the previous
     * occupants without re-deriving them; `rows` is the key's full
-    * (id → value) map, rebuilt into an ordered index per invocation (see
-    * retractableTopN) so every change applies in O(log m). */
+    * (id → value) map. This is what the state store keeps; a bundle works
+    * on it as a [[RankWork]]. */
   case class RankState(rows: Map[Long, Double], topIds: List[Long],
                        topVals: List[Double], nextSeq: Long)
 
+  /** Rank order: value DESC, id ASC — a strict total order (ids unique),
+    * realized as a comparator so an ORDERED index can maintain it. */
+  private val rankOrder = new java.util.Comparator[(Double, Long)] with Serializable {
+    def compare(a: (Double, Long), b: (Double, Long)): Int = {
+      val byVal = java.lang.Double.compare(b._1, a._1) // DESC
+      if (byVal != 0) byVal else java.lang.Long.compare(a._2, b._2) // ASC
+    }
+  }
+
+  /** [[retractableTopN]]'s working state: the key's (id → value) map, the
+    * same rows in an ORDERED index (the reference's sorted-map state,
+    * RetractableTopNFunction.java:83 `treeMap`), the current top-N and the
+    * emission seq. A step updates it in place, so every change is
+    * O(log m) and the top-N read is O(n) off the head — no full-map rescan
+    * anywhere. The earlier partial-selection repair was O(m) per
+    * top-occupant change, and the GLOBAL sort-limit (one key whose map is
+    * the whole stream) paid it constantly: the sf10 probe measured 150 s /
+    * 198x data-scaling on exactly that; the tree form is ~20x faster there
+    * and scales O(changes · log m). Its state encoder stores it as a
+    * [[RankState]] and builds the index again when a bundle loads it:
+    * O(m log m) once per key per micro-batch, never per row. */
+  private[streaming] final class RankWork(st: RankState) {
+    val idToVal = new java.util.HashMap[java.lang.Long, java.lang.Double]()
+    val index = new java.util.TreeSet[(Double, Long)](rankOrder)
+    var top: Seq[(Long, Double)] = st.topIds.zip(st.topVals)
+    var seq: Long = st.nextSeq
+    st.rows.foreach { case (id, v) => idToVal.put(id, v); index.add((v, id)) }
+
+    def state: RankState = RankState(idToVal.asScala.map { case (id, v) => id.longValue -> v.doubleValue }
+      .toMap, top.map(_._1).toList, top.map(_._2).toList, seq)
+  }
+
   /** Built once per JVM — see [[StateEncoder]]. */
-  private implicit val rankStateEncoder: Encoder[RankState] = StateEncoder[RankState]
+  private implicit val rankWorkEncoder: Encoder[RankWork] =
+    StateEncoder.stored[RankWork, RankState](_.state, new RankWork(_))
 
   /** Retractable Top-N — Top-N over a RETRACTING changelog input (the
     * reference's RetractableTopNFunction,
@@ -116,99 +162,52 @@ object Changelog {
     * rank table (the upsert-sink contract). */
   def retractableTopN(changes: Dataset[Change], n: Int): Dataset[RankChange] = {
     import changes.sparkSession.implicits._
-    // rank order: value DESC, id ASC — a strict total order (ids unique),
-    // realized as a comparator so an ORDERED index can maintain it
-    val rankOrder = new java.util.Comparator[(Double, Long)] with Serializable {
-      def compare(a: (Double, Long), b: (Double, Long)): Int = {
-        val byVal = java.lang.Double.compare(b._1, a._1) // DESC
-        if (byVal != 0) byVal else java.lang.Long.compare(a._2, b._2) // ASC
+    KeyedFold.run(changes, new KeyedFold[Change, RankWork, RankChange](byKey) {
+      def init = new RankWork(RankState(Map.empty, Nil, Nil, 0L))
+      private def topN(w: RankWork): Seq[(Long, Double)] =
+        w.index.iterator().asScala.take(n).map { case (v, id) => (id, v) }.toVector
+      private def diff(key: Long, w: RankWork, before: Seq[(Long, Double)],
+                       after: Seq[(Long, Double)]): List[RankChange] =
+        (0 until n).toList.flatMap { r =>
+          def change(kind: String, occupant: (Long, Double)) = {
+            w.seq += 1; RankChange(kind, key, r + 1, occupant._1, occupant._2, w.seq)
+          }
+          (before.lift(r), after.lift(r)) match {
+            case (None, Some(a)) => List(change("+I", a))
+            case (Some(b), Some(a)) if b != a => List(change("-U", b), change("+U", a))
+            case (Some(b), None) => List(change("-D", b))
+            case _ => Nil // rank occupant unchanged
+          }
+        }
+      def step(key: Long, w: RankWork, c: Change) = {
+        // O(1) head guard: the head (top-N) can only change when the
+        // inserted or removed key sorts at-or-before the current floor
+        // (the N-th key) — two comparator calls decide it, so the
+        // dominant below-floor change never materializes or compares a
+        // top buffer (measured: the per-change topN()+equality alone held
+        // the global sort-limit at 95 s on the sf10 stream)
+        def inHead(k: (Double, Long)): Boolean =
+          w.top.length < n || rankOrder.compare(k, (w.top.last._2, w.top.last._1)) <= 0
+        val affected = c.kind match {
+          case "+I" | "+U" =>
+            val old = w.idToVal.put(c.id, c.value)
+            if (old != null) w.index.remove((old.doubleValue, c.id))
+            w.index.add((c.value, c.id))
+            inHead((c.value, c.id)) || (old != null && inHead((old.doubleValue, c.id)))
+          case "-U" | "-D" =>
+            val old = w.idToVal.remove(c.id)
+            if (old != null) w.index.remove((old.doubleValue, c.id))
+            old != null && inHead((old.doubleValue, c.id))
+          case other => throw new IllegalArgumentException(s"RowKind $other")
+        }
+        if (!affected) (w, Nil)
+        else {
+          val after = topN(w)
+          if (after == w.top) (w, Nil)
+          else { val out = diff(key, w, w.top, after); w.top = after; (w, out) }
+        }
       }
-    }
-    changes.groupByKey(_.key)
-      .flatMapGroupsWithState[RankState, RankChange](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          // The key's full (id -> value) map rebuilt per invocation into an
-          // ORDERED index (the reference's sorted-map state,
-          // RetractableTopNFunction.java:83 `treeMap`): every change is then
-          // O(log m) and the top-N read is O(n) off the head — NO full-map
-          // rescan anywhere. The earlier partial-selection repair was O(m)
-          // per top-occupant change, and the GLOBAL sort-limit (one key
-          // whose map is the whole stream) paid it constantly: the sf10
-          // probe measured 150 s / 198x data-scaling on exactly that; the
-          // tree form is ~20x faster there and scales O(changes · log m).
-          // Rebuild cost is O(m log m) once per key per micro-batch —
-          // amortized over the batch's changes, and zero on the first batch.
-          val prior = state.getOption
-          var seq = prior.map(_.nextSeq).getOrElse(0L)
-          def next(): Long = { seq += 1; seq }
-          val idToVal = new java.util.HashMap[java.lang.Long, java.lang.Double]()
-          val index = new java.util.TreeMap[(Double, Long), java.lang.Long](rankOrder)
-          prior.foreach(_.rows.foreach { case (id, v) =>
-            idToVal.put(id, v); index.put((v, id), id): Unit
-          })
-          var top: Seq[(Long, Double)] =
-            prior.map(st => st.topIds.zip(st.topVals)).getOrElse(Nil)
-          val out = scala.collection.mutable.ListBuffer.empty[RankChange]
-          def topN(): Seq[(Long, Double)] = {
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-            val iter = index.keySet().iterator()
-            while (buf.length < n && iter.hasNext) {
-              val (v, id) = iter.next(); buf += ((id, v))
-            }
-            buf.toSeq
-          }
-          def emitDiff(before: Seq[(Long, Double)],
-                       after: Seq[(Long, Double)]): Unit =
-            (0 until n).foreach { r =>
-              (before.lift(r), after.lift(r)) match {
-                case (None, Some((id, v))) =>
-                  out += RankChange("+I", key, r + 1, id, v, next())
-                case (Some((oid, ov)), Some((nid, nv))) if oid != nid || ov != nv =>
-                  out += RankChange("-U", key, r + 1, oid, ov, next())
-                  out += RankChange("+U", key, r + 1, nid, nv, next())
-                case (Some((oid, ov)), None) =>
-                  out += RankChange("-D", key, r + 1, oid, ov, next())
-                case _ => // rank occupant unchanged
-              }
-            }
-          val ordered = it.toArray.sortBy(c =>
-            (c.ts, if (c.kind == "-U" || c.kind == "-D") 0 else 1, c.id))
-          // O(1) head guard: the head (top-N) can only change when the
-          // inserted or removed key sorts at-or-before the current floor
-          // (the N-th key) — two comparator calls decide it, so the
-          // dominant below-floor change never materializes or compares a
-          // top buffer (measured: the per-change topN()+equality alone held
-          // the global sort-limit at 95 s on the sf10 stream)
-          def inHead(key: (Double, Long)): Boolean =
-            top.length < n || rankOrder.compare(key, (top.last._2, top.last._1)) <= 0
-          ordered.foreach { c =>
-            val affected = c.kind match {
-              case "+I" | "+U" =>
-                val old = idToVal.put(c.id, c.value)
-                if (old != null) index.remove((old.doubleValue, c.id))
-                index.put((c.value, c.id), c.id)
-                inHead((c.value, c.id)) ||
-                  (old != null && inHead((old.doubleValue, c.id)))
-              case "-U" | "-D" =>
-                val old = idToVal.remove(c.id)
-                if (old != null) index.remove((old.doubleValue, c.id))
-                old != null && inHead((old.doubleValue, c.id))
-              case other => throw new IllegalArgumentException(s"RowKind $other")
-            }
-            if (affected) {
-              val after = topN()
-              if (after != top) { emitDiff(top, after); top = after }
-            }
-          }
-          val rows = {
-            val b = Map.newBuilder[Long, Double]
-            idToVal.forEach((id, v) => b += (id.longValue -> v.doubleValue))
-            b.result()
-          }
-          state.update(RankState(rows, top.map(_._1).toList, top.map(_._2).toList, seq))
-          out.iterator
-      }
+    })
   }
 
   private[streaming] case class AggState(count: Long, sumMicros: Long, nextSeq: Long)
@@ -228,8 +227,17 @@ object Changelog {
     * the final accumulator depend on arrival history; integer arithmetic
     * makes it equal the plain sum over final rows, which is what the
     * composed-pipeline oracle asserts. `value` in and out is micros. */
-  def retractingAgg(changes: Dataset[Change]): Dataset[Change] =
-    retractingAggImpl(changes, miniBatch = false)
+  def retractingAgg(changes: Dataset[Change]): Dataset[Change] = {
+    import changes.sparkSession.implicits._
+    KeyedFold.run(changes, new AggFold {
+      def step(bucket: Long, st: AggState, c: Change) = {
+        val next = accumulate(st, c)
+        if (st.count == 0L) emit(bucket, next, "+I" -> next.sumMicros)
+        else if (next.count == 0L) emit(bucket, next, "-D" -> st.sumMicros)
+        else emit(bucket, next, "-U" -> st.sumMicros, "+U" -> next.sumMicros)
+      }
+    })
+  }
 
   /** Mini-batch variant (MiniBatchGroupAggFunction.java — fold the whole
     * micro-batch into the accumulator first, then emit at most ONE change
@@ -238,54 +246,34 @@ object Changelog {
     * didn't). Fold-equivalent to [[retractingAgg]] at every batch boundary
     * (family 22); shrinks the emitted changelog from O(input changes) to
     * O(touched groups) per batch. */
-  def retractingAggMiniBatch(changes: Dataset[Change]): Dataset[Change] =
-    retractingAggImpl(changes, miniBatch = true)
-
-  private def retractingAggImpl(changes: Dataset[Change],
-                                miniBatch: Boolean): Dataset[Change] = {
+  def retractingAggMiniBatch(changes: Dataset[Change]): Dataset[Change] = {
     import changes.sparkSession.implicits._
-    def bucketOf(c: Change): Long = ((math.floor(c.value / 1e6).toLong % 10) + 10) % 10
-    changes.groupByKey(bucketOf)
-      .flatMapGroupsWithState[AggState, Change](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (bucket, it, state) =>
-          var st = state.getOption.getOrElse(AggState(0L, 0L, 0L))
-          val entry = st
-          val out = scala.collection.mutable.ListBuffer.empty[Change]
-          def emit(kind: String, sumMicros: Long): Unit = {
-            st = st.copy(nextSeq = st.nextSeq + 1)
-            out += Change(kind, 0L, bucket, st.nextSeq, sumMicros.toDouble)
-          }
-          it.toArray
-            .sortBy(c => (c.ts, if (c.kind == "-U" || c.kind == "-D") 0 else 1, c.key, c.id))
-            .foreach { c =>
-              val before = st
-              val d = c.value.toLong
-              c.kind match {
-                case "+I" | "+U" =>
-                  st = st.copy(count = st.count + 1, sumMicros = st.sumMicros + d)
-                case "-U" | "-D" =>
-                  st = st.copy(count = st.count - 1, sumMicros = st.sumMicros - d)
-                case other => throw new IllegalArgumentException(s"RowKind $other")
-              }
-              if (!miniBatch) {
-                if (before.count == 0L) emit("+I", st.sumMicros)
-                else if (st.count == 0L) emit("-D", before.sumMicros)
-                else { emit("-U", before.sumMicros); emit("+U", st.sumMicros) }
-              }
-            }
-          if (miniBatch) {
-            if (entry.count == 0L && st.count > 0L) emit("+I", st.sumMicros)
-            else if (entry.count > 0L && st.count == 0L) emit("-D", entry.sumMicros)
-            else if (entry.count > 0L && st.count > 0L &&
-                     st.sumMicros != entry.sumMicros) {
-              emit("-U", entry.sumMicros); emit("+U", st.sumMicros)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
+    KeyedFold.run(changes, new AggFold {
+      def step(bucket: Long, st: AggState, c: Change) = (accumulate(st, c), Nil)
+      override def finish(bucket: Long, entry: AggState, st: AggState) =
+        if (entry.count == 0L && st.count > 0L) emit(bucket, st, "+I" -> st.sumMicros)
+        else if (entry.count > 0L && st.count == 0L) emit(bucket, st, "-D" -> entry.sumMicros)
+        else if (entry.count > 0L && st.count > 0L && st.sumMicros != entry.sumMicros)
+          emit(bucket, st, "-U" -> entry.sumMicros, "+U" -> st.sumMicros)
+        else (st, Nil)
+    })
   }
+
+  /** A value bucket's (count, sum) accumulator over changes keyed by
+    * bucket. Its output is the bucket's changelog, with the emission seq
+    * in `ts` and the bucket in `id`. */
+  private abstract class AggFold extends KeyedFold[Change, AggState, Change](byBucket) {
+    def init = AggState(0L, 0L, 0L)
+  }
+  private def accumulate(st: AggState, c: Change): AggState = c.kind match {
+    case "+I" | "+U" => st.copy(count = st.count + 1, sumMicros = st.sumMicros + c.value.toLong)
+    case "-U" | "-D" => st.copy(count = st.count - 1, sumMicros = st.sumMicros - c.value.toLong)
+    case other => throw new IllegalArgumentException(s"RowKind $other")
+  }
+  private def emit(bucket: Long, st: AggState, kinds: (String, Long)*): (AggState, List[Change]) =
+    (st.copy(nextSeq = st.nextSeq + kinds.size), kinds.toList.zipWithIndex.map {
+      case ((kind, sumMicros), i) => Change(kind, 0L, bucket, st.nextSeq + i + 1, sumMicros.toDouble)
+    })
 
   /** Fold a rank changelog into the final rank table (the upsert merge on
     * (key, rnk) — what a sink keyed by rank position holds at the end). */
@@ -315,11 +303,11 @@ object Changelog {
 
   /** The CDC chain as ONE dataflow: upsert-source normalize (per-key
     * keep-last changelog) → retracting per-bucket aggregate → retractable
-    * top-`n` buckets. Three Append-mode flatMapGroupsWithState operators
-    * chain inside one Append query (none uses event-time state, so Spark's
-    * global-watermark correctness check has nothing to reject); each
-    * stage's state is checkpointed per micro-batch like a single-operator
-    * query's. `miniBatch` selects the mini-batch stage variants
+    * top-`n` buckets. On a stream the three keyed folds run as three
+    * Append-mode `flatMapGroupsWithState` operators chained inside one
+    * Append query (none uses event-time state, so Spark's global-watermark
+    * correctness check has nothing to reject); each stage's state is
+    * checkpointed per micro-batch like a single-operator query's. `miniBatch` selects the mini-batch stage variants
     * ([[keyedChangelogMiniBatch]], [[retractingAggMiniBatch]]). */
   def cdcChain(rows: Dataset[KeyedRow], n: Int, miniBatch: Boolean): Dataset[RankChange] =
     if (miniBatch) retractableTopN(retractingAggMiniBatch(keyedChangelogMiniBatch(rows)), n)

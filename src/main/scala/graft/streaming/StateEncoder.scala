@@ -1,9 +1,11 @@
 package graft.streaming
 
+import scala.reflect.{ClassTag, classTag}
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.Encoder
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.encoders.{Codec, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders.TransformingEncoder
 
 /** The state encoder of a keyed stateful operator, for a `val` that builds
   * it once per JVM.
@@ -22,5 +24,14 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
   * encoded schema and values are the plain product encoder's.
   * CodegenReuseSpec guards it. */
 private[streaming] object StateEncoder {
-  def apply[T <: Product : TypeTag]: Encoder[T] = ExpressionEncoder[T]().resolveAndBind()
+  def apply[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]().resolveAndBind()
+
+  /** A working state `W` that the state store keeps as `T`: the driver
+    * decodes a key's state when it loads it and encodes it when it stores
+    * it back, once per key per micro-batch. */
+  def stored[W: ClassTag, T: TypeTag](store: W => T, load: T => W): Encoder[W] = {
+    val codec = new Codec[W, T] { def encode(w: W) = store(w); def decode(t: T) = load(t) }
+    ExpressionEncoder(TransformingEncoder(classTag[W], ExpressionEncoder[T]().encoder,
+      () => codec)).resolveAndBind()
+  }
 }

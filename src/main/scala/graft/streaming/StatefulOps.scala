@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
@@ -9,10 +9,6 @@ import graft.Tables
   * consumes. `ts` is epoch micros (the TIMESTAMP(9)→µs degradation documented
   * in SURVEY.md §1.2). */
 case class KeyedRow(key: Long, ts: Long, id: Long, kind: String, value: Double)
-
-/** KeyedRow + materialized event-time column (watermark carrier). */
-case class SortRowW(key: Long, ts: Long, id: Long, kind: String, value: Double,
-                    ets: java.sql.Timestamp)
 
 /** One side of the unbounded two-stream join ("L" / "R"). */
 case class SidedRow(side: String, key: Long, ts: Long, id: Long, value: Double)
@@ -68,14 +64,18 @@ case class RunningEmit(key: Long, id: Long, run_sum: Double)
 case class CountWindowEmit(key: Long, win_id: Long, n_events: Long, max_value: Double, last_id: Long)
 
 /** Custom stateful operators re-expressing the reference's keyed-state
-  * streaming runtime on `flatMapGroupsWithState` (SURVEY.md §2.6 / §2.10).
+  * streaming runtime (SURVEY.md §2.6 / §2.10).
   *
   * Each operator runs identically on a bounded Dataset (how the driver's
   * oracle gate exercises it) and on a streaming Dataset (incremental state
   * across micro-batches — covered by the StatefulOpsSpec using
-  * MemoryStream). The OVER, count-window and dynamic-session operators are
-  * [[KeyedFold]]s: one per-row definition, run on the spillable sorted scan
-  * for bounded input (KeyedFoldSpec pins stream ≡ batch).
+  * MemoryStream). The OVER, count-window, dynamic-session and temporal-sort
+  * operators are [[KeyedFold]]s: one per-row definition, run on the
+  * spillable sorted scan for bounded input (KeyedFoldSpec pins stream ≡
+  * batch). The rest keep their own `flatMapGroupsWithState` bodies:
+  * Top-N and keep-last dedup are Update-mode operators and the fold
+  * driver is Append; the TTL dedup, the outer join and the late-side-output
+  * window run on processing time; the temporal joins take two inputs.
   *
   * Scale notes: state is per-key and O(N) bounded (Top-N keeps N rows, dedup
   * keeps 1, count-sliding windows keep n rows), so a 1000-executor run holds
@@ -162,7 +162,14 @@ object StatefulOps {
   // Each operator below is a per-key fold over its rows in (ts, id) order.
   // KeyedFold.run drives it on the spillable SortedScan for a bounded
   // Dataset and on flatMapGroupsWithState for a stream; the state is
-  // O(1)/O(frame)/O(pane) per key on both.
+  // O(1)/O(frame)/O(pane) per key on both. A state that holds a Vector has
+  // its encoder built once per JVM (StateEncoder).
+
+  private implicit val rowsFrameState: Encoder[(Vector[Double], java.math.BigDecimal)] =
+    StateEncoder[(Vector[Double], java.math.BigDecimal)]
+  private implicit val slidingState: Encoder[(Long, Vector[(Double, Long)])] =
+    StateEncoder[(Long, Vector[(Double, Long)])]
+  private implicit val pendingRows: Encoder[Vector[KeyedRow]] = StateEncoder[Vector[KeyedRow]]
 
   private def d2(v: Double) = java.math.BigDecimal.valueOf(v)
     .setScale(2, java.math.RoundingMode.HALF_UP)
@@ -175,7 +182,7 @@ object StatefulOps {
     * at any scale). State per key = the accumulator. */
   def runningSumPerKey(rows: Dataset[KeyedRow]): Dataset[RunningEmit] = {
     import rows.sparkSession.implicits._
-    KeyedFold.run(rows, new KeyedFold[java.math.BigDecimal, RunningEmit] {
+    KeyedFold.run(rows, new RowFold[java.math.BigDecimal, RunningEmit] {
       def init = zero2
       def step(key: Long, acc: java.math.BigDecimal, r: KeyedRow) = {
         val sum = acc.add(d2(r.value))
@@ -197,7 +204,7 @@ object StatefulOps {
   def boundedRowsPrecedingPerKey(rows: Dataset[KeyedRow],
                                  preceding: Int): Dataset[RunningEmit] = {
     import rows.sparkSession.implicits._
-    KeyedFold.run(rows, new KeyedFold[(Vector[Double], java.math.BigDecimal), RunningEmit] {
+    KeyedFold.run(rows, new RowFold[(Vector[Double], java.math.BigDecimal), RunningEmit] {
       def init = (Vector.empty[Double], zero2)
       def step(key: Long, s: (Vector[Double], java.math.BigDecimal), r: KeyedRow) = {
         val (frame, acc) = (s._1 :+ r.value, s._2.add(d2(r.value)))
@@ -218,6 +225,7 @@ object StatefulOps {
     * (both ascending (ts, id)), and the newest emitted timestamp. */
   private[streaming] case class RangeOverState(frame: Vector[RangeRow], acc: java.math.BigDecimal,
                                                pending: Vector[RangeRow], emittedUpTo: Long)
+  private implicit val rangeOverState: Encoder[RangeOverState] = StateEncoder[RangeOverState]
 
   /** Streaming OVER with a bounded RANGE frame — the reference's
     * RowTimeRangeBoundedPrecedingFunction.java: per row, sum(value) over
@@ -234,7 +242,7 @@ object StatefulOps {
   def boundedRangePrecedingPerKey(rows: Dataset[KeyedRow], rangeUs: Long,
                                   watermarkDelay: String = "0 seconds"): Dataset[RunningEmit] = {
     import rows.sparkSession.implicits._
-    KeyedFold.run(rows, new KeyedFold[RangeOverState, RunningEmit] {
+    KeyedFold.run(rows, new RowFold[RangeOverState, RunningEmit] {
       def init = RangeOverState(Vector.empty, zero2, Vector.empty, Long.MinValue)
       def step(key: Long, s: RangeOverState, r: KeyedRow) =
         if (r.ts <= s.emittedUpTo) (s, Nil) // belt-and-braces vs emitted groups
@@ -275,7 +283,7 @@ object StatefulOps {
     * windows). */
   def countTumblingWindows(rows: Dataset[KeyedRow], n: Int): Dataset[CountWindowEmit] = {
     import rows.sparkSession.implicits._
-    KeyedFold.run(rows, new KeyedFold[(Long, Long, Double, Long), CountWindowEmit] {
+    KeyedFold.run(rows, new RowFold[(Long, Long, Double, Long), CountWindowEmit] {
       def init = (0L, 0L, Double.NegativeInfinity, 0L)
       def step(key: Long, s: (Long, Long, Double, Long), r: KeyedRow) = {
         val (win, cnt, mx) = (s._1, s._2 + 1, math.max(s._3, r.value))
@@ -291,7 +299,7 @@ object StatefulOps {
     * evictor buffer). */
   def countSlidingWindows(rows: Dataset[KeyedRow], n: Int, slide: Int): Dataset[CountWindowEmit] = {
     import rows.sparkSession.implicits._
-    KeyedFold.run(rows, new KeyedFold[(Long, Vector[(Double, Long)]), CountWindowEmit] {
+    KeyedFold.run(rows, new RowFold[(Long, Vector[(Double, Long)]), CountWindowEmit] {
       def init = (0L, Vector.empty[(Double, Long)])
       def step(key: Long, s: (Long, Vector[(Double, Long)]), r: KeyedRow) = {
         val seen = s._1 + 1
@@ -332,7 +340,7 @@ object StatefulOps {
   def dynamicGapSessions(rows: Dataset[KeyedRow], gapOfMicros: KeyedRow => Long,
                          watermarkDelay: String = "0 seconds"): Dataset[CountWindowEmit] = {
     import rows.sparkSession.implicits._
-    KeyedFold.run(rows, new KeyedFold[DynSessionState, CountWindowEmit] {
+    KeyedFold.run(rows, new RowFold[DynSessionState, CountWindowEmit] {
       def init = DynSessionState(0L, 0L, Double.NegativeInfinity, 0L, 0L, 0L)
       // a row more than the previous row's gap after it closes the open
       // session first: nothing from ts - 1 back can extend that session
@@ -418,11 +426,13 @@ object StatefulOps {
     * flush even if the key goes quiet. */
   def tumbleAggWithLateSideOutput(rows: Dataset[KeyedRow], widthMicros: Long,
                                   delay: String = "0 seconds"): Dataset[LateTagEmit] = {
+    require(rows.isStreaming, "tumbleAggWithLateSideOutput runs on a stream only: its late " +
+      "channel holds the rows behind the watermark, and a bounded Dataset has no watermark")
     import rows.sparkSession.implicits._
     rows
       .withColumn("ets", timestamp_micros(col("ts")))
       .withWatermark("ets", delay)
-      .as[SortRowW]
+      .as[KeyedRow] // the watermarked `ets` stays in the plan
       .groupByKey(_.key)
       // window closure is driven by the EVENT-time watermark (read via
       // getCurrentWatermarkMs); the timeout is processing-time only as a
@@ -460,30 +470,26 @@ object StatefulOps {
   }
 
   /** Temporal sort (StreamExecTemporalSort.scala:50 /
-    * RowTimeSortOperator.java): emit rows in event-time order once the
-    * watermark passes them. Same buffer-and-release discipline as the
-    * streaming CEP operator; requires a watermark upstream. */
+    * RowTimeSortOperator.java): emit each key's rows in (ts, id) order once
+    * the watermark passes them, one [[KeyedFold]] per key. State per key =
+    * the rows the watermark has not passed yet; on a bounded Dataset that
+    * is one timestamp's peers, and the rest of the key releases at its end. */
   def temporalSort(rows: Dataset[KeyedRow], delay: String = "0 seconds"): Dataset[KeyedRow] = {
     import rows.sparkSession.implicits._
-    rows
-      .withColumn("ets", timestamp_micros(col("ts")))
-      .withWatermark("ets", delay)
-      .as[SortRowW]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[List[KeyedRow], KeyedRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (_, it, state) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val all = (state.getOption.getOrElse(Nil) ++
-            it.map(w => KeyedRow(w.key, w.ts, w.id, w.kind, w.value)))
-            .sortBy(r => (r.ts, r.id))
-          val (ready, pending) = all.partition(_.ts <= wmMicros)
-          state.update(pending)
-          if (pending.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(pending.head.ts / 1000L + 1L, state.getCurrentWatermarkMs() + 1L))
-          ready.iterator
+    KeyedFold.run(rows, new RowFold[Vector[KeyedRow], KeyedRow] {
+      def init = Vector.empty
+      def step(key: Long, pending: Vector[KeyedRow], r: KeyedRow) = {
+        // a later micro-batch may carry an older row (inside the delay)
+        val inOrder = pending.lastOption.forall(p => p.ts < r.ts || (p.ts == r.ts && p.id < r.id))
+        (if (inOrder) pending :+ r else (pending :+ r).sortBy(p => (p.ts, p.id)), Nil)
       }
+      // no row still to come can sort before the rows the horizon passed
+      override def close(key: Long, pending: Vector[KeyedRow], horizonUs: Long) = {
+        val (ready, rest) = pending.span(_.ts <= horizonUs)
+        (rest, ready.toList)
+      }
+      override def due(pending: Vector[KeyedRow]) = pending.headOption.map(_.ts)
+    }, Some(delay))
   }
 
   /** Side outputs (OutputTag / SingleOutputStreamOperator.getSideOutput):

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One window firing: `fire_seq` numbers the fires within (key, win_start);
@@ -56,6 +56,8 @@ object Triggers {
   private[streaming] case class PaneState(winStart: Long, buf: Vector[KeyedRow],
                                           sinceFire: Int, fires: Long,
                                           lastFired: Option[KeyedRow], nextContinuous: Long)
+  /** Built once per JVM — see [[StateEncoder]]. */
+  private implicit val paneStateEncoder: Encoder[PaneState] = StateEncoder[PaneState]
 
   private def evict(buf: Vector[KeyedRow], evictor: WinEvictor): Vector[KeyedRow] = evictor match {
     case NoEvictor => buf
@@ -77,8 +79,11 @@ object Triggers {
     * buffer only (inherent to evictors — the reference's
     * EvictingWindowOperator keeps the same list state). A row of a later
     * window closes the open pane (its terminal fire); on a bounded Dataset
-    * the last pane closes at the end of the key, on a stream it stays open
-    * in state until a later-window row arrives for the key. */
+    * the last pane closes at the end of the key. On a stream the
+    * event-time triggers run as an event-time fold (0 s watermark delay,
+    * timer at the window's last microsecond), so a quiet key's last pane
+    * fires once the watermark passes it; count/delta panes have no
+    * terminal fire and wait for a later-window row. */
   def triggeredTumbleWindows(rows: Dataset[KeyedRow], widthMicros: Long,
                              trigger: WinTrigger, evictor: WinEvictor): Dataset[TriggerEmit] = {
     import rows.sparkSession.implicits._
@@ -92,7 +97,7 @@ object Triggers {
       case ContinuousEventTimeTrigger(iv) => (r.ts / iv) * iv + iv
       case _ => otherwise
     }
-    KeyedFold.run(rows, new KeyedFold[PaneState, TriggerEmit] {
+    KeyedFold.run(rows, new RowFold[PaneState, TriggerEmit] {
       def init = PaneState(Long.MinValue, Vector.empty, 0, 0L, None, Long.MaxValue)
       // eviction is DESTRUCTIVE, as in EvictingWindowOperator: evicted
       // rows leave the pane state and never contribute again
@@ -105,6 +110,8 @@ object Triggers {
       override def close(key: Long, st: PaneState, horizonUs: Long) =
         if (st.winStart > horizonUs - widthMicros + 1) (st, Nil)
         else (init, if (terminalFires && st.buf.nonEmpty) fire(key, st)._2 else Nil)
+      override def due(st: PaneState) =
+        if (st.winStart == Long.MinValue) None else Some(st.winStart + widthMicros - 1)
       def step(key: Long, st0: PaneState, r: KeyedRow) = {
         val ws = (r.ts / widthMicros) * widthMicros
         // DeltaTrigger's reference point initializes to the pane's first
@@ -127,7 +134,7 @@ object Triggers {
           (after, closed ++ out)
         }
       }
-    })
+    }, if (terminalFires) Some("0 seconds") else None)
   }
 
   // ---- oracle surface: CountTrigger(5) + CountEvictor(3) on 1-day windows

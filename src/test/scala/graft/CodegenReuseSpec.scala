@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+
+import graft.streaming.{Changelog, KeyedRow, StatefulOps, Triggers}
 
 /** A generated class that this JVM already compiled must come out of
   * Spark's codegen cache, not out of Janino again ([[GraftSession]]'s
@@ -26,6 +30,42 @@ class CodegenReuseSpec extends SparkSpec {
     val before = compiles
     val out = SparkEntry.queries(name)(spark, sf).collect().map(_.toString).sorted.toSeq
     (name, out, compiles - before)
+  }
+
+  /** The keyed folds whose state holds a `Vector` or goes through a
+    * codec, each run as a StreamingQuery over a few micro-batches. Returns
+    * the compiles each fold's query paid. */
+  private def foldRound(round: Int): Seq[(String, Long)] = {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val sec = 1000000L
+    val rows = (1 to 40).map(j => KeyedRow(j % 3, j * sec, j, "a", (j * 7 % 13).toDouble))
+    val folds: Seq[(String, Dataset[KeyedRow] => Dataset[_])] = Seq(
+      "boundedRowsPrecedingPerKey" -> (StatefulOps.boundedRowsPrecedingPerKey(_, 3)),
+      "boundedRangePrecedingPerKey" -> (StatefulOps.boundedRangePrecedingPerKey(_, 5 * sec)),
+      "countSlidingWindows" -> (StatefulOps.countSlidingWindows(_, 4, 2)),
+      "temporalSort" -> (StatefulOps.temporalSort(_)),
+      "triggeredTumbleWindows" -> (Triggers.triggeredTumbleWindows(_, 10 * sec,
+        Triggers.EventTimeTriggerOnly, Triggers.CountEvictor(2))),
+      "retractableTopN" -> (r => Changelog.retractableTopN(Changelog.keyedChangelog(r)
+        .map(c => c.copy(key = c.key % 2, id = c.key)), 2)))
+    folds.map { case (name, op) =>
+      val in = MemoryStream[KeyedRow]
+      val before = compiles
+      val q = op(in.toDS()).writeStream.format("memory").queryName(s"fold_reuse_${name}_$round")
+        .outputMode("append").start()
+      try rows.grouped(10).foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      name -> (compiles - before)
+    }
+  }
+
+  test("a repeated streaming run of the keyed folds compiles no class") {
+    val first = foldRound(1)
+    val second = foldRound(2)
+    val recompiled = second.collect { case (n, c) if c > 0 => s"$n: $c" }
+    assert(recompiled.isEmpty, s"second run compiled ${recompiled.mkString(", ")} " +
+      s"(first run ${first.map(_._2).sum})")
   }
 
   test("a repeated round of the stream_iterative rows compiles no class") {

@@ -8,18 +8,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.streaming.KeyedFold]]: `streaming/KeyedFold.scala` is the one
   * place that drives a fold on the sorted scan or on
   * `flatMapGroupsWithState`. A `*Batch` twin on `SortedScan.perKeyOrdered`
-  * or a streaming twin on `flatMapGroupsWithState` in `StatefulOps` or
-  * `Triggers` fails this source scan. */
+  * or a streaming twin on `flatMapGroupsWithState` in `StatefulOps`,
+  * `Triggers` or `Changelog` fails this source scan. */
 class KeyedFoldDisciplineSpec extends AnyFunSuite {
   import PersistDisciplineSpec.{root, siteCounts}
 
   private val folds = Map(
     "streaming/StatefulOps.scala" -> Seq("runningSumPerKey", "boundedRowsPrecedingPerKey",
       "boundedRangePrecedingPerKey", "countTumblingWindows", "countSlidingWindows",
-      "dynamicGapSessions"),
-    "streaming/Triggers.scala" -> Seq("triggeredTumbleWindows"))
-  // StatefulOps' operators that are not folds keep their own state shapes
-  private val otherStatefulOps = 8
+      "dynamicGapSessions", "temporalSort"),
+    "streaming/Triggers.scala" -> Seq("triggeredTumbleWindows"),
+    "streaming/Changelog.scala" -> Seq("keyedChangelog", "keyedChangelogMiniBatch",
+      "retractingAgg", "retractingAggMiniBatch", "retractableTopN"))
+  // StatefulOps' operators that are not folds keep their own state shapes:
+  // the Update-mode Top-N and dedup, the processing-time TTL dedup, outer
+  // join and late-side-output window, and the two temporal joins
+  private val otherStatefulOps = 7
 
   private def source(f: String): String = {
     val src = scala.io.Source.fromFile(new File(root, f), "UTF-8")
@@ -34,7 +38,8 @@ class KeyedFoldDisciplineSpec extends AnyFunSuite {
     assert(scans.get("streaming/KeyedFold.scala").contains(1), s"scan sites: $scans")
     assert(groups.get("streaming/KeyedFold.scala").contains(1), s"flatMapGroupsWithState sites: $groups")
     folds.keys.foreach(f => assert(!scans.contains(f), s"$f scans SortedScan itself — run a KeyedFold"))
-    assert(!groups.contains("streaming/Triggers.scala"), "Triggers keeps a flatMapGroupsWithState twin")
+    Seq("streaming/Triggers.scala", "streaming/Changelog.scala").foreach(f =>
+      assert(!groups.contains(f), s"$f keeps a flatMapGroupsWithState body — run a KeyedFold"))
     assert(groups.get("streaming/StatefulOps.scala").contains(otherStatefulOps),
       s"StatefulOps has ${groups.get("streaming/StatefulOps.scala")} flatMapGroupsWithState " +
         s"sites, $otherStatefulOps operators are not folds — a new site is a fold's twin or a new operator")

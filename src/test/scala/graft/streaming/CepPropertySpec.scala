@@ -89,7 +89,7 @@ class CepPropertySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     check(Prop.forAll(corpusGen) { rows =>
-      val scanned = SortedScan.perKeyOrdered(rows.toDS()) { (key, it) =>
+      val scanned = SortedScan.perKeyOrdered(rows.toDS(), KeyOrder.rows) { (key, it) =>
         it.map(r => (key, r.ts, r.id))
       }.collect().toSeq
       // per key: exactly the key's rows, in (ts, id) order

@@ -37,12 +37,15 @@ class KeyedFoldSpec extends SparkSpec {
 
   private var queries = 0
 
-  /** `op` run as a StreamingQuery over [[batches]], then on the bounded
-    * corpus: the two must be the same multiset of rows. */
-  private def sameAsBounded[O <: Product : Encoder](op: Dataset[KeyedRow] => Dataset[O]): Unit = {
+  /** `op` run as a StreamingQuery over `batches`, then on the bounded
+    * `corpus`; returns both outputs, the stream's without `farKey`'s rows,
+    * each in the order its query emitted it. */
+  private def streamAndBounded[I <: Product : Encoder, O <: Product : Encoder](
+      op: Dataset[I] => Dataset[O], corpus: Seq[I], batches: Seq[Seq[I]],
+      keyOf: O => Long): (Seq[O], Seq[O]) = {
     val s = spark
     implicit val ctx = s.sqlContext
-    val in = MemoryStream[KeyedRow]
+    val in = MemoryStream[I]
     queries += 1
     val name = s"keyed_fold_$queries"
     val q = op(in.toDS()).writeStream.format("memory").queryName(name)
@@ -51,10 +54,20 @@ class KeyedFoldSpec extends SparkSpec {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
       s.table(name).as[O].collect().toSeq.filter(keyOf(_) != farKey)
     } finally q.stop()
-    val bounded = op(corpus.toDS()).collect().toSeq
+    val bounded = op(s.createDataset(corpus)).collect().toSeq
     assert(bounded.map(keyOf).distinct.size > 1, "the bounded run emitted for one key or none")
+    (streamed, bounded)
+  }
+
+  private def assertSame[O](streamed: Seq[O], bounded: Seq[O]): Unit =
     assert(streamed.sortBy(_.toString) == bounded.sortBy(_.toString),
       s"stream-only ${streamed.diff(bounded).take(3)}, bounded-only ${bounded.diff(streamed).take(3)}")
+
+  /** `op` over [[batches]] as a stream and on the bounded [[corpus]]: the
+    * two must be the same multiset of rows. */
+  private def sameAsBounded[O <: Product : Encoder](op: Dataset[KeyedRow] => Dataset[O]): Unit = {
+    val (streamed, bounded) = streamAndBounded(op, corpus, batches, keyOf)
+    assertSame(streamed, bounded)
   }
 
   test("the micro-batches cut between timestamps and hold every row in (ts, id) order") {
@@ -94,6 +107,85 @@ class KeyedFoldSpec extends SparkSpec {
     sameAsBounded(triggeredTumbleWindows(_, 600 * sec, CountTrigger(3), CountEvictor(2)))
     sameAsBounded(triggeredTumbleWindows(_, 600 * sec,
       DeltaTrigger(50.0, (a, b) => math.abs(b.value - a.value)), TimeEvictor(120 * sec)))
+  }
+
+  test("triggeredTumbleWindows: a quiet key's last pane fires on the watermark under the event-time triggers") {
+    import Triggers._
+    // key 1 has panes at 0 s and 600 s, key 2 one pane at 0 s; neither
+    // sees a later-window row, so only the watermark (the far-future row
+    // on key 99) can close their last panes, as the end of a bounded
+    // input does
+    val quiet = Seq(KeyedRow(1, 10 * sec, 1, "a", 5.0), KeyedRow(1, 20 * sec, 2, "a", 7.0),
+      KeyedRow(2, 30 * sec, 3, "a", 3.0), KeyedRow(1, 350 * sec, 4, "a", 2.0),
+      KeyedRow(1, 610 * sec, 5, "a", 4.0))
+    val far = KeyedRow(farKey, 100000 * sec, 6, "z", 0.0)
+    val quietBatches = Seq(quiet.take(3), quiet.drop(3), Seq(far))
+    Seq(EventTimeTriggerOnly, ContinuousEventTimeTrigger(300 * sec)).foreach { trigger =>
+      val (streamed, bounded) = streamAndBounded[KeyedRow, TriggerEmit](
+        triggeredTumbleWindows(_, 600 * sec, trigger, NoEvictor), quiet, quietBatches, _.key)
+      assert(bounded.map(e => (e.key, e.win_start)).distinct.size == 3, s"$trigger: $bounded")
+      assertSame(streamed, bounded)
+    }
+  }
+
+  test("keyedChangelog: a stream in micro-batches equals the bounded run") {
+    val (streamed, bounded) = streamAndBounded(Changelog.keyedChangelog, corpus, batches,
+      (_: Changelog.Change).key)
+    assertSame(streamed, bounded)
+  }
+
+  test("retractingAgg: a stream of changes in micro-batches equals the bounded run") {
+    // the upsert changelog of the corpus, every change stamped with the
+    // time of the row that made it, so the micro-batches cut between
+    // timestamps; values in micros
+    val last = scala.collection.mutable.Map.empty[Long, KeyedRow]
+    def change(kind: String, r: KeyedRow, at: Long) =
+      Changelog.Change(kind, r.key, r.id, at, math.round(r.value * 1e6).toDouble)
+    val changesOf: Map[Long, Seq[Changelog.Change]] = corpus.map { r =>
+      val out = last.get(r.key) match {
+        case None => Seq(change("+I", r, r.ts))
+        case Some(prev) => Seq(change("-U", prev, r.ts), change("+U", r, r.ts))
+      }
+      last(r.key) = r
+      r.id -> out
+    }.toMap
+    val changeBatches = batches.init.map(_.flatMap(r => changesOf(r.id)))
+    val (streamed, bounded) = streamAndBounded[Changelog.Change, Changelog.Change](
+      Changelog.retractingAgg, changeBatches.flatten, changeBatches, _.id)
+    assertSame(streamed, bounded)
+  }
+
+  test("keyedChangelog → retractableTopN: a stream in micro-batches folds to the bounded rank table") {
+    // three cells per ranking key; a retraction carries its row's own
+    // (earlier) ts, so the logs differ in order across splits — the
+    // folded rank tables must not. One row per (cell, ts): two changes of
+    // one cell at one ts would tie in the rank order.
+    def topN(rows: Dataset[KeyedRow]): Dataset[Changelog.RankChange] =
+      Changelog.retractableTopN(Changelog.keyedChangelog(rows)
+        .map(c => c.copy(key = c.key % 2, id = c.key)), 2)
+    def firstPeer(rs: Seq[KeyedRow]) =
+      rs.filter(r => corpus.find(x => x.key == r.key && x.ts == r.ts).contains(r))
+    val cells = firstPeer(corpus)
+    val (streamed, bounded) = streamAndBounded(topN, cells, batches.init.map(firstPeer),
+      (_: Changelog.RankChange).key)
+    def table(log: Seq[Changelog.RankChange]) = Changelog.applyRankChanges(log.sortBy(c => (c.key, c.seq)))
+    val lastPerCell = cells.groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(r => (r.ts, r.id)).value }
+    val expected = lastPerCell.toSeq.groupBy(_._1 % 2).flatMap { case (rk, cells) =>
+      cells.sortBy { case (cell, v) => (-v, cell) }.take(2).zipWithIndex
+        .map { case ((cell, v), i) => (rk, i + 1) -> ((cell, v)) }
+    }
+    assert(table(bounded) == expected)
+    assert(table(streamed) == expected)
+  }
+
+  test("temporalSort: a stream in micro-batches equals the bounded run, each key in (ts, id) order") {
+    val (streamed, bounded) = streamAndBounded[KeyedRow, KeyedRow](
+      StatefulOps.temporalSort(_), corpus, batches, _.key)
+    assertSame(streamed, bounded)
+    val want = corpus.groupBy(_.key).map { case (k, rs) => k -> rs.sortBy(r => (r.ts, r.id)) }
+    Seq("stream" -> streamed, "bounded" -> bounded).foreach { case (side, out) =>
+      assert(out.groupBy(_.key) == want, s"$side: a key's rows are out of (ts, id) order")
+    }
   }
 }
 

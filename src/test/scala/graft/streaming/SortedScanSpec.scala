@@ -26,7 +26,7 @@ class SortedScanSpec extends SparkSpec {
     val multiKey = spark.range(100).select(
       (col("id") % 7).as("key"), col("id").as("ts"), col("id").as("id"),
       lit("a").as("kind"), lit(0.0).as("value")).as[KeyedRow]
-    val out = SortedScan.perKeyOrdered(multiKey) { (_, it) => it.map(_.id) }
+    val out = SortedScan.perKeyOrdered(multiKey, KeyOrder.rows) { (_, it) => it.map(_.id) }
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("Exchange hashpartitioning(key"), plan)
     assert(plan.toLowerCase.contains("sort"), plan)
@@ -63,12 +63,12 @@ class SortedScanSpec extends SparkSpec {
     ).toDS()
     // callback reads only the FIRST row of each group — the scan must drain
     // the rest and still start the next group at the right boundary
-    val firsts = SortedScan.perKeyOrdered(rows) { (key, it) =>
+    val firsts = SortedScan.perKeyOrdered(rows, KeyOrder.rows) { (key, it) =>
       Iterator.single((key, it.next().id))
     }.collect().sortBy(_._1)
     assert(firsts.toSeq == Seq((1L, 1L), (2L, 4L), (3L, 5L)))
     // full consumption sees (ts, id) order within each key
-    val ordered = SortedScan.perKeyOrdered(rows) { (key, it) =>
+    val ordered = SortedScan.perKeyOrdered(rows, KeyOrder.rows) { (key, it) =>
       Iterator.single(key -> it.map(_.id).toList)
     }.collect().toMap
     assert(ordered == Map(1L -> List(1L, 2L, 3L), 2L -> List(4L), 3L -> List(5L, 6L)))

@@ -85,6 +85,14 @@ class UnboundedJoinSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("tumbleAggWithLateSideOutput refuses a bounded Dataset: its late channel needs a watermark") {
+    val s = spark
+    import s.implicits._
+    val e = intercept[IllegalArgumentException](
+      StatefulOps.tumbleAggWithLateSideOutput(Seq(row(1, 1000000, 1, 1.0)).toDS(), 10L * 1000000L))
+    assert(e.getMessage.contains("watermark"), e.getMessage)
+  }
+
   test("late rows land on the side channel, not in the fired window") {
     val s = spark
     import s.implicits._
